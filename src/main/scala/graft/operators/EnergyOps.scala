@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Energy-side operator chain (SURVEY §2, EP1 stage 2): flatten raw EIA
-  * JSON → cast-with-null-on-error → hourly→daily resample → densify.
+  * JSON per city → cast-with-null-on-error → union → hourly→daily
+  * resample → densify onto the date × city spine.
   *
   * The hourly→daily pre-aggregation runs BEFORE the weather join
   * (reference src/data_processor.py:79) — it shrinks the join input
@@ -21,8 +22,8 @@ object EnergyOps {
       .select(explode(col("response.data")).as("r"))
       .select(
         to_timestamp(col("r.period"), "yyyy-MM-dd'T'HH").as("ts"),
-        expr("try_cast(r.value AS double)").as("value"))
-      .withColumn("city", lit(city))
+        expr("try_cast(r.value AS double)").as("value"),
+        PipelineOps.cityTag(city))
 
   /** A2 — time-bucket resample hourly→daily SUM. Pandas semantics: a
     * day present in the index but all-NaN sums to 0.0, and densified
@@ -33,24 +34,12 @@ object EnergyOps {
       .groupBy(to_date(col("ts")).as("date"), col("city"))
       .agg(coalesce(sum("value"), lit(0.0)).as("energy_demand_gwh"))
 
-  /** J5 — densify onto the complete date spine; the reference's energy
-    * path fills absent days with NULL then the join drops them; the
-    * engine keeps NULL for absent days (distinct from all-NaN days
-    * which are 0.0 — the pandas trap, covered in tests). Shuffle join
-    * by design: an outer-preserved spine cannot be the broadcast build
-    * side, and the fact input is already daily-aggregated (spine-sized). */
-  def densify(daily: DataFrame, city: String, start: String, end: String): DataFrame = {
-    val spark = daily.sparkSession
-    val spine = spark.sql(
-      s"SELECT explode(sequence(to_date('$start'), to_date('$end'), interval 1 day)) AS date")
-      .withColumn("city", lit(city))
-    spine.join(daily, Seq("date", "city"), "left")
-  }
-
-  /** Full per-city energy chain: raw payload → dense daily table
-    * (P2 — final projection to the 3-column contract). */
-  def process(eiaRaw: DataFrame, city: String, start: String, end: String): DataFrame =
-    densify(resampleDaily(flatten(eiaRaw, city)), city, start, end)
+  /** City-keyed energy chain: the union of every city's flattened
+    * hourly readings → dense daily table (P2 — final projection to the
+    * 3-column contract). Absent days stay NULL, distinct from all-NaN
+    * days which are 0.0 (the pandas trap, covered in tests). */
+  def process(flat: DataFrame, spine: DataFrame): DataFrame =
+    PipelineOps.densify(resampleDaily(flat), spine)
       .select("date", "city", "energy_demand_gwh")
 
   /** OHLC bar resampling — pandas `resample(freq).ohlc()`: per

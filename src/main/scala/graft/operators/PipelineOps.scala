@@ -1,16 +1,50 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import java.time.LocalDate
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Core pipeline composition (EP1 heart): union per-city frames, inner
-  * join weather⋈energy on (date, city), derive temp_avg_f, sink. */
+/** Core pipeline composition (EP1 heart): union per-city frames,
+  * densify onto the date × city spine, inner join weather⋈energy on
+  * (date, city), derive temp_avg_f, sink. */
 object PipelineOps {
 
   /** U1 — schema-aligned union of per-city frames (reference pd.concat,
-    * src/pipeline.py:82-83). */
+    * src/pipeline.py:82-83), taken right after the per-city flatten. */
   def unionCities(frames: Seq[DataFrame]): DataFrame =
     frames.reduce(_ unionByName _)
+
+  /** The `city` tag of a per-city flatten. A generator, not a literal:
+    * with one city (no union) the optimizer folds a literal into the
+    * (date, city) join keys, shrinking them to `date` at the cost of
+    * three exchanges a many-city plan does not have. */
+  def cityTag(city: String): Column = explode(array(lit(city))).as("city")
+
+  /** Every day of [start, end] for every SUPPLIED city (a city whose
+    * feed is empty still gets its padded NULL rows), generated from the
+    * city list and the day sequence: no join, no SQL text. One input
+    * partition: every spine row comes from one seed row, so more would
+    * only add empty tasks. Fails fast on an empty city list, a
+    * duplicated city (its rows would multiply silently) and an
+    * inverted window. */
+  def dateCitySpine(spark: SparkSession, cities: Seq[String],
+      start: String, end: String): DataFrame = {
+    require(cities.nonEmpty, "no cities to build")
+    val dups = cities.diff(cities.distinct).distinct
+    require(dups.isEmpty, s"duplicate city names: ${dups.mkString(", ")}")
+    val (from, to) = (LocalDate.parse(start), LocalDate.parse(end))
+    require(!from.isAfter(to), s"start $start is after end $end")
+    spark.range(0, 1, 1, numPartitions = 1)
+      .select(explode(typedLit(cities)).as("city"))
+      .select(explode(sequence(lit(from), lit(to))).as("date"), col("city"))
+  }
+
+  /** J5 — densify a daily frame onto the spine; absent (date, city)
+    * pairs get NULL values (reference reindex, src/data_processor.py:10-22).
+    * A shuffle join at worst: the input is already per-day aggregated,
+    * the same order of magnitude as the spine at any corpus scale. */
+  def densify(daily: DataFrame, spine: DataFrame): DataFrame =
+    spine.join(daily, Seq("date", "city"), "left")
 
   /** J1 — THE core query: inner equi-join on the composite key
     * (reference src/pipeline.py:86). At scale both sides shuffle on

@@ -5,12 +5,13 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 /** Weather-side operator chain (SURVEY §2, EP1 stage 1): flatten raw
-  * NOAA JSON → °C→°F → pivot long-to-wide → densify onto the date spine
-  * → per-city mean imputation → row-wise average.
+  * NOAA JSON per city → union → °C→°F → pivot long-to-wide → densify
+  * onto the date × city spine → per-city mean imputation → row-wise
+  * average.
   *
-  * All steps are narrow column expressions except the pivot aggregate
-  * (one shuffle on date×city) and the spine join (broadcast — the spine
-  * is days×cities, tiny relative to the fact data). */
+  * Only the flatten is per city; after the union it is one city-keyed
+  * chain: one pivot (a shuffle on date×city), one spine join, one
+  * city-partitioned window. */
 object WeatherOps {
 
   /** F1 — °C→°F as a column expression (reference scalar fn
@@ -28,8 +29,8 @@ object WeatherOps {
       .select(
         to_date(substring(col("r.date"), 1, 10)).as("date"),
         col("r.datatype").as("datatype"),
-        col("r.value").as("value_c"))
-      .withColumn("city", lit(city))
+        col("r.value").as("value_c"),
+        PipelineOps.cityTag(city))
 
   /** A1 — group-by mean + pivot long→wide: TMAX/TMIN become columns,
     * duplicate readings average (reference groupby().unstack(),
@@ -43,24 +44,10 @@ object WeatherOps {
         celsiusToFahrenheit(col("TMAX")).as("temp_max_f"),
         celsiusToFahrenheit(col("TMIN")).as("temp_min_f"))
 
-  /** J5 — densify onto a complete per-city date spine; absent days get
-    * NULL temps (reference reindex, src/data_processor.py:10-22).
-    * The spine (days × cities) is generated, not read. Note the outer-
-    * preserved side of an outer join cannot be the broadcast build side,
-    * so this is a (tiny) shuffle join — and that is fine: the fact side
-    * here is ALREADY per-day aggregated, i.e. the same order of
-    * magnitude as the spine itself, at any corpus scale. */
-  def densify(wide: DataFrame, city: String, start: String, end: String): DataFrame = {
-    val spark = wide.sparkSession
-    val spine = spark.sql(
-      s"SELECT explode(sequence(to_date('$start'), to_date('$end'), interval 1 day)) AS date")
-      .withColumn("city", lit(city))
-    spine.join(wide, Seq("date", "city"), "left")
-  }
-
   /** A12 — per-city mean imputation via a city-partitioned window
     * (SURVEY §7.4 trap 2: the reference imputes per city BEFORE union —
-    * a global mean is wrong). */
+    * a global mean is wrong). The window is partitioned by city, so
+    * imputing the union of all cities is the same as imputing each. */
   def imputePerCity(df: DataFrame, cols: Seq[String] = Seq("temp_max_f", "temp_min_f")): DataFrame = {
     val w = Window.partitionBy("city")
     cols.foldLeft(df) { (acc, c) =>
@@ -78,11 +65,10 @@ object WeatherOps {
       .when(b.isNull, a)
       .otherwise((a + b) / 2)
 
-  /** Full per-city weather chain: raw payload → daily wide table. */
-  def process(noaaRaw: DataFrame, city: String, start: String, end: String): DataFrame = {
-    val dense = densify(pivotToWide(flatten(noaaRaw, city)), city, start, end)
-    imputePerCity(dense)
+  /** City-keyed weather chain: the union of every city's flattened
+    * readings → daily wide table on the date × city spine. */
+  def process(flat: DataFrame, spine: DataFrame): DataFrame =
+    imputePerCity(PipelineOps.densify(pivotToWide(flat), spine))
       .withColumn("temp_avg_f", rowwiseAvg(col("temp_max_f"), col("temp_min_f")))
       .select("date", "temp_max_f", "temp_min_f", "temp_avg_f", "city")
-  }
 }

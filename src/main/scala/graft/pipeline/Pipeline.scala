@@ -6,8 +6,9 @@ import graft.domain.QualityReport
 import graft.operators.{EnergyOps, PipelineOps, QualityOps, WeatherOps}
 
 /** EP1 orchestration (reference run_pipeline, src/pipeline.py:16-111):
-  * derive the date window from the mode, process each city's weather and
-  * energy payloads, union, join, derive temp_avg_f, quality-check, sink.
+  * derive the date window from the mode, flatten each city's weather
+  * and energy payloads, union, densify and impute, join, derive
+  * temp_avg_f, quality-check, sink.
   *
   * Deviations from the reference, both documented in SURVEY §7.4:
   *   - the duplicated tail of run_pipeline (src/pipeline.py:100-111) is
@@ -16,8 +17,9 @@ import graft.operators.{EnergyOps, PipelineOps, QualityOps, WeatherOps}
   *     replacing the whole output with yesterday's rows (trap 7).
   *
   * The clock is injected so both modes are deterministic under test
-  * (trap 8). Cities are processed as one lazy DAG — the per-city loop
-  * only *builds* plans; nothing executes until the sink action.
+  * (trap 8). Only the flatten is per city; each side is then ONE
+  * city-keyed plan, so its exchanges do not grow with the number of
+  * cities. Nothing executes until the sink action.
   */
 object Pipeline {
 
@@ -35,17 +37,21 @@ object Pipeline {
     (start.toString, end.toString)
   }
 
-  /** Per-city weather union (the left side of the fact join). */
+  /** City-keyed weather table (the left side of the fact join). */
   def buildWeather(rawByCity: Seq[(String, DataFrame, DataFrame)],
-      start: String, end: String): DataFrame =
-    PipelineOps.unionCities(
-      rawByCity.map { case (city, noaa, _) => WeatherOps.process(noaa, city, start, end) })
+      start: String, end: String): DataFrame = {
+    val days = PipelineOps.dateCitySpine(SparkSession.active, rawByCity.map(_._1), start, end)
+    WeatherOps.process(PipelineOps.unionCities(
+      rawByCity.map { case (city, noaa, _) => WeatherOps.flatten(noaa, city) }), days)
+  }
 
-  /** Per-city energy union (the right side of the fact join). */
+  /** City-keyed energy table (the right side of the fact join). */
   def buildEnergy(rawByCity: Seq[(String, DataFrame, DataFrame)],
-      start: String, end: String): DataFrame =
-    PipelineOps.unionCities(
-      rawByCity.map { case (city, _, eia) => EnergyOps.process(eia, city, start, end) })
+      start: String, end: String): DataFrame = {
+    val days = PipelineOps.dateCitySpine(SparkSession.active, rawByCity.map(_._1), start, end)
+    EnergyOps.process(PipelineOps.unionCities(
+      rawByCity.map { case (city, _, eia) => EnergyOps.flatten(eia, city) }), days)
+  }
 
   /** Run over pre-landed raw payloads: one (noaaRaw, eiaRaw) pair per
     * city. Returns the fact DataFrame (lazy) — callers choose the sink. */
@@ -79,7 +85,7 @@ object Pipeline {
       else PipelineOps.deriveTempAvg(
         PipelineOps.joinWeatherEnergy(buildWeather(rawByCity, start, end), energy)).persist()
     // persist: the fact feeds three actions (report, parquet, CSV) —
-    // without it the whole per-city raw→fact DAG recomputes each time
+    // without it the whole raw→fact DAG recomputes each time
     try {
       val report = QualityOps.report(fact, asOfDate = today.toString, cfg)
         .copy(weather_only = energyEmpty)

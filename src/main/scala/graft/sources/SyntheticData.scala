@@ -53,7 +53,8 @@ object SyntheticData {
   }
 
   /** Raw NOAA-shaped payload for one city (long format, °C) — feeds
-    * WeatherOps.process in tests exactly like a landed API response. */
+    * WeatherOps.flatten, and through it the city-keyed weather chain,
+    * in tests exactly like a landed API response. */
   def noaaRawJson(spark: SparkSession, startDate: String = "2024-01-01",
       nDays: Int = 30, seed: Long = 42L): DataFrame = {
     val long = spark.range(nDays)

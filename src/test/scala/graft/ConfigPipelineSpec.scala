@@ -108,8 +108,9 @@ class ConfigPipelineSpec extends AnyFunSuite {
     assert(path.endsWith("weather_TestCity_2025-07-29_2025-07-29.json"))
     Connectors.landRaw(payload, path)
     val landed = spark.read.schema(graft.domain.Schemas.noaaRaw).json(path)
-    val replayed = graft.operators.WeatherOps
-      .process(landed, "TestCity", "2025-07-29", "2025-07-29").collect()
+    val replayed = graft.operators.WeatherOps.process(
+      graft.operators.WeatherOps.flatten(landed, "TestCity"),
+      PipelineOps.dateCitySpine(spark, Seq("TestCity"), "2025-07-29", "2025-07-29")).collect()
     assert(replayed.length == 1)
     val r = replayed.head
     assert(math.abs(r.getAs[Double]("temp_max_f") - (36.1 * 9 / 5 + 32)) < 1e-9)

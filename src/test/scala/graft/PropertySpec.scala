@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
-import graft.operators.{EnergyOps, WeatherOps}
+import graft.operators.{PipelineOps, WeatherOps}
 
 /** Property-based checks (SURVEY §5 engine test plan): conversion
   * linearity, densify row counts, imputation mean-preservation.
@@ -45,7 +45,8 @@ class PropertySpec extends AnyFunSuite {
         val present = (0 until math.min(presentDays, nDays)).map(i =>
           (java.sql.Date.valueOf(start.plusDays(i.toLong)), "X", 1.0))
         val df = present.toDF("date", "city", "energy_demand_gwh")
-        val dense = EnergyOps.densify(df, "X", start.toString, end.toString)
+        val dense = PipelineOps.densify(df,
+          PipelineOps.dateCitySpine(spark, Seq("X"), start.toString, end.toString))
         assert(dense.count() == nDays.toLong)
         assert(dense.select("date").distinct().count() == nDays.toLong)
     }

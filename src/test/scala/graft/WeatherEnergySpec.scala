@@ -39,7 +39,8 @@ class WeatherEnergySpec extends AnyFunSuite {
       .select(col("results").cast(
         "array<struct<date:string,datatype:string,value:double,station:string,attributes:string>>")
         .as("results"))
-    val out = WeatherOps.process(raw, "TestCity", "2025-07-29", "2025-07-29").collect()
+    val out = WeatherOps.process(WeatherOps.flatten(raw, "TestCity"),
+      PipelineOps.dateCitySpine(spark, Seq("TestCity"), "2025-07-29", "2025-07-29")).collect()
     assert(out.length == 1)
     val row = out.head
     assert(math.abs(row.getAs[Double]("temp_max_f") - 97.0) <= 1.0)
@@ -83,7 +84,8 @@ class WeatherEnergySpec extends AnyFunSuite {
       ("2024-01-02 01:00:00", None), ("2024-01-02 03:00:00", None) // present but all-null
       ).toDF("ts", "value")
       .select(to_timestamp(col("ts")).as("ts"), col("value"), lit("X").as("city"))
-    val daily = EnergyOps.densify(EnergyOps.resampleDaily(hourly), "X", "2024-01-01", "2024-01-03")
+    val daily = PipelineOps.densify(EnergyOps.resampleDaily(hourly),
+      PipelineOps.dateCitySpine(spark, Seq("X"), "2024-01-01", "2024-01-03"))
       .orderBy("date").collect()
     assert(daily(0).getAs[Double]("energy_demand_gwh") == 4.0)
     assert(daily(1).getAs[Double]("energy_demand_gwh") == 0.0) // all-null day: pandas sum semantics
@@ -119,7 +121,7 @@ class WeatherEnergySpec extends AnyFunSuite {
     val raw = SyntheticData.eiaRawJson(spark, "2024-01-01", nDays = 3)
     val flat = EnergyOps.flatten(raw, "X")
     assert(flat.filter(col("value").isNull).count() == 1) // the planted "not-a-number"
-    val out = EnergyOps.process(raw, "X", "2024-01-01", "2024-01-03")
+    val out = EnergyOps.process(flat, PipelineOps.dateCitySpine(spark, Seq("X"), "2024-01-01", "2024-01-03"))
     assert(out.count() == 3)
     assert(out.filter(col("energy_demand_gwh").isNull).count() == 0)
   }
