@@ -6,6 +6,25 @@ import org.apache.spark.sql.SparkSession
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line on stdout; per-query timings
   * stream to stderr as they complete. Queries run in name order. */
 object Bench {
+
+  /** One `queries_part` stdout line: part `part` (1-based) of the
+    * per-query map. */
+  def queriesPartLine(part: Int, times: Seq[(String, Double)]): String =
+    s"""{"metric":"queries_part","part":$part,"queries":${jsonTimes(times)}}"""
+
+  /** A `{"name":seconds,...}` JSON object. Names are escaped as JSON
+    * strings; a non-finite time, which JSON cannot hold, is `null`. */
+  private def jsonTimes(times: Seq[(String, Double)]): String =
+    times.map { case (k, v) => jsonString(k) + ":" + (if (java.lang.Double.isFinite(v)) v.toString else "null") }
+      .mkString("{", ",", "}")
+
+  private def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") // env default: local[32]
@@ -132,8 +151,7 @@ object Bench {
       System.err.println(f"[bench] $name%-24s $sec%8.2f s  ($n rows)")
       name -> sec
     }
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
+    val qs = jsonTimes(results)
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
     // The driver captures only the LAST 4000 chars of stdout; a 130-entry
     // per-query map is >4 KB and in rounds 1-6 pushed the total off the
@@ -170,10 +188,7 @@ object Bench {
     // parts keep the tail's surviving lines parseable. The contract
     // metric line stays LAST and unchanged.
     results.grouped(25).zipWithIndex.foreach { case (chunk, i) =>
-      val m = chunk.map { case (k, v) => "\"" + k + "\":" + v }
-        .mkString("{", ",", "}")
-      System.out.println(
-        s"""{"metric":"queries_part","part":${i + 1},"queries":$m}""")
+      System.out.println(queriesPartLine(i + 1, chunk))
     }
     System.out.println(metricLine)
     System.out.flush()

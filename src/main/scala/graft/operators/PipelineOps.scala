@@ -1,6 +1,7 @@
 package graft.operators
 
 import java.time.LocalDate
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -73,21 +74,60 @@ object PipelineOps {
     out.write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
   }
 
-  /** Preferred engine sink: parquet partitioned by (city, date) —
-    * partition pruning for the dashboard's per-city and per-range
-    * queries; at 100 TB the date level would be month with compaction.
-    * Partitioning MUST include the date grain: the `realtime` daily run
-    * overwrites only the (city, yesterday) partitions it touched via
-    * dynamic partition overwrite — partitioning by city alone would
-    * replace every city's full history with yesterday's single row,
-    * which is exactly the reference's overwrite-everything bug
-    * (SURVEY §7.4 trap 7). `writeCsv` intentionally keeps the
-    * reference's whole-file CSV for dashboard parity; the parquet path
-    * is the history-preserving sink. */
-  def writePartitioned(df: DataFrame, path: String): Unit =
-    df.write
+  /** Preferred engine sink: parquet holding ONE file per city
+    * (`<path>/city=<name>/part-*.parquet`), written as an upsert keyed
+    * on (date, city).
+    *
+    * When `path` already holds a sink, its rows of the cities `df`
+    * touches are read back, the ones whose (date, city) `df` carries are
+    * dropped, and the rest are written together with `df`; a dynamic
+    * partition overwrite then replaces only the touched cities' files.
+    * So a re-run of a day replaces that day in place, every other day
+    * of a touched city is kept, and the files of cities `df` does not
+    * touch are left as they are. This keeps the `realtime` daily run
+    * from replacing the history with yesterday's rows, which is the
+    * reference's overwrite-everything bug (SURVEY §7.4 trap 7). Reading
+    * the partitions being overwritten is safe: dynamic overwrite stages
+    * the new files and swaps them in only when the job commits.
+    *
+    * One file per city is bounded: the fact is daily, so a city's file
+    * grows by 365 rows a year, and the dashboard's per-city reads open
+    * one file instead of one per day. `date` is a data column, so a
+    * date-range filter reaches the scan as a pushed parquet filter.
+    *
+    * A DataFrame read from `path` before this call must be read again
+    * after it: the touched cities' files are replaced by new ones.
+    *
+    * A sink in the earlier `city=…/date=…` layout is refused with an
+    * `IllegalStateException`: upserting onto it would mix the two
+    * layouts and break partition discovery. A backfill must rewrite
+    * it. `writeCsv` intentionally keeps the reference's whole-file CSV
+    * for dashboard parity; the parquet path is the history-preserving
+    * sink. */
+  def writePartitioned(df: DataFrame, path: String): Unit = {
+    val spark = df.sparkSession
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def present(pattern: String): Boolean =
+      Option(fs.globStatus(new Path(root, pattern))).exists(_.nonEmpty)
+    if (present("city=*/date=*"))
+      throw new IllegalStateException(s"$path holds a sink partitioned by (city, date); " +
+        "a backfill must rewrite it (delete it, then backfill) before it can take upserts")
+    val rows =
+      if (!present("city=*")) df
+      else {
+        val keys = df.select("date", "city")
+        // read with df's schema: no footer-inference job, and the
+        // rewritten files take df's columns
+        spark.read.schema(df.schema).parquet(path)
+          .join(keys.select("city"), Seq("city"), "left_semi")
+          .join(keys, Seq("date", "city"), "left_anti")
+          .unionByName(df)
+      }
+    rows.repartition(col("city")).write
       .mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("city", "date")
+      .partitionBy("city")
       .parquet(path)
+  }
 }

@@ -13,8 +13,9 @@ import graft.operators.{EnergyOps, PipelineOps, QualityOps, WeatherOps}
   * Deviations from the reference, both documented in SURVEY §7.4:
   *   - the duplicated tail of run_pipeline (src/pipeline.py:100-111) is
   *     a verbatim copy-paste no-op and is not replicated (trap 9);
-  *   - `realtime` writes a dynamic partition overwrite instead of
-  *     replacing the whole output with yesterday's rows (trap 7).
+  *   - `realtime` upserts yesterday's (date, city) rows into the
+  *     parquet sink's one file per city instead of replacing the whole
+  *     output with them (trap 7); see `PipelineOps.writePartitioned`.
   *
   * The clock is injected so both modes are deterministic under test
   * (trap 8). Only the flatten is per city; each side is then ONE
@@ -63,6 +64,8 @@ object Pipeline {
   /** Full run: build → quality report → sinks (partitioned parquet +
     * CSV for dashboard parity). Quality thresholds come from `cfg`
     * (reference config['data_quality'], src/data_processor.py:93-98).
+    * The run replaces the parquet files of the cities it touches, so a
+    * DataFrame read from that sink before the run must be read again.
     *
     * Degraded mode (reference src/pipeline.py:74-78): when the energy
     * side carries no values at all — every fetch failed or returned

@@ -110,10 +110,11 @@ object Sinks {
     * columnar formats in this engine (both get predicate pushdown,
     * column pruning, and partition pruning through Spark's file source;
     * ORC is the right choice next to a Hive/LLAP estate, parquet
-    * elsewhere); json/csv are interchange formats. Same
-    * dynamic-partition-overwrite semantics as
-    * `PipelineOps.writePartitioned`, so a daily re-run refreshes only
-    * the partitions it touches in any format. */
+    * elsewhere); json/csv are interchange formats. Writes with
+    * dynamic partition overwrite: a re-run replaces whole partitions of
+    * `partitionCols`, the ones it writes, and keeps the rest. That is a
+    * coarser grain than `PipelineOps.writePartitioned`, which upserts
+    * single (date, city) rows inside a city's one file. */
   def writeFormatted(df: DataFrame, path: String, format: String = "parquet",
       partitionCols: Seq[String] = Nil): Unit = {
     require(Set("parquet", "orc", "json", "csv")(format), s"unsupported format: $format")

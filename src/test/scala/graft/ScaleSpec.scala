@@ -247,6 +247,13 @@ class ScaleSpec extends AnyFunSuite {
     assert(plan.contains("PartitionFilters") && plan.contains("Chicago"),
       s"expected partition pruning in:\n$plan")
     assert(read.count() == 20)
+    // `date` is a data column: the dashboard's `date >= since` filter
+    // must reach the parquet scan as a pushed filter
+    val recent = spark.read.parquet(out).filter(col("date") >= lit("2024-01-11"))
+    val scan = recent.queryExecution.executedPlan.toString
+    assert(scan.contains("PushedFilters: [IsNotNull(date), GreaterThanOrEqual(date,2024-01-11)]"),
+      s"expected the date filter pushed to the scan in:\n$scan")
+    assert(recent.count() == 10 * graft.sources.SyntheticData.cities.size)
   }
 
   test("filter+projection reach the parquet scan (pushdown regression guard)") {
