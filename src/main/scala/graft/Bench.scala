@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main (driver contract): runs every declared query against
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line on stdout; per-query timings
@@ -18,9 +18,17 @@ object Bench {
     times.map { case (k, v) => jsonString(k) + ":" + (if (java.lang.Double.isFinite(v)) v.toString else "null") }
       .mkString("{", ",", "}")
 
-  private def jsonString(s: String): String = "\"" + s.flatMap {
+  /** A JSON string literal: backslash, quote and ALL control chars
+    * (< 0x20) escaped. Verify writes `oracle_sql.json` with it too — a
+    * tab or CR in builder-authored SQL would otherwise make the
+    * driver's json.load fail and silently zero the round's
+    * correctness. */
+  def jsonString(s: String): String = "\"" + s.flatMap {
     case '"' => "\\\""
     case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
     case c if c < ' ' => f"\\u${c.toInt}%04x"
     case c => c.toString
   } + "\""
@@ -33,19 +41,7 @@ object Bench {
     // per-partition work constant (a cluster sizes partitions with the
     // data; local mode pins both to 32 by default)
     val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // see Verify.scala: generate-filter inference re-runs the sketch
-      // chains in scan-level Filters; all exploded arrays here are
-      // in-plan and non-null, so the rule is pure overhead
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]", shuffleParts).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // warmup outside the timed loop: JIT/codegen paths and parquet
     // footers, so the first timed query doesn't absorb session startup
@@ -118,7 +114,7 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     val registry = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Long) = {
+    def once(name: String, fn: (SparkSession, String) => DataFrame): (Double, Long) = {
       val t0 = System.nanoTime()
       val n = try fn(spark, sfDir).count() catch {
         case e: Throwable =>

@@ -29,7 +29,6 @@ object DebugExplain {
     // diff md5_h1_seq replaced is reproducible from this commit alone
     "op_lsh_sigs_legacy" -> { (sp, dir) =>
       import org.apache.spark.sql.functions._
-      graft.plans.GraftFunctions.register(sp)
       graft.operators.Dedup.minhashSignatures(
         graft.sources.Tables.documents(sp, dir), md5Mode = true)
         .select(col("doc_id"),
@@ -52,14 +51,8 @@ object DebugExplain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.tail.toSeq
       else Seq("q02_filter_project", "q03_join_agg", "q04_join_broadcast", "q34_knn_bruteforce")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      // same session tuning as Verify/Bench so dumped plans match
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // same engine conf as Verify/Bench so dumped plans match
+    val spark = GraftSession.builder("local[8]", "8").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"========== $n ==========")

@@ -1,30 +1,22 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler.SparkListener
 
-/** Ad-hoc r16 optimization profiler (dev tool, not driver contract):
-  * runs named registry queries under a job listener so each Spark JOB
-  * inside a query shows up with its wall time and originating
-  * callsite — the attribution step the bench totals can't give
-  * (guide §1: measure where the time goes before touching the code).
-  * Mirrors Bench's session confs so numbers are comparable. */
-object DebugR16 {
+/** Stage profiler (dev tool, not driver contract): runs named registry
+  * queries under a stage listener so each Spark stage inside a query
+  * shows up with its task run/CPU time, GC, shuffle bytes and name —
+  * the attribution step the bench totals can't give. Builds through
+  * [[GraftSession]], the same engine conf as Bench, so numbers are
+  * comparable.
+  *
+  * Usage: java ... graft.Profile [sfDir] [q1,q2,...] */
+object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val names = if (args.length > 1) args(1).split(",").map(_.trim).toSeq
       else Seq("q175_weighted_quantiles")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder("local[32]", "32").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.plans.GraftFunctions.register(spark)
 
     // per-stage (name, tasks, executor run ms) — task-time attribution
     // survives concurrent broadcast jobs where wall times overlap

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: scan-count audit over every declared query (AQE off so
   * exchange reuse is visible statically). Flags plans that read a
   * parquet table ≥3 times — each hit is either justified (cache-backed
@@ -14,13 +12,8 @@ object ScanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val minScans = args.lift(1).map(_.toInt).getOrElse(3)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder("local[8]", "8").getOrCreate()
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.sparkContext.setLogLevel("ERROR")
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {

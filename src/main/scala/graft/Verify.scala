@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,25 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") // env default: local[32]
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // InferFiltersFromGenerate adds isnotnull/size>0 above every
-      // explode; predicate pushdown then substitutes the generator
-      // input's DEFINING EXPRESSION into a scan-level Filter, so for
-      // the sketch queries the full tokenize→shingle→minhash chain
-      // would run once in the Filter and again in the Project. Every
-      // exploded array in this engine is built in-plan and never null,
-      // so the inference is pure per-row overhead (measured ~35% extra
-      // on the sketch-explode stage) — excluded in both Verify and
-      // Bench so the two sessions plan identically.
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // local-iteration filter (comma-separated query names); the driver
@@ -39,26 +20,15 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Bench.jsonString(k)}: ${Bench.jsonString(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // full declared-query manifest: lets the compare step FAIL queries
     // whose runtime error meant no output dir was ever written (instead
     // of silently skipping them and reporting a false green)
     Files.writeString(Paths.get(s"$outDir/declared.json"),
-      selected.keys.toSeq.sorted.map(q).mkString("[", ",", "]"))
+      selected.keys.toSeq.sorted.map(Bench.jsonString).mkString("[", ",", "]"))
     spark.stop()
   }
 }

@@ -1,7 +1,7 @@
 package graft.cli
 
 import java.time.LocalDate
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 import graft.pipeline.Pipeline
 import graft.sources.SyntheticData
 
@@ -25,14 +25,9 @@ object Main {
     val cfg = args.lift(2).orElse(sys.env.get("GRAFT_CONFIG"))
       .map(graft.config.PipelineConfig.fromFile)
       .getOrElse(graft.config.PipelineConfig.default)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-pipeline")
-      .config("spark.sql.shuffle.partitions",
+    val spark = GraftSession.builder(sys.env.getOrElse("SPARK_MASTER", "local[*]"),
         sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+      .appName("graft-pipeline")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val today = sys.env.get("GRAFT_TODAY").map(LocalDate.parse).getOrElse(LocalDate.now())

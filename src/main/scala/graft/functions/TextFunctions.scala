@@ -22,7 +22,7 @@ object TextFunctions {
 
   /** Distinct n-token shingles ("w1 w2 w3"); empty array when the doc is
     * shorter than n tokens. Input column must be an array<string>.
-    * Native [[Shingles]] expression; requires GraftFunctions.register. */
+    * Native [[Shingles]] expression. */
   def shingles(toksCol: String, n: Int = 3): Column =
     expr(s"shingles($toksCol, $n)")
 
@@ -38,21 +38,20 @@ object TextFunctions {
     * the set. Backed by the native [[MinHashSig]] expression (each
     * shingle hashed once, primitive inner loop) — the interpreted
     * higher-order formulation re-hashed every shingle k times and was
-    * the bench bottleneck. Requires GraftFunctions.register. */
+    * the bench bottleneck. */
   def minhashSignature(shinglesCol: String, k: Int = 32): Column =
     expr(s"minhash_sig($shinglesCol, $k)")
 
   /** LSH band hashes of a MinHash signature: split into `bands` bands of
     * k/bands rows, hash each band. Docs sharing any band hash are
-    * near-duplicate candidates. Native [[MinHashBands]] expression;
-    * requires GraftFunctions.register. */
+    * near-duplicate candidates. Native [[MinHashBands]] expression. */
   def bandHashes(sigCol: String, k: Int = 32, bands: Int = 8): Column =
     expr(s"minhash_bands($sigCol, $bands)")
 
   /** 64-bit SimHash of a token array: per-bit vote of the token hash,
     * sign → bit. Native [[SimHash64]] expression: one hash per token
     * (the interpreted nested-aggregate form hashed each token 64
-    * times). Requires GraftFunctions.register. */
+    * times). */
   def simhash64(toksCol: String): Column =
     expr(s"simhash64($toksCol)")
 

@@ -134,8 +134,6 @@ object Bpe {
     * (how many tokens each word costs under the trained tokenizer). */
   def encode(docs: DataFrame, textCol: String, merges: Seq[(String, String)],
       topWords: Int, maxLen: Int = 12): DataFrame = {
-    val spark = docs.sparkSession
-    graft.plans.GraftFunctions.register(spark)
     var words = wordHistogram(docs, textCol, topWords, maxLen)
       .withColumn("toks", expr(
         "concat(transform(sequence(1, length(word)), i -> substring(word, i, 1)), array('</w>'))"))

@@ -52,7 +52,6 @@ object Cdc {
       case "poly" => "cdc_boundaries_poly"
       case other  => throw new IllegalArgumentException(s"unknown CDC mode: $other")
     }
-    graft.plans.GraftFunctions.register(docs.sparkSession)
     docs
       .withColumn("__toks", TextFunctions.tokens(textCol))
       .withColumn("__n", size(col("__toks")))

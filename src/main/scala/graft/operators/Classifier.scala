@@ -2,10 +2,10 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.expressions.graft.{LogitGradLoss, LogitMargin, NativeColumn}
 import org.apache.spark.storage.StorageLevel
 
 import graft.functions.TextFunctions.tokens
-import graft.plans.GraftFunctions
 
 /** Trained text-quality classifier: logistic regression over hashed
   * bag-of-words features (the CCNet/fastText shape — Wenzek et al.
@@ -32,7 +32,7 @@ import graft.plans.GraftFunctions
 object Classifier {
 
   /** Per-row hashed-BOW features: `featCol` = array<double> of length
-    * dim+1 (counts + intercept). Requires [[GraftFunctions.register]].
+    * dim+1 (counts + intercept).
     * `md5Mode` swaps xxhash64 bucketing for the cross-engine md5-h1
     * family (see [[org.apache.spark.sql.catalyst.expressions.graft
     * .HashFeatures]]) — the oracle-replayable variant. */
@@ -65,7 +65,6 @@ object Classifier {
       labelCol: String, dim: Int = 256, maxIter: Int = 20, lr: Double = 0.5,
       textCol: String = "text", md5Mode: Boolean = false,
       floatCast: Boolean = false): (Array[Double], Array[(Double, Double)]) = {
-    GraftFunctions.register(spark)
     val feats0 = featurize(docs, dim, textCol, md5Mode = md5Mode)
       .select(col("features"), col(labelCol).cast("double").as("label"))
     val ownCache = feats0.storageLevel == StorageLevel.NONE
@@ -76,12 +75,10 @@ object Classifier {
       var iter = 0
       while (iter < maxIter) {
         val wNow = w
-        spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-          "logit_grad_loss",
-          exprs => org.apache.spark.sql.catalyst.expressions.graft
-            .LogitGradLoss(exprs(0), exprs(1), wNow), "built-in")
+        val gradLoss = NativeColumn(col("features"), col("label"))(
+          e => LogitGradLoss(e(0), e(1), wNow))
         val row = feats
-          .select(expr("vec_sum(logit_grad_loss(features, label))").as("g"),
+          .select(call_function("vec_sum", gradLoss).as("g"),
             count(lit(1)).as("n"))
           .collect().head
         val g = row.getSeq[Double](0)
@@ -105,13 +102,9 @@ object Classifier {
     * margin, no shuffle, no driver involvement. */
   def scoreLogistic(spark: SparkSession, docs: DataFrame, weights: Array[Double],
       dim: Int = 256, textCol: String = "text", md5Mode: Boolean = false): DataFrame = {
-    GraftFunctions.register(spark)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "logit_margin",
-      exprs => org.apache.spark.sql.catalyst.expressions.graft
-        .LogitMargin(exprs(0), weights), "built-in")
+    val margin = NativeColumn(col("features"))(e => LogitMargin(e.head, weights))
     featurize(docs, dim, textCol, md5Mode = md5Mode)
-      .withColumn("score", expr("1.0d / (1.0d + exp(-logit_margin(features)))"))
+      .withColumn("score", lit(1.0) / (lit(1.0) + exp(-margin)))
       .withColumn("pred", col("score") >= 0.5)
       .drop("features")
   }

@@ -78,7 +78,6 @@ object Curation {
   def contaminationReport(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", n: Int = 3): DataFrame = {
     import graft.functions.TextFunctions._
-    graft.plans.GraftFunctions.register(docs.sparkSession)
     val tagged = split(docs, idCol)
       .withColumn("toks", tokens(textCol))
       .withColumn("sh", shingles("toks", n))
@@ -121,7 +120,7 @@ object Curation {
     * binary reaches the driver, vs `stat.bloomFilter`'s driver-side
     * `treeAggregate` merge of per-partition filters) — and the probe is
     * Spark's own `BloomFilterMightContain` expression (registered as
-    * `might_contain` by [[graft.plans.GraftFunctions]]) inside a
+    * `might_contain` by [[graft.plans.GraftExtensions]]) inside a
     * codegen'd `exists` lambda. The probe expression requires a
     * FOLDABLE sketch side, so the one-row binary is inlined as a
     * literal — the same KB-scale driver materialization every sketch
@@ -135,7 +134,6 @@ object Curation {
       textCol: String = "text", n: Int = 3, fpp: Double = 0.01,
       md5Oracle: Boolean = false): DataFrame = {
     import graft.functions.TextFunctions._
-    graft.plans.GraftFunctions.register(docs.sparkSession)
     val tagged = split(docs, idCol)
       .withColumn("toks", tokens(textCol))
       .filter(size(col("toks")) >= n) // token-count filter: see Dedup.minhashSignatures
@@ -263,7 +261,6 @@ object Curation {
       fpp: Double = 0.01): DataFrame = {
     import graft.functions.TextFunctions._
     val spark = train.sparkSession
-    graft.plans.GraftFunctions.register(spark)
     val trainSh = train
       .withColumn("__toks", tokens(textCol))
       .withColumn("__sh", shingles("__toks", n))
@@ -743,7 +740,6 @@ object Curation {
       textCol: String = "text", minQuality: Double = 0.3,
       budgetFrac: Double = 0.6, shingleN: Int = 13): DataFrame = {
     import graft.functions.TextFunctions._
-    graft.plans.GraftFunctions.register(docs.sparkSession)
     val narrow = split(docs, idCol)
       .withColumn("__toks", tokens(textCol))
       .withColumn("__n", size(col("__toks")).cast("long"))
@@ -932,7 +928,6 @@ object Curation {
   def noveltyReport(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", n: Int = 5): DataFrame = {
     import graft.functions.TextFunctions._
-    graft.plans.GraftFunctions.register(docs.sparkSession)
     val tagged = split(docs, idCol)
       .withColumn("toks", tokens(textCol))
       .filter(size(col("toks")) >= n)

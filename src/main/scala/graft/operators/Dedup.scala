@@ -58,7 +58,6 @@ object Dedup {
   def minhashSignatures(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", k: Int = 32, bands: Int = 8,
       md5Mode: Boolean = false): DataFrame = {
-    graft.plans.GraftFunctions.register(docs.sparkSession)
     val sketched = docs
       .withColumn("toks", tokens(textCol))
       .filter(size(col("toks")) >= 3)
@@ -94,7 +93,6 @@ object Dedup {
   def minhashCandidates(sigs: DataFrame, idCol: String = "doc_id",
       maxBucket: Int = 100): DataFrame = {
     require(maxBucket <= 65535, "maxBucket must fit the topk_agg buffer cap")
-    graft.plans.GraftFunctions.register(sigs.sparkSession)
     val exploded = sigs.select(col(idCol).as("id"), posexplode(col("bandhash")).as(Seq("band", "bh")))
     // ids are collected through the BOUNDED topk_agg buffer (constant
     // score → pure id-ascending order, capacity maxBucket + 1), not
@@ -192,7 +190,6 @@ object Dedup {
       k: Int = 32, threshold: Double = 0.5,
       idCol: String = "doc_id", textCol: String = "text",
       maxBucket: Int = 100, md5Mode: Boolean = false): DataFrame = {
-    graft.plans.GraftFunctions.register(docs.sparkSession)
     bandConfigs.foreach(b => require(k % b == 0, s"bands=$b must divide k=$k"))
     val sigs = docs
       .withColumn("toks", tokens(textCol))
@@ -263,7 +260,6 @@ object Dedup {
       idCol: String = "doc_id", textCol: String = "text",
       maxBucket: Int = 50): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.plans.GraftFunctions.register(docs.sparkSession)
     val pos = docs
       .withColumn("toks", tokens(textCol))
       .filter(size(col("toks")) >= n)
@@ -375,7 +371,6 @@ object Dedup {
   def exactSubstrAudit(docs: DataFrame, n: Int = 8, minSpanTokens: Int = 20,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.plans.GraftFunctions.register(docs.sparkSession)
     val pos = docs
       .withColumn("toks", tokens(textCol))
       .filter(size(col("toks")) >= n)
@@ -462,7 +457,6 @@ object Dedup {
   /** Per-doc 64-bit SimHash fingerprint. Row-local. */
   def simhashFingerprints(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", md5Mode: Boolean = false): DataFrame = {
-    graft.plans.GraftFunctions.register(docs.sparkSession)
     docs.withColumn("toks", tokens(textCol))
       .select(col(idCol),
         (if (md5Mode) expr("simhash64_md5(toks)") else simhash64("toks"))
@@ -505,7 +499,6 @@ object Dedup {
       idCol: String = "vec_id", embCol: String = "embedding",
       nBits: Int = 12, tables: Int = 4, maxBucket: Int = 200,
       md5Mode: Boolean = false): DataFrame = {
-    graft.plans.GraftFunctions.register(emb.sparkSession)
     // md5Mode: sign buckets from the SRP md5 ±1 family instead of the
     // xxhash64 hyperplanes — the q112 idiom, whose projections an
     // external engine recomputes term for term; signs are taken on the
@@ -765,7 +758,6 @@ object Dedup {
   def incrementalNearDupsExact(newDocs: DataFrame, oldDocs: DataFrame,
       threshold: Double = 0.5, n: Int = 3,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    graft.plans.GraftFunctions.register(newDocs.sparkSession)
     val oldOnly = oldDocs.join(newDocs.select(col(idCol)), Seq(idCol), "left_anti")
     def index(docs: DataFrame, isNew: Boolean) = docs
       .withColumn("toks", tokens(textCol))
@@ -1046,7 +1038,6 @@ object Dedup {
   def ngramJaccardPairs(docs: DataFrame, threshold: Double = 0.3,
       idCol: String = "doc_id", textCol: String = "text", n: Int = 3,
       prefixFilter: Option[Boolean] = None, freqOrder: Boolean = false): DataFrame = {
-    graft.plans.GraftFunctions.register(docs.sparkSession)
     val usePrefix = prefixFilter.getOrElse(threshold >= 0.5)
     val sh = docs
       .withColumn("toks", tokens(textCol))
@@ -1175,7 +1166,6 @@ object Dedup {
   def containmentPairs(docs: DataFrame, threshold: Double = 0.5,
       idCol: String = "doc_id", textCol: String = "text", n: Int = 3,
       maxPosting: Int = Int.MaxValue): DataFrame = {
-    graft.plans.GraftFunctions.register(docs.sparkSession)
     val sh = docs
       .withColumn("toks", tokens(textCol))
       .filter(size(col("toks")) >= n)
@@ -1379,7 +1369,6 @@ object Dedup {
       maxCluster: Int = 10000, twoLevelFrom: Int = 256,
       tol: Double = 1e-4): DataFrame = {
     val spark = emb.sparkSession
-    graft.plans.GraftFunctions.register(spark)
     val assigned0 =
       if (k > twoLevelFrom)
         Similarity.kmeansAssignTwoLevel(spark, emb, k, maxIter, idCol, embCol)

@@ -35,8 +35,7 @@ object Dsir {
     pmod(conv(substring(md5(gram), 1, 6), 16, 10).cast("long"), lit(nBuckets))
 
   /** Positional bigrams of the tokenized text (duplicates preserved —
-    * DSIR counts occurrences, not types). Native shingle_seq; callers
-    * must have GraftFunctions registered. */
+    * DSIR counts occurrences, not types). Native shingle_seq. */
   private def bigrams(textCol: String): Column =
     expr(s"shingle_seq(split(lower(trim($textCol)), '\\\\s+'), 2)")
 
@@ -94,7 +93,6 @@ object Dsir {
   def select(spark: SparkSession, docs: DataFrame, targetPred: Column, k: Int,
       idCol: String = "doc_id", textCol: String = "text",
       nBuckets: Int = 256): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     val model = fitLogRatios(docs, targetPred, textCol, nBuckets)
     score(docs, model, textCol)
       .withColumn("logw", round(col("logw_raw"), 4))

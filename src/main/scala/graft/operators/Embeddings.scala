@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.plans.GraftFunctions
 import graft.plans.Pin
 
 /** Corpus-level embedding-column statistics and normalization.
@@ -25,7 +24,6 @@ object Embeddings {
   /** One row per dimension: n, mean, std (population), all from a
     * single aggregate pass (sums + squared sums via vec_sum). */
   def perDimStats(spark: SparkSession, emb: DataFrame, vecCol: String): DataFrame = {
-    GraftFunctions.register(spark)
     val agg = emb.where(col(vecCol).isNotNull)
       .agg(
         expr(s"vec_sum($vecCol)").as("s1"),
@@ -79,7 +77,6 @@ object Embeddings {
   def cosineHistogram(spark: SparkSession, emb: DataFrame,
       idCol: String = "vec_id", vecCol: String = "embedding",
       offsets: Seq[Int] = Seq(1, 17, 97)): DataFrame = {
-    GraftFunctions.register(spark)
     // rank spine: two-phase bucket+offset rank (Spine.rankBy) — the
     // r15 verdict's one remaining row-scale unpartitioned window,
     // replaced by per-bucket row_numbers whose offsets come from a

@@ -68,7 +68,6 @@ object EntityRes {
   def jaroWinklerMatches(df: DataFrame, nameCol: String,
       threshold: Double = 0.9): DataFrame = {
     require(threshold > 0 && threshold < 1, "threshold must be in (0, 1)")
-    graft.plans.GraftFunctions.register(df.sparkSession)
     val names = df
       .filter(col(nameCol).isNotNull)
       .select(lower(trim(col(nameCol))).as("name"))

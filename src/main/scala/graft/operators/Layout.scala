@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.plans.GraftFunctions
 
 /** Multi-dimensional data-layout quality: Z-order (Morton) clustering
   * versus single-column linear sort versus hash distribution, measured
@@ -63,7 +62,6 @@ object Layout {
   def layoutPruningStats(spark: SparkSession, df: DataFrame,
       xCol: String, yCol: String, keyCols: Seq[String],
       cellsLog2: Int = 6): DataFrame = {
-    GraftFunctions.register(spark)
     require(cellsLog2 >= 1 && cellsLog2 <= 16, s"cellsLog2 out of range: $cellsLog2")
     val nCells = 1L << cellsLog2
 

@@ -234,7 +234,6 @@ object RobustStats {
     * compare the same number. */
   def hillTailIndex(spark: SparkSession, df: DataFrame, groupCol: String,
       keyCol: String, k: Int = 100): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     val deg = df.groupBy(col(groupCol), col(keyCol).as("__key"))
       .agg(count(lit(1)).cast("double").as("deg"))
     deg.groupBy(groupCol)

@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.plans.GraftFunctions
+import org.apache.spark.sql.catalyst.expressions.graft.{NativeColumn, NearestCells, PqAdcLookup, PqCodes, PqTable}
 import graft.plans.Pin
 
 /** Approximate-nearest-neighbor search over an embedding column
@@ -28,13 +28,10 @@ import graft.plans.Pin
   */
 object Similarity {
 
-  // Per-call unique temp-function names (ivf_cells_N / kmeans_cells_N)
-  // are never deregistered: an earlier call's lazily re-evaluated result
-  // must keep resolving against ITS centroid table (deregistering
-  // reintroduces the r2 wrong-centroids bug as a function-not-found
-  // error). The cost is one k×d float table per call held by the
-  // session registry — bounded by calls per session, freed with it.
-  private val ivfCallCounter = new java.util.concurrent.atomic.AtomicLong(0)
+  /** The `nProbe` nearest centroids of `emb` (see [[NearestCells]]). */
+  private def nearestCells(emb: Column, ids: Array[Long], vecs: Array[Array[Float]],
+      nProbe: Int, round6: Boolean = false): Column =
+    NativeColumn(emb)(e => NearestCells(e.head, ids, vecs, nProbe, round6))
 
   private def ranked(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy("query_id")
@@ -48,7 +45,6 @@ object Similarity {
     * (both `(vec_id, embedding)`-shaped). */
   def bruteForceTopK(spark: SparkSession, corpus: DataFrame, queries: DataFrame,
       k: Int = 10): DataFrame = {
-    GraftFunctions.register(spark)
     val q = broadcast(queries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb")))
     val scored = corpus.select(col("vec_id"), col("embedding"))
       .crossJoin(q)
@@ -91,7 +87,6 @@ object Similarity {
     * the margin ratio are engine-stable. */
   def bitextMarginMine(spark: SparkSession, sideA: DataFrame, sideB: DataFrame,
       k: Int = 4, minMargin: Double = 1.0): DataFrame = {
-    GraftFunctions.register(spark)
     val batch = broadcast(
       sideA.select(col("vec_id").as("src_id"), col("embedding").as("a_emb")))
     val scored = sideB.select(col("vec_id").as("dst_id"), col("embedding").as("b_emb"))
@@ -223,7 +218,6 @@ object Similarity {
   def ivfTopK(spark: SparkSession, corpus: DataFrame, queries: DataFrame,
       k: Int = 10, nCentroids: Int = 16, nProbe: Int = 4,
       trainIters: Int = 0): DataFrame = {
-    GraftFunctions.register(spark)
     // deterministic coarse centroids spread across the FULL id range:
     // approx-percentile picks actual observed vec_ids at evenly-spaced
     // quantiles (an id-prefix sample would bias every cell toward the
@@ -248,19 +242,11 @@ object Similarity {
     // reached production counts (judge round-1 finding).
     val ids = centroidVecs.map(_._1).toArray
     val vecs = centroidVecs.map(_._2).toArray
-    // per-call unique registration: the function closes over THIS call's
-    // centroid table, so a session-global name would make two
-    // interleaved ivfTopK calls (or lazy re-evaluation of an earlier
-    // result after a later call) resolve against the wrong centroids
-    val fn = s"ivf_cells_${ivfCallCounter.incrementAndGet()}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(fn,
-      exprs => org.apache.spark.sql.catalyst.expressions.graft.NearestCells(
-        exprs.head, ids, vecs, nProbe), "built-in")
     val cells = corpus.select(col("vec_id"), col("embedding"))
-      .withColumn("cell", expr(s"element_at($fn(embedding), 1)"))
+      .withColumn("cell", element_at(nearestCells(col("embedding"), ids, vecs, nProbe), 1))
     val q = broadcast(
       queries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-        .withColumn("cell", explode(expr(s"$fn(q_emb)"))))
+        .withColumn("cell", explode(nearestCells(col("q_emb"), ids, vecs, nProbe))))
     val scored = cells.join(q, Seq("cell"))
       .filter(col("vec_id") =!= col("query_id"))
       .withColumn("sim", expr("cosine_sim(embedding, q_emb)"))
@@ -285,7 +271,6 @@ object Similarity {
     * re-assigning the full corpus per call. */
   def writeIvfIndex(spark: SparkSession, corpus: DataFrame, name: String,
       nCentroids: Int = 16, trainIters: Int = 0, buckets: Int = 16): Unit = {
-    GraftFunctions.register(spark)
     val centroidVecs = trainIvfCentroids(spark, corpus, nCentroids, trainIters)
     import spark.implicits._
     graft.sources.Sinks.replaceManagedTable(
@@ -297,12 +282,8 @@ object Similarity {
       else {
         val ids = centroidVecs.map(_._1).toArray
         val vecs = centroidVecs.map(_._2).toArray
-        val fn = s"ivf_cells_${ivfCallCounter.incrementAndGet()}"
-        spark.sessionState.functionRegistry.createOrReplaceTempFunction(fn,
-          exprs => org.apache.spark.sql.catalyst.expressions.graft.NearestCells(
-            exprs.head, ids, vecs, 1), "built-in")
         corpus.select(col("vec_id"), col("embedding"))
-          .withColumn("cell", expr(s"element_at($fn(embedding), 1)"))
+          .withColumn("cell", element_at(nearestCells(col("embedding"), ids, vecs, 1), 1))
       }
     graft.sources.Sinks.writeBucketed(postings, s"${name}_postings", buckets, Seq("cell"))
   }
@@ -316,20 +297,15 @@ object Similarity {
     * exchange-free probe join intact. One map-side assignment pass +
     * one bucketed write of the new batch only. */
   def appendToIvfIndex(spark: SparkSession, newVecs: DataFrame, name: String): Unit = {
-    GraftFunctions.register(spark)
     val centroidRows = spark.table(s"${name}_centroids").collect().sortBy(_.getLong(0))
     require(centroidRows.nonEmpty, s"index ${name} has no centroids — build it with writeIvfIndex first")
     val ids = centroidRows.map(_.getLong(0))
     val vecs = centroidRows.map(_.getSeq[Float](1).toArray)
-    val fn = s"ivf_cells_${ivfCallCounter.incrementAndGet()}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(fn,
-      exprs => org.apache.spark.sql.catalyst.expressions.graft.NearestCells(
-        exprs.head, ids, vecs, 1), "built-in")
     val buckets = spark.sql(s"DESCRIBE EXTENDED ${name}_postings")
       .filter(col("col_name") === "Num Buckets")
       .select("data_type").head().getString(0).trim.toInt
     newVecs.select(col("vec_id"), col("embedding"))
-      .withColumn("cell", expr(s"element_at($fn(embedding), 1)"))
+      .withColumn("cell", element_at(nearestCells(col("embedding"), ids, vecs, 1), 1))
       .write.mode(org.apache.spark.sql.SaveMode.Append)
       .bucketBy(buckets, "cell").sortBy("cell")
       .format("parquet").saveAsTable(s"${name}_postings")
@@ -344,7 +320,6 @@ object Similarity {
     * asserted). */
   def ivfTopKFromIndex(spark: SparkSession, name: String, queries: DataFrame,
       k: Int = 10, nProbe: Int = 4, pruneLimit: Int = 64): DataFrame = {
-    GraftFunctions.register(spark)
     val centroidRows = spark.table(s"${name}_centroids")
       .collect().sortBy(_.getLong(0))
     if (centroidRows.isEmpty) {
@@ -354,13 +329,9 @@ object Similarity {
     }
     val ids = centroidRows.map(_.getLong(0))
     val vecs = centroidRows.map(_.getSeq[Float](1).toArray)
-    val fn = s"ivf_cells_${ivfCallCounter.incrementAndGet()}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(fn,
-      exprs => org.apache.spark.sql.catalyst.expressions.graft.NearestCells(
-        exprs.head, ids, vecs, nProbe), "built-in")
     val qCells = queries
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-      .withColumn("cell", explode(expr(s"$fn(q_emb)")))
+      .withColumn("cell", explode(nearestCells(col("q_emb"), ids, vecs, nProbe)))
     // the probed cell set is bounded by nQueries·nProbe and KNOWN
     // before the scan — for genuinely tiny probes, materialize it as a
     // literal IN so the bucketed source prunes buckets at planning
@@ -398,7 +369,6 @@ object Similarity {
   def mmrRerank(spark: SparkSession, topk: DataFrame, corpus: DataFrame,
       k: Int = 10, lambda: Double = 0.7,
       idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
-    GraftFunctions.register(spark)
     val cands = topk.select(col("query_id"), col(idCol), col("sim"))
       .join(corpus.select(col(idCol), col(embCol)), Seq(idCol))
       .groupBy("query_id")
@@ -457,7 +427,6 @@ object Similarity {
   def kmeansFitTrace(spark: SparkSession, emb0: DataFrame, k: Int,
       maxIter: Int = 10, idCol: String = "vec_id", embCol: String = "embedding",
       tol: Double = 1e-4, round6: Boolean = false): (Array[Array[Float]], Array[Double]) = {
-    GraftFunctions.register(spark)
     // Lloyd's scans the input maxIter+2 times (seeds + per-round
     // assign/update) — cache it for the loop's duration, MLlib-KMeans
     // style, unless the caller already did. MEMORY_AND_DISK: an input
@@ -540,12 +509,8 @@ object Similarity {
   def kmeansAssign(spark: SparkSession, df: DataFrame,
       centroids: Array[Array[Float]], embCol: String = "embedding",
       round6: Boolean = false): DataFrame = {
-    val fn = s"kmeans_cells_${ivfCallCounter.incrementAndGet()}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(fn,
-      exprs => org.apache.spark.sql.catalyst.expressions.graft.NearestCells(
-        exprs.head, Array.tabulate(centroids.length)(_.toLong), centroids, 1,
-        round6), "built-in")
-    df.withColumn("cell", expr(s"element_at($fn($embCol), 1)"))
+    df.withColumn("cell", element_at(nearestCells(col(embCol),
+      Array.tabulate(centroids.length)(_.toLong), centroids, 1, round6), 1))
   }
 
   /** Two-level (coarse→fine, IVF-style) spherical k-means ASSIGNMENT,
@@ -577,7 +542,6 @@ object Similarity {
   def kmeansAssignTwoLevel(spark: SparkSession, emb0: DataFrame, k: Int,
       maxIter: Int = 5, idCol: String = "vec_id",
       embCol: String = "embedding"): DataFrame = {
-    GraftFunctions.register(spark)
     val k1 = math.max(2, math.ceil(math.sqrt(k.toDouble)).toInt)
     val k2 = math.max(2, math.ceil(k.toDouble / k1).toInt)
     val emb = emb0.select(col(idCol), col(embCol))
@@ -662,7 +626,6 @@ object Similarity {
   def lshTopK(spark: SparkSession, corpus: DataFrame, queries: DataFrame,
       k: Int = 10, nBits: Int = 8, tables: Int = 4,
       md5Mode: Boolean = false): DataFrame = {
-    GraftFunctions.register(spark)
     // md5Mode: table buckets from the SRP ±1 md5 sign family (signs of
     // the 6-dp-rounded projections — the q112/q41 convention) instead
     // of xxhash64 hyperplanes, making candidates externally
@@ -738,7 +701,6 @@ object Similarity {
   def pqFit(spark: SparkSession, emb0: DataFrame, m: Int = 8, ks: Int = 16,
       maxIter: Int = 5, idCol: String = "vec_id", embCol: String = "embedding",
       tol: Double = 1e-4): Array[Array[Array[Float]]] = {
-    GraftFunctions.register(spark)
     val ownCache = emb0.storageLevel == org.apache.spark.storage.StorageLevel.NONE
     val emb = if (ownCache)
       emb0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -762,13 +724,10 @@ object Similarity {
       var iter = 0
       var moved = Double.MaxValue
       while (iter < maxIter && moved > tol) {
-        val fn = s"pq_codes_${ivfCallCounter.incrementAndGet()}"
         val books = codebooks
-        spark.sessionState.functionRegistry.createOrReplaceTempFunction(fn,
-          exprs => org.apache.spark.sql.catalyst.expressions.graft.PqCodes(
-            exprs.head, books), "built-in")
         val sums = emb
-          .select(col(embCol), posexplode(expr(s"$fn($embCol)")).as(Seq("sub", "code")))
+          .select(col(embCol),
+            posexplode(NativeColumn(col(embCol))(e => PqCodes(e.head, books))).as(Seq("sub", "code")))
           .select(col("sub"), col("code"),
             expr(s"slice($embCol, sub * $dSub + 1, $dSub)").as("subvec"))
           .groupBy("sub", "code")
@@ -802,11 +761,7 @@ object Similarity {
   def pqEncode(spark: SparkSession, df: DataFrame,
       codebooks: Array[Array[Array[Float]]], embCol: String = "embedding",
       outCol: String = "pq_code"): DataFrame = {
-    val fn = s"pq_codes_${ivfCallCounter.incrementAndGet()}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(fn,
-      exprs => org.apache.spark.sql.catalyst.expressions.graft.PqCodes(
-        exprs.head, codebooks), "built-in")
-    df.withColumn(outCol, expr(s"$fn($embCol)"))
+    df.withColumn(outCol, NativeColumn(col(embCol))(e => PqCodes(e.head, codebooks)))
   }
 
   /** ADC top-k: queries build their m·ks dot-product tables once
@@ -818,24 +773,15 @@ object Similarity {
   def pqTopK(spark: SparkSession, corpus: DataFrame, queries: DataFrame,
       codebooks: Array[Array[Array[Float]]], k: Int = 10,
       codesCol: Option[String] = None): DataFrame = {
-    GraftFunctions.register(spark)
     val ks = codebooks(0).length
-    val tabFn = s"pq_table_${ivfCallCounter.incrementAndGet()}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(tabFn,
-      exprs => org.apache.spark.sql.catalyst.expressions.graft.PqTable(
-        exprs.head, codebooks), "built-in")
-    val adcFn = s"pq_adc_${ivfCallCounter.incrementAndGet()}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(adcFn,
-      exprs => org.apache.spark.sql.catalyst.expressions.graft.PqAdcLookup(
-        exprs(0), exprs(1), ks), "built-in")
     val encoded = codesCol.fold(
       pqEncode(spark, corpus, codebooks).select(col("vec_id"), col("pq_code")))(
       c => corpus.select(col("vec_id"), col(c).as("pq_code")))
     val q = broadcast(queries.select(col("vec_id").as("query_id"),
-      expr(s"$tabFn(embedding)").as("q_tab")))
+      NativeColumn(col("embedding"))(e => PqTable(e.head, codebooks)).as("q_tab")))
     val scored = encoded.crossJoin(q)
       .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("sim", expr(s"$adcFn(pq_code, q_tab)"))
+      .withColumn("sim", NativeColumn(col("pq_code"), col("q_tab"))(e => PqAdcLookup(e(0), e(1), ks)))
     ranked(scored, k)
       .select(col("query_id"), col("vec_id"), round(col("sim"), 6).as("adc"), col("rank"))
   }
@@ -850,7 +796,6 @@ object Similarity {
   def pqTopKRerank(spark: SparkSession, corpus: DataFrame, queries: DataFrame,
       codebooks: Array[Array[Array[Float]]], k: Int = 10,
       shortlist: Int = 50): DataFrame = {
-    GraftFunctions.register(spark)
     val cands = pqTopK(spark, corpus, queries, codebooks, k = shortlist)
       .select(col("query_id"), col("vec_id"), col("adc"))
     val q = broadcast(queries.select(col("vec_id").as("query_id"),
@@ -883,7 +828,6 @@ object Similarity {
   def silhouette(spark: SparkSession, emb: DataFrame,
       idCol: String = "vec_id", labelCol: String = "label",
       vecCol: String = "embedding"): DataFrame = {
-    GraftFunctions.register(spark)
     val e = emb.select(col(idCol).as("vec_id"), col(labelCol).as("label"),
       col(vecCol).as("embedding"))
     val cents = e.groupBy(col("label").as("clabel"))

@@ -197,7 +197,6 @@ object TextSearch {
     * the operator is pure arithmetic — fully DuckDB-replicable. */
   def bigramPerplexity(docs: DataFrame,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    graft.plans.GraftFunctions.register(docs.sparkSession)
     val toks = docs
       .withColumn("toks", TextFunctions.tokens(textCol))
       .filter(size(col("toks")) >= 2)

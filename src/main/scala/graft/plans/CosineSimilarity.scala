@@ -1,7 +1,7 @@
 // Declared inside org.apache.spark.sql.* because ExpectsInputTypes'
 // signature uses AbstractDataType, which is private[sql] — the standard
-// pattern for third-party native expressions. The graft-facing API lives
-// in graft.plans.GraftFunctions below.
+// pattern for third-party native expressions. Its SQL name is in the
+// graft.plans.GraftExtensions table.
 package org.apache.spark.sql.catalyst.expressions.graft
 
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}

@@ -1,8 +1,8 @@
 // Same package rationale as CosineSimilarity.scala / Sketches.scala:
 // native expressions live under org.apache.spark.sql so they can use
-// catalyst internals (XXH64, UTF8String buffers). graft-facing
-// registration is in graft.plans.GraftFunctions and
-// graft.operators.Classifier.
+// catalyst internals (XXH64, UTF8String buffers). hash_features is in
+// the graft.plans.GraftExtensions table; graft.operators.Classifier
+// builds the weight-bound expressions as columns.
 package org.apache.spark.sql.catalyst.expressions.graft
 
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}

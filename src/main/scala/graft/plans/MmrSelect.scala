@@ -1,6 +1,6 @@
 // Same package rationale as CosineSimilarity.scala: native expressions
 // live under org.apache.spark.sql so they can use catalyst internals.
-// graft-facing registration is in graft.plans.GraftFunctions.
+// Its SQL name is in the graft.plans.GraftExtensions table.
 package org.apache.spark.sql.catalyst.expressions.graft
 
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}

@@ -1,7 +1,7 @@
 // Same package rationale as CosineSimilarity.scala: native expressions
 // live under org.apache.spark.sql so they can use catalyst internals
-// (XXH64, UTF8String buffers). graft-facing registration is in
-// graft.plans.GraftFunctions.
+// (XXH64, UTF8String buffers). Their SQL names are in the
+// graft.plans.GraftExtensions table.
 package org.apache.spark.sql.catalyst.expressions.graft
 
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
@@ -1015,4 +1015,16 @@ case class PqAdcLookup(left: Expression, right: Expression, ks: Int)
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
+}
+
+/** A Column over a native expression whose parameters are driver-side
+  * tables (IVF centroids, PQ codebooks, model weights), not SQL
+  * literals, so it has no entry in the graft.plans.GraftExtensions
+  * table. The expression is built over `inputs` and travels with the
+  * DataFrame, so each call's table stays bound to its own result. */
+object NativeColumn {
+  def apply(inputs: org.apache.spark.sql.Column*)(
+      build: Seq[Expression] => Expression): org.apache.spark.sql.Column =
+    org.apache.spark.sql.classic.ExpressionUtils.column(
+      build(inputs.map(org.apache.spark.sql.classic.ExpressionUtils.expression)))
 }

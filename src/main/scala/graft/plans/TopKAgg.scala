@@ -1,7 +1,7 @@
 // Declared inside org.apache.spark.sql.* because the aggregate base
 // classes use private[sql] types — same placement rationale as
-// VectorAgg/CosineSimilarity. The graft-facing API is
-// graft.plans.GraftFunctions ("topk_agg").
+// VectorAgg/CosineSimilarity. Its SQL name ("topk_agg") is in the
+// graft.plans.GraftExtensions table.
 package org.apache.spark.sql.catalyst.expressions.graft
 
 import java.nio.ByteBuffer

@@ -1,7 +1,7 @@
 // Declared inside org.apache.spark.sql.* because the aggregate base
 // classes use private[sql] types — same placement rationale as
-// CosineSimilarity/Sketches. The graft-facing API is
-// graft.plans.GraftFunctions.
+// CosineSimilarity/Sketches. Its SQL name ("vec_sum") is in the
+// graft.plans.GraftExtensions table.
 package org.apache.spark.sql.catalyst.expressions.graft
 
 import java.nio.ByteBuffer

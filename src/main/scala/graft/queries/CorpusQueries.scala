@@ -251,7 +251,6 @@ object CorpusQueries {
     * deterministic, so the full hash oracle (a naive ORDER BY LIMIT
     * in DuckDB) proves the heap identity. */
   def q293HeavyHitters(s: SparkSession, d: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     val hist = Tables.documents(s, d)
       .select(explode(expr(
         "bigram_counts(split(lower(trim(text)), '\\\\s+'))")).as("e"))
@@ -391,7 +390,6 @@ object CorpusQueries {
     * integer-over-integer divisions, so the full report hash-matches
     * DuckDB's unnest+group restatement unrounded. */
   def q116GopherRules(s: SparkSession, d: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     QualityRules.gopherFilterReport(Tables.documents(s, d))
       .select(Seq("doc_id", "n_words", "mean_word_len", "stop_hits", "alpha_frac",
         "symbol_ratio", "n_lines", "dup_line_frac", "bullet_line_frac",
@@ -453,7 +451,6 @@ object CorpusQueries {
     * Full hash oracle restating the funnel with cumulative CASE
     * products. */
   def q120FilterFunnel(s: SparkSession, d: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     QualityRules.gopherFunnel(Tables.documents(s, d)).orderBy("stage")
   }
 

@@ -165,7 +165,6 @@ object MiningQueries {
     * backward normalizer is computed only for forward survivors (the
     * q254 discipline). No corpus-sized broadcast or cross anywhere. */
   def q283BitextMarginLsh(s: SparkSession, d: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     val k = 4
     val emb = Tables.embeddings(s, d)
     val clone = emb.filter(col("vec_id") === 7)
@@ -370,7 +369,6 @@ object MiningQueries {
     * control that must NOT appear. */
   def q260LoopDetector(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    graft.plans.GraftFunctions.register(s)
     val planted = Seq(
       (-3L, Seq.fill(30)("loopa").mkString(" ")),
       (-2L, Seq.fill(15)("pa pb").mkString(" ")),

@@ -67,7 +67,6 @@ object ProfileQueries {
     * row of a group on one reducer). The oracle IS the window
     * formulation — the hash match proves the two equivalent. */
   def q179TopkNative(s: SparkSession, d: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     Tables.events(s, d)
       .groupBy("event_type")
       .agg(expr("topk_agg(value, event_id, 10)").as("top"))

@@ -191,7 +191,6 @@ object RevenueQueries {
     * ranking so the (sim, id) rank key is identical arithmetic in
     * both engines. */
   def q272HardNegatives(s: SparkSession, d: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     val emb = Tables.embeddings(s, d)
     val probes = emb.filter(col("vec_id") % 20 === 0 && col("vec_id") < 20480)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),

@@ -386,7 +386,6 @@ object TextQueries {
     * `planted_shared` ≥ 1 by the winnowing theorem. */
   def q78Winnow(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    graft.plans.GraftFunctions.register(s)
     val common = "the shared boilerplate passage that both planted documents quote verbatim across many tokens"
     val planted = Seq(
       (-1L, s"first preamble words then $common and a unique first tail"),

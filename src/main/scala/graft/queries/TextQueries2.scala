@@ -6,7 +6,6 @@ import org.apache.spark.sql.expressions.Window
 import graft.sources.Tables
 import graft.functions.TextFunctions
 import graft.operators.Classifier
-import graft.plans.GraftFunctions
 
 /** Second tranche of text-analysis operators for the training-data
   * pipeline: repetition scoring, corpus vocabulary, TF-IDF, and
@@ -20,7 +19,6 @@ object TextQueries2 {
     * shingles| / |shingle positions|. High ratio ⇒ the document repeats
     * itself; a standard pre-training quality filter. */
   def q49Repetition(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     docs(s, d)
       .withColumn("toks", TextFunctions.tokens("text"))
       .filter(size(col("toks")) >= 3)

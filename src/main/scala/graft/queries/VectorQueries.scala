@@ -45,7 +45,6 @@ object VectorQueries {
     * hash oracle — slicing and cosine are exact arithmetic on both
     * engines. */
   def q288Matryoshka(s: SparkSession, d: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     val emb = Tables.embeddings(s, d)
     val tr = emb.select(col("vec_id"), expr("slice(embedding, 1, 16)").as("embedding"))
     val approx = Similarity.bruteForceTopK(
@@ -90,7 +89,6 @@ object VectorQueries {
     * rerank joins candidates×1 back to the full-width corpus by id;
     * the query side broadcasts at every stage. */
   def q289TieredRetrieval(s: SparkSession, d: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     val emb = Tables.embeddings(s, d)
     val impostor = emb.filter(col("vec_id") === 0)
       .select(lit(-77L).as("vec_id"),
@@ -337,7 +335,6 @@ object VectorQueries {
     * → rounded 6 per discipline). Map-side only: no shuffle, no UDF,
     * one native expression per row. */
   def q111RandomProjection(s: SparkSession, d: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     Tables.embeddings(s, d)
       .select(col("vec_id"), posexplode(
           expr("transform(srp_project(embedding, 16), z -> round(z, 6))"))
@@ -358,7 +355,6 @@ object VectorQueries {
     * across engines) so a borderline-zero component cannot flip a bit
     * on one engine only. */
   def q112SrpHammingTopK(s: SparkSession, d: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     // the 16 sign bits packed into ONE int by the native band-pack
     // expression; Hamming distance is then codegen'd bit_count(xor) —
     // no interpreted HOFs anywhere in the corpus × queries hot loop
@@ -430,7 +426,6 @@ object VectorQueries {
     * fold, ranking ties break on vec_id, and the plants are the same
     * rows in both engines. */
   def q280HardNegativesLsh(s: SparkSession, d: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     val pinned = col("vec_id") % 20 === 0 && col("vec_id") < 20480
     val raw = Tables.embeddings(s, d)
     val plants = raw.filter(col("vec_id") === 0 || col("vec_id") === 20)
@@ -504,7 +499,6 @@ object VectorQueries {
     * arithmetic DuckDB replicates exactly — and self-evidencing
     * (sim_err shows the precision cost of the 4× shrink in-row). */
   def q66QuantizedKnn(s: SparkSession, d: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     val qz = Similarity.quantizeInt8(Tables.embeddings(s, d))
       .withColumn("deq", expr("transform(q_vec, v -> v * q_scale)"))
     val queries = broadcast(qz.filter(col("vec_id") < NQueries)
@@ -539,7 +533,6 @@ object VectorQueries {
     * (labels × d) mean is exploded only AFTER aggregation for the
     * tabular output. */
   def q70LabelCentroids(s: SparkSession, d: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     Tables.embeddings(s, d)
       .groupBy("label")
       .agg(expr("vec_sum(embedding)").as("vsum"), count(lit(1)).as("n"))

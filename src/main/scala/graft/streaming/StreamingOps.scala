@@ -137,7 +137,6 @@ object StreamingOps {
     * streaming answer to "top sellers today" that a row_number window
     * cannot express at all (no windows over streaming aggregates). */
   def dailyTopkStream(spark: SparkSession, path0: String, k: Int = 3): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     val path = stageDir(path0)
     rawEventStream(spark, path)
       .withWatermark("ts", "1 day")

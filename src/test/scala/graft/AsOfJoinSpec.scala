@@ -1,18 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{AsOfJoin, Dedup}
 
-class AsOfJoinSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class AsOfJoinSpec extends AnyFunSuite with SparkFixture {
 
   private def ts(s: String) = java.sql.Timestamp.valueOf(s)
 

@@ -15,9 +15,10 @@ class BenchLineSpec extends AnyFunSuite {
 
   test("queries_part lines escape names and write non-finite times as null") {
     val times = Seq("a\"b\\c" -> Double.NaN, "tab\there" -> Double.PositiveInfinity,
-      "nl\n" -> Double.NegativeInfinity, "ok" -> 2.5)
+      "nl\n" -> Double.NegativeInfinity, "q\"x\\y\nz\tw" -> Double.NaN, "ok" -> 2.5)
     val line = Bench.queriesPartLine(1, times)
     assert(!line.contains("NaN") && !line.contains("Infinity"), line)
+    assert(!line.exists(_ < ' '), line)
     val json = new ObjectMapper().readTree(line)
     assert(json.get("metric").asText == "queries_part" && json.get("part").asInt == 1)
     val queries = json.get("queries")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.TextSearch
 
@@ -10,16 +9,7 @@ import graft.operators.TextSearch
   * literal planning stall guard shared with the LSH/IVF probes). Both
   * branches must score bit-identically to the inline [[TextSearch
   * .bm25TopK]] on the indexed corpus. */
-class Bm25IndexSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_bm25_wh").toString)
-    .getOrCreate()
+class Bm25IndexSpec extends AnyFunSuite with SparkFixture {
 
   private def corpus = {
     val s = spark; import s.implicits._

@@ -1,7 +1,7 @@
 package graft
 
 import java.time.LocalDate
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.Exchange
@@ -13,14 +13,7 @@ import graft.sources.SyntheticData
 /** The pipeline runs every city through one city-keyed plan. These
   * tests pin its rows and report on a multi-city fixture, its input
   * checks, and the plan shape's independence from the city count. */
-class CityKeyedPipelineSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CityKeyedPipelineSpec extends AnyFunSuite with SparkFixture {
 
   private def noaa(readings: (String, String, Double)*): DataFrame = {
     val s = spark; import s.implicits._

@@ -1,26 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Classifier
-import graft.plans.GraftFunctions
 
 /** The trained-quality-classifier operator: feature hashing, the
   * one-aggregate-per-iteration GD loop, and the frozen-weights scoring
   * path. Ground truths are hand-computable (tiny separable corpora). */
-class ClassifierSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ClassifierSpec extends AnyFunSuite with SparkFixture {
 
   test("hash_features: counts fold into buckets, intercept slot is 1") {
     val s = spark; import s.implicits._
-    GraftFunctions.register(s)
     val out = Seq((1L, "a b a")).toDF("id", "text")
       .select(expr("hash_features(split(text, ' '), 8)").as("f"))
       .head().getSeq[Double](0)
@@ -49,7 +39,6 @@ class ClassifierSpec extends AnyFunSuite {
 
   test("hash_features_md5 buckets by md5-h1 % dim (the DuckDB-replayable rule)") {
     val s = spark; import s.implicits._
-    GraftFunctions.register(s)
     val toks = Seq("good3", "junk11", "the", "data", "of", "and")
     val out = Seq((1L, toks.mkString(" "))).toDF("id", "text")
       .select(expr("hash_features_md5(split(text, ' '), 256)").as("f"))

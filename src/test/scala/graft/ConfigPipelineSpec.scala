@@ -1,7 +1,6 @@
 package graft
 
 import java.time.LocalDate
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.config.PipelineConfig
@@ -13,14 +12,7 @@ import graft.sources.{Connectors, SyntheticData}
   * src/pipeline.py:16-17), the S4 raw-zone landing writer + replay
   * guarantee (src/data_fetcher.py:48-53), the weather-only degraded
   * mode (src/pipeline.py:74-78), and the gated single-file CSV sink. */
-class ConfigPipelineSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ConfigPipelineSpec extends AnyFunSuite with SparkFixture {
 
   private val yamlText =
     """# local secrets — shape mirrors the reference example

@@ -1,17 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Curation
 
-class CurationSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CurationSpec extends AnyFunSuite with SparkFixture {
 
   private def docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.01")
 

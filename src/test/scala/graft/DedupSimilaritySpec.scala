@@ -1,22 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Dedup, Multimodal, Similarity}
-import graft.plans.GraftFunctions
 
 /** Oracle tests for the sketch-based operators DuckDB cannot replicate:
   * planted duplicates for MinHash/SimHash, brute-force ground truth for
   * LSH recall, hand-computed cosine for the native expression. */
-class DedupSimilaritySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DedupSimilaritySpec extends AnyFunSuite with SparkFixture {
 
   private def docsDf(rows: Seq[(Long, String)]) = {
     val s = spark; import s.implicits._
@@ -148,7 +139,6 @@ class DedupSimilaritySpec extends AnyFunSuite {
 
   test("int8 quantization: roundtrip error bounded by scale/2, zero vectors safe") {
     val s = spark; import s.implicits._
-    GraftFunctions.register(spark)
     val df = Seq(
       (1L, Array(0.5f, -1.0f, 0.25f, 0.127f)),
       (2L, Array(0.0f, 0.0f, 0.0f, 0.0f)), // degenerate: scale 0
@@ -255,7 +245,6 @@ class DedupSimilaritySpec extends AnyFunSuite {
 
   test("winnowing: shared long substring guarantees a shared fingerprint; density bounded") {
     val s = spark; import s.implicits._
-    GraftFunctions.register(spark)
     val common = "one two three four five six seven eight nine ten eleven twelve"
     // docs 4/5: repetition-heavy prefixes of DIFFERENT lengths before the
     // shared run — the case where winnowing over the deduped shingle SET
@@ -282,7 +271,6 @@ class DedupSimilaritySpec extends AnyFunSuite {
 
   test("ANN on an empty corpus returns empty, not a crash") {
     val s = spark; import s.implicits._
-    GraftFunctions.register(spark)
     val empty = Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding")
     val q = Seq((1L, Array(1f, 0f))).toDF("vec_id", "embedding")
     assert(Similarity.ivfTopK(spark, empty, q).count() == 0)
@@ -333,7 +321,6 @@ class DedupSimilaritySpec extends AnyFunSuite {
   }
 
   test("native cosine_sim matches hand computation and handles zero vectors") {
-    GraftFunctions.register(spark)
     val s = spark; import s.implicits._
     val df = Seq(
       (Array(1.0f, 0.0f), Array(0.0f, 1.0f), 0.0),
@@ -399,7 +386,6 @@ class DedupSimilaritySpec extends AnyFunSuite {
   }
 
   test("srp_project: sign codes are scale-invariant and track the Charikar angle bound") {
-    GraftFunctions.register(spark)
     val s = spark; import s.implicits._
     // a, a positively scaled (angle 0), a negated (angle pi), and an
     // orthogonal-by-construction partner (angle pi/2)
@@ -425,7 +411,6 @@ class DedupSimilaritySpec extends AnyFunSuite {
   }
 
   test("srp_band_keys: native pack is bit-identical to the interpreted HOF formulation") {
-    GraftFunctions.register(spark)
     val s = spark; import s.implicits._
     val rnd = new scala.util.Random(11)
     val rows = Seq.tabulate(40) { i =>
@@ -475,7 +460,6 @@ class DedupSimilaritySpec extends AnyFunSuite {
   }
 
   test("srp_project: JL property - projected inner product estimates the exact one") {
-    GraftFunctions.register(spark)
     val s = spark; import s.implicits._
     // E[<Pa,Pb>/m] = <a,b> for Rademacher projections (Achlioptas, JCSS
     // 2003); with m=256 the estimator's sd is ~||a||||b||/sqrt(m), so a
@@ -514,7 +498,6 @@ class DedupSimilaritySpec extends AnyFunSuite {
       (11L, v(1, 1, 9, 9, 9, 9, 9, 9)), // prefix impostor
       (12L, v(0, 0, 1, 1, 1, 1, 1, 1))) // orthogonal-prefix control
       .toDF("vec_id", "embedding")
-    graft.plans.GraftFunctions.register(s)
     val tr = emb.selectExpr("vec_id", "slice(embedding, 1, 2) AS embedding")
     val approx = Similarity.bruteForceTopK(s, tr, tr.filter(col("vec_id") === 0), k = 3)
     val exact = Similarity.bruteForceTopK(s, emb, emb.filter(col("vec_id") === 0), k = 3)

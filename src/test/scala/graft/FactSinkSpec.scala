@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 import java.time.LocalDate
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.PipelineOps
@@ -14,14 +14,7 @@ import graft.sources.SyntheticData
   * refresh as a (date, city) upsert: history survives, a re-run day is
   * replaced in place, and untouched cities' files are not rewritten
   * (SURVEY §7.4 trap 7). */
-class FactSinkSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class FactSinkSpec extends AnyFunSuite with SparkFixture {
 
   private val cols = Seq("date", "city", "temp_max_f", "temp_min_f", "temp_avg_f", "energy_demand_gwh")
 

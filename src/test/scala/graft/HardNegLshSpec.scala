@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.queries.VectorQueries
 
@@ -8,14 +7,7 @@ import graft.queries.VectorQueries
   * the planted exact-duplicate clones must collide in every band and
   * win rank 1 at sim 1.0, and the bucketing must actually prune (the
   * candidate set stays far below the different-label corpus). */
-class HardNegLshSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class HardNegLshSpec extends AnyFunSuite with SparkFixture {
 
   test("planted duplicate clones win rank 1 at sim 1.0; buckets prune") {
     val rows = VectorQueries.q280HardNegativesLsh(spark, "/root/testdata/sf0.001")

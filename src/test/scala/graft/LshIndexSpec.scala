@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Dedup
@@ -8,16 +7,7 @@ import graft.operators.Dedup
 /** The persisted LSH near-dup index lifecycle (build → probe → append
   * → probe) plus its plan discipline: a probe must not scan corpus
   * text, and the pruned path must bucket-prune the bands table. */
-class LshIndexSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_lsh_wh").toString)
-    .getOrCreate()
+class LshIndexSpec extends AnyFunSuite with SparkFixture {
 
   private def rep(cycle: String, times: Int) = Array.fill(times)(cycle).mkString(" ")
   private val cycleA = "aa1 aa2 aa3 aa4 aa5 aa6"

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.queries.MixQueries
@@ -10,14 +9,7 @@ import graft.queries.MixQueries
   * pin the INVARIANTS the oracle can't express as a hash — budget
   * conservation, temperature flattening, the conformal rank rule
   * against a naive in-memory recomputation, coverage accounting). */
-class MixQueriesSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class MixQueriesSpec extends AnyFunSuite with SparkFixture {
 
   private val sf = "/root/testdata/sf0.001"
 

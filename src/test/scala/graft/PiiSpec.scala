@@ -1,16 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Pii
 
-class PiiSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PiiSpec extends AnyFunSuite with SparkFixture {
 
   test("detects and redacts every type, multiple occurrences, exact placement") {
     val s = spark; import s.implicits._

@@ -1,21 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Similarity
 
-class PqSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.plans.GraftFunctions.register(s)
-    s
-  }
+class PqSpec extends AnyFunSuite with SparkFixture {
 
   private def emb = graft.sources.Tables.embeddings(spark, "/root/testdata/sf0.01")
 

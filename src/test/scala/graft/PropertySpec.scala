@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
@@ -12,14 +11,7 @@ import graft.operators.{PipelineOps, WeatherOps}
   * ScalaCheck generators are sampled with fixed seeds (the scalatest
   * bridge artifact isn't in the offline cache), so runs are
   * deterministic. */
-class PropertySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PropertySpec extends AnyFunSuite with SparkFixture {
 
   private def samples[T](g: Gen[T], n: Int): Seq[T] =
     (0 until n).flatMap(i => g.apply(Gen.Parameters.default, Seed(42L + i)))

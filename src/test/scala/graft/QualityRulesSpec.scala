@@ -1,21 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.QualityRules
 
-class QualityRulesSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.plans.GraftFunctions.register(s)
-    s
-  }
+class QualityRulesSpec extends AnyFunSuite with SparkFixture {
 
   test("line-shape rules: bullets, ellipses, duplicate lines on a planted multi-line doc") {
     val s = spark; import s.implicits._

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Every declared query must be invokable TWICE in one session with
@@ -8,14 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * temp-view name reuse, cache accumulation, function-registry
   * conflicts) that a single-pass verify never sees but a long-lived
   * driver session would. */
-class RepeatabilitySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RepeatabilitySpec extends AnyFunSuite with SparkFixture {
 
   test("all queries run twice in one session with identical row counts") {
     val sf = "/root/testdata/sf0.001"

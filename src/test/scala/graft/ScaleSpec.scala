@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.Sinks
@@ -8,21 +7,11 @@ import graft.sources.Sinks
 /** Scale-mechanics tests: bucketed joins plan without exchanges, salted
   * joins preserve results, the extensions class installs the native
   * functions. */
-class ScaleSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh").toString)
-    .getOrCreate()
+class ScaleSpec extends AnyFunSuite with SparkFixture {
 
   test("bucketed tables join without a shuffle exchange") {
     val s = spark; import s.implicits._
-    // runtime conf: getOrCreate may have reused another suite's session,
-    // in which case builder configs were ignored
+    // runtime conf: the one fixture session is built without it
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ path
     val weather = (0 until 1000).map(i => (i % 97, s"city${i % 5}", i * 1.0))
       .toDF("date_id", "city", "temp")
@@ -282,25 +271,41 @@ class ScaleSpec extends AnyFunSuite {
   test("sketch chain evaluates once: no sketch expressions in Filter operators (regression guard)") {
     // (a) the operator's own empty-doc filter tests the token count, so
     // pushdown substitution cannot drag shingle/minhash evaluation into
-    // a scan-level Filter — holds in any session
+    // a scan-level Filter — holds in any session, so it is checked with
+    // generate-filter inference active (as in a session wired only by
+    // spark.sql.extensions). Restore the previous value after: the
+    // session is shared with every later spec.
     val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
     def filterLines(plan: String) = plan.split('\n').filter(_.contains("Filter"))
-    val sigsPlan = graft.operators.Dedup.minhashSignatures(docs)
-      .queryExecution.executedPlan.toString
-    assert(!filterLines(sigsPlan).exists(l => l.contains("minhash") || l.contains("shingles")),
-      s"sketch chain leaked into a Filter:\n${filterLines(sigsPlan).mkString("\n")}")
-    // (b) under the engine sessions' conf (generate-filter inference
-    // excluded — Verify/Bench/DebugExplain), the candidate explode adds
-    // no inferred sketch-evaluating filter either
-    spark.conf.set("spark.sql.optimizer.excludedRules",
-      "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
+    val rules = "spark.sql.optimizer.excludedRules"
+    val before = spark.conf.getOption(rules)
+    spark.conf.unset(rules)
     try {
-      val candPlan = graft.operators.Dedup
-        .minhashCandidates(graft.operators.Dedup.minhashSignatures(docs))
+      val sigsPlan = graft.operators.Dedup.minhashSignatures(docs)
         .queryExecution.executedPlan.toString
-      assert(!filterLines(candPlan).exists(l => l.contains("minhash") || l.contains("shingles")),
-        s"inferred generate filter re-runs the sketch chain:\n${filterLines(candPlan).mkString("\n")}")
-    } finally spark.conf.unset("spark.sql.optimizer.excludedRules")
+      assert(!filterLines(sigsPlan).exists(l => l.contains("minhash") || l.contains("shingles")),
+        s"sketch chain leaked into a Filter:\n${filterLines(sigsPlan).mkString("\n")}")
+    } finally before.fold(spark.conf.unset(rules))(spark.conf.set(rules, _))
+    // (b) under the engine conf (generate-filter inference excluded —
+    // GraftSession), the candidate explode adds no inferred
+    // sketch-evaluating filter either
+    val candPlan = graft.operators.Dedup
+      .minhashCandidates(graft.operators.Dedup.minhashSignatures(docs))
+      .queryExecution.executedPlan.toString
+    assert(!filterLines(candPlan).exists(l => l.contains("minhash") || l.contains("shingles")),
+      s"inferred generate filter re-runs the sketch chain:\n${filterLines(candPlan).mkString("\n")}")
+  }
+
+  test("managed tables land under the fixture's warehouse, not <cwd>/spark-warehouse") {
+    val s = spark; import s.implicits._
+    val table = "fixture_wh_probe"
+    Sinks.writeBucketed((0 until 20).toDF("k"), table, 2, Seq("k"))
+    val loc = java.nio.file.Paths.get(spark.sessionState.catalog
+      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table)).location)
+    assert(loc.toRealPath().startsWith(SparkFixture.warehouse.toRealPath()), loc)
+    assert(!java.nio.file.Files.exists(
+      java.nio.file.Paths.get(sys.props("user.dir"), "spark-warehouse", table)))
+    assert(spark.table(table).count() == 20)
   }
 
   test("salted join returns identical results to the plain join") {
@@ -319,13 +324,12 @@ class ScaleSpec extends AnyFunSuite {
   }
 
   test("GraftExtensions wiring + native functions usable from SQL text") {
-    // applying the extensions object must inject without throwing
-    // (full withExtensions E2E needs a fresh SparkContext, which a
-    // shared-JVM suite cannot guarantee — getOrCreate would silently
-    // reuse the active session and skip extensions)
-    new graft.plans.GraftExtensions().apply(new org.apache.spark.sql.SparkSessionExtensions)
-    // the same expression builders, through the registry path:
-    graft.plans.GraftFunctions.register(spark)
+    // the fixture session is built once, through GraftSession, so
+    // spark.sql.extensions alone must install every entry of the one
+    // table, with no install call
+    val missing = graft.plans.GraftExtensions.functions.map(_.name)
+      .filterNot(spark.catalog.functionExists)
+    assert(missing.isEmpty, s"native functions not installed: $missing")
     val r = spark.sql(
       "SELECT cosine_sim(array(cast(1.0 as float), cast(0.0 as float)), " +
         "array(cast(1.0 as float), cast(0.0 as float))) AS s").collect().head
@@ -338,7 +342,6 @@ class ScaleSpec extends AnyFunSuite {
 
   test("vec_sum aggregate equals explode-based element-wise sums, ignores NULL vectors") {
     val s = spark; import s.implicits._
-    graft.plans.GraftFunctions.register(spark)
     val rows = (0 until 90).map { i =>
       val v = if (i % 17 == 0) null
         else Array.tabulate(8)(j => (i * 31 + j * 7 % 13).toFloat / 10f)

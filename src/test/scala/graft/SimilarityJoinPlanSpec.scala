@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.plans.SimilarityJoinApi
@@ -10,14 +9,7 @@ import graft.operators.Similarity
   * similarity join must produce exactly the same result as calling the
   * LSH operator directly, and the node must disappear from the
   * optimized plan. */
-class SimilarityJoinPlanSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SimilarityJoinPlanSpec extends AnyFunSuite with SparkFixture {
 
   test("similarity join node rewrites to the LSH plan and matches the direct call") {
     val emb = graft.sources.Tables.embeddings(spark, "/root/testdata/sf0.001")

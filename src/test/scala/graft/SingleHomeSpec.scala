@@ -1,0 +1,38 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Guards against regrowth of the session builders and function
+  * installs this code base once had many copies of: each may appear
+  * only in its one home. */
+class SingleHomeSpec extends AnyFunSuite {
+
+  private def sources(dir: String): Seq[Path] = {
+    val root = Paths.get(dir)
+    assert(Files.isDirectory(root), s"$dir not found from ${sys.props("user.dir")}")
+    val files = Files.walk(root)
+    try files.iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq finally files.close()
+  }
+
+  /** Files under `dir` that contain `token`. */
+  private def holders(dir: String, token: String): Seq[String] =
+    sources(dir).filter(p => Files.readString(p).contains(token)).map(_.toString).sorted
+
+  test("SparkSession.builder appears in src/main only in GraftSession.scala") {
+    assert(holders("src/main/scala", "SparkSession.builder") ==
+      Seq("src/main/scala/graft/GraftSession.scala"))
+  }
+
+  test("native functions are installed only by the function table") {
+    val table = Seq("src/main/scala/graft/plans/GraftExtensions.scala")
+    assert(holders("src/main/scala", "injectFunction") == table)
+    assert(holders("src/main/scala", "createOrReplaceTempFunction").isEmpty)
+  }
+
+  test("no spec builds its own session: all go through SparkFixture") {
+    val self = "src/test/scala/graft/SingleHomeSpec.scala"
+    assert(holders("src/test/scala", "SparkSession.builder").filterNot(_ == self).isEmpty)
+  }
+}

@@ -1,27 +1,17 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.plans.GraftFunctions
 
 /** Value-identity pins for the r15 native hash-sequence expressions:
   * `md5_h1_seq` / `xxhash64_seq` must be bit-identical to the SQL
   * higher-order-function forms they replaced in the index write/probe
   * paths (the md5 parity idiom is what the DuckDB oracle restates, so
   * a single differing value would silently fail every LSH hash check). */
-class SketchHashSeqSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SketchHashSeqSpec extends AnyFunSuite with SparkFixture {
 
   private def arrays = {
     val s = spark; import s.implicits._
-    GraftFunctions.register(spark)
     // edge shapes: empty array, empty string, unicode, long strings,
     // and a spread of ordinary shingles
     Seq(

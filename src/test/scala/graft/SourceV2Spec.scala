@@ -1,19 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.StreamingOps
 
 /** DSv2 source partition planning + stateful streaming dedup. */
-class SourceV2Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SourceV2Spec extends AnyFunSuite with SparkFixture {
 
   test("EiaPagedSource: one partition per page, deterministic rows, downstream resample") {
     val df = spark.read.format("graft.sources.v2.EiaPagedSource")

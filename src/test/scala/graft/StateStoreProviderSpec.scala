@@ -14,14 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * RESULT: this spec drains two stateful shapes (q85 session windows;
   * q226 TTL dedup) on both providers and asserts row-identical output,
   * and pins the knob→class mapping. */
-class StateStoreProviderSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StateStoreProviderSpec extends AnyFunSuite with SparkFixture {
 
   private def withStateStoreProp[A](v: Option[String])(body: => A): A = {
     val prev = sys.props.get("spark.graft.stateStore")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,14 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the memory sink for debugging. The sink choice must be invisible in
   * the RESULT: this spec drains the q85 session-window shape both ways
   * and asserts row-identical output, and pins the mode→sink mapping. */
-class StreamingDrainSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StreamingDrainSpec extends AnyFunSuite with SparkFixture {
 
   private def withDrainSinkProp[A](v: Option[String])(body: => A): A = {
     val prev = sys.props.get("spark.graft.drainSink")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,18 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * formulation, tie determinism, null policy, partition independence,
   * and the plan shape that is the operator's reason to exist (partial
   * aggregation — no full-data sort shuffle). */
-class TopKAggSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.plans.GraftFunctions.register(s)
-    s
-  }
+class TopKAggSpec extends AnyFunSuite with SparkFixture {
 
   test("matches the window formulation incl. ties; short groups return whole group") {
     val s = spark; import s.implicits._

@@ -1,7 +1,6 @@
 package graft
 
 import java.time.LocalDate
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators._
@@ -10,14 +9,7 @@ import graft.sources.{Connectors, SyntheticData}
 
 /** Domain-library tests mirroring the reference's own unit tests
   * (tests/test_pipeline.py) plus the SURVEY §7.4 semantics traps. */
-class WeatherEnergySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class WeatherEnergySpec extends AnyFunSuite with SparkFixture {
 
   import org.apache.spark.sql.Row
 

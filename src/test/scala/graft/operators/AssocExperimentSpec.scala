@@ -1,19 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkFixture
 
 /** Association-rule metrics on a hand-computed basket fixture and the
   * CUPED readout's variance-reduction / degenerate-covariate
   * guarantees. */
-class AssocExperimentSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class AssocExperimentSpec extends AnyFunSuite with SparkFixture {
 
   test("assoc rules: hand-computed support/confidence/lift; mega-basket excluded") {
     val s = spark; import s.implicits._

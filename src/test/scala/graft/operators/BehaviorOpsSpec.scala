@@ -1,22 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkFixture
 
 /** Hand-computed fixtures for the behavioral tranche: funnel strict
   * ordering + window cutoffs, batch sessionization (incl. the proof it
   * matches Spark's own `session_window` on a boundary-hitting
   * fixture), contiguous k-gram mining, and item-item CF with the
   * oversized-basket exclusion. */
-class BehaviorOpsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BehaviorOpsSpec extends AnyFunSuite with SparkFixture {
 
   private def ts(sec: Long) = new java.sql.Timestamp(sec * 1000L)
 

@@ -1,19 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkFixture
 
 /** WOE-binning guarantees: equi-depth bin population, edge-tie rule
   * (values equal to an edge fall LOW), monotone WOE for a monotone
   * feature→label relationship, and IV ≈ 0 for an uninformative one. */
-class BinningSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BinningSpec extends AnyFunSuite with SparkFixture {
 
   test("equi-depth deciles: 1000 distinct values -> 100 rows per bin; edge ties fall low") {
     val s = spark; import s.implicits._

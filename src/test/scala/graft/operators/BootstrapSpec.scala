@@ -1,19 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkFixture
 
 /** Poisson-bootstrap CI guarantees: determinism (the md5-seeded draws
   * make the whole resampling a pure function), bracketing of the point
   * estimate, and width shrinking with sample size. */
-class BootstrapSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BootstrapSpec extends AnyFunSuite with SparkFixture {
 
   private def fixture = {
     val s = spark; import s.implicits._

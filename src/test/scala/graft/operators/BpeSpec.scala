@@ -1,26 +1,18 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkFixture
 
 /** Hand-computed oracles for BPE vocabulary induction (q237): the
   * greedy-merge expression's run semantics (the l==r parity edge the
   * DuckDB oracle restates as a window rule), the false-boundary
   * guard, a fully hand-traced 4-merge training run with a tie-break
   * step, early exhaustion, and the encode fold. */
-class BpeSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BpeSpec extends AnyFunSuite with SparkFixture {
 
   private def applyMerge(toks: Seq[String], l: String, r: String): Seq[String] = {
     val s = spark; import s.implicits._
-    graft.plans.GraftFunctions.register(s)
     Seq(Tuple1(toks)).toDF("toks")
       .select(expr(s"bpe_merge(toks, '$l', '$r')").as("out"))
       .collect()(0).getSeq[String](0)

@@ -1,20 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkFixture
 
 /** Hand-computed oracles for the round-9 calibration/audit tranche:
   * isotonic regression's pooling and already-monotone paths (q239),
   * the exact KS statistic with its smallest-attaining-value tie-break
   * (q238), and the FD audit's g₃ violation counting (q240). */
-class CalibrationAuditSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CalibrationAuditSpec extends AnyFunSuite with SparkFixture {
 
   test("isotonic: adjacent violator pools to the weighted mean") {
     val s = spark; import s.implicits._

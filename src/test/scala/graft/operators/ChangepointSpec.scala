@@ -1,18 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkFixture
 
 /** Hand-computed oracles for exact single-changepoint detection
   * (q212): a planted level shift is located exactly, a flat series
   * reports zero reduction, ties break to the earliest split. */
-class ChangepointSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ChangepointSpec extends AnyFunSuite with SparkFixture {
 
   test("planted level shift: located at the jump with exact means") {
     val s = spark; import s.implicits._

@@ -1,20 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkFixture
 
 /** Contract-suite semantics on a planted fixture where every violation
   * count is known by construction — including the null-is-a-violation
   * rule for row-local predicates. */
-class ContractsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ContractsSpec extends AnyFunSuite with SparkFixture {
 
   test("row-local, uniqueness, and referential constraints count planted violations") {
     val s = spark; import s.implicits._

@@ -1,20 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkFixture
 
 /** Paragraph-level dedup, spherical k-means + SemDeDup, and BM25 —
   * hand-computed fixtures for each, plus the planted-recovery
   * guarantees the rows-only driver check (q90) relies on. */
-class CorpusOpsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CorpusOpsSpec extends AnyFunSuite with SparkFixture {
 
   test("paragraphDedup: corpus-wide keep-first by (doc, pos), order-preserving reassembly") {
     val s = spark; import s.implicits._

@@ -1,18 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkFixture
 
 /** Hand-computed fixtures for PMI collocations and token-space
   * divergence. */
-class CorpusStatsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CorpusStatsSpec extends AnyFunSuite with SparkFixture {
 
   test("pmiCollocations: exact PMI/NPMI on a hand-computed corpus, minCount prunes") {
     val s = spark; import s.implicits._

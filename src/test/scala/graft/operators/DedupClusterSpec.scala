@@ -1,21 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkFixture
 
 /** Connected-components algorithm equivalence and the round-count
   * property that justifies the large-star/small-star upgrade: on a
   * long chain (the worst case for label propagation) the star
   * alternation must converge in O(log d) rounds while propagation
   * needs O(d). */
-class DedupClusterSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DedupClusterSpec extends AnyFunSuite with SparkFixture {
 
   private def edgesDf(pairs: Seq[(Long, Long)]) = {
     val s = spark; import s.implicits._

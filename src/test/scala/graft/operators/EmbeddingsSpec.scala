@@ -1,19 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkFixture
 
 /** Per-dim moment exactness on a hand-computed fixture, ragged-input
   * behavior, and the whiten round-trip (mean→0, std→1, zero-variance
   * dims survive). */
-class EmbeddingsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class EmbeddingsSpec extends AnyFunSuite with SparkFixture {
 
   test("silhouette: pure cluster scores 1.0, planted misassigned point counted in n_closer_other") {
     val s = spark; import s.implicits._

@@ -1,20 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkFixture
 
 /** Target-encoding guarantees: the leave-fold-out no-leakage property
   * (a fold's encoding is invariant to that fold's own labels) and the
   * smoothing limits (rare category → prior, huge category → its mean). */
-class EncodingSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class EncodingSpec extends AnyFunSuite with SparkFixture {
 
   private def fold5(id: Long): Long = {
     val hex = java.security.MessageDigest.getInstance("MD5")

@@ -1,19 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkFixture
 
 /** Round-9 tranche: the cross-engine md5 HyperLogLog and the held-out
   * n-gram novelty audit. */
-class HllSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class HllSpec extends AnyFunSuite with SparkFixture {
 
   /** Reference register computation: the exact rule the operator (and
     * its DuckDB oracle) must follow — h1 from md5 hex, j = h mod m,

@@ -1,18 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkFixture
 
 /** Hand-computed fixtures for chi-square independence, mutual
   * information, and the one-pass profiler. */
-class InfoProfileSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class InfoProfileSpec extends AnyFunSuite with SparkFixture {
 
   test("chiSquare: uniform table is independent (chi2 = 0, V = 0)") {
     val s = spark; import s.implicits._

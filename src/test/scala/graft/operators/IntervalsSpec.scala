@@ -1,19 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkFixture
 
 /** Hand-computed oracles for the interval-overlap join (q209): closed
   * interval semantics, touch-counts, canonical-bucket dedup across
   * many-bucket spans, and grid-invariance vs the naive join. */
-class IntervalsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class IntervalsSpec extends AnyFunSuite with SparkFixture {
 
   private def left(rows: (String, Long, Long, Long)*) = {
     val s = spark; import s.implicits._

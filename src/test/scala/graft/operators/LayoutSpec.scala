@@ -1,21 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.plans.GraftFunctions
+import graft.SparkFixture
 import org.apache.spark.sql.catalyst.expressions.graft.Morton
 
 /** Morton interleave semantics + the layout scorecard's skipping
   * guarantees on a grid fixture where every cell population is known. */
-class LayoutSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class LayoutSpec extends AnyFunSuite with SparkFixture {
 
   test("morton2 interleaves bits: x at even positions, y at odd") {
     // hand-computed: x=5 (bits 0,2) lands at positions 0,4 → 1+16=17;
@@ -26,7 +18,6 @@ class LayoutSpec extends AnyFunSuite {
     assert(Morton.interleave(0x10000L, 0L) == 0L)
     assert(Morton.interleave(0xFFFFL, 0xFFFFL) == 0xFFFFFFFFL)
     // the SQL-registered expression agrees with the Scala helper
-    GraftFunctions.register(spark)
     val got = spark.sql("SELECT morton2(CAST(5 AS BIGINT), CAST(3 AS BIGINT)) v")
       .head().getLong(0)
     assert(got == 27L)

@@ -1,24 +1,16 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkFixture
 
 /** Pins the native PeriodMatches expression (plans/LoopDetect.scala)
   * against the higher-order-function formulation it replaced in q260 —
   * the two must agree element for element, since the q260 DuckDB oracle
   * was written against the HOF semantics. */
-class LoopDetectSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class LoopDetectSpec extends AnyFunSuite with SparkFixture {
 
   private def counts(tokens: Seq[String], maxP: Int): Seq[Int] = {
-    graft.plans.GraftFunctions.register(spark)
     val s = spark; import s.implicits._
     Seq(Tuple1(tokens)).toDF("toks")
       .select(expr(s"period_matches(toks, $maxP)").as("pm"))
@@ -52,7 +44,6 @@ class LoopDetectSpec extends AnyFunSuite {
   }
 
   test("agrees with the HOF formulation on random-ish token arrays") {
-    graft.plans.GraftFunctions.register(spark)
     val s = spark; import s.implicits._
     // deterministic pseudo-random tokens over a small alphabet so
     // periodic matches actually occur

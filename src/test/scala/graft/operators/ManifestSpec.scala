@@ -1,21 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkFixture
 
 /** Manifest guarantees: layout independence (same digest under any
   * partitioning/order), diff localization (one changed row flags only
   * its bucket + root), and the XOR blind spot being covered by the
   * row count. */
-class ManifestSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ManifestSpec extends AnyFunSuite with SparkFixture {
 
   private def docs(n: Int) = {
     val s = spark; import s.implicits._

@@ -1,21 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkFixture
 
 /** Planted-fixture oracles for the round-10 tranche: majority-direction
   * election + the directed cycle/transitive census on hand-drawn
   * graphs, CCNet boilerplate removal thresholds, and the bitext margin
   * normalization (a hub vector must NOT win on raw cosine). */
-class MiningOpsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class MiningOpsSpec extends AnyFunSuite with SparkFixture {
 
   test("electMajorityEdges: majority wins, ties go low->high, support prunes") {
     val s = spark; import s.implicits._

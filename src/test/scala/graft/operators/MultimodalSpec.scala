@@ -1,21 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkFixture
 
 /** The real image-header codec (r13 verdict item 5): the hand-written
   * IHDR / SOF-marker-walk parser must agree with the JDK's own decoder
   * on genuine codec output, and fail closed on junk. The writer
   * (ImageIO) and the reader (byte walk) share no code, so agreement is
   * a cross-implementation check, not a tautology. */
-class MultimodalSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class MultimodalSpec extends AnyFunSuite with SparkFixture {
 
   test("parseImageDims round-trips real PNG and JPEG bytes over a dimension grid") {
     for {

@@ -1,20 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkFixture
 
 /** Exact distributed quantiles: equivalence with the single-sort
   * answer on adversarial data (skew, ties, tiny groups), edge ranks,
   * and the no-global-sort plan invariant. */
-class QuantilesSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class QuantilesSpec extends AnyFunSuite with SparkFixture {
 
   /** Reference: the naive one-window k = ceil(q·n) order statistic. */
   private def naive(df: org.apache.spark.sql.DataFrame, value: String,

@@ -1,17 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkFixture
 
 /** RRF fusion: hand-computed scores, cross-list accumulation,
   * deterministic tie-breaks, and the top-k cut. */
-class RetrievalSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RetrievalSpec extends AnyFunSuite with SparkFixture {
 
   test("rrfFusion: hand-computed two-list fusion with overlap") {
     val s = spark; import s.implicits._

@@ -1,19 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkFixture
 
 /** Hand-computed guarantees for the forensic-stats family: Gini's
   * closed-form limits, Benford chi-square separation, and Theil–Sen's
   * outlier immunity. */
-class RobustStatsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RobustStatsSpec extends AnyFunSuite with SparkFixture {
 
   test("hillTailIndex: hand-computed alpha and top-share; uniform degrees yield null alpha") {
     val s = spark; import s.implicits._

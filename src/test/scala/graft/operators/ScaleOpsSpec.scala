@@ -2,22 +2,15 @@ package graft.operators
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkFixture
 
 /** Round-7 scale tranche: salted skew join (result-identity +
   * salt-spread), histogram PSI drift (hand-computed, identity, and
   * clamping cases), and linear time interpolation (hand-computed
   * weights, edge fills, degenerate guards). */
-class ScaleOpsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ScaleOpsSpec extends AnyFunSuite with SparkFixture {
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
@@ -242,7 +235,6 @@ class ScaleOpsSpec extends AnyFunSuite {
 
   test("cdc_boundaries_md5 (native) reproduces the original SQL boundary rule exactly") {
     val s = spark; import s.implicits._
-    graft.plans.GraftFunctions.register(s)
     // varied lengths incl. n < window, n = window, repeats, punctuation
     val docs = Seq(
       (1L, (1 to 97).map(i => s"t${i * 13 % 31}").mkString(" ")),
@@ -270,7 +262,6 @@ class ScaleOpsSpec extends AnyFunSuite {
 
   test("contentDefinedChunks poly mode: rolling update ≡ direct window hash; same CDC invariants") {
     val s = spark; import s.implicits._
-    graft.plans.GraftFunctions.register(s)
     val toks = (1 to 80).map(i => s"v${i * 11 % 29}y$i")
     val (w, m) = (4, 8)
     // reference: DIRECT (non-rolling) w-term power-sum window hash —

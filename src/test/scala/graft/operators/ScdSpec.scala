@@ -2,23 +2,16 @@ package graft.operators
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkFixture
 
 /** SCD2 run collapse ([[Scd.scd2]]) and corpus snapshot diff
   * ([[Curation.snapshotDiff]]): hand-computed fixtures for interval
   * bounds, null-safe change detection, tiebreak determinism, and the
   * fingerprint separator guarantees, plus the no-global-sort scale
   * invariant both operators promise. */
-class ScdSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ScdSpec extends AnyFunSuite with SparkFixture {
 
   private def ts(s: String) = Timestamp.valueOf(s)
 

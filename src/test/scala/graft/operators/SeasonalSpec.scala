@@ -1,20 +1,13 @@
 package graft.operators
 
 import java.sql.Date
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkFixture
 
 /** Seasonal decomposition behavior on planted series: a constant
   * series yields zero z everywhere, and a single large spike is the
   * only flagged anomaly in an otherwise-periodic series. */
-class SeasonalSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SeasonalSpec extends AnyFunSuite with SparkFixture {
 
   private def day(i: Int) = Date.valueOf(java.time.LocalDate.of(2024, 1, 1).plusDays(i))
 

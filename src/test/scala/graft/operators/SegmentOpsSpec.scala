@@ -1,20 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkFixture
 
 /** Hand-computed oracles for the segmentation/shortlist tranche
   * (q196–q199): RFM bands on a planted order book, fuzzy ER blocking
   * + distance cut, skyline vs brute-force dominance, lift table on a
   * perfectly separating score. */
-class SegmentOpsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SegmentOpsSpec extends AnyFunSuite with SparkFixture {
 
   test("rfm: planted whale / lapsed / new customers score as expected") {
     val s = spark; import s.implicits._
@@ -398,7 +391,6 @@ class SegmentOpsSpec extends AnyFunSuite {
 
   test("jaro-winkler: textbook values, boost gate, and blocked linkage") {
     val s = spark; import s.implicits._
-    graft.plans.GraftFunctions.register(s)
     // classic probe set (values match DuckDB's jaro_winkler_similarity)
     val cases = Seq(
       ("martha", "marhta", 0.961111), ("dixon", "dicksonx", 0.813333),

@@ -1,18 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkFixture
 
 /** Transition-matrix semantics on a hand-computed two-user fixture,
   * including the timestamp-tie determinism contract. */
-class SequencesSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SequencesSpec extends AnyFunSuite with SparkFixture {
 
   test("counts per-user ordered transitions and row-normalizes") {
     val s = spark; import s.implicits._

@@ -1,21 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkFixture
 
 /** Planted-fixture oracles for the signal tranche (q184–q190): NB on
   * a separable vocabulary, hand-computed nDCG, grid-join vs known
   * nearest, exact rolling slope on a line, BFS on a path graph,
   * hand-counted audience overlap, keyness direction. */
-class SignalOpsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SignalOpsSpec extends AnyFunSuite with SparkFixture {
 
   test("naive bayes: perfectly separable vocab classifies every held-out doc") {
     val s = spark; import s.implicits._

@@ -1,22 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkFixture
 
 /** The r16 two-phase spine helper must be value-identical to the
   * single-window forms it replaces (Embeddings rank spine, Skyline
   * running max) — exercised on frames wide enough that values share
   * buckets AND skewed enough that bucket occupancy is uneven. */
-class SpineSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SpineSpec extends AnyFunSuite with SparkFixture {
 
   test("rankBy == unpartitioned row_number on a skewed unique-key frame") {
     val s = spark; import s.implicits._

@@ -1,19 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkFixture
 
 /** Hand-computed oracles for the rank-test/audit tranche (q191–q195):
   * Mann–Whitney U with tie blocks, Kruskal–Wallis on a textbook
   * split, Spearman with ties, k-anonymity bands, cadence flags. */
-class StatTestsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StatTestsSpec extends AnyFunSuite with SparkFixture {
 
   test("mann-whitney: complete separation gives U = n1·n2, AUC = 1") {
     val s = spark; import s.implicits._

@@ -1,21 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkFixture
 
 /** Planted-fixture oracles for the round-9 supply/graph tranche: the
   * Lindley clamped-balance closed form against the sequential fold it
   * replaces, synchronous LPA on a hand-drawn two-community graph, and
   * the mergeable histogram state against exact order statistics. */
-class SupplyOpsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SupplyOpsSpec extends AnyFunSuite with SparkFixture {
 
   test("clamped balance: window closed form == sequential max(0, b+x) fold") {
     val s = spark; import s.implicits._

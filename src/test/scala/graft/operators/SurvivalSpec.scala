@@ -1,19 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkFixture
 
 /** Kaplan–Meier life-table semantics on hand-computed fixtures,
   * including censoring's effect on at-risk counts and the absorbing
   * zero state. */
-class SurvivalSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SurvivalSpec extends AnyFunSuite with SparkFixture {
 
   test("textbook life table: censored units leave the risk set without an event") {
     val s = spark; import s.implicits._

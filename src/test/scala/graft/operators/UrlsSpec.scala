@@ -1,21 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkFixture
 
 /** Pins Urls.canonicalize rule by rule (the q281/q282 DuckDB oracles
   * restate the same rules — these specs pin the INTENDED semantics so
   * an oracle-matching-but-wrong rewrite can't drift in on both sides
   * at once), plus the planted tracking-param collapse end to end. */
-class UrlsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class UrlsSpec extends AnyFunSuite with SparkFixture {
 
   private def canon(url: String): String = {
     val s = spark; import s.implicits._
