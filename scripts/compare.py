@@ -18,6 +18,9 @@ try:
     names = json.load(open(f"{out}/declared.json"))  # every declared query must appear
 except FileNotFoundError:
     names = present
+if not names:
+    print(f"FAIL: no declared queries under {out}: nothing to compare")
+    sys.exit(1)
 fails = 0
 for name in names:
     if name not in present:

@@ -14,5 +14,6 @@ ADD_OPENS="--add-opens=java.base/java.lang=ALL-UNNAMED --add-opens=java.base/jav
 rm -rf "$OUT"
 SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-8} java $ADD_OPENS -Xmx8g \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "$CP" graft.Verify "$SF" "$OUT" 2>/dev/null
+  -cp "$CP" graft.Verify "$SF" "$OUT" 2>"${OUT}_stderr.log" || {
+  echo "VERIFY FAILED:"; grep -m3 -E 'Exception|Error' "${OUT}_stderr.log"; exit 1; }
 python3 /root/repo/scripts/compare.py "$SF" "$OUT"

@@ -33,18 +33,11 @@ object Bench {
     case c => c.toString
   } + "\""
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") // env default: local[32]
-    // scale-experiment knob (driver never sets it): decouple shuffle
-    // partition COUNT from thread count, so a derived-sf run can hold
-    // per-partition work constant (a cluster sizes partitions with the
-    // data; local mode pins both to 32 by default)
-    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = GraftSession.builder(s"local[$cpus]", shuffleParts).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // warmup outside the timed loop: JIT/codegen paths and parquet
-    // footers, so the first timed query doesn't absorb session startup
+  /** Warm-up outside the timed loop: JIT/codegen paths and parquet
+    * footers, so the first timed query doesn't absorb session startup.
+    * Profile runs the same steps, so its cold times compare with
+    * Bench's. */
+  def warmUp(spark: SparkSession, sfDir: String): Unit = {
     Seq("lineitem", "orders", "customer", "documents", "embeddings").foreach { t =>
       try spark.read.parquet(s"$sfDir/$t.parquet").count() catch { case _: Throwable => () }
     }
@@ -95,6 +88,33 @@ object Bench {
       graft.operators.Similarity.lshTopK(spark, tinyVec, tinyVec.limit(2), k = 3).count()
       graft.operators.Similarity.bruteForceTopK(spark, tinyVec, tinyVec.limit(2), k = 3).count()
     } catch { case e: Throwable => System.err.println(s"[bench] sketch warmup skipped: ${e.getMessage}") }
+  }
+
+  /** Free the checkpoint/persist blocks a query left behind, OUTSIDE
+    * its timed window: many queries localCheckpoint small frames (model
+    * tables, dedup survivors), and those blocks otherwise accumulate in
+    * the block manager across a 240-query suite until GC pressure taxes
+    * whoever runs late (sf1 artifact: q205 23.1 s in-suite vs 9.5 s
+    * isolated — suite state, not plan). Safe between queries: every
+    * query is self-contained, so nothing re-reads a prior query's RDDs. */
+  def releaseCached(spark: SparkSession): Unit =
+    try spark.sparkContext.getPersistentRDDs.valuesIterator.foreach(_.unpersist(false))
+    catch { case _: Throwable => () }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") // env default: local[32]
+    // scale-experiment knob (driver never sets it): decouple shuffle
+    // partition COUNT from thread count, so a derived-sf run can hold
+    // per-partition work constant (a cluster sizes partitions with the
+    // data; local mode pins both to 32 by default)
+    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
+    // local-iteration filter (the Verify.scala convention); the driver
+    // never sets it, so official runs always time the full registry
+    val registry = SparkEntry.select(sys.env.get("SPARK_GRAFT_ONLY")).map(q => q.name -> q.run)
+    val spark = GraftSession.builder(s"local[$cpus]", shuffleParts).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    warmUp(spark, sfDir)
     // Per-query time = MIN over TWO FULL SUITE PASSES (r8 verdict
     // item 2): the earlier back-to-back min-of-2 put both samples of a
     // query inside the same ~seconds contention window, so a neighbor
@@ -109,11 +129,6 @@ object Bench {
     // methodology is explicit in the artifact. A query that fails in
     // pass 1 is reported as-is and skipped in pass 2.
     System.err.println("[bench] per-query timing = min across two full suite passes")
-    // local-iteration filter (the Verify.scala convention); the driver
-    // never sets it, so official runs always time the full registry
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    val registry = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
     def once(name: String, fn: (SparkSession, String) => DataFrame): (Double, Long) = {
       val t0 = System.nanoTime()
       val n = try fn(spark, sfDir).count() catch {
@@ -122,15 +137,7 @@ object Bench {
           -1L
       }
       val dt = (System.nanoTime() - t0) / 1e9
-      // Free the checkpoint/persist blocks the query left behind, OUTSIDE
-      // its timed window: many queries localCheckpoint small frames (model
-      // tables, dedup survivors), and those blocks otherwise accumulate in
-      // the block manager across a 240-query suite until GC pressure taxes
-      // whoever runs late (sf1 artifact: q205 23.1 s in-suite vs 9.5 s
-      // isolated — suite state, not plan). Safe here: every query is
-      // self-contained, so nothing re-reads a prior query's RDDs.
-      try spark.sparkContext.getPersistentRDDs.valuesIterator.foreach(_.unpersist(false))
-      catch { case _: Throwable => () }
+      releaseCached(spark)
       (dt, n)
     }
     val pass1 = registry.map { case (name, fn) =>

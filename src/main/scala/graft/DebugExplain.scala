@@ -57,7 +57,7 @@ object DebugExplain {
     names.foreach { n =>
       println(s"========== $n ==========")
       val df = opPlans.get(n).map(_(spark, sfDir))
-        .getOrElse(SparkEntry.queries(n)(spark, sfDir))
+        .getOrElse(SparkEntry.select(Some(n)).head.run(spark, sfDir))
       println(df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode))
     }

@@ -1,20 +1,20 @@
 package graft
 
 import org.apache.spark.scheduler.SparkListener
+import graft.queries.QuerySpec
 
 /** Stage profiler (dev tool, not driver contract): runs named registry
   * queries under a stage listener so each Spark stage inside a query
   * shows up with its task run/CPU time, GC, shuffle bytes and name —
   * the attribution step the bench totals can't give. Builds through
-  * [[GraftSession]], the same engine conf as Bench, so numbers are
-  * comparable.
+  * [[GraftSession]] and warms up with [[Bench.warmUp]], the same
+  * engine conf and warm-up as Bench, so numbers are comparable.
   *
   * Usage: java ... graft.Profile [sfDir] [q1,q2,...] */
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val names = if (args.length > 1) args(1).split(",").map(_.trim).toSeq
-      else Seq("q175_weighted_quantiles")
+    val selected = SparkEntry.select(Some(args.lift(1).getOrElse("q175_weighted_quantiles")))
     val spark = GraftSession.builder("local[32]", "32").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -37,27 +37,18 @@ object Profile {
       }
     })
 
-    // bench-equivalent warmup
-    Seq("lineitem", "orders", "customer", "documents", "embeddings").foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").count() catch { case _: Throwable => () }
-    }
-    spark.range(1000).selectExpr("sum(id)").collect()
-
-    val registry = SparkEntry.queries
-    names.foreach { name =>
-      val fn = registry(name)
+    Bench.warmUp(spark, sfDir)
+    selected.foreach { case QuerySpec(name, fn, _) =>
       // pass 1 = warm (JIT/codegen), pass 2 = measured with job breakdown
       val tw0 = System.nanoTime()
       fn(spark, sfDir).count()
       val warm = (System.nanoTime() - tw0) / 1e9
-      try spark.sparkContext.getPersistentRDDs.valuesIterator.foreach(_.unpersist(false))
-      catch { case _: Throwable => () }
+      Bench.releaseCached(spark)
       done.clear()
       val t0 = System.nanoTime()
       val n = fn(spark, sfDir).count()
       val dt = (System.nanoTime() - t0) / 1e9
-      try spark.sparkContext.getPersistentRDDs.valuesIterator.foreach(_.unpersist(false))
-      catch { case _: Throwable => () }
+      Bench.releaseCached(spark)
       // give listener events a beat to drain
       Thread.sleep(300)
       println(f"== $name  cold=$warm%.2f s  warm=$dt%.2f s  ($n rows)")

@@ -1,20 +1,20 @@
 package graft
 import java.nio.file.{Files, Paths}
+import graft.queries.QuerySpec
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") // env default: local[32]
+    // local-iteration filter (comma-separated query names); the driver
+    // never sets it, so its runs always dump the full declared suite
+    val selected = SparkEntry.select(sys.env.get("SPARK_GRAFT_ONLY"))
     val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // local-iteration filter (comma-separated query names); the driver
-    // never sets it, so its runs always dump the full declared suite
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    val selected = only.fold(SparkEntry.queries)(f => SparkEntry.queries.filter(kv => f(kv._1)))
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+    selected.foreach { case QuerySpec(name, run, _) =>
+      try run(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
@@ -28,7 +28,7 @@ object Verify {
     // whose runtime error meant no output dir was ever written (instead
     // of silently skipping them and reporting a false green)
     Files.writeString(Paths.get(s"$outDir/declared.json"),
-      selected.keys.toSeq.sorted.map(Bench.jsonString).mkString("[", ",", "]"))
+      selected.map(q => Bench.jsonString(q.name)).mkString("[", ",", "]"))
     spark.stop()
   }
 }

@@ -5,12 +5,15 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.expressions.graft._
+import org.apache.spark.sql.graft.RewriteSimilarityJoin
 
 /** Installs every entry of [[GraftExtensions.functions]] into a
   * session, so graft's native Catalyst expressions are callable from
-  * `expr("cosine_sim(a, b)")` and SQL text. It is the only install
-  * path. [[graft.GraftSession]] wires it; a session built anywhere else
-  * gets the same functions from the same static conf:
+  * `expr("cosine_sim(a, b)")` and SQL text, and injects the optimizer
+  * rule [[RewriteSimilarityJoin]], which plans the similarity-join node.
+  * It is the only install path for both. [[graft.GraftSession]] wires
+  * it; a session built anywhere else gets the same functions and the
+  * same rule from the same static conf:
   *
   * {{{
   *   spark-submit --conf spark.sql.extensions=graft.plans.GraftExtensions ...
@@ -20,12 +23,14 @@ import org.apache.spark.sql.catalyst.expressions.graft._
   * by `getOrCreate` from an earlier builder keeps that builder's
   * extensions, so set the conf on whatever builds the first session. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.functions.foreach { f =>
       ext.injectFunction((FunctionIdentifier(f.name),
         new ExpressionInfo(classOf[GraftExtensions].getName, null, f.name, f.usage, ""),
         f.builder))
     }
+    ext.injectOptimizerRule(RewriteSimilarityJoin(_))
+  }
 }
 
 object GraftExtensions {

@@ -11,7 +11,9 @@ import org.apache.spark.sql.DataFrame
   *   val knn = SimilarityJoinApi.similarityJoin(corpus, queries, k = 10)
   *   // columns: query_id, vec_id, sim, rank
   * }}}
-  */
+  *
+  * The rule comes with [[GraftExtensions]]; a session built without
+  * that extension cannot plan the node. */
 object SimilarityJoinApi {
   /** `strategy`: "auto" (default — corpus size statistics pick exact
     * brute-force, multiprobe LSH, or IVF; thresholds via the

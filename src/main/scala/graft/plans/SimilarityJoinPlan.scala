@@ -126,10 +126,6 @@ object SimilarityJoinApiInternal {
     require(Set("auto", "brute", "lsh", "ivf")(strategy),
       s"unknown similarity-join strategy '$strategy'")
     val spark = corpus.sparkSession
-    // self-contained: make sure the rewrite rule is installed
-    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[RewriteSimilarityJoin]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RewriteSimilarityJoin(spark)
     val node = SimilarityJoinPlan(
       logicalPlan(corpus), logicalPlan(queries), k, nBits, tables, strategy,
       SimilarityJoinPlan.outputAttrs(corpus.schema("vec_id").dataType))

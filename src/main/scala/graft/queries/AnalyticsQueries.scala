@@ -359,35 +359,17 @@ object AnalyticsQueries {
       .orderBy("doc_id")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q109_streaming_ingest_dedup" -> (q109StreamingIngestDedup _),
-    "q15_ols_ci" -> (q15OlsCi _),
-    "q22_streaming" -> (q22Streaming _),
-    "q71_streaming_dedup" -> (q71StreamingDedup _),
-    "q72_streaming_join" -> (q72StreamingJoin _),
-    "q82_upsert_sink" -> (q82UpsertSink _),
-    "q85_streaming_sessions" -> (q85StreamingSessions _),
-    "q300_rocksdb_sessions" -> (q300RocksdbSessions _),
-    "q301_bounded_sessions" -> (q301BoundedSessions _),
-    "q308_bounded_rocksdb_sessions" -> (q308BoundedRocksdbSessions _),
-    "q87_streaming_left_join" -> (q87StreamingLeftJoin _),
-    "q304_rocksdb_join" -> (q304RocksdbJoin _),
-    "q88_streaming_full_join" -> (q88StreamingFullJoin _),
-    "q181_stream_topk" -> (q181StreamTopk _),
-    "q242_stream_enrich" -> (q242StreamEnrich _)
-  )
-
-  val oracles: Map[String, String] = Map(
+  val specs: Seq[QuerySpec] = Seq(
     // the stream-static enrichment ≡ the batch join: complete-mode
     // aggregate over one staged batch is exactly the batch group-by
-    "q242_stream_enrich" ->
+    QuerySpec("q242_stream_enrich", q242StreamEnrich,
       """SELECT c_mktsegment AS segment, event_type,
         |  count(*) AS n_events, round(sum(value), 2) AS total_value
         |FROM events JOIN customer ON user_id = c_custkey
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
     // batch window formulation of the streaming topk_agg state — the
     // hash match proves streaming ≡ batch for the native aggregate
-    "q181_stream_topk" ->
+    QuerySpec("q181_stream_topk", q181StreamTopk,
       """WITH r AS (
         |  SELECT CAST(date_trunc('microseconds', ts) AS DATE) AS day,
         |    event_type, value, event_id,
@@ -397,8 +379,8 @@ object AnalyticsQueries {
         |  FROM events
         |  WHERE value IS NOT NULL AND event_id IS NOT NULL)
         |SELECT day, event_type, rank, value, event_id FROM r
-        |WHERE rank <= 3 ORDER BY 1, 2, 3""".stripMargin,
-    "q109_streaming_ingest_dedup" ->
+        |WHERE rank <= 3 ORDER BY 1, 2, 3""".stripMargin),
+    QuerySpec("q109_streaming_ingest_dedup", q109StreamingIngestDedup,
       """SELECT doc_id + 1000000 AS doc_id, false AS landed
         |FROM documents WHERE doc_id % 10 = 0
         |UNION ALL
@@ -406,11 +388,11 @@ object AnalyticsQueries {
         |  (CAST(-100 AS BIGINT), false),
         |  (CAST(-101 AS BIGINT), false),
         |  (CAST(-102 AS BIGINT), true)) AS t(doc_id, landed)
-        |ORDER BY doc_id""".stripMargin,
-    "q71_streaming_dedup" ->
+        |ORDER BY doc_id""".stripMargin),
+    QuerySpec("q71_streaming_dedup", q71StreamingDedup,
       """SELECT md5(text) AS fingerprint, min(doc_id) AS keep_id
-        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q72_streaming_join" ->
+        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin),
+    QuerySpec("q72_streaming_join", q72StreamingJoin,
       """WITH p AS (
         |  SELECT user_id, event_id AS purchase_id, date_trunc('microseconds', ts) AS ts
         |  FROM events WHERE event_type = 'purchase'),
@@ -423,8 +405,8 @@ object AnalyticsQueries {
         |FROM p JOIN v ON p.user_id = v.user_id
         |  AND p.ts >= v.ts - INTERVAL 900 SECONDS
         |  AND p.ts <= v.ts + INTERVAL 900 SECONDS
-        |ORDER BY p.user_id, purchase_id, view_id""".stripMargin,
-    "q15_ols_ci" ->
+        |ORDER BY p.user_id, purchase_id, view_id""".stripMargin),
+    QuerySpec("q15_ols_ci", q15OlsCi,
       """WITH s AS (
         |  SELECT count(*) * 1.0 AS n,
         |    regr_slope(l_extendedprice, l_quantity) AS slope,
@@ -457,16 +439,16 @@ object AnalyticsQueries {
         |    + tcrit * rse * sqrt(1.0 / n + pow(g.x - xbar, 2) / sxx), 4) AS ci_upper
         |FROM (SELECT DISTINCT l_quantity AS x FROM lineitem
         |      WHERE l_quantity IS NOT NULL) g CROSS JOIN tq
-        |ORDER BY x""".stripMargin,
-    "q22_streaming" ->
+        |ORDER BY x""".stripMargin),
+    QuerySpec("q22_streaming", q22Streaming,
       """SELECT CAST(ts AS DATE) AS day, event_type,
         | count(*) AS n_events, round(sum(value),2) AS total_value
-        |FROM events GROUP BY 1,2 ORDER BY 1,2""".stripMargin,
-    "q82_upsert_sink" ->
+        |FROM events GROUP BY 1,2 ORDER BY 1,2""".stripMargin),
+    QuerySpec("q82_upsert_sink", q82UpsertSink,
       """SELECT CAST(ts AS DATE) AS day, event_type,
         | count(*) AS n_events, round(sum(value),2) AS total_value
-        |FROM events GROUP BY 1,2 ORDER BY 1,2""".stripMargin,
-    "q88_streaming_full_join" ->
+        |FROM events GROUP BY 1,2 ORDER BY 1,2""".stripMargin),
+    QuerySpec("q88_streaming_full_join", q88StreamingFullJoin,
       """WITH p AS (
         |  SELECT user_id, event_id AS purchase_id, date_trunc('microseconds', ts) AS ts
         |  FROM events WHERE event_type = 'purchase'),
@@ -481,27 +463,27 @@ object AnalyticsQueries {
         |FROM p FULL JOIN v ON p.user_id = v.user_id
         |  AND v.ts >= p.ts - INTERVAL 900 SECONDS
         |  AND v.ts <= p.ts + INTERVAL 900 SECONDS
-        |ORDER BY 1, 2, 3""".stripMargin,
-    "q87_streaming_left_join" -> LeftJoinOracleSql,
+        |ORDER BY 1, 2, 3""".stripMargin),
+    QuerySpec("q87_streaming_left_join", q87StreamingLeftJoin, LeftJoinOracleSql),
     // provider-invariance for the JOIN state layout (the q300 pattern):
     // the RocksDB drain must hash to the same batch LEFT JOIN answer
-    "q304_rocksdb_join" -> LeftJoinOracleSql,
+    QuerySpec("q304_rocksdb_join", q304RocksdbJoin, LeftJoinOracleSql),
     // session_window MERGES at an exactly-gap interval and splits only
     // on a STRICTLY greater one (boundary-proven against the operator
     // itself in BehaviorOpsSpec; the original >= here was wrong in
     // principle but unobservable — real µs timestamps never land on an
     // exact 30:00.000000 gap) — same cumsum-lag formulation as q29
-    "q85_streaming_sessions" -> SessionOracleSql,
+    QuerySpec("q85_streaming_sessions", q85StreamingSessions, SessionOracleSql),
     // provider-invariance IS the contract: the RocksDB drain must hash
     // to the same batch-session answer as the default provider's
-    "q300_rocksdb_sessions" -> SessionOracleSql,
+    QuerySpec("q300_rocksdb_sessions", q300RocksdbSessions, SessionOracleSql),
     // trigger-invariance IS the contract: bounded per-trigger admission
     // (6 time-ordered chunks, one file per micro-batch) must hash to
     // the same batch-session answer as the single-burst drain
-    "q301_bounded_sessions" -> SessionOracleSql,
+    QuerySpec("q301_bounded_sessions", q301BoundedSessions, SessionOracleSql),
     // the composition: bounded admission AND the RocksDB provider at
     // once (the cluster configuration) — still the same batch answer
-    "q308_bounded_rocksdb_sessions" -> SessionOracleSql
+    QuerySpec("q308_bounded_rocksdb_sessions", q308BoundedRocksdbSessions, SessionOracleSql)
   )
 
   private lazy val LeftJoinOracleSql: String =

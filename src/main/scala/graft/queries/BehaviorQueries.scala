@@ -136,21 +136,10 @@ object BehaviorQueries {
       .orderBy("delay_minutes")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q299_watermark_audit" -> (q299WatermarkAudit _),
-    "q167_funnel" -> (q167Funnel _),
-    "q171_seq_mining" -> (q171SeqMining _),
-    "q172_item_cf" -> (q172ItemCf _),
-    "q173_sessionize" -> (q173Sessionize _),
-    "q174_twap" -> (q174Twap _),
-    "q175_weighted_quantiles" -> (q175WeightedQuantiles _),
-    "q176_retention" -> (q176Retention _)
-  )
-
-  val oracles: Map[String, String] = Map(
+  val specs: Seq[QuerySpec] = Seq(
     // integer-micros lateness against the per-key running max; the
     // four delay predicates are the same BIGINT comparisons
-    "q299_watermark_audit" ->
+    QuerySpec("q299_watermark_audit", q299WatermarkAudit,
       """WITH e AS (
         |  SELECT user_id, event_id,
         |    epoch_us(date_trunc('microseconds', ts)) AS tsu
@@ -175,11 +164,11 @@ object BehaviorQueries {
         |  UNION ALL SELECT '6h', 360, l360, n_events, max_late FROM a)
         |SELECT delay, delay_minutes, n_events, n_late,
         |  round(100.0 * n_late / n_events, 4) AS late_pct, max_late
-        |FROM s ORDER BY delay_minutes""".stripMargin,
+        |FROM s ORDER BY delay_minutes""".stripMargin),
     // the strict-sequence min-join chain restated step by step; the
     // avg divides the exact microsecond-delta sum once at the end
     // (the shuffle-order-independence discipline, see Funnel scaladoc)
-    "q167_funnel" ->
+    QuerySpec("q167_funnel", q167Funnel,
       """WITH evn AS (
         |  SELECT user_id, event_type,
         |    date_trunc('microseconds', ts) AS ts FROM events),
@@ -212,10 +201,10 @@ object BehaviorQueries {
         |  round(n_users * 1.0 /
         |    coalesce(lag(n_users) OVER (ORDER BY step), n_users), 4) AS pct_of_prev,
         |  round(sum_us * 1.0 / nullif(n_users, 0) / 3600e6, 2) AS avg_hours_to_step
-        |FROM summ ORDER BY step""".stripMargin,
+        |FROM summ ORDER BY step""".stripMargin),
     // lead(st,2) non-null implies lead(st,1) non-null within the
     // partition (contiguity), so one completeness guard suffices
-    "q171_seq_mining" ->
+    QuerySpec("q171_seq_mining", q171SeqMining,
       """WITH s AS (
         |  SELECT user_id, date_trunc('microseconds', ts) AS ts, event_id,
         |    coalesce(event_type, '(null)') AS st FROM events
@@ -234,10 +223,10 @@ object BehaviorQueries {
         |  round(n_users * 1.0 / tu, 6) AS support
         |FROM cells, tot
         |WHERE round(n_users * 1.0 / tu, 6) >= 0.01
-        |ORDER BY gram""".stripMargin,
+        |ORDER BY gram""".stripMargin),
     // cosine rounded BEFORE ranking on both sides, so rank ties break
     // identically (the q146 round-before-select discipline)
-    "q172_item_cf" ->
+    QuerySpec("q172_item_cf", q172ItemCf,
       """WITH b AS (SELECT DISTINCT l_orderkey AS bk, l_partkey AS item FROM lineitem),
         |sz AS (SELECT bk, count(*) AS n FROM b GROUP BY 1),
         |kept AS (SELECT b.bk, b.item FROM b JOIN sz ON b.bk = sz.bk WHERE sz.n <= 10),
@@ -259,10 +248,10 @@ object BehaviorQueries {
         |    PARTITION BY a ORDER BY cosine DESC, b2) AS rank
         |  FROM scored)
         |SELECT a AS item, b2 AS neighbor, n_ab, n_a, n_b, cosine, rank
-        |FROM ranked WHERE rank <= 5 ORDER BY item, rank""".stripMargin,
+        |FROM ranked WHERE rank <= 5 ORDER BY item, rank""".stripMargin),
     // diff > gap starts a new session; diff == gap merges — the
     // session_window convention, boundary-proven in BehaviorOpsSpec
-    "q173_sessionize" ->
+    QuerySpec("q173_sessionize", q173Sessionize,
       """WITH evn AS (
         |  SELECT user_id, event_id,
         |    date_trunc('microseconds', ts) AS ts FROM events),
@@ -282,10 +271,10 @@ object BehaviorQueries {
         |  strftime(max(ts), '%Y-%m-%d %H:%M:%S.%f') AS session_end,
         |  count(*) AS n_events,
         |  round((epoch_us(max(ts)) - epoch_us(min(ts))) / 1e6, 3) AS duration_sec
-        |FROM seq GROUP BY 1, 2 ORDER BY user_id, session_seq""".stripMargin,
+        |FROM seq GROUP BY 1, 2 ORDER BY user_id, session_seq""".stripMargin),
     // last observation's hold interval is open (lead is NULL) and
     // drops out of both sums on both engines
-    "q174_twap" ->
+    QuerySpec("q174_twap", q174Twap,
       """WITH evn AS (
         |  SELECT user_id, event_id, value,
         |    date_trunc('microseconds', ts) AS ts FROM events
@@ -302,10 +291,10 @@ object BehaviorQueries {
         |    round(sum(value * (nxt - tu)) / sum(nxt - tu), 4) AS twap
         |  FROM x GROUP BY 1)
         |SELECT * FROM a WHERE n_obs >= 2 AND span_sec > 0
-        |ORDER BY user_id""".stripMargin,
+        |ORDER BY user_id""".stripMargin),
     // integer-valued l_quantity keeps every cumulative/total sum exact
     // in double, so the q*W threshold cannot flip on accumulation order
-    "q175_weighted_quantiles" ->
+    QuerySpec("q175_weighted_quantiles", q175WeightedQuantiles,
       """WITH c AS (
         |  SELECT l_returnflag, l_extendedprice AS v,
         |    sum(l_quantity) OVER (PARTITION BY l_returnflag
@@ -319,8 +308,8 @@ object BehaviorQueries {
         |SELECT l_returnflag, q, min(v) AS value, max(totw) AS total_weight
         |FROM c CROSS JOIN qs
         |WHERE cumw >= q * totw
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q176_retention" ->
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    QuerySpec("q176_retention", q176Retention,
       """WITH ev AS (
         |  SELECT user_id,
         |    CAST(floor(date_diff('day', DATE '2024-01-01', CAST(ts AS DATE)) / 7.0)
@@ -337,6 +326,6 @@ object BehaviorQueries {
         |SELECT c.cohort_week, c.week_offset, s.n_users, c.n_active,
         |  round(c.n_active * 1.0 / s.n_users, 4) AS retention
         |FROM cells c JOIN sz s ON c.cohort_week = s.cohort_week
-        |ORDER BY 1, 2""".stripMargin
+        |ORDER BY 1, 2""".stripMargin)
   )
 }

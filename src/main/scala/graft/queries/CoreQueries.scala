@@ -328,31 +328,8 @@ object CoreQueries {
         col("event_type"), col("n_events"), col("total_value"))
       .orderBy("bucket_start", "event_type")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_agg" -> (q01Agg _),
-    "q02_filter_project" -> (q02FilterProject _),
-    "q03_join_agg" -> (q03JoinAgg _),
-    "q04_join_broadcast" -> (q04JoinBroadcast _),
-    "q05_densify" -> (q05Densify _),
-    "q06_anti_join" -> (q06AntiJoin _),
-    "q07_dedup_first" -> (q07DedupFirst _),
-    "q08_union" -> (q08Union _),
-    "q09_latest_per_group" -> (q09LatestPerGroup _),
-    "q10_lag_pct" -> (q10LagPct _),
-    "q11_pivot" -> (q11Pivot _),
-    "q12_bins" -> (q12Bins _),
-    "q13_quality_report" -> (q13QualityReport _),
-    "q14_regression" -> (q14Regression _),
-    "q16_impute" -> (q16Impute _),
-    "q17_rowwise_mean" -> (q17RowwiseMean _),
-    "q18_day_of_week" -> (q18DayOfWeek _),
-    "q19_topk" -> (q19TopK _),
-    "q20_setop" -> (q20SetOp _),
-    "q21_resample" -> (q21Resample _)
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q01_agg" ->
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q01_agg", q01Agg,
       """SELECT l_returnflag, l_linestatus,
         | round(sum(l_quantity),2) AS sum_qty,
         | round(sum(l_extendedprice),2) AS sum_base_price,
@@ -361,23 +338,23 @@ object CoreQueries {
         | round(avg(l_discount),4) AS avg_disc,
         | count(*) AS count_order
         |FROM lineitem WHERE CAST(l_shipdate AS DATE) <= DATE '1998-09-02'
-        |GROUP BY 1,2 ORDER BY 1,2""".stripMargin,
-    "q02_filter_project" ->
+        |GROUP BY 1,2 ORDER BY 1,2""".stripMargin),
+    QuerySpec("q02_filter_project", q02FilterProject,
       """SELECT l_orderkey, l_linenumber, CAST(l_shipdate AS DATE) AS ship_date,
         | l_returnflag AS flag,
         | l_extendedprice*(1-l_discount) AS net_price
         |FROM lineitem
         |WHERE CAST(l_shipdate AS DATE) BETWEEN DATE '1996-01-01' AND DATE '1996-12-31'
         |  AND l_returnflag IN ('A','R')
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "q03_join_agg" ->
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin),
+    QuerySpec("q03_join_agg", q03JoinAgg,
       """SELECT o_orderpriority,
         | round(sum(l_extendedprice*(1-l_discount)),2) AS revenue,
         | count(DISTINCT o_orderkey) AS n_orders,
         | count(*) AS n_lines
         |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q04_join_broadcast" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    QuerySpec("q04_join_broadcast", q04JoinBroadcast,
       """SELECT r_name, n_name,
         | count(*) AS n_customers,
         | round(sum(c_acctbal),2) AS total_acctbal,
@@ -385,8 +362,8 @@ object CoreQueries {
         |FROM customer
         |LEFT JOIN nation ON c_nationkey = n_nationkey
         |LEFT JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY 1,2 ORDER BY 1,2""".stripMargin,
-    "q05_densify" ->
+        |GROUP BY 1,2 ORDER BY 1,2""".stripMargin),
+    QuerySpec("q05_densify", q05Densify,
       """WITH mm AS (SELECT CAST(min(ts) AS DATE) AS d0, CAST(max(ts) AS DATE) AS d1 FROM events),
         | spine AS (SELECT CAST(unnest(generate_series(d0, d1, INTERVAL 1 DAY)) AS DATE) AS day FROM mm),
         | types AS (SELECT DISTINCT event_type FROM events),
@@ -396,33 +373,33 @@ object CoreQueries {
         |SELECT s.day, t.event_type, d.n_events, d.total_value
         |FROM spine s CROSS JOIN types t
         |LEFT JOIN daily d ON d.day = s.day AND d.event_type = t.event_type
-        |ORDER BY 1,2""".stripMargin,
-    "q06_anti_join" ->
+        |ORDER BY 1,2""".stripMargin),
+    QuerySpec("q06_anti_join", q06AntiJoin,
       """WITH mm AS (SELECT CAST(min(o_orderdate) AS DATE) AS d0, CAST(max(o_orderdate) AS DATE) AS d1 FROM orders),
         | spine AS (SELECT CAST(unnest(generate_series(d0, d1, INTERVAL 1 DAY)) AS DATE) AS day FROM mm)
         |SELECT day FROM spine
         |WHERE day NOT IN (SELECT CAST(o_orderdate AS DATE) FROM orders)
-        |ORDER BY day""".stripMargin,
-    "q07_dedup_first" ->
+        |ORDER BY day""".stripMargin),
+    QuerySpec("q07_dedup_first", q07DedupFirst,
       """SELECT l_orderkey, l_partkey, l_quantity, CAST(l_shipdate AS DATE) AS ship_date
         |FROM lineitem
         |QUALIFY row_number() OVER (PARTITION BY l_orderkey
         |  ORDER BY l_linenumber, l_partkey, l_suppkey, l_extendedprice, l_shipdate) = 1
-        |ORDER BY l_orderkey""".stripMargin,
-    "q08_union" ->
+        |ORDER BY l_orderkey""".stripMargin),
+    QuerySpec("q08_union", q08Union,
       """SELECT src, count(*) AS n, round(sum(price),2) AS total_price FROM (
         | SELECT l_orderkey, 'returned' AS src, l_extendedprice AS price FROM lineitem WHERE l_returnflag = 'A'
         | UNION ALL
         | SELECT l_orderkey, 'kept' AS src, l_extendedprice AS price FROM lineitem WHERE l_returnflag = 'N'
-        |) GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q09_latest_per_group" ->
+        |) GROUP BY 1 ORDER BY 1""".stripMargin),
+    QuerySpec("q09_latest_per_group", q09LatestPerGroup,
       """SELECT user_id, event_id, event_type, round(value,2) AS value,
         | strftime(date_trunc('second', ts), '%Y-%m-%d %H:%M:%S') AS ts_s
         |FROM events
         |QUALIFY row_number() OVER (PARTITION BY user_id
         |  ORDER BY date_trunc('microseconds', ts) DESC, event_id DESC) = 1
-        |ORDER BY user_id""".stripMargin,
-    "q10_lag_pct" ->
+        |ORDER BY user_id""".stripMargin),
+    QuerySpec("q10_lag_pct", q10LagPct,
       """WITH daily AS (
         | SELECT event_type, CAST(ts AS DATE) AS day, sum(value) AS v
         | FROM events GROUP BY 1,2)
@@ -432,23 +409,23 @@ object CoreQueries {
         |   THEN (v - lag(v,1) OVER w) / (lag(v,1) OVER w) * 100 ELSE 0 END, 4) AS pct_change
         |FROM daily
         |WINDOW w AS (PARTITION BY event_type ORDER BY day)
-        |ORDER BY event_type, day""".stripMargin,
-    "q11_pivot" ->
+        |ORDER BY event_type, day""".stripMargin),
+    QuerySpec("q11_pivot", q11Pivot,
       """SELECT isodow(ts) AS dow_idx, dayname(ts) AS day_of_week,
         | coalesce(round(avg(value) FILTER (WHERE event_type='click'),4),0) AS click,
         | coalesce(round(avg(value) FILTER (WHERE event_type='error'),4),0) AS error,
         | coalesce(round(avg(value) FILTER (WHERE event_type='purchase'),4),0) AS purchase,
         | coalesce(round(avg(value) FILTER (WHERE event_type='signup'),4),0) AS signup,
         | coalesce(round(avg(value) FILTER (WHERE event_type='view'),4),0) AS view
-        |FROM events GROUP BY 1,2 ORDER BY 1""".stripMargin,
-    "q12_bins" ->
+        |FROM events GROUP BY 1,2 ORDER BY 1""".stripMargin),
+    QuerySpec("q12_bins", q12Bins,
       """SELECT CASE WHEN o_totalprice < 1000 THEN 'a_<1k'
         |  WHEN o_totalprice < 10000 THEN 'b_1k-10k'
         |  WHEN o_totalprice < 100000 THEN 'c_10k-100k'
         |  ELSE 'd_>=100k' END AS price_bin,
         | count(*) AS n, round(avg(o_totalprice),2) AS avg_price
-        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q13_quality_report" ->
+        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin),
+    QuerySpec("q13_quality_report", q13QualityReport,
       """SELECT count(*) AS row_count,
         | count(*) FILTER (WHERE l_quantity IS NULL) AS null_quantity,
         | count(*) FILTER (WHERE l_extendedprice IS NULL) AS null_price,
@@ -457,21 +434,21 @@ object CoreQueries {
         | count(*) FILTER (WHERE l_extendedprice < 0) AS negative_price,
         | strftime(max(l_shipdate), '%Y-%m-%d') AS latest_ship_date,
         | datediff('day', CAST(max(l_shipdate) AS DATE), DATE '2026-01-01') AS days_since_latest
-        |FROM lineitem""".stripMargin,
-    "q14_regression" ->
+        |FROM lineitem""".stripMargin),
+    QuerySpec("q14_regression", q14Regression,
       """SELECT round(corr(l_quantity, l_extendedprice),6) AS pearson_r,
         | round(regr_slope(l_extendedprice, l_quantity),6) AS slope,
         | round(regr_intercept(l_extendedprice, l_quantity),6) AS intercept,
         | round(regr_r2(l_extendedprice, l_quantity),6) AS r2,
         | count(*) AS n
-        |FROM lineitem""".stripMargin,
-    "q16_impute" ->
+        |FROM lineitem""".stripMargin),
+    QuerySpec("q16_impute", q16Impute,
       """WITH t AS (SELECT event_id, event_type,
         |  CASE WHEN event_id % 7 = 0 THEN NULL ELSE value END AS v FROM events)
         |SELECT event_id, event_type, round(v,2) AS v,
         | round(coalesce(v, avg(v) OVER (PARTITION BY event_type)),4) AS v_imputed
-        |FROM t ORDER BY event_id""".stripMargin,
-    "q17_rowwise_mean" ->
+        |FROM t ORDER BY event_id""".stripMargin),
+    QuerySpec("q17_rowwise_mean", q17RowwiseMean,
       """WITH t AS (SELECT event_id,
         |  CASE WHEN event_id % 3 = 0 THEN NULL ELSE value END AS a,
         |  CASE WHEN event_id % 5 = 0 THEN NULL ELSE value * 2 END AS b
@@ -481,23 +458,23 @@ object CoreQueries {
         |   WHEN a IS NULL THEN b WHEN b IS NULL THEN a
         |   ELSE (a+b)/2 END, 4) AS mean_skipna,
         | round((a+b)/2, 4) AS mean_strict
-        |FROM t ORDER BY event_id""".stripMargin,
-    "q18_day_of_week" ->
+        |FROM t ORDER BY event_id""".stripMargin),
+    QuerySpec("q18_day_of_week", q18DayOfWeek,
       """SELECT dayname(ts) AS day_name,
         | CAST(isodow(ts) IN (6,7) AS INT) AS is_weekend,
         | count(*) AS n, round(sum(value),2) AS total_value
-        |FROM events GROUP BY 1,2 ORDER BY 1""".stripMargin,
-    "q19_topk" ->
+        |FROM events GROUP BY 1,2 ORDER BY 1""".stripMargin),
+    QuerySpec("q19_topk", q19TopK,
       """SELECT o_orderkey, o_custkey, o_totalprice, CAST(o_orderdate AS DATE) AS order_date
-        |FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 50""".stripMargin,
-    "q20_setop" ->
+        |FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 50""".stripMargin),
+    QuerySpec("q20_setop", q20SetOp,
       """SELECT c_custkey FROM customer
         |EXCEPT SELECT o_custkey AS c_custkey FROM orders
-        |ORDER BY c_custkey""".stripMargin,
-    "q21_resample" ->
+        |ORDER BY c_custkey""".stripMargin),
+    QuerySpec("q21_resample", q21Resample,
       """SELECT strftime(to_timestamp(floor(epoch(ts)/21600)*21600), '%Y-%m-%d %H:%M') AS bucket_start,
         | event_type, count(*) AS n_events,
         | round(coalesce(sum(value),0),2) AS total_value
-        |FROM events GROUP BY 1,2 ORDER BY 1,2""".stripMargin
+        |FROM events GROUP BY 1,2 ORDER BY 1,2""".stripMargin)
   )
 }

@@ -566,35 +566,6 @@ object CorpusQueries {
       .orderBy("doc_id")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q98_corpus_build2" -> (q98CorpusBuild2 _),
-    "q89_paragraph_dedup" -> (q89ParagraphDedup _),
-    "q90_semantic_dedup" -> (q90SemanticDedup _),
-    "q91_bm25" -> (q91Bm25 _),
-    "q102_bm25_index" -> (q102Bm25Index _),
-    "q92_chunk" -> (q92Chunk _),
-    "q93_epoch_shuffle" -> (q93EpochShuffle _),
-    "q95_fixed_size_sample" -> (q95FixedSizeSample _),
-    "q96_quality_calibration" -> (q96QualityCalibration _),
-    "q97_bigram_perplexity" -> (q97BigramPerplexity _),
-    "q290_ccnet_split" -> (q290CcnetSplit _),
-    "q292_preference_pairs" -> (q292PreferencePairs _),
-    "q293_heavy_hitters" -> (q293HeavyHitters _),
-    "q294_length_batching" -> (q294LengthBatching _),
-    "q113_token_budget" -> (q113TokenBudget _),
-    "q114_tfidf_pairs" -> (q114TfidfPairs _),
-    "q115_token_mix" -> (q115TokenMix _),
-    "q116_gopher_rules" -> (q116GopherRules _),
-    "q117_pii_scrub" -> (q117PiiScrub _),
-    "q118_dsir" -> (q118Dsir _),
-    "q120_filter_funnel" -> (q120FilterFunnel _),
-    "q121_vocab_oov" -> (q121VocabOov _),
-    "q122_decontaminate" -> (q122Decontaminate _),
-    "q123_stream_quality" -> (q123StreamQualityMonitor _),
-    "q124_scd2" -> (q124Scd2 _),
-    "q125_snapshot_diff" -> (q125SnapshotDiff _)
-  )
-
   /** Full DuckDB replay of q90's SemDeDup chain (r11 verdict item 2 —
     * the q100 Lloyd-unroll precedent applied to the production dedup
     * query): dynamic n and k = greatest(8, n // 200), seeds via the
@@ -696,9 +667,9 @@ object CorpusQueries {
          |ORDER BY r.vec_id""".stripMargin
   }
 
-  val oracles: Map[String, String] = Map(
-    "q90_semantic_dedup" -> q90OracleSql,
-    "q98_corpus_build2" ->
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q90_semantic_dedup", q90SemanticDedup, q90OracleSql),
+    QuerySpec("q98_corpus_build2", q98CorpusBuild2,
       """WITH p AS (SELECT doc_id, string_split(text, chr(10)) AS ps FROM documents),
         |e AS (SELECT doc_id, unnest(list_transform(range(1, len(ps) + 1),
         |        i -> {'pos': i, 'para': trim(ps[i])})) AS s FROM p),
@@ -735,8 +706,8 @@ object CorpusQueries {
         |SELECT doc_id, chunk_id,
         |  ('0x' || substr(sk, 1, 6))::BIGINT % 16 AS batch_id,
         |  chunk_len, chunk_fp
-        |FROM sh ORDER BY doc_id, chunk_id""".stripMargin,
-    "q89_paragraph_dedup" ->
+        |FROM sh ORDER BY doc_id, chunk_id""".stripMargin),
+    QuerySpec("q89_paragraph_dedup", q89ParagraphDedup,
       """WITH allr AS (
         |  SELECT doc_id, text FROM documents
         |  UNION ALL
@@ -765,12 +736,12 @@ object CorpusQueries {
         |  length(coalesce(agg.txt, '')) AS n_chars_dedup,
         |  md5(coalesce(agg.txt, '')) AS dedup_fp
         |FROM allr a LEFT JOIN agg USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-    "q91_bm25" -> Bm25OracleSql,
+        |ORDER BY doc_id""".stripMargin),
+    QuerySpec("q91_bm25", q91Bm25, Bm25OracleSql),
     // the from-index path must reproduce the inline ranking bit for
     // bit, so it shares q91's oracle verbatim
-    "q102_bm25_index" -> Bm25OracleSql,
-    "q92_chunk" ->
+    QuerySpec("q102_bm25_index", q102Bm25Index, Bm25OracleSql),
+    QuerySpec("q92_chunk", q92Chunk,
       """WITH t AS (
         |  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS toks
         |  FROM documents),
@@ -788,8 +759,8 @@ object CorpusQueries {
         |SELECT doc_id, chunk_id, start_tok,
         |  CAST(len(chunk_toks) AS INT) AS chunk_len,
         |  md5(array_to_string(chunk_toks, ' ')) AS chunk_fp
-        |FROM f ORDER BY doc_id, chunk_id""".stripMargin,
-    "q93_epoch_shuffle" ->
+        |FROM f ORDER BY doc_id, chunk_id""".stripMargin),
+    QuerySpec("q93_epoch_shuffle", q93EpochShuffle,
       """WITH e AS (
         |  SELECT doc_id, ep AS epoch,
         |    md5('epoch:' || ep || ':' || CAST(doc_id AS VARCHAR)) AS sort_key
@@ -800,21 +771,21 @@ object CorpusQueries {
         |SELECT epoch, batch_id, count(*) AS n_docs,
         |  CAST(sum(doc_id) AS BIGINT) AS sum_ids,
         |  min(sort_key) AS first_key
-        |FROM b GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q95_fixed_size_sample" ->
+        |FROM b GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    QuerySpec("q95_fixed_size_sample", q95FixedSizeSample,
       """WITH r AS (
         |  SELECT lang, doc_id, n_chars,
         |    row_number() OVER (PARTITION BY lang
         |      ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn
         |  FROM documents)
         |SELECT lang, doc_id, n_chars FROM r
-        |WHERE rn <= 30 ORDER BY lang, doc_id""".stripMargin,
-    "q96_quality_calibration" ->
+        |WHERE rn <= 30 ORDER BY lang, doc_id""".stripMargin),
+    QuerySpec("q96_quality_calibration", q96QualityCalibration,
       """SELECT doc_id, lang, n_chars,
         |  round(percent_rank() OVER (PARTITION BY lang
         |    ORDER BY n_chars, doc_id), 6) AS calibrated
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q97_bigram_perplexity" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    QuerySpec("q97_bigram_perplexity", q97BigramPerplexity,
       """WITH t AS (
         |  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS toks
         |  FROM documents),
@@ -838,11 +809,11 @@ object CorpusQueries {
         |  round(sum(nb * nlp) / sum(nb), 4) AS avg_neg_logp,
         |  round(exp(sum(nb * nlp) / sum(nb)), 2) AS perplexity,
         |  min(vocab) AS vocab, min(total_bigrams) AS total_bigrams
-        |FROM sc GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM sc GROUP BY 1 ORDER BY 1""".stripMargin),
     // the q97 model chain + the naive per-lang ordered window — the
     // engine's histogram two-phase rank must agree row-for-row, so the
     // hash match proves the rank identity (the q113 pattern per lang)
-    "q290_ccnet_split" ->
+    QuerySpec("q290_ccnet_split", q290CcnetSplit,
       """WITH t AS (
         |  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS toks
         |  FROM documents),
@@ -876,12 +847,12 @@ object CorpusQueries {
         |  CASE WHEN lang_rank * 3 <= n_lang THEN 'head'
         |       WHEN lang_rank * 3 <= n_lang * 2 THEN 'middle'
         |       ELSE 'tail' END AS bucket
-        |FROM r ORDER BY doc_id""".stripMargin,
+        |FROM r ORDER BY doc_id""".stripMargin),
     // the oracle states the pair selection as the NAIVE per-prompt
     // row_number windows — the engine's single min_by/max_by aggregate
     // must agree row-for-row (ties break on doc_id inside the key on
     // both sides), so the hash match proves the argmax identity
-    "q292_preference_pairs" ->
+    QuerySpec("q292_preference_pairs", q292PreferencePairs,
       """WITH c AS (
         |  SELECT lang, doc_id % 200 AS prompt_bucket, doc_id, n_chars
         |  FROM documents),
@@ -904,11 +875,11 @@ object CorpusQueries {
         |  chosen_score - rejected_score AS margin, n_candidates
         |FROM ch JOIN rj USING (lang, prompt_bucket)
         |WHERE chosen_score - rejected_score >= 50
-        |ORDER BY lang, prompt_bucket""".stripMargin,
+        |ORDER BY lang, prompt_bucket""".stripMargin),
     // the oracle is the NAIVE global ORDER BY LIMIT over the bigram
     // histogram — the engine's bounded-heap topk_agg (ties: count
     // DESC, md5-h1 id ASC) must agree row-for-row
-    "q293_heavy_hitters" ->
+    QuerySpec("q293_heavy_hitters", q293HeavyHitters,
       """WITH t AS (
         |  SELECT string_split_regex(lower(trim(text)), '\s+') AS toks
         |  FROM documents),
@@ -922,11 +893,11 @@ object CorpusQueries {
         |r AS (SELECT *, row_number() OVER (ORDER BY cnt DESC, bid ASC) AS rank
         |  FROM b)
         |SELECT CAST(rank AS INT) AS rank, bigram, cnt
-        |FROM r WHERE rank <= 20 ORDER BY rank""".stripMargin,
+        |FROM r WHERE rank <= 20 ORDER BY rank""".stripMargin),
     // the oracle states the length-sorted rank as the naive global
     // ordered window — the engine's histogram-rank two-phase must
     // agree row-for-row; every total is BIGINT on both engines
-    "q294_length_batching" ->
+    QuerySpec("q294_length_batching", q294LengthBatching,
       """WITH t AS (
         |  SELECT doc_id,
         |    CAST(len(string_split_regex(lower(trim(text)), '\s+')) AS BIGINT) AS n_toks
@@ -955,10 +926,10 @@ object CorpusQueries {
         |  CAST(sum(cnt * mx) AS BIGINT) AS padded_tokens,
         |  round(100.0 * (CAST(sum(cnt * mx) AS BIGINT) - CAST(sum(tot) AS BIGINT))
         |    / CAST(sum(cnt * mx) AS BIGINT), 4) AS waste_pct
-        |FROM pb GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM pb GROUP BY 1 ORDER BY 1""".stripMargin),
     // the oracle states the cut as ONE ordered window — the engine's
     // bucketed two-phase prefix sum must agree row-for-row
-    "q113_token_budget" ->
+    QuerySpec("q113_token_budget", q113TokenBudget,
       """WITH t AS (
         |  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS toks
         |  FROM documents),
@@ -976,8 +947,8 @@ object CorpusQueries {
         |  FROM s)
         |SELECT doc_id, n_tokens, quality_score, cum_tokens
         |FROM c, b WHERE cum_tokens <= budget
-        |ORDER BY cum_tokens""".stripMargin,
-    "q114_tfidf_pairs" ->
+        |ORDER BY cum_tokens""".stripMargin),
+    QuerySpec("q114_tfidf_pairs", q114TfidfPairs,
       """WITH t AS (
         |  SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\s+')) AS term
         |  FROM documents),
@@ -999,11 +970,11 @@ object CorpusQueries {
         |  round(dot / (x.nrm * y.nrm), 6) AS sim
         |FROM p JOIN nrm x ON p.doc_a = x.doc_id JOIN nrm y ON p.doc_b = y.doc_id
         |WHERE round(dot / (x.nrm * y.nrm), 6) >= 0.5
-        |ORDER BY doc_a, doc_b""".stripMargin,
+        |ORDER BY doc_a, doc_b""".stripMargin),
     // each source's cut is ONE lang-partitioned ordered window here —
     // the engine's per-source bucketed prefix sum must agree
     // row-for-row on every cut line
-    "q115_token_mix" ->
+    QuerySpec("q115_token_mix", q115TokenMix,
       """WITH t AS (
         |  SELECT doc_id, lang, string_split_regex(lower(trim(text)), '\s+') AS toks
         |  FROM documents),
@@ -1023,11 +994,11 @@ object CorpusQueries {
         |  FROM s JOIN r USING (lang) CROSS JOIN tot)
         |SELECT doc_id, lang, n_tokens, quality_score, cum_tokens, src_budget
         |FROM c WHERE cum_tokens <= src_budget
-        |ORDER BY lang, cum_tokens""".stripMargin,
+        |ORDER BY lang, cum_tokens""".stripMargin),
     // unnest + per-(doc, n, gram) group restatement of the engine's
     // row-local run-length folds; fractions are long/long divisions so
     // both engines agree bit-exactly unrounded
-    "q116_gopher_rules" ->
+    QuerySpec("q116_gopher_rules", q116GopherRules,
       """WITH t AS (
         |  SELECT doc_id, text,
         |    string_split_regex(lower(trim(text)), '\s+') AS toks,
@@ -1101,11 +1072,11 @@ object CorpusQueries {
         |  top2_frac, top3_frac, top4_frac, dup5_frac, dup6_frac, dup7_frac,
         |  dup8_frac, dup9_frac, dup10_frac, n_failed,
         |  CASE WHEN n_failed = 0 THEN 1 ELSE 0 END AS keep
-        |FROM f ORDER BY doc_id""".stripMargin,
+        |FROM f ORDER BY doc_id""".stripMargin),
     // plants the same doc_id-derived PII, then re-states detection and
     // redaction with RE2 ('g' flag: DuckDB replaces first-only by
     // default, Spark replaces all)
-    "q117_pii_scrub" ->
+    QuerySpec("q117_pii_scrub", q117PiiScrub,
       """WITH p AS (
         |  SELECT doc_id,
         |    text ||
@@ -1132,10 +1103,10 @@ object CorpusQueries {
         |SELECT doc_id, n_email, n_ip, n_phone, n_ssn,
         |  n_email + n_ip + n_phone + n_ssn AS n_pii,
         |  md5(redacted) AS redacted_fp, length(redacted) AS n_chars_redacted
-        |FROM r ORDER BY doc_id""".stripMargin,
+        |FROM r ORDER BY doc_id""".stripMargin),
     // same md5 bucketing, same ordered-fold scoring (list_reduce), same
     // rounded-key Gumbel-top-k cut
-    "q118_dsir" ->
+    QuerySpec("q118_dsir", q118Dsir,
       """WITH t AS (
         |  SELECT doc_id, lang, string_split_regex(lower(trim(text)), '\s+') AS toks FROM documents),
         |g AS (
@@ -1170,10 +1141,10 @@ object CorpusQueries {
         |SELECT doc_id, lang, n_grams, logw, sel_key
         |FROM keyed CROSS JOIN n
         |QUALIFY row_number() OVER (ORDER BY sel_key DESC, doc_id) <= k
-        |ORDER BY sel_key DESC, doc_id""".stripMargin,
+        |ORDER BY sel_key DESC, doc_id""".stripMargin),
     // q116's metric CTE chain + cumulative CASE products, unnested to
     // the 17-stage funnel
-    "q120_filter_funnel" ->
+    QuerySpec("q120_filter_funnel", q120FilterFunnel,
       """WITH t AS (
         |  SELECT doc_id, text,
         |    string_split_regex(lower(trim(text)), '\s+') AS toks,
@@ -1300,8 +1271,8 @@ object CorpusQueries {
         |    {'stage': 16, 'rule': 'r_dup9', 'n_in': s15, 'n_out': s16},
         |    {'stage': 17, 'rule': 'r_dup10', 'n_in': s16, 'n_out': s17}], recursive := true)
         |  FROM agg)
-        |ORDER BY stage""".stripMargin,
-    "q121_vocab_oov" ->
+        |ORDER BY stage""".stripMargin),
+    QuerySpec("q121_vocab_oov", q121VocabOov,
       """WITH t AS (
         |  SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\s+')) AS tok
         |  FROM documents),
@@ -1322,10 +1293,10 @@ object CorpusQueries {
         |SELECT doc_id, n_tokens, n_oov, CAST(n_oov AS DOUBLE) / n_tokens AS oov_rate,
         |  vocab_size, coverage
         |FROM pd CROSS JOIN g
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin),
     // split restated via the md5-bucket idiom; pure exact shingle join
     // (bloom is an engine-side accelerator with no false negatives)
-    "q122_decontaminate" ->
+    QuerySpec("q122_decontaminate", q122Decontaminate,
       """WITH base AS (
         |  SELECT doc_id, text,
         |    ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 6))::BIGINT % 100 AS bucket
@@ -1364,10 +1335,10 @@ object CorpusQueries {
         |  CAST(sum(CASE WHEN doc_id >= 10000000 THEN contaminated END) AS BIGINT) AS n_planted_dropped
         |  FROM rep)
         |SELECT doc_id, contaminated, n_bench_docs, max_shared, n_dropped, n_planted_dropped
-        |FROM rep CROSS JOIN g ORDER BY doc_id""".stripMargin,
+        |FROM rep CROSS JOIN g ORDER BY doc_id""".stripMargin),
     // batch restatement of the streaming window aggregation: epoch
     // arithmetic window starts, exact long sums, ratio-of-sums means
-    "q123_stream_quality" ->
+    QuerySpec("q123_stream_quality", q123StreamQualityMonitor,
       """WITH t AS (
         |  SELECT doc_id, lang,
         |    string_split_regex(lower(trim(text)), '\s+') AS toks,
@@ -1384,11 +1355,11 @@ object CorpusQueries {
         |  CAST(sum(n_words) AS BIGINT) AS sum_words,
         |  round(CAST(sum(n_tokchars) AS DOUBLE) / sum(n_words), 4) AS avg_word_len
         |FROM m GROUP BY wstart, lang
-        |ORDER BY window_start, lang""".stripMargin,
+        |ORDER BY window_start, lang""".stripMargin),
     // gaps-and-islands restatement of the SCD2 run collapse; both
     // sides order by microsecond-floored ts (Tables.events floors
     // parquet NANOS to Spark's native microsecond precision)
-    "q124_scd2" ->
+    QuerySpec("q124_scd2", q124Scd2,
       """WITH e AS (
         |  SELECT user_id, event_type, date_trunc('microseconds', ts) AS ts, event_id
         |  FROM events),
@@ -1415,11 +1386,11 @@ object CorpusQueries {
         |    '%Y-%m-%d %H:%M:%S'), '') AS valid_to,
         |  CASE WHEN lead(vf) OVER (PARTITION BY user_id ORDER BY version) IS NULL
         |       THEN 1 ELSE 0 END AS is_current
-        |FROM c ORDER BY user_id, version""".stripMargin,
+        |FROM c ORDER BY user_id, version""".stripMargin),
     // same derived new-snapshot recipe, fingerprints via md5 over
     // chr(1)-joined content with chr(2) null placeholders (the
     // Curation.snapshotDiff separators)
-    "q125_snapshot_diff" ->
+    QuerySpec("q125_snapshot_diff", q125SnapshotDiff,
       """WITH old AS (SELECT doc_id, text, lang FROM documents),
         |added AS (
         |  SELECT doc_id + 10000000 AS doc_id, text, lang
@@ -1444,7 +1415,7 @@ object CorpusQueries {
         |    coalesce(n.new_fp, '') AS new_fp
         |  FROM ofp o FULL OUTER JOIN nfp n USING (doc_id))
         |SELECT doc_id, status, old_fp, new_fp FROM j
-        |WHERE status <> 'unchanged' ORDER BY doc_id""".stripMargin
+        |WHERE status <> 'unchanged' ORDER BY doc_id""".stripMargin)
   )
 
   /** Shared by q91 (inline index build) and q102 (persisted index):

@@ -450,39 +450,11 @@ object ExtendedQueries {
       .orderBy("event_type")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q106_tooltip_format" -> (q106TooltipFormat _),
-    "q75_funnel" -> (q75Funnel _),
-    "q76_cohort" -> (q76Cohort _),
-    "q73_grouped_regression" -> (q73GroupedRegression _),
-    "q74_mad_outliers" -> (q74MadOutliers _),
-    "q63_grouping_sets" -> (q63GroupingSets _),
-    "q64_rank_suite" -> (q64RankSuite _),
-    "q65_unpivot" -> (q65Unpivot _),
-    "q23_rollup" -> (q23Rollup _),
-    "q24_asof" -> (q24AsOf _),
-    "q68_asof_forward" -> (q68AsOfForward _),
-    "q25_sessionize" -> (q25Sessionize _),
-    "q26_distinct" -> (q26Distinct _),
-    "q27_percentiles" -> (q27Percentiles _),
-    "q28_quality_ts" -> (q28QualityTs _),
-    "q29_session_window" -> (q29SessionWindow _),
-    "q42_json_extract" -> (q42JsonExtract _),
-    "q45_intersect" -> (q45Intersect _),
-    "q47_cube" -> (q47Cube _),
-    "q53_range_join" -> (q53RangeJoin _),
-    "q54_zscore" -> (q54ZScore _),
-    "q55_corr_matrix" -> (q55CorrMatrix _),
-    "q48_rolling_avg" -> (q48RollingAvg _),
-    "q46_semi_join" -> (q46SemiJoin _),
-    "q41_embedding_dedup" -> (q41EmbeddingDedup _)
-  )
-
-  val oracles: Map[String, String] = Map(
+  val specs: Seq[QuerySpec] = Seq(
     // full md5-SRP restatement: every ±1 sign, every table bucket
     // (signs on the 6-dp projection), the bucket cap, and the round-6
     // cosine cut — the q112 oracle machinery applied to dedup
-    "q41_embedding_dedup" ->
+    QuerySpec("q41_embedding_dedup", q41EmbeddingDedup,
       """WITH pl AS (
         |  SELECT vec_id + 1000000 AS vec_id,
         |    list_transform(embedding, x -> CAST(x * 2 AS FLOAT)) AS embedding
@@ -521,8 +493,8 @@ object ExtendedQueries {
         |  WHERE round(list_cosine_similarity(ea, eb), 6) >= 0.9)
         |SELECT doc_a, doc_b, round(c, 4) AS cosine,
         |  doc_b >= 1000000 AS planted
-        |FROM p ORDER BY 1, 2""".stripMargin,
-    "q106_tooltip_format" ->
+        |FROM p ORDER BY 1, 2""".stripMargin),
+    QuerySpec("q106_tooltip_format", q106TooltipFormat,
       """WITH daily AS (
         | SELECT event_type, CAST(ts AS DATE) AS day, sum(value) AS v
         | FROM events GROUP BY 1,2),
@@ -536,8 +508,8 @@ object ExtendedQueries {
         | printf('%.1f°F', round(v, 1)) AS value_label,
         | format('{:,} GWh', CAST(round(total, 0) AS BIGINT)) AS total_label,
         | printf('%.1f%%', round(CASE WHEN prev > 0 THEN (v - prev)/prev*100 ELSE 0 END, 1)) AS pct_label
-        |FROM x WHERE rn = 1 ORDER BY event_type""".stripMargin,
-    "q75_funnel" ->
+        |FROM x WHERE rn = 1 ORDER BY event_type""".stripMargin),
+    QuerySpec("q75_funnel", q75Funnel,
       """WITH v AS (
         |  SELECT user_id, date_trunc('microseconds', ts) AS v_ts
         |  FROM events WHERE event_type = 'view'),
@@ -553,8 +525,8 @@ object ExtendedQueries {
         |  (SELECT count(DISTINCT user_id) FROM p) AS n_purchasers,
         |  (SELECT count(*) FROM conv) AS n_converted,
         |  round((SELECT count(*) FROM conv) * 1.0
-        |    / (SELECT count(DISTINCT user_id) FROM v), 4) AS conv_rate""".stripMargin,
-    "q76_cohort" ->
+        |    / (SELECT count(DISTINCT user_id) FROM v), 4) AS conv_rate""".stripMargin),
+    QuerySpec("q76_cohort", q76Cohort,
       """WITH e AS (
         |  SELECT user_id, CAST(ts AS DATE) AS day FROM events),
         |f AS (SELECT user_id, min(day) AS cohort FROM e GROUP BY 1)
@@ -562,14 +534,14 @@ object ExtendedQueries {
         |  count(DISTINCT e.user_id) AS n_users
         |FROM e JOIN f ON e.user_id = f.user_id
         |WHERE date_diff('day', f.cohort, e.day) <= 7
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q73_grouped_regression" ->
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    QuerySpec("q73_grouped_regression", q73GroupedRegression,
       """SELECT l_returnflag, count(*) AS n,
         |  round(regr_slope(l_extendedprice, l_quantity), 4) AS slope,
         |  round(regr_intercept(l_extendedprice, l_quantity), 4) AS intercept,
         |  round(regr_r2(l_extendedprice, l_quantity), 6) AS r2
-        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q74_mad_outliers" ->
+        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin),
+    QuerySpec("q74_mad_outliers", q74MadOutliers,
       """WITH med AS (
         |  SELECT event_type, quantile_cont(value, 0.5) AS med
         |  FROM events GROUP BY 1),
@@ -584,16 +556,16 @@ object ExtendedQueries {
         |  CAST(sum(CASE WHEN abs(e.value - mad.med) > 3 * 1.4826 * mad.mad
         |    THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
         |FROM events e JOIN mad ON e.event_type = mad.event_type
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q63_grouping_sets" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    QuerySpec("q63_grouping_sets", q63GroupingSets,
       """SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
         |  coalesce(l_linestatus, 'ALL') AS linestatus,
         |  CAST(grouping(l_returnflag, l_linestatus) AS BIGINT) AS gid,
         |  round(sum(l_quantity), 2) AS sum_qty, count(*) AS n
         |FROM lineitem
         |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
-        |ORDER BY gid, returnflag, linestatus""".stripMargin,
-    "q64_rank_suite" ->
+        |ORDER BY gid, returnflag, linestatus""".stripMargin),
+    QuerySpec("q64_rank_suite", q64RankSuite,
       """SELECT event_type, event_id, round(value, 2) AS value,
         |  ntile(10) OVER w AS decile,
         |  round(percent_rank() OVER w, 6) AS pct_rank,
@@ -601,8 +573,8 @@ object ExtendedQueries {
         |FROM events WHERE event_type IN ('purchase', 'click')
         |WINDOW w AS (PARTITION BY event_type ORDER BY value, event_id)
         |ORDER BY event_type, value, event_id
-        |LIMIT 2000""".stripMargin,
-    "q65_unpivot" ->
+        |LIMIT 2000""".stripMargin),
+    QuerySpec("q65_unpivot", q65Unpivot,
       """WITH wide AS (
         |  SELECT l_returnflag, round(sum(l_quantity), 2) AS total_qty,
         |    round(sum(l_extendedprice), 2) AS total_price,
@@ -610,14 +582,14 @@ object ExtendedQueries {
         |  FROM lineitem GROUP BY 1)
         |SELECT l_returnflag AS returnflag, metric, value
         |FROM wide UNPIVOT (value FOR metric IN (total_qty, total_price, avg_disc))
-        |ORDER BY returnflag, metric""".stripMargin,
-    "q23_rollup" ->
+        |ORDER BY returnflag, metric""".stripMargin),
+    QuerySpec("q23_rollup", q23Rollup,
       """SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
         | coalesce(l_linestatus, 'ALL') AS linestatus,
         | round(sum(l_quantity),2) AS sum_qty, count(*) AS n
         |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-        |ORDER BY 1,2""".stripMargin,
-    "q24_asof" ->
+        |ORDER BY 1,2""".stripMargin),
+    QuerySpec("q24_asof", q24AsOf,
       """WITH p AS (
         |  SELECT user_id, event_id, date_trunc('microseconds', ts) AS ts
         |  FROM events WHERE event_type = 'purchase'),
@@ -628,8 +600,8 @@ object ExtendedQueries {
         |  strftime(date_trunc('second', p.ts), '%Y-%m-%d %H:%M:%S') AS ts_s,
         |  v.view_event_id
         |FROM p ASOF LEFT JOIN v ON p.user_id = v.user_id AND p.ts >= v.ts
-        |ORDER BY p.user_id, p.event_id""".stripMargin,
-    "q68_asof_forward" ->
+        |ORDER BY p.user_id, p.event_id""".stripMargin),
+    QuerySpec("q68_asof_forward", q68AsOfForward,
       """WITH p AS (
         |  SELECT user_id, event_id, date_trunc('microseconds', ts) AS ts
         |  FROM events WHERE event_type = 'purchase'),
@@ -640,8 +612,8 @@ object ExtendedQueries {
         |  strftime(date_trunc('second', p.ts), '%Y-%m-%d %H:%M:%S') AS ts_s,
         |  v.view_event_id
         |FROM p ASOF LEFT JOIN v ON p.user_id = v.user_id AND p.ts <= v.ts
-        |ORDER BY p.user_id, p.event_id""".stripMargin,
-    "q25_sessionize" ->
+        |ORDER BY p.user_id, p.event_id""".stripMargin),
+    QuerySpec("q25_sessionize", q25Sessionize,
       """WITH g AS (
         |  SELECT user_id, event_id, value, date_trunc('microseconds', ts) AS ts,
         |    CASE WHEN date_trunc('microseconds', ts)
@@ -656,15 +628,15 @@ object ExtendedQueries {
         |  strftime(date_trunc('second', min(ts)), '%Y-%m-%d %H:%M:%S') AS session_start,
         |  strftime(date_trunc('second', max(ts)), '%Y-%m-%d %H:%M:%S') AS session_end,
         |  round(sum(value),2) AS total_value
-        |FROM s GROUP BY 1,2 ORDER BY 1,2""".stripMargin,
-    "q27_percentiles" ->
+        |FROM s GROUP BY 1,2 ORDER BY 1,2""".stripMargin),
+    QuerySpec("q27_percentiles", q27Percentiles,
       """SELECT l_returnflag,
         | round(quantile_cont(l_quantity, 0.5), 4) AS median_qty,
         | round(quantile_cont(l_extendedprice, 0.9), 4) AS p90_price,
         | round(min(l_extendedprice), 2) AS min_price,
         | round(max(l_extendedprice), 2) AS max_price
-        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q28_quality_ts" ->
+        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin),
+    QuerySpec("q28_quality_ts", q28QualityTs,
       """WITH t AS (SELECT CAST(ts AS DATE) AS day,
         |  CASE WHEN event_id % 11 = 0 THEN NULL ELSE value END AS v FROM events)
         |SELECT day,
@@ -672,8 +644,8 @@ object ExtendedQueries {
         | count(*) FILTER (WHERE v > 300) AS outliers,
         | count(*) FILTER (WHERE v < 0) AS negatives,
         | count(*) AS n
-        |FROM t GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q29_session_window" ->
+        |FROM t GROUP BY 1 ORDER BY 1""".stripMargin),
+    QuerySpec("q29_session_window", q29SessionWindow,
       """WITH g AS (
         |  SELECT user_id, event_id, value, date_trunc('microseconds', ts) AS ts,
         |    CASE WHEN date_trunc('microseconds', ts)
@@ -687,14 +659,14 @@ object ExtendedQueries {
         |SELECT user_id,
         |  strftime(date_trunc('second', min(ts)), '%Y-%m-%d %H:%M:%S') AS session_start,
         |  count(*) AS n_events, round(sum(value),2) AS total_value
-        |FROM s GROUP BY user_id, session_id ORDER BY 1,2""".stripMargin,
-    "q42_json_extract" ->
+        |FROM s GROUP BY user_id, session_id ORDER BY 1,2""".stripMargin),
+    QuerySpec("q42_json_extract", q42JsonExtract,
       """SELECT event_type, count(*) AS n,
         | count(*) FILTER (WHERE json_extract(props, '$.k') IS NULL) AS null_k,
         | round(avg(CAST(json_extract(props, '$.k') AS BIGINT)), 4) AS avg_k,
         | max(CAST(json_extract(props, '$.k') AS BIGINT)) AS max_k
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q53_range_join" ->
+        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
+    QuerySpec("q53_range_join", q53RangeJoin,
       """WITH p AS (
         |  SELECT user_id, event_id, date_trunc('microseconds', ts) AS ts
         |  FROM events WHERE event_type = 'purchase'),
@@ -704,8 +676,8 @@ object ExtendedQueries {
         |SELECT p.user_id, p.event_id, count(v.ts) AS n_views_nearby
         |FROM p LEFT JOIN v ON p.user_id = v.user_id
         |  AND abs(epoch_us(p.ts) - epoch_us(v.ts)) <= 900000000
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q54_zscore" ->
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    QuerySpec("q54_zscore", q54ZScore,
       """WITH g AS (
         |  SELECT event_type, value,
         |    avg(value) OVER w AS mu, stddev_samp(value) OVER w AS sd
@@ -714,22 +686,22 @@ object ExtendedQueries {
         | round(any_value(mu), 4) AS mean_value,
         | round(any_value(sd), 4) AS sd_value,
         | count(*) FILTER (WHERE abs((value - mu) / sd) > 2.5) AS n_outliers
-        |FROM g GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q55_corr_matrix" ->
+        |FROM g GROUP BY 1 ORDER BY 1""".stripMargin),
+    QuerySpec("q55_corr_matrix", q55CorrMatrix,
       """SELECT round(corr(l_quantity, l_extendedprice), 6) AS qty_price,
         | round(corr(l_quantity, l_discount), 6) AS qty_discount,
         | round(corr(l_quantity, l_tax), 6) AS qty_tax,
         | round(corr(l_extendedprice, l_discount), 6) AS price_discount,
         | round(corr(l_extendedprice, l_tax), 6) AS price_tax,
         | round(corr(l_discount, l_tax), 6) AS discount_tax
-        |FROM lineitem""".stripMargin,
-    "q47_cube" ->
+        |FROM lineitem""".stripMargin),
+    QuerySpec("q47_cube", q47Cube,
       """SELECT coalesce(event_type, 'ALL') AS event_type,
         | coalesce(dayname(ts), 'ALL') AS day_name,
         | count(*) AS n, round(sum(value),2) AS total_value
         |FROM events GROUP BY CUBE (event_type, dayname(ts))
-        |ORDER BY 1,2""".stripMargin,
-    "q48_rolling_avg" ->
+        |ORDER BY 1,2""".stripMargin),
+    QuerySpec("q48_rolling_avg", q48RollingAvg,
       """WITH daily AS (
         |  SELECT event_type, CAST(ts AS DATE) AS day, sum(value) AS v
         |  FROM events GROUP BY 1,2)
@@ -738,22 +710,22 @@ object ExtendedQueries {
         | count(*) OVER w AS window_n
         |FROM daily
         |WINDOW w AS (PARTITION BY event_type ORDER BY day ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
-        |ORDER BY event_type, day""".stripMargin,
-    "q45_intersect" ->
+        |ORDER BY event_type, day""".stripMargin),
+    QuerySpec("q45_intersect", q45Intersect,
       """SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1995
         |INTERSECT
         |SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1996
-        |ORDER BY o_custkey""".stripMargin,
-    "q46_semi_join" ->
+        |ORDER BY o_custkey""".stripMargin),
+    QuerySpec("q46_semi_join", q46SemiJoin,
       """SELECT c_custkey, c_name, c_mktsegment FROM customer
         |WHERE EXISTS (SELECT 1 FROM orders
         |  WHERE o_custkey = c_custkey AND o_totalprice > 100000)
-        |ORDER BY c_custkey""".stripMargin,
-    "q26_distinct" ->
+        |ORDER BY c_custkey""".stripMargin),
+    QuerySpec("q26_distinct", q26Distinct,
       """SELECT count(DISTINCT l_orderkey) AS n_orders,
         | count(DISTINCT l_partkey) AS n_parts,
         | count(DISTINCT l_suppkey) AS n_suppliers,
         | count(DISTINCT (l_returnflag, l_linestatus)) AS n_flag_status
-        |FROM lineitem""".stripMargin
+        |FROM lineitem""".stripMargin)
   )
 }

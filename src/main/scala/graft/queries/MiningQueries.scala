@@ -533,27 +533,8 @@ object MiningQueries {
       .limit(10)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q252_preference_cycles" -> (q252PreferenceCycles _),
-    "q253_boilerplate" -> (q253Boilerplate _),
-    "q254_bitext_margin" -> (q254BitextMargin _),
-    "q283_bitext_margin_lsh" -> (q283BitextMarginLsh _),
-    "q255_order_count_dist" -> (q255OrderCountDistribution _),
-    "q256_profit_by_nation" -> (q256ProfitByNation _),
-    "q257_dominant_share" -> (q257DominantShare _),
-    "q258_top_supplier_quarter" -> (q258TopSupplierPerQuarter _),
-    "q259_grouped_split" -> (q259GroupedSplit _),
-    "q260_loop_detector" -> (q260LoopDetector _),
-    "q261_decay_score" -> (q261DecayScore _),
-    "q262_stream_hll" -> (q262StreamHll _),
-    "q263_late_priority" -> (q263LatePriorityCensus _),
-    "q264_supplier_variety" -> (q264SupplierVariety _),
-    "q265_disjunctive_revenue" -> (q265DisjunctiveRevenue _),
-    "q266_unshipped_topk" -> (q266UnshippedTopk _)
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q252_preference_cycles" ->
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q252_preference_cycles", q252PreferenceCycles,
       """WITH planted(l_orderkey, l_linenumber, l_partkey) AS (VALUES
         |  (-1, 1, -101), (-1, 2, -102), (-2, 1, -101), (-2, 2, -102),
         |  (-3, 1, -102), (-3, 2, -103), (-4, 1, -102), (-4, 2, -103),
@@ -595,8 +576,8 @@ object MiningQueries {
         |SELECT cyc.a, cyc.b, cyc.c, s.n_edges, s.n_cycles, s.n_transitive,
         |  s.planted_recovered
         |FROM cyc CROSS JOIN summ s
-        |ORDER BY a, b, c""".stripMargin,
-    "q253_boilerplate" ->
+        |ORDER BY a, b, c""".stripMargin),
+    QuerySpec("q253_boilerplate", q253Boilerplate,
       """WITH planted(doc_id, text, source) AS (VALUES
         |  (-10, 'bpnav home about contact' || chr(10) || 'bpban cookie banner' || chr(10) || 'uniq minus ten', 'srcbp'),
         |  (-11, 'bpnav home about contact' || chr(10) || 'bpban cookie banner' || chr(10) || 'uniq minus eleven', 'srcbp'),
@@ -628,8 +609,8 @@ object MiningQueries {
         |  CAST(sum(CASE WHEN is_bp THEN 1 ELSE 0 END) AS BIGINT) AS n_removed,
         |  md5(coalesce(string_agg(CASE WHEN is_bp THEN NULL ELSE line END,
         |    chr(10) ORDER BY pos), '')) AS text_fp
-        |FROM marked GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "q254_bitext_margin" ->
+        |FROM marked GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+    QuerySpec("q254_bitext_margin", q254BitextMargin,
       """WITH base AS (
         |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e, label FROM embeddings),
         |cl AS (SELECT e FROM base WHERE vec_id = 7),
@@ -671,12 +652,12 @@ object MiningQueries {
         |  (b.best_src = f.src_id) AS mutual
         |FROM bestf f LEFT JOIN bestb b ON f.dst_id = b.dst_id
         |WHERE f.margin >= 1.0
-        |ORDER BY f.margin DESC, f.src_id, f.dst_id""".stripMargin,
+        |ORDER BY f.margin DESC, f.src_id, f.dst_id""".stripMargin),
     // the SRP ±1 hyperplane is the engine's md5 idiom (q280's oracle):
     // parity of the first 6 md5 hex chars of 'srp:i:j', folded in the
     // same ascending-i order as SrpProject; the exact-mine CTEs (x*)
     // restate q254 verbatim for the matches_exact audit column
-    "q283_bitext_margin_lsh" ->
+    QuerySpec("q283_bitext_margin_lsh", q283BitextMarginLsh,
       """WITH base AS (
         |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e, label FROM embeddings),
         |cl AS (SELECT e FROM base WHERE vec_id = 7),
@@ -783,8 +764,8 @@ object MiningQueries {
         |JOIN nc ON nc.src_id = f.src_id
         |LEFT JOIN ex ON ex.src_id = f.src_id
         |WHERE f.margin >= 1.0
-        |ORDER BY f.margin DESC, f.src_id, f.dst_id""".stripMargin,
-    "q255_order_count_dist" ->
+        |ORDER BY f.margin DESC, f.src_id, f.dst_id""".stripMargin),
+    QuerySpec("q255_order_count_dist", q255OrderCountDistribution,
       """WITH oc AS (
         |  SELECT c.c_custkey, count(o.o_orderkey) AS c_count
         |  FROM customer c LEFT JOIN (
@@ -794,8 +775,8 @@ object MiningQueries {
         |  GROUP BY 1)
         |SELECT c_count, count(*) AS custdist
         |FROM oc GROUP BY 1
-        |ORDER BY custdist DESC, c_count DESC""".stripMargin,
-    "q256_profit_by_nation" ->
+        |ORDER BY custdist DESC, c_count DESC""".stripMargin),
+    QuerySpec("q256_profit_by_nation", q256ProfitByNation,
       """SELECT n.n_name AS nation,
         |  CAST(year(l.l_shipdate) AS INT) AS o_year,
         |  round(sum(CAST(round(l.l_extendedprice * 100) AS BIGINT) *
@@ -808,8 +789,8 @@ object MiningQueries {
         |JOIN supplier s ON l.l_suppkey = s.s_suppkey
         |JOIN nation n ON s.s_nationkey = n.n_nationkey
         |WHERE contains(p.p_name, 'red')
-        |GROUP BY 1, 2 ORDER BY nation, o_year DESC""".stripMargin,
-    "q257_dominant_share" ->
+        |GROUP BY 1, 2 ORDER BY nation, o_year DESC""".stripMargin),
+    QuerySpec("q257_dominant_share", q257DominantShare,
       """WITH li AS (
         |  SELECT l.l_partkey, l.l_suppkey, CAST(l.l_quantity AS BIGINT) AS qty
         |  FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
@@ -824,8 +805,8 @@ object MiningQueries {
         |  count(*) AS n_parts,
         |  round(max(d.s_qty / CAST(d.tot_qty AS DOUBLE)), 4) AS max_share
         |FROM dom d JOIN supplier s ON d.l_suppkey = s.s_suppkey
-        |GROUP BY 1, 2 ORDER BY s_suppkey""".stripMargin,
-    "q263_late_priority" ->
+        |GROUP BY 1, 2 ORDER BY s_suppkey""".stripMargin),
+    QuerySpec("q263_late_priority", q263LatePriorityCensus,
       """SELECT o.o_orderpriority, count(*) AS order_count
         |FROM orders o
         |WHERE o.o_orderdate >= DATE '1996-01-01'
@@ -834,8 +815,8 @@ object MiningQueries {
         |    SELECT 1 FROM lineitem l
         |    WHERE l.l_orderkey = o.o_orderkey
         |      AND l.l_shipdate > o.o_orderdate + INTERVAL 45 DAY)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q264_supplier_variety" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    QuerySpec("q264_supplier_variety", q264SupplierVariety,
       """SELECT p.p_brand, p.p_type, p.p_size,
         |  count(DISTINCT l.l_suppkey) AS supplier_cnt
         |FROM lineitem l
@@ -844,8 +825,8 @@ object MiningQueries {
         |  AND l.l_suppkey NOT IN (
         |    SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
         |GROUP BY 1, 2, 3
-        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin,
-    "q265_disjunctive_revenue" ->
+        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin),
+    QuerySpec("q265_disjunctive_revenue", q265DisjunctiveRevenue,
       """WITH f AS (
         |  SELECT CASE
         |      WHEN p.p_brand = 'Brand#1' AND p.p_size BETWEEN 1 AND 10
@@ -864,8 +845,8 @@ object MiningQueries {
         |      AND l.l_quantity BETWEEN 20 AND 35))
         |SELECT CAST(clause AS INT) AS clause, count(*) AS n_lines,
         |  round(sum(rev_units) / 10000.0, 2) AS revenue
-        |FROM f GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q266_unshipped_topk" ->
+        |FROM f GROUP BY 1 ORDER BY 1""".stripMargin),
+    QuerySpec("q266_unshipped_topk", q266UnshippedTopk,
       """SELECT l.l_orderkey, o.o_orderdate, o.o_orderpriority,
         |  round(sum(CAST(round(l.l_extendedprice * 100) AS BIGINT) *
         |    (100 - CAST(round(l.l_discount * 100) AS BIGINT))) / 10000.0, 2) AS revenue
@@ -877,8 +858,8 @@ object MiningQueries {
         |    SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING')
         |GROUP BY 1, 2, 3
         |ORDER BY revenue DESC, l_orderkey
-        |LIMIT 10""".stripMargin,
-    "q259_grouped_split" ->
+        |LIMIT 10""".stripMargin),
+    QuerySpec("q259_grouped_split", q259GroupedSplit,
       """WITH ws AS (
         |  SELECT source,
         |    CASE WHEN b < 8 THEN 'train' WHEN b = 8 THEN 'val' ELSE 'test' END AS split,
@@ -895,8 +876,8 @@ object MiningQueries {
         |    AS n_leaky_sources
         |  FROM (SELECT source, count(DISTINCT split) AS k FROM ws GROUP BY 1))
         |SELECT ps.split, ps.n_sources, ps.n_docs, ps.n_tokens, lk.n_leaky_sources
-        |FROM ps CROSS JOIN lk ORDER BY split""".stripMargin,
-    "q260_loop_detector" ->
+        |FROM ps CROSS JOIN lk ORDER BY split""".stripMargin),
+    QuerySpec("q260_loop_detector", q260LoopDetector,
       ("""WITH planted(doc_id, text) AS (VALUES
         |  (-3, 'LOOP1'), (-2, 'LOOP2'), (-1, 'LOOP3'),
         |  (-4, 'u1 u2 u3 u4 u5 u6 u7 u8 u9 u10')),
@@ -924,8 +905,8 @@ object MiningQueries {
         |ORDER BY doc_id""".stripMargin
         .replace("LOOP1", Seq.fill(30)("loopa").mkString(" "))
         .replace("LOOP2", Seq.fill(15)("pa pb").mkString(" "))
-        .replace("LOOP3", Seq.fill(10)("qa qb qc").mkString(" "))),
-    "q261_decay_score" ->
+        .replace("LOOP3", Seq.fill(10)("qa qb qc").mkString(" ")))),
+    QuerySpec("q261_decay_score", q261DecayScore,
       """WITH ev AS (
         |  SELECT user_id, CAST(ts AS DATE) AS day,
         |    CAST(round(value * 100) AS BIGINT) AS cents
@@ -935,11 +916,11 @@ object MiningQueries {
         |  round(sum(cents * pow(0.5, date_diff('day', day, ref_day) / 30.0))
         |    / 100.0, 4) AS decay_score
         |FROM ev CROSS JOIN ref
-        |GROUP BY user_id ORDER BY user_id""".stripMargin,
+        |GROUP BY user_id ORDER BY user_id""".stripMargin),
     // the q231 register restatement over the events stream's day grain:
     // the streaming complete-mode max-aggregate state IS this register
     // table, so the batch SQL hash-checks the streaming drain
-    "q262_stream_hll" ->
+    QuerySpec("q262_stream_hll", q262StreamHll,
       """WITH ev AS (
         |  SELECT CAST(ts AS DATE) AS day, user_id,
         |    ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))::BIGINT AS h
@@ -965,8 +946,8 @@ object MiningQueries {
         |  FROM s JOIN e ON e.day = s.day)
         |SELECT day, hll_estimate, n_registers_set, n_exact,
         |  round((hll_estimate - n_exact) / n_exact, 4) AS rel_err
-        |FROM est ORDER BY day""".stripMargin,
-    "q258_top_supplier_quarter" ->
+        |FROM est ORDER BY day""".stripMargin),
+    QuerySpec("q258_top_supplier_quarter", q258TopSupplierPerQuarter,
       """WITH rev AS (
         |  SELECT CAST(date_trunc('quarter', l_shipdate) AS DATE) AS quarter,
         |    l_suppkey,
@@ -981,6 +962,6 @@ object MiningQueries {
         |  round(rk.units / 10000.0, 2) AS total_revenue
         |FROM rk JOIN supplier s ON rk.l_suppkey = s.s_suppkey
         |WHERE rk.r = 1
-        |ORDER BY quarter, s_suppkey""".stripMargin
+        |ORDER BY quarter, s_suppkey""".stripMargin)
   )
 }

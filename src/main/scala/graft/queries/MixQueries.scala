@@ -372,20 +372,10 @@ object MixQueries {
       .orderBy("variant")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q274_temp_mixture" -> (q274TempMixture _),
-    "q298_modality_mix" -> (q298ModalityMix _),
-    "q275_conformal" -> (q275Conformal _),
-    "q276_skew_diagnosis" -> (q276SkewDiagnosis _),
-    "q277_vocab_coverage" -> (q277VocabCoverage _),
-    "q278_kaplan_meier" -> (q278KaplanMeier _),
-    "q279_cuped" -> (q279Cuped _)
-  )
-
-  val oracles: Map[String, String] = Map(
+  val specs: Seq[QuerySpec] = Seq(
     // q274's Hamilton restatement over the multimodal manifest cells;
     // byte_len = octet_length(encode(text)) is the q40 stub identity
-    "q298_modality_mix" ->
+    QuerySpec("q298_modality_mix", q298ModalityMix,
       """WITH cells AS (
         |  SELECT CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 'image'
         |           WHEN 1 THEN 'audio' ELSE 'video' END AS modality,
@@ -413,8 +403,8 @@ object MixQueries {
         |    AS alloc_bytes,
         |  round(100.0 * (base + CASE WHEN rr <= shortfall THEN 1 ELSE 0 END)
         |    / 10000000, 6) AS alloc_pct
-        |FROM r ORDER BY modality, lang""".stripMargin,
-    "q274_temp_mixture" ->
+        |FROM r ORDER BY modality, lang""".stripMargin),
+    QuerySpec("q274_temp_mixture", q274TempMixture,
       """WITH per_src AS (
         |  SELECT source,
         |    CAST(sum(len(string_split_regex(lower(trim(text)), '\s+'))) AS BIGINT)
@@ -453,8 +443,8 @@ object MixQueries {
         |    AS alloc_tokens,
         |  round(100.0 * (base + CASE WHEN rr <= shortfall THEN 1 ELSE 0 END)
         |    / 1000000, 4) AS alloc_pct
-        |FROM r ORDER BY temp, source""".stripMargin,
-    "q275_conformal" ->
+        |FROM r ORDER BY temp, source""".stripMargin),
+    QuerySpec("q275_conformal", q275Conformal,
       """WITH ev AS (
         |  SELECT event_id, value,
         |    ('0x' || substr(md5(event_id || ''), 1, 15))::BIGINT % 5 = 0 AS is_cal
@@ -481,8 +471,8 @@ object MixQueries {
         |  round(100.0 * sum(CASE WHEN test.value <= thr.threshold THEN 1
         |    ELSE 0 END) / count(*), 4) AS coverage_pct
         |FROM test CROSS JOIN thr
-        |GROUP BY 1, 2, 3, 4 ORDER BY alpha""".stripMargin,
-    "q276_skew_diagnosis" ->
+        |GROUP BY 1, 2, 3, 4 ORDER BY alpha""".stripMargin),
+    QuerySpec("q276_skew_diagnosis", q276SkewDiagnosis,
       """WITH per_key AS (
         |  SELECT l_suppkey, count(*) AS cnt FROM lineitem GROUP BY 1),
         |g AS (
@@ -505,8 +495,8 @@ object MixQueries {
         |  n_keys, max_cnt, p99_cnt
         |FROM per_key CROSS JOIN g CROSS JOIN p99
         |ORDER BY cnt DESC, l_suppkey
-        |LIMIT 10""".stripMargin,
-    "q277_vocab_coverage" ->
+        |LIMIT 10""".stripMargin),
+    QuerySpec("q277_vocab_coverage", q277VocabCoverage,
       """WITH toks AS (
         |  SELECT source, unnest(string_split_regex(lower(trim(text)), '\s+'))
         |    AS tok
@@ -525,8 +515,8 @@ object MixQueries {
         |  CAST(count(DISTINCT CASE WHEN v.tok IS NULL THEN t.tok END)
         |    AS BIGINT) AS oov_types
         |FROM toks t LEFT JOIN vocab v ON t.tok = v.tok
-        |GROUP BY 1 ORDER BY source""".stripMargin,
-    "q278_kaplan_meier" ->
+        |GROUP BY 1 ORDER BY source""".stripMargin),
+    QuerySpec("q278_kaplan_meier", q278KaplanMeier,
       """WITH ev AS (
         |  SELECT user_id, event_type, CAST(ts AS DATE) AS day FROM events),
         |su AS (
@@ -568,8 +558,8 @@ object MixQueries {
         |SELECT t_days, n_risk, n_events, n_censored,
         |  round(list_reduce(list_prepend(CAST(1.0 AS DOUBLE), rs),
         |    (a, x) -> a * x), 6) AS survival
-        |FROM fold ORDER BY t_days""".stripMargin,
-    "q279_cuped" ->
+        |FROM fold ORDER BY t_days""".stripMargin),
+    QuerySpec("q279_cuped", q279Cuped,
       """WITH ev AS (
         |  SELECT user_id, CAST(ts AS DATE) AS day,
         |    CAST(round(value * 100) AS BIGINT) AS cents
@@ -609,6 +599,6 @@ object MixQueries {
         |  round(100.0 * (1.0 - var_pop(y_adj) / var_pop(CAST(y AS DOUBLE))), 4)
         |    AS var_reduction_pct,
         |  round(max(theta), 6) AS theta
-        |FROM a GROUP BY 1 ORDER BY variant""".stripMargin
+        |FROM a GROUP BY 1 ORDER BY variant""".stripMargin)
   )
 }

@@ -125,19 +125,6 @@ object ProfileQueries {
       ("l_partkey->l_returnflag", Seq("l_partkey"), "l_returnflag")))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q240_fd_audit" -> (q240FdAudit _),
-    "q168_chi2" -> (q168Chi2 _),
-    "q180_auc" -> (q180Auc _),
-    "q182_pmi" -> (q182Pmi _),
-    "q183_token_drift" -> (q183TokenDrift _),
-    "q169_profile" -> (q169Profile _),
-    "q170_mutual_info" -> (q170MutualInfo _),
-    "q177_join_audit" -> (q177JoinAudit _),
-    "q178_robust_z" -> (q178RobustZ _),
-    "q179_topk_native" -> (q179TopkNative _)
-  )
-
   private def profileNumSql(c: String, dtype: String): String =
     s"""SELECT '$c' AS "column", '$dtype' AS dtype, count(*) AS n_rows,
        |  count(*) - count($c) AS n_nulls, count(DISTINCT $c) AS n_distinct,
@@ -163,8 +150,8 @@ object ProfileQueries {
        |    SELECT $lhs, $rhs, count(*) AS c FROM j GROUP BY $lhs, $rhs) t
        |  GROUP BY $lhs) g""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    "q240_fd_audit" ->
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q240_fd_audit", q240FdAudit,
       s"""WITH j AS (
          |  SELECT l_orderkey, o_custkey, l_linestatus, l_partkey, l_returnflag
          |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey)
@@ -173,10 +160,10 @@ object ProfileQueries {
          |${fdRuleSql("l_orderkey->l_linestatus", "l_orderkey", "l_linestatus")}
          |UNION ALL
          |${fdRuleSql("l_partkey->l_returnflag", "l_partkey", "l_returnflag")}
-         |ORDER BY rule""".stripMargin,
+         |ORDER BY rule""".stripMargin),
     // full-spine expectation (absent cells contribute, the q161
     // discipline); statistics are sums over the 15-cell frame
-    "q168_chi2" ->
+    QuerySpec("q168_chi2", q168Chi2,
       """WITH obs AS (
         |  SELECT coalesce(CAST(o_orderpriority AS VARCHAR), '(null)') AS a,
         |    coalesce(CAST(o_orderstatus AS VARCHAR), '(null)') AS b,
@@ -211,8 +198,8 @@ object ProfileQueries {
         |SELECT e.a, e.b, e.observed, round(e.expected, 4) AS expected,
         |  round(e.contrib, 4) AS contrib, tb.chi2, tb.dof, tb.cramers_v,
         |  tb.effect_band
-        |FROM e CROSS JOIN tb ORDER BY e.a, e.b""".stripMargin,
-    "q169_profile" -> Seq(
+        |FROM e CROSS JOIN tb ORDER BY e.a, e.b""".stripMargin),
+    QuerySpec("q169_profile", q169Profile, Seq(
       profileNumSql("l_orderkey", "bigint"),
       profileNumSql("l_partkey", "bigint"),
       profileNumSql("l_suppkey", "bigint"),
@@ -226,11 +213,11 @@ object ProfileQueries {
       profileStrSql("l_shipdate", "timestamp_ntz",
         "strftime(min(l_shipdate), '%Y-%m-%d %H:%M:%S.%f')",
         "strftime(max(l_shipdate), '%Y-%m-%d %H:%M:%S.%f')")
-    ).mkString("\n", "\nUNION ALL\n", "\nORDER BY 1"),
+    ).mkString("\n", "\nUNION ALL\n", "\nORDER BY 1")),
     // integer products stay below 2^53, so both engines' doubles are
     // exact up to the final division; ln + round 6 is the q97/q132
     // cross-engine convention
-    "q170_mutual_info" ->
+    QuerySpec("q170_mutual_info", q170MutualInfo,
       """WITH med AS (SELECT quantile_cont(o_totalprice, 0.5) AS m FROM orders),
         |base AS (
         |  SELECT o.*, c.c_mktsegment,
@@ -266,10 +253,10 @@ object ProfileQueries {
         |  FROM en GROUP BY 1)
         |SELECT feature, n_levels, round(mi_raw, 6) AS mi_nats, h.h_label,
         |  round(mi_raw / h.h_label, 6) AS nmi
-        |FROM agg CROSS JOIN h ORDER BY feature""".stripMargin,
+        |FROM agg CROSS JOIN h ORDER BY feature""".stripMargin),
     // per-key products as doubles (exact integers below 2^53, the
     // overflow-safe representation both engines share)
-    "q177_join_audit" ->
+    QuerySpec("q177_join_audit", q177JoinAudit,
       """WITH lh AS (SELECT l_partkey AS key, count(*) AS n_l
         |  FROM lineitem GROUP BY 1),
         |rh AS (SELECT l_partkey AS key, count(*) AS n_r
@@ -292,11 +279,11 @@ object ProfileQueries {
         |  c.n_keys_matched, c.n_m2m_keys,
         |  round(c.est_join_rows / greatest(tl.n, tr.n), 4) AS amplification
         |FROM ranked r CROSS JOIN c CROSS JOIN tl CROSS JOIN tr
-        |WHERE r.rank <= 20 ORDER BY r.rank""".stripMargin,
+        |WHERE r.rank <= 20 ORDER BY r.rank""".stripMargin),
     // median and MAD restated via the q127 rank-selection rule
     // (ceil(q*n), lower order statistic) — NOT quantile_cont's
     // interpolation; z is per-row double arithmetic, bit-exact
-    "q178_robust_z" ->
+    QuerySpec("q178_robust_z", q178RobustZ,
       """WITH t AS (
         |  SELECT event_id, event_type, value FROM events
         |  WHERE value IS NOT NULL),
@@ -329,10 +316,10 @@ object ProfileQueries {
         |SELECT o.event_id, o.event_type, o.value, o.median, o.mad, o.z,
         |  cnt.n_outliers_group
         |FROM o JOIN cnt ON o.event_type = cnt.event_type
-        |ORDER BY o.event_type, o.event_id""".stripMargin,
+        |ORDER BY o.event_type, o.event_id""".stripMargin),
     // the oracle is the window formulation the native aggregate
     // replaces — the hash match is the equivalence proof
-    "q179_topk_native" ->
+    QuerySpec("q179_topk_native", q179TopkNative,
       """WITH r AS (
         |  SELECT event_type, value, event_id,
         |    CAST(row_number() OVER (PARTITION BY event_type
@@ -340,10 +327,10 @@ object ProfileQueries {
         |  FROM events
         |  WHERE value IS NOT NULL AND event_id IS NOT NULL)
         |SELECT event_type, rank, value, event_id FROM r
-        |WHERE rank <= 10 ORDER BY 1, 2""".stripMargin,
+        |WHERE rank <= 10 ORDER BY 1, 2""".stripMargin),
     // Mann-Whitney with average ranks: rank() is min-rank of ties in
     // both engines; halves are exact in double
-    "q180_auc" ->
+    QuerySpec("q180_auc", q180Auc,
       """WITH t AS (
         |  SELECT lang, CAST(n_chars AS DOUBLE) AS s,
         |    CASE WHEN length(source) > 4 THEN 1 ELSE 0 END AS y
@@ -362,11 +349,11 @@ object ProfileQueries {
         |SELECT lang, n_pos, n_neg,
         |  round((sumrank - n_pos * 1.0 * (n_pos + 1) / 2) /
         |    (n_pos * 1.0 * n_neg), 6) AS auc
-        |FROM a WHERE n_pos > 0 AND n_neg > 0 ORDER BY lang""".stripMargin,
+        |FROM a WHERE n_pos > 0 AND n_neg > 0 ORDER BY lang""".stripMargin),
     // pair total computed BEFORE the min-count filter (it is the
     // probability denominator, not a workload cap); npmi rounded to 6
     // before ranking on both sides
-    "q182_pmi" ->
+    QuerySpec("q182_pmi", q182Pmi,
       """WITH toks AS (
         |  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS tk
         |  FROM documents),
@@ -394,10 +381,10 @@ object ProfileQueries {
         |  SELECT *, CAST(row_number() OVER (ORDER BY npmi DESC, w1, w2)
         |    AS INT) AS rank FROM sc)
         |SELECT rank, w1 || ' ' || w2 AS bigram, c12, c1, c2, pmi, npmi
-        |FROM r WHERE rank <= 50 ORDER BY rank""".stripMargin,
+        |FROM r WHERE rank <= 50 ORDER BY rank""".stripMargin),
     // union-vocab add-half smoothing; totals sum UNROUNDED terms and
     // round once; contribution rounded to 6 before the ranking
-    "q183_token_drift" ->
+    QuerySpec("q183_token_drift", q183TokenDrift,
       """WITH a AS (
         |  SELECT unnest(string_split_regex(lower(trim(text)), '\s+')) AS token
         |  FROM documents WHERE length(source) <= 4),
@@ -428,6 +415,6 @@ object ProfileQueries {
         |  FROM s2)
         |SELECT r.rank, r.token, r.n_a, r.n_b, r.js_contrib,
         |  t.kl_ab, t.kl_ba, t.js
-        |FROM r CROSS JOIN t WHERE r.rank <= 20 ORDER BY r.rank""".stripMargin
+        |FROM r CROSS JOIN t WHERE r.rank <= 20 ORDER BY r.rank""".stripMargin)
   )
 }

@@ -249,19 +249,8 @@ object RevenueQueries {
         count(lit(1)).as("n_lines"))
       .select(round(col("units") / 10000.0, 2).as("revenue"), col("n_lines"))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q284_revenue_delta" -> (q284RevenueDelta _),
-    "q267_returned_topk" -> (q267ReturnedTopk _),
-    "q268_promo_share" -> (q268PromoShare _),
-    "q269_important_parts" -> (q269ImportantParts _),
-    "q270_min_cost_supplier" -> (q270MinCostSupplier _),
-    "q271_ccf_lag" -> (q271CcfLag _),
-    "q272_hard_negatives" -> (q272HardNegatives _),
-    "q273_status_priority" -> (q273StatusPriority _)
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q284_revenue_delta" ->
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q284_revenue_delta", q284RevenueDelta,
       """WITH f AS (
         |  SELECT CAST(round(l_extendedprice * 100) AS BIGINT) AS cents,
         |    CAST(round(l_discount * 100) AS BIGINT) AS disc_c
@@ -270,8 +259,8 @@ object RevenueQueries {
         |    AND l_quantity < 24)
         |SELECT round(sum(cents * disc_c) / 10000.0, 2) AS revenue,
         |  count(*) AS n_lines
-        |FROM f WHERE disc_c BETWEEN 5 AND 7""".stripMargin,
-    "q267_returned_topk" ->
+        |FROM f WHERE disc_c BETWEEN 5 AND 7""".stripMargin),
+    QuerySpec("q267_returned_topk", q267ReturnedTopk,
       """WITH r AS (
         |  SELECT l_orderkey,
         |    CAST(round(l_extendedprice * 100) AS BIGINT) *
@@ -291,8 +280,8 @@ object RevenueQueries {
         |JOIN customer ON c_custkey = o_custkey
         |JOIN nation ON c_nationkey = n_nationkey
         |ORDER BY returned_revenue DESC, c_custkey
-        |LIMIT 20""".stripMargin,
-    "q268_promo_share" ->
+        |LIMIT 20""".stripMargin),
+    QuerySpec("q268_promo_share", q268PromoShare,
       """WITH li AS (
         |  SELECT date_trunc('month', l_shipdate)::DATE AS month,
         |    (p_type = 'PROMO') AS is_promo,
@@ -306,8 +295,8 @@ object RevenueQueries {
         |      AS DOUBLE) / CAST(sum(rev_units) AS DOUBLE), 4) AS promo_share_pct,
         |  round(sum(rev_units) / 10000.0, 2) AS revenue,
         |  count(*) AS n_lines
-        |FROM li GROUP BY 1 ORDER BY month""".stripMargin,
-    "q269_important_parts" ->
+        |FROM li GROUP BY 1 ORDER BY month""".stripMargin),
+    QuerySpec("q269_important_parts", q269ImportantParts,
       """WITH natsupp AS (
         |  SELECT s_suppkey FROM supplier JOIN nation ON s_nationkey = n_nationkey
         |  WHERE n_name = 'NATION_5'),
@@ -327,8 +316,8 @@ object RevenueQueries {
         |WHERE CAST(units AS DECIMAL(38,0)) * g.n_parts
         |  > 3 * CAST(g.global_units AS DECIMAL(38,0))
         |ORDER BY value DESC, p_partkey
-        |LIMIT 100""".stripMargin,
-    "q270_min_cost_supplier" ->
+        |LIMIT 100""".stripMargin),
+    QuerySpec("q270_min_cost_supplier", q270MinCostSupplier,
       """WITH pairs AS (
         |  SELECT DISTINCT l_partkey, l_suppkey FROM lineitem),
         |cost AS (
@@ -352,8 +341,8 @@ object RevenueQueries {
         |JOIN supplier ON best_suppkey = supplier.s_suppkey
         |JOIN nation ON s_nationkey = n_nationkey
         |WHERE p_size BETWEEN 30 AND 35
-        |ORDER BY p_partkey""".stripMargin,
-    "q271_ccf_lag" ->
+        |ORDER BY p_partkey""".stripMargin),
+    QuerySpec("q271_ccf_lag", q271CcfLag,
       """WITH daily AS (
         |  SELECT l_shipdate::DATE AS day,
         |    CAST(sum(CASE WHEN l_returnflag = 'R' THEN
@@ -372,8 +361,8 @@ object RevenueQueries {
         |  JOIN daily b ON TRUE
         |  JOIN daily a ON a.day = b.day + l.lag)
         |SELECT lag, count(*) AS n_days, round(corr(x, y), 6) AS ccf
-        |FROM j GROUP BY 1 ORDER BY lag""".stripMargin,
-    "q272_hard_negatives" ->
+        |FROM j GROUP BY 1 ORDER BY lag""".stripMargin),
+    QuerySpec("q272_hard_negatives", q272HardNegatives,
       """WITH q AS (
         |  SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[]) AS q_emb,
         |    label AS q_label
@@ -390,8 +379,8 @@ object RevenueQueries {
         |  vec_id AS neg_id, label AS neg_label, sim
         |FROM scored
         |QUALIFY rank <= 5
-        |ORDER BY q_id, rank""".stripMargin,
-    "q273_status_priority" ->
+        |ORDER BY q_id, rank""".stripMargin),
+    QuerySpec("q273_status_priority", q273StatusPriority,
       """SELECT l_linestatus,
         |  CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
         |    THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
@@ -400,6 +389,6 @@ object RevenueQueries {
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         |WHERE l_shipdate >= DATE '1996-01-01'
         |  AND l_shipdate < DATE '1997-01-01'
-        |GROUP BY 1 ORDER BY l_linestatus""".stripMargin
+        |GROUP BY 1 ORDER BY l_linestatus""".stripMargin)
   )
 }

@@ -1054,56 +1054,6 @@ object ScaleQueries {
       .orderBy("band")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q291_bucketed_join" -> (q291BucketedJoin _),
-    "q297_bucketed_agg" -> (q297BucketedAgg _),
-    "q302_bucketed_append" -> (q302BucketedAppend _),
-    "q305_bucketed_compact" -> (q305BucketedCompact _),
-    "q306_compact_swap" -> (q306CompactSwap _),
-    "q126_pit_join" -> (q126PitJoin _),
-    "q127_quantiles" -> (q127Quantiles _),
-    "q128_hybrid_rrf" -> (q128HybridRrf _),
-    "q129_scd2_merge" -> (q129Scd2Merge _),
-    "q130_incremental_refresh" -> (q130IncrementalRefresh _),
-    "q131_salted_join" -> (q131SaltedJoin _),
-    "q132_drift_psi" -> (q132DriftPsi _),
-    "q133_interpolate" -> (q133Interpolate _),
-    "q134_winsorize" -> (q134Winsorize _),
-    "q135_kappa" -> (q135Kappa _),
-    "q136_entity_resolution" -> (q136EntityResolution _),
-    "q137_ohlc" -> (q137Ohlc _),
-    "q138_pagerank" -> (q138PageRank _),
-    "q139_oversized_blocks" -> (q139OversizedBlocks _),
-    "q140_agg_merge" -> (q140AggMerge _),
-    "q141_cdc_chunks" -> (q141CdcChunks _),
-    "q230_cdc_poly" -> (q230CdcPoly _),
-    "q142_zorder" -> (q142Zorder _),
-    "q143_contracts" -> (q143Contracts _),
-    "q144_seasonal" -> (q144Seasonal _),
-    "q145_attribution" -> (q145Attribution _),
-    "q146_bootstrap_ci" -> (q146BootstrapCi _),
-    "q147_transitions" -> (q147Transitions _),
-    "q148_target_encoding" -> (q148TargetEncoding _),
-    "q149_embed_stats" -> (q149EmbedStats _),
-    "q150_woe_bins" -> (q150WoeBins _),
-    "q151_triangles" -> (q151Triangles _),
-    "q152_assoc_rules" -> (q152AssocRules _),
-    "q153_ab_cuped" -> (q153AbCuped _),
-    "q154_leadlag" -> (q154LeadLag _),
-    "q155_stream_contracts" -> (q155StreamContracts _),
-    "q156_manifest" -> (q156Manifest _),
-    "q157_conversion_paths" -> (q157ConversionPaths _),
-    "q158_cusum" -> (q158Cusum _),
-    "q159_active_users" -> (q159ActiveUsers _),
-    "q160_kaplan_meier" -> (q160KaplanMeier _),
-    "q161_benford" -> (q161Benford _),
-    "q162_gini" -> (q162Gini _),
-    "q163_theil_sen" -> (q163TheilSen _),
-    "q164_latency_quantiles" -> (q164LatencyQuantiles _),
-    "q165_cohort_ltv" -> (q165CohortLtv _),
-    "q166_forecast" -> (q166Forecast _)
-  )
-
   /** The `morton2` interleave restated as DuckDB arithmetic: bit i of
     * xs contributes 4^i (even positions), bit i of ys contributes
     * 2·4^i (odd). Generated, not hand-typed, so the 32 terms cannot
@@ -1113,19 +1063,19 @@ object ScaleQueries {
     s"((xs >> $i) & 1) * $p + ((ys >> $i) & 1) * ${p * 2}"
   }.mkString(" + ")
 
-  val oracles: Map[String, String] = Map(
+  val specs: Seq[QuerySpec] = Seq(
     // the plain join over the raw parquet — the bucketed tables must
     // answer identically to an unbucketed engine
-    "q291_bucketed_join" ->
+    QuerySpec("q291_bucketed_join", q291BucketedJoin,
       """SELECT o_orderpriority,
         | round(sum(l_extendedprice*(1-l_discount)),2) AS revenue,
         | count(DISTINCT o_orderkey) AS n_orders,
         | count(*) AS n_lines
         |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
     // the plain rollup over raw parquet — bucketing must be invisible;
     // revenue in exact 1e-4-dollar longs so the band cut is integer
-    "q297_bucketed_agg" ->
+    QuerySpec("q297_bucketed_agg", q297BucketedAgg,
       """WITH po AS (
         |  SELECT l_orderkey,
         |    CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT) *
@@ -1136,39 +1086,39 @@ object ScaleQueries {
         |  CAST(count(*) AS BIGINT) AS n_orders,
         |  CAST(sum(n_lines) AS BIGINT) AS n_lines,
         |  round(CAST(sum(rev_e4) AS BIGINT) / 10000.0, 2) AS revenue
-        |FROM po GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM po GROUP BY 1 ORDER BY 1""".stripMargin),
     // the plain join over raw parquet with the same date split — the
     // grown (base+append) bucketed table must hold exactly one copy of
     // every line on both sides of the split
-    "q302_bucketed_append" ->
+    QuerySpec("q302_bucketed_append", q302BucketedAppend,
       """SELECT o_orderpriority,
         | round(sum(l_extendedprice*(1-l_discount)),2) AS revenue,
         | CAST(sum(CASE WHEN l_shipdate < TIMESTAMP '1998-01-01' THEN 1 ELSE 0 END) AS BIGINT) AS n_lines_base,
         | CAST(sum(CASE WHEN l_shipdate >= TIMESTAMP '1998-01-01' THEN 1 ELSE 0 END) AS BIGINT) AS n_lines_appended
         |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
     // the same plain join over raw parquet — neither the appends nor
     // the compaction rewrite may be visible in the answer
-    "q305_bucketed_compact" ->
+    QuerySpec("q305_bucketed_compact", q305BucketedCompact,
       """SELECT o_orderpriority,
         | round(sum(l_extendedprice*(1-l_discount)),2) AS revenue,
         | count(*) AS n_lines,
         | count(DISTINCT CAST(l_shipdate AS DATE)) AS n_ship_days
         |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
     // the same plain join — append, compaction, AND the same-name swap
     // must all be invisible in the answer
-    "q306_compact_swap" ->
+    QuerySpec("q306_compact_swap", q306CompactSwap,
       """SELECT o_orderpriority,
         | round(sum(l_extendedprice*(1-l_discount)),2) AS revenue,
         | count(*) AS n_lines,
         | count(DISTINCT l_suppkey) AS n_suppliers
         |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
     // SCD2 islands rebuild (the q124 CTE chain) + the textbook
     // inequality formulation of the point-in-time match: greatest
     // valid_from ≤ probe, then interval containment as a CASE
-    "q126_pit_join" ->
+    QuerySpec("q126_pit_join", q126PitJoin,
       """WITH e AS (
         |  SELECT user_id, event_type, date_trunc('microseconds', ts) AS ts, event_id
         |  FROM events),
@@ -1199,11 +1149,11 @@ object ScaleQueries {
         |  strftime(date_trunc('second', pts), '%Y-%m-%d %H:%M:%S') AS probe_ts,
         |  event_type AS asof_event_type, CAST(version AS BIGINT) AS asof_version,
         |  CASE WHEN vt IS NULL OR vt > pts THEN 1 ELSE 0 END AS in_interval
-        |FROM m WHERE rn = 1 ORDER BY user_id, event_id""".stripMargin,
+        |FROM m WHERE rn = 1 ORDER BY user_id, event_id""".stripMargin),
     // single ordered-window restatement; q cast to DOUBLE so ceil(q·n)
     // runs in IEEE doubles on both engines (DuckDB would otherwise
     // parse 0.9 as DECIMAL and ceil(0.9·500) = 450 vs double's 451)
-    "q127_quantiles" ->
+    QuerySpec("q127_quantiles", q127Quantiles,
       """WITH t AS (SELECT lang, n_chars FROM documents),
         |n AS (SELECT lang, count(*) AS n FROM t GROUP BY 1),
         |r AS (SELECT lang, n_chars,
@@ -1215,11 +1165,11 @@ object ScaleQueries {
         |  FROM n CROSS JOIN q)
         |SELECT k.lang, k.q, r.n_chars AS value
         |FROM k JOIN r ON r.lang = k.lang AND r.rk = k.k
-        |ORDER BY k.lang, k.q""".stripMargin,
+        |ORDER BY k.lang, k.q""".stripMargin),
     // both retrievers restated (BM25 = q91's CTE chain, dense = q34's
     // rounded-cosine ranking) + the RRF sum; 1.0 cast to DOUBLE so the
     // reciprocal runs in IEEE doubles, not DECIMAL
-    "q128_hybrid_rrf" ->
+    QuerySpec("q128_hybrid_rrf", q128HybridRrf,
       """WITH q(query_id, query_text) AS (VALUES
         |    (CAST(0 AS BIGINT), 'scan filter merge'),
         |    (CAST(1 AS BIGINT), 'hash join'),
@@ -1274,10 +1224,10 @@ object ScaleQueries {
         |    ORDER BY rrf DESC, doc_id) AS INT) AS fused_rank
         |FROM fused
         |QUALIFY fused_rank <= 10
-        |ORDER BY query_id, fused_rank""".stripMargin,
+        |ORDER BY query_id, fused_rank""".stripMargin),
     // q124's FULL-LOG islands rebuild, verbatim: the incremental merge
     // must reproduce the batch answer row for row
-    "q129_scd2_merge" ->
+    QuerySpec("q129_scd2_merge", q129Scd2Merge,
       """WITH e AS (
         |  SELECT user_id, event_type, date_trunc('microseconds', ts) AS ts, event_id
         |  FROM events),
@@ -1304,14 +1254,14 @@ object ScaleQueries {
         |    '%Y-%m-%d %H:%M:%S'), '') AS valid_to,
         |  CASE WHEN lead(vf) OVER (PARTITION BY user_id ORDER BY version) IS NULL
         |       THEN 1 ELSE 0 END AS is_current
-        |FROM c ORDER BY user_id, version""".stripMargin,
+        |FROM c ORDER BY user_id, version""".stripMargin),
     // full-rebuild restriction proof: the new snapshot is rebuilt
     // wholesale (q125's construction rules), its COMPLETE exact-Jaccard
     // pair join computed (q79's shingle CTE chain), then restricted to
     // pairs touching the changed∪added delta and reoriented so doc_a is
     // the delta member — the incremental plan must reproduce exactly
     // that
-    "q130_incremental_refresh" ->
+    QuerySpec("q130_incremental_refresh", q130IncrementalRefresh,
       """WITH low5 AS (
         |  SELECT doc_id, text, lang FROM documents ORDER BY doc_id LIMIT 5),
         |added AS (SELECT doc_id + 10000000 AS doc_id, text, lang FROM low5),
@@ -1354,9 +1304,9 @@ object ScaleQueries {
         |     OR p.doc_b IN (SELECT doc_id FROM delta))
         |SELECT o.da AS doc_a, o.db AS doc_b, o.jaccard, d.status
         |FROM o JOIN delta d ON d.doc_id = o.da
-        |ORDER BY 1, 2""".stripMargin,
+        |ORDER BY 1, 2""".stripMargin),
     // the PLAIN join — salting must not change the answer
-    "q131_salted_join" ->
+    QuerySpec("q131_salted_join", q131SaltedJoin,
       """WITH dim AS (
         |  SELECT user_id, CAST(count(*) AS BIGINT) AS user_events,
         |    round(sum(value), 2) AS user_total
@@ -1365,10 +1315,10 @@ object ScaleQueries {
         |  CAST(count(*) AS BIGINT) AS n_joined,
         |  CAST(count(DISTINCT e.event_type) AS BIGINT) AS n_types
         |FROM events e JOIN dim d USING (user_id)
-        |GROUP BY 1, 2, 3 ORDER BY 1""".stripMargin,
+        |GROUP BY 1, 2, 3 ORDER BY 1""".stripMargin),
     // identical histogram arithmetic: old-anchored fixed-width bins,
     // add-half smoothing, contributions summed unrounded then rounded
-    "q132_drift_psi" ->
+    QuerySpec("q132_drift_psi", q132DriftPsi,
       """WITH old AS (SELECT doc_id, n_chars FROM documents),
         |neu AS (
         |  SELECT doc_id,
@@ -1411,11 +1361,11 @@ object ScaleQueries {
         |  CASE WHEN p.psi < 0.1 THEN 'stable'
         |       WHEN p.psi < 0.25 THEN 'drifting'
         |       ELSE 'shifted' END AS verdict
-        |FROM sc, p ORDER BY sc.bin""".stripMargin,
+        |FROM sc, p ORDER BY sc.bin""".stripMargin),
     // operand-for-operand identical weight arithmetic over epoch
     // microseconds; IGNORE NULLS cumulative/reverse scans mirror the
     // engine's last/first neighbor lookups
-    "q133_interpolate" ->
+    QuerySpec("q133_interpolate", q133Interpolate,
       """WITH e AS (
         |  SELECT user_id, event_id, date_trunc('microseconds', ts) AS ts,
         |    CASE WHEN event_id % 7 = 3 THEN NULL ELSE value END AS value
@@ -1446,10 +1396,10 @@ object ScaleQueries {
         |       WHEN nv IS NULL THEN pv
         |       WHEN nt = pt THEN pv
         |       ELSE pv + (nv - pv) * ((t - pt) / (nt - pt)) END AS value_filled
-        |FROM n ORDER BY user_id, event_id""".stripMargin,
+        |FROM n ORDER BY user_id, event_id""".stripMargin),
     // exact p05/p95 as ordered windows (q127 shape, q DOUBLE-cast for
     // IEEE ceil parity), then the identical clip + aggregate
-    "q134_winsorize" ->
+    QuerySpec("q134_winsorize", q134Winsorize,
       """WITH t AS (SELECT lang, n_chars FROM documents),
         |n AS (SELECT lang, count(*) AS n FROM t GROUP BY 1),
         |r AS (SELECT lang, n_chars,
@@ -1473,9 +1423,9 @@ object ScaleQueries {
         |  min(lo) AS p_lo, min(hi) AS p_hi,
         |  round(avg(cv), 4) AS winsorized_mean,
         |  round(stddev_samp(cv), 4) AS winsorized_std
-        |FROM c GROUP BY 1 ORDER BY lang""".stripMargin,
+        |FROM c GROUP BY 1 ORDER BY lang""".stripMargin),
     // the same 2x2 confusion table + chance-corrected arithmetic
-    "q135_kappa" ->
+    QuerySpec("q135_kappa", q135Kappa,
       """WITH l AS (
         |  SELECT n_chars >= 300 AS a,
         |    len(string_split_regex(lower(trim(text)), '\s+')) >= 56 AS b
@@ -1507,10 +1457,10 @@ object ScaleQueries {
         |       WHEN kappa < 0.6 THEN 'moderate'
         |       WHEN kappa < 0.8 THEN 'substantial'
         |       ELSE 'almost_perfect' END AS verdict
-        |FROM f""".stripMargin,
+        |FROM f""".stripMargin),
     // identical blocking + scoring: the planted-variant construction,
     // per-block sizes, pairs within blocks only, rounded-sim threshold
-    "q136_entity_resolution" ->
+    QuerySpec("q136_entity_resolution", q136EntityResolution,
       """WITH cust AS (
         |  SELECT CAST(c_custkey AS BIGINT) AS id, c_name AS name,
         |    CAST(c_nationkey AS BIGINT) AS nation
@@ -1534,10 +1484,10 @@ object ScaleQueries {
         |  FROM ok a JOIN ok b ON a.block = b.block AND a.id < b.id)
         |SELECT id_a, id_b, block, block_size, edit_dist, sim
         |FROM p WHERE sim >= 0.9
-        |ORDER BY id_a, id_b""".stripMargin,
+        |ORDER BY id_a, id_b""".stripMargin),
     // first/last by (ts, event_id) over the full bucket frame, then
     // the same collapse — open/close raw doubles, volume rounded once
-    "q137_ohlc" ->
+    QuerySpec("q137_ohlc", q137Ohlc,
       """WITH e AS (
         |  SELECT user_id, date_trunc('microseconds', ts) AS ts, value, event_id,
         |    CAST(ts AS DATE) AS bucket
@@ -1555,10 +1505,10 @@ object ScaleQueries {
         |  min(o) AS open, max(value) AS high, min(value) AS low,
         |  min(c) AS close, CAST(count(*) AS BIGINT) AS n_obs,
         |  round(sum(value), 2) AS volume
-        |FROM w GROUP BY 1, 2 ORDER BY user_id, bucket""".stripMargin,
+        |FROM w GROUP BY 1, 2 ORDER BY user_id, bucket""".stripMargin),
     // q57's exact pair chain + 3 unrolled damped iterations; every
     // literal DOUBLE-cast so nothing runs in DECIMAL
-    "q138_pagerank" ->
+    QuerySpec("q138_pagerank", q138PageRank,
       """WITH toks AS (
         |  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t FROM documents),
         |sh AS (
@@ -1598,25 +1548,25 @@ object ScaleQueries {
         |    CAST(0.15 AS DOUBLE) / nn.n + CAST(0.85 AS DOUBLE) * coalesce(c3.m, 0.0) AS rank
         |  FROM nodes n LEFT JOIN c3 ON c3.id = n.id, nn)
         |SELECT id AS doc_id, round(rank, 6) AS rank
-        |FROM r3 ORDER BY doc_id""".stripMargin,
+        |FROM r3 ORDER BY doc_id""".stripMargin),
     // GROUP BY + HAVING restatement of the worklist
-    "q139_oversized_blocks" ->
+    QuerySpec("q139_oversized_blocks", q139OversizedBlocks,
       """SELECT CAST(c_nationkey AS BIGINT) AS nation,
         |  substring(c_name, 1, 9) AS block,
         |  CAST(count(*) AS BIGINT) AS block_size
         |FROM customer GROUP BY 1, 2 HAVING count(*) > 10
-        |ORDER BY nation, block""".stripMargin,
+        |ORDER BY nation, block""".stripMargin),
     // the full-log rebuild the incremental refresh must reproduce
-    "q140_agg_merge" ->
+    QuerySpec("q140_agg_merge", q140AggMerge,
       """SELECT CAST(ts AS DATE) AS day, event_type,
         |  CAST(count(*) AS BIGINT) AS n_events,
         |  round(sum(value), 2) AS total_value
-        |FROM events GROUP BY 1, 2 ORDER BY day, event_type""".stripMargin,
+        |FROM events GROUP BY 1, 2 ORDER BY day, event_type""".stripMargin),
     // the identical md5-integer boundary rule over 1-based token
     // windows; DuckDB range() is end-exclusive (hence n + 1) and its
     // list_slice is inclusive 1-based (hence i-3 .. i ≡ Spark's
     // slice(toks, i-3, 4))
-    "q141_cdc_chunks" ->
+    QuerySpec("q141_cdc_chunks", q141CdcChunks,
       """WITH t AS (
         |  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS toks
         |  FROM documents),
@@ -1640,14 +1590,14 @@ object ScaleQueries {
         |  CAST(bounds[j + 1] AS INT) AS end_tok,
         |  CAST(bounds[j + 1] - bounds[j] AS INT) AS n_tokens,
         |  md5(array_to_string(list_slice(toks, bounds[j] + 1, bounds[j + 1]), ' ')) AS chunk_md5
-        |FROM e ORDER BY doc_id, chunk_id""".stripMargin,
+        |FROM e ORDER BY doc_id, chunk_id""".stripMargin),
     // the poly-mode boundary rule as a DIRECT w-term power sum per
     // window (the rolling O(1) update is equivalent by modular
     // algebra, spec-proven): per-token hash = first 15 md5 hex digits
     // mod P (P = 2³¹−1), window hash = Σ hp_j·B^(3−j) mod P with
     // B = 1000003, every product mod-reduced termwise so nothing
     // leaves int64; boundary where the window hash ≡ 0 (mod 8)
-    "q230_cdc_poly" ->
+    QuerySpec("q230_cdc_poly", q230CdcPoly,
       """WITH t AS (
         |  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS toks
         |  FROM documents),
@@ -1676,12 +1626,12 @@ object ScaleQueries {
         |  CAST(bounds[j + 1] AS INT) AS end_tok,
         |  CAST(bounds[j + 1] - bounds[j] AS INT) AS n_tokens,
         |  md5(array_to_string(list_slice(toks, bounds[j] + 1, bounds[j + 1]), ' ')) AS chunk_md5
-        |FROM e ORDER BY doc_id, chunk_id""".stripMargin,
+        |FROM e ORDER BY doc_id, chunk_id""".stripMargin),
     // full layout-scorecard restatement: min/max scaling, the
     // generated 32-term Morton sum (MortonSql), the same three cell
     // policies, and the same overlap tests; sums cast to BIGINT to
     // match Spark's long aggregates (DuckDB sums into HUGEINT)
-    "q142_zorder" ->
+    QuerySpec("q142_zorder", q142Zorder,
       s"""WITH rows_in AS (
         |  SELECT CAST(l_partkey AS BIGINT) AS x, CAST(l_suppkey AS BIGINT) AS y,
         |    CAST(l_orderkey AS VARCHAR) || ':' || CAST(l_linenumber AS VARCHAR) AS rk
@@ -1724,12 +1674,12 @@ object ScaleQueries {
         |  CAST(sum(s_band) AS BIGINT) AS band_cells_scanned,
         |  CAST(sum(s_band * n_rows) AS BIGINT) AS band_rows_scanned,
         |  CAST(sum(n_band) AS BIGINT) AS band_rows_matched
-        |FROM sc GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM sc GROUP BY 1 ORDER BY 1""".stripMargin),
     // per-constraint restatement: FILTER counts for the row-local
     // gates (violation = predicate false OR NULL, the conservative
     // coalesce the engine applies), group-count arithmetic for
     // uniqueness, left-join null probes for referential integrity
-    "q143_contracts" ->
+    QuerySpec("q143_contracts", q143Contracts,
       """WITH rl AS (
         |  SELECT 'not_null(l_orderkey)' AS "constraint",
         |    count(*) FILTER (WHERE l_orderkey IS NULL) AS violations, count(*) AS n_rows
@@ -1778,11 +1728,11 @@ object ScaleQueries {
         |SELECT "constraint", CAST(violations AS BIGINT) AS violations,
         |  CAST(n_rows AS BIGINT) AS n_rows,
         |  CASE WHEN violations = 0 THEN 1 ELSE 0 END AS passed
-        |FROM rl ORDER BY "constraint"""".stripMargin,
+        |FROM rl ORDER BY "constraint"""".stripMargin),
     // same additive decomposition restated: weekday = epoch-day mod 7
     // (pure arithmetic, no engine dayofweek convention), z rounded to
     // 4 decimals BEFORE the threshold so the verdict is exact
-    "q144_seasonal" ->
+    QuerySpec("q144_seasonal", q144Seasonal,
       """WITH daily0 AS (
         |  SELECT event_type, CAST(date_trunc('day', ts) AS DATE) AS day,
         |    round(sum(value), 2) AS value
@@ -1813,12 +1763,12 @@ object ScaleQueries {
         |  round(trend, 4) AS trend, round(seasonal, 4) AS seasonal,
         |  round(residual, 4) AS residual, zz AS z,
         |  CASE WHEN abs(zz) > 2.0 THEN 1 ELSE 0 END AS is_anomaly
-        |FROM z ORDER BY event_type, day""".stripMargin,
+        |FROM z ORDER BY event_type, day""".stripMargin),
     // textbook correlated formulation: inequality join clicks≤purchase
     // within the window, row_number DESC picks the last touch, LEFT
     // join preserves organic purchases; latency in µs integer
     // arithmetic before the one rounded avg
-    "q145_attribution" ->
+    QuerySpec("q145_attribution", q145Attribution,
       """WITH e AS (
         |  SELECT user_id, event_type, event_id, value,
         |    date_trunc('microseconds', ts) AS ts
@@ -1843,11 +1793,11 @@ object ScaleQueries {
         |  round(sum(CASE WHEN click_id IS NULL THEN value ELSE 0 END), 2) AS organic_value,
         |  round(avg(CASE WHEN click_id IS NOT NULL
         |    THEN date_diff('microsecond', cts, ts) / 60000000.0 END), 4) AS avg_latency_min
-        |FROM a GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM a GROUP BY 1 ORDER BY 1""".stripMargin),
     // the full resampling restated draw-for-draw: 48-bit md5 uniform,
     // hard-literal Poisson(1) CDF thresholds, replica means rounded to
     // 6 before rank selection, CI = order statistics at ceil(q·n_rep)
-    "q146_bootstrap_ci" ->
+    QuerySpec("q146_bootstrap_ci", q146BootstrapCi,
       """WITH r AS (
         |  SELECT lang, CAST(n_chars AS DOUBLE) AS x, CAST(doc_id AS VARCHAR) AS rid
         |  FROM documents WHERE n_chars IS NOT NULL),
@@ -1886,9 +1836,9 @@ object ScaleQueries {
         |  FROM rk GROUP BY 1),
         |pt AS (SELECT lang, count(*) AS n, round(avg(x), 4) AS mean FROM r GROUP BY 1)
         |SELECT pt.lang, n, mean, ci_lo, ci_hi
-        |FROM pt JOIN ci USING (lang) ORDER BY pt.lang""".stripMargin,
+        |FROM pt JOIN ci USING (lang) ORDER BY pt.lang""".stripMargin),
     // lead() over (user, ts, event_id) restated, row-normalized
-    "q147_transitions" ->
+    QuerySpec("q147_transitions", q147Transitions,
       """WITH e AS (
         |  SELECT user_id, event_type, event_id, date_trunc('microseconds', ts) AS ts
         |  FROM events),
@@ -1905,9 +1855,9 @@ object ScaleQueries {
         |  FROM c)
         |SELECT state, next_state, n, CAST(state_total AS BIGINT) AS state_total,
         |  round(CAST(n AS DOUBLE) / state_total, 4) AS p
-        |FROM t ORDER BY state, next_state""".stripMargin,
+        |FROM t ORDER BY state, next_state""".stripMargin),
     // cell-grid + leave-fold-out smoothing restated; md5 folds identical
-    "q148_target_encoding" ->
+    QuerySpec("q148_target_encoding", q148TargetEncoding,
       """WITH b AS (
         |  SELECT source AS category,
         |    CASE WHEN lang IS NULL THEN NULL
@@ -1931,10 +1881,10 @@ object ScaleQueries {
         |SELECT category, fold, n_fold,
         |  round((s_cat - s_fold + 10.0 * prior) / (n_cat - n_fold + 10.0), 6) AS encoding,
         |  round(prior, 6) AS prior
-        |FROM p ORDER BY category, fold""".stripMargin,
+        |FROM p ORDER BY category, fold""".stripMargin),
     // unnest restatement of the vec_sum buffer fold; same
     // sum/sum-of-squares algebra, population variance clamped at 0
-    "q149_embed_stats" ->
+    QuerySpec("q149_embed_stats", q149EmbedStats,
       """WITH e AS (
         |  SELECT unnest(embedding) AS v, generate_subscripts(embedding, 1) AS dim
         |  FROM embeddings WHERE embedding IS NOT NULL),
@@ -1945,12 +1895,12 @@ object ScaleQueries {
         |  FROM e GROUP BY 1)
         |SELECT dim, n, round(s1 / n, 6) AS mean,
         |  round(sqrt(greatest(s2 / n - (s1 / n) * (s1 / n), 0.0)), 6) AS std
-        |FROM m ORDER BY dim""".stripMargin,
+        |FROM m ORDER BY dim""".stripMargin),
     // edges = the q127 selection rule (k = ceil(q·n) order statistic),
     // bin = #edges strictly below v (one row per q — duplicate edge
     // VALUES count twice, matching the engine's indicator fold), then
     // the same smoothed WOE/IV algebra on the cell frame
-    "q150_woe_bins" ->
+    QuerySpec("q150_woe_bins", q150WoeBins,
       """WITH rows_in AS (
         |  SELECT CAST(l_extendedprice AS DOUBLE) AS v,
         |    CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS y
@@ -1983,10 +1933,10 @@ object ScaleQueries {
         |  v_min, v_max,
         |  round(ln(g_rate / b_rate), 6) AS woe,
         |  round((g_rate - b_rate) * ln(g_rate / b_rate), 6) AS iv
-        |FROM w ORDER BY bin""".stripMargin,
+        |FROM w ORDER BY bin""".stripMargin),
     // same degree-ordered orientation ((d, id) row comparison) and
     // one-per-triangle closure; per-node census via 3-way unnest
-    "q151_triangles" ->
+    QuerySpec("q151_triangles", q151Triangles,
       """WITH li AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
         |e AS (
         |  SELECT DISTINCT a.p AS u, b.p AS v
@@ -2011,10 +1961,10 @@ object ScaleQueries {
         |  CASE WHEN deg.d >= 2
         |    THEN round(2.0 * coalesce(pn.n_tri, 0) / (deg.d * (deg.d - 1)), 6)
         |    ELSE 0.0 END AS clustering
-        |FROM deg LEFT JOIN pn ON pn.node = deg.node ORDER BY deg.node""".stripMargin,
+        |FROM deg LEFT JOIN pn ON pn.node = deg.node ORDER BY deg.node""".stripMargin),
     // within-basket pair counts with HAVING support prune, both rule
     // directions, same support/confidence/lift algebra
-    "q152_assoc_rules" ->
+    QuerySpec("q152_assoc_rules", q152AssocRules,
       """WITH it AS (
         |  SELECT DISTINCT l_orderkey AS basket, l_partkey AS item FROM lineitem
         |  WHERE l_orderkey IS NOT NULL AND l_partkey IS NOT NULL),
@@ -2037,10 +1987,10 @@ object ScaleQueries {
         |JOIN (SELECT item, n_item AS n_a FROM itn) x ON x.item = dr.antecedent
         |JOIN (SELECT item, n_item AS n_b FROM itn) y ON y.item = dr.consequent
         |CROSS JOIN nb
-        |ORDER BY antecedent, consequent""".stripMargin,
+        |ORDER BY antecedent, consequent""".stripMargin),
     // explicit-moments restatement: pooled theta, row-local CUPED
     // adjustment, per-arm sum/square algebra, large-sample z literal
-    "q153_ab_cuped" ->
+    QuerySpec("q153_ab_cuped", q153AbCuped,
       """WITH e AS (
         |  SELECT user_id, value, date_trunc('microseconds', ts) AS ts FROM events),
         |u AS (
@@ -2096,10 +2046,10 @@ object ScaleQueries {
         |  round(var_reduction, 4) AS var_reduction,
         |  CASE WHEN coalesce(n_t, 0) >= 2 AND coalesce(n_c, 0) >= 2
         |    THEN 1 ELSE 0 END AS valid
-        |FROM p""".stripMargin,
+        |FROM p""".stripMargin),
     // lag alignment via DATE + INTEGER, explicit-moments Pearson,
     // best-lag over the rounded r (ties flag both, same both engines)
-    "q154_leadlag" ->
+    QuerySpec("q154_leadlag", q154LeadLag,
       """WITH daily AS (
         |  SELECT event_type, CAST(date_trunc('day', ts) AS DATE) AS day,
         |    round(sum(value), 2) AS value
@@ -2128,10 +2078,10 @@ object ScaleQueries {
         |  FROM r1)
         |SELECT key_a, key_b, lag, n, r,
         |  CASE WHEN abs(r) = best_abs THEN 1 ELSE 0 END AS is_best
-        |FROM b2 ORDER BY key_a, key_b, lag""".stripMargin,
+        |FROM b2 ORDER BY key_a, key_b, lag""".stripMargin),
     // batch daily restatement of the streaming gate (violation =
     // predicate false OR NULL, same conservative coalesce)
-    "q155_stream_contracts" ->
+    QuerySpec("q155_stream_contracts", q155StreamContracts,
       """WITH e AS (
         |  SELECT user_id, event_type, value, date_trunc('microseconds', ts) AS ts
         |  FROM events)
@@ -2148,10 +2098,10 @@ object ScaleQueries {
         |      event_type IN ('click','view','purchase','signup','error'), FALSE)) = 0
         |    AND count(*) FILTER (WHERE user_id IS NULL) = 0
         |    THEN 1 ELSE 0 END AS passed
-        |FROM e GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM e GROUP BY 1 ORDER BY 1""".stripMargin),
     // both snapshots' manifests restated: same md5 bucket, same 48-bit
     // row fingerprint over key||text||lang, BIT_XOR per bucket + root
-    "q156_manifest" ->
+    QuerySpec("q156_manifest", q156Manifest,
       """WITH added AS (
         |  SELECT doc_id + 10000000 AS doc_id, text, lang
         |  FROM (SELECT * FROM documents ORDER BY doc_id LIMIT 5)),
@@ -2181,9 +2131,9 @@ object ScaleQueries {
         |  CASE WHEN coalesce(om.n_rows, 0) <> coalesce(nm.n_rows, 0)
         |    OR coalesce(om.digest, 0) <> coalesce(nm.digest, 0) THEN 1 ELSE 0 END AS changed
         |FROM om FULL OUTER JOIN nm ON om.bucket = nm.bucket
-        |ORDER BY bucket""".stripMargin,
+        |ORDER BY bucket""".stripMargin),
     // same three lags + start padding + share arithmetic
-    "q157_conversion_paths" ->
+    QuerySpec("q157_conversion_paths", q157ConversionPaths,
       """WITH e AS (
         |  SELECT user_id, event_type, event_id, date_trunc('microseconds', ts) AS ts
         |  FROM events),
@@ -2199,11 +2149,11 @@ object ScaleQueries {
         |  FROM l WHERE event_type = 'purchase' GROUP BY 1),
         |tot AS (SELECT sum(n) AS total FROM paths)
         |SELECT path, n, round(n / CAST(total AS DOUBLE), 6) AS share
-        |FROM paths CROSS JOIN tot ORDER BY path""".stripMargin,
+        |FROM paths CROSS JOIN tot ORDER BY path""".stripMargin),
     // same drawup restatement: running sum & running min windows over
     // the planted-shift daily series, baseline moments from the first
     // 14 ranked days, s rounded before the alarm compare
-    "q158_cusum" ->
+    QuerySpec("q158_cusum", q158Cusum,
       """WITH daily0 AS (
         |  SELECT event_type, CAST(date_trunc('day', ts) AS DATE) AS day,
         |    CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents
@@ -2245,10 +2195,10 @@ object ScaleQueries {
         |f AS (SELECT *, round((cs - cmin) / sigma, 4) AS s FROM c)
         |SELECT event_type, day, value, round(mu, 4) AS mu, s,
         |  CASE WHEN s > 4.0 THEN 1 ELSE 0 END AS alarm
-        |FROM f ORDER BY event_type, day""".stripMargin,
+        |FROM f ORDER BY event_type, day""".stripMargin),
     // WAU restated as the textbook distinct-over-trailing-range (the
     // formulation the engine's explode trick replaces), DAU exact
-    "q159_active_users" ->
+    QuerySpec("q159_active_users", q159ActiveUsers,
       """WITH ud AS (
         |  SELECT DISTINCT user_id, CAST(date_trunc('day', ts) AS DATE) AS day
         |  FROM events),
@@ -2261,10 +2211,10 @@ object ScaleQueries {
         |SELECT dau.day, dau.dau, wau.wau,
         |  round(dau.dau / CAST(wau.wau AS DOUBLE), 4) AS stickiness
         |FROM dau JOIN wau ON wau.day = dau.day
-        |ORDER BY dau.day""".stripMargin,
+        |ORDER BY dau.day""".stripMargin),
     // identical life-table algebra: exited-before running sum, at-risk
     // difference, exp of running log sum (product-limit)
-    "q160_kaplan_meier" ->
+    QuerySpec("q160_kaplan_meier", q160KaplanMeier,
       """WITH e AS (
         |  SELECT user_id, CAST(date_trunc('day', ts) AS DATE) AS day FROM events),
         |ud AS (SELECT user_id, min(day) AS fd, max(day) AS ld FROM e GROUP BY 1),
@@ -2294,9 +2244,9 @@ object ScaleQueries {
         |SELECT t, CAST(n_at_risk AS BIGINT) AS n_at_risk, n_events, n_censored,
         |  CASE WHEN max(zf) OVER (ORDER BY t) = 1 THEN 0.0
         |    ELSE round(exp(sum(log_term) OVER (ORDER BY t)), 4) END AS survival
-        |FROM lg ORDER BY t""".stripMargin,
+        |FROM lg ORDER BY t""".stripMargin),
     // cents-integer first digit, identical chi-square algebra
-    "q161_benford" ->
+    QuerySpec("q161_benford", q161Benford,
       """WITH rows_in AS (
         |  SELECT CAST(substr(CAST(CAST(round(l_extendedprice * 100) AS BIGINT) AS VARCHAR), 1, 1) AS INT) AS digit
         |  FROM lineitem
@@ -2312,9 +2262,9 @@ object ScaleQueries {
         |c2 AS (SELECT round(sum(ct), 4) AS chi2 FROM p2)
         |SELECT digit, n, round(op, 6) AS observed_p, round(bp, 6) AS benford_p,
         |  round(ct, 4) AS chi2_term, chi2
-        |FROM p2 CROSS JOIN c2 ORDER BY digit""".stripMargin,
+        |FROM p2 CROSS JOIN c2 ORDER BY digit""".stripMargin),
     // same ranked closed form, ties broken by user id
-    "q162_gini" ->
+    QuerySpec("q162_gini", q162Gini,
       """WITH u AS (
         |  SELECT event_type AS g, user_id AS uu, round(sum(value), 6) AS v
         |  FROM events GROUP BY 1, 2),
@@ -2324,9 +2274,9 @@ object ScaleQueries {
         |SELECT g, count(*) AS n_units, round(sum(v), 2) AS total,
         |  round(2.0 * sum(rk * v) / (count(*) * sum(v))
         |    - (count(*) + 1.0) / count(*), 6) AS gini
-        |FROM r GROUP BY g ORDER BY g""".stripMargin,
+        |FROM r GROUP BY g ORDER BY g""".stripMargin),
     // within-group pair slopes, ceil(n/2) order statistic
-    "q163_theil_sen" ->
+    QuerySpec("q163_theil_sen", q163TheilSen,
       """WITH daily AS (
         |  SELECT event_type AS g, CAST(date_trunc('day', ts) AS DATE) AS day,
         |    round(sum(value), 2) AS v
@@ -2340,9 +2290,9 @@ object ScaleQueries {
         |    count(*) OVER (PARTITION BY g) AS n_pairs
         |  FROM s)
         |SELECT g, n_pairs, round(slope, 6) AS slope
-        |FROM r WHERE rk = CAST(ceil(n_pairs / 2.0) AS BIGINT) ORDER BY g""".stripMargin,
+        |FROM r WHERE rk = CAST(ceil(n_pairs / 2.0) AS BIGINT) ORDER BY g""".stripMargin),
     // q145's attribution CTE at row level + the q127 selection rule
-    "q164_latency_quantiles" ->
+    QuerySpec("q164_latency_quantiles", q164LatencyQuantiles,
       """WITH e AS (
         |  SELECT user_id, event_type, event_id, date_trunc('microseconds', ts) AS ts
         |  FROM events),
@@ -2366,9 +2316,9 @@ object ScaleQueries {
         |k AS (SELECT day, q, CAST(ceil(q * n) AS BIGINT) AS k FROM n CROSS JOIN q)
         |SELECT k.day, k.q, round(r.v, 4) AS value
         |FROM k JOIN r ON r.day = k.day AND r.rk = k.k
-        |ORDER BY k.day, k.q""".stripMargin,
+        |ORDER BY k.day, k.q""".stripMargin),
     // same integer week arithmetic, cumulative window over cells
-    "q165_cohort_ltv" ->
+    QuerySpec("q165_cohort_ltv", q165CohortLtv,
       """WITH ev AS (
         |  SELECT user_id, event_type, value,
         |    CAST(floor((CAST(date_trunc('day', ts) AS DATE) - DATE '2024-01-01') / 7.0) AS INT) AS week
@@ -2384,10 +2334,10 @@ object ScaleQueries {
         |  round(sum(c.revenue) OVER (PARTITION BY c.cohort_week ORDER BY c.week_offset)
         |    / s.n_users, 4) AS cum_ltv
         |FROM cells c JOIN sz s USING (cohort_week)
-        |ORDER BY c.cohort_week, c.week_offset""".stripMargin,
+        |ORDER BY c.cohort_week, c.week_offset""".stripMargin),
     // the full robust-forecast pipeline restated: rounded Theil-Sen
     // slope, median intercept, weekday mean residuals, horizon spine
-    "q166_forecast" ->
+    QuerySpec("q166_forecast", q166Forecast,
       """WITH daily AS (
         |  SELECT event_type AS g, CAST(date_trunc('day', ts) AS DATE) AS day,
         |    round(sum(value), 2) AS v
@@ -2427,6 +2377,6 @@ object ScaleQueries {
         |  round(ic.intercept + sl.slope * sp2.x + coalesce(se.seasonal, 0.0), 4) AS yhat
         |FROM sp2 JOIN sl USING (g) JOIN ic USING (g)
         |LEFT JOIN se ON se.g = sp2.g AND se.dow = sp2.dow
-        |ORDER BY sp2.g, sp2.h""".stripMargin
+        |ORDER BY sp2.g, sp2.h""".stripMargin)
   )
 }

@@ -744,50 +744,6 @@ object SegmentQueries {
       .orderBy("et_a", "et_b")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q235_small_qty" -> (q235SmallQty _),
-    "q236_audience_sketch" -> (q236AudienceSketch _),
-    "q234_hll_rollup" -> (q234HllRollup _),
-    "q231_hll_md5" -> (q231HllMd5 _),
-    "q232_market_share" -> (q232MarketShare _),
-    "q233_novelty" -> (q233Novelty _),
-    "q196_rfm" -> (q196Rfm _),
-    "q197_fuzzy_er" -> (q197FuzzyEr _),
-    "q198_skyline" -> (q198Skyline _),
-    "q199_lift" -> (q199Lift _),
-    "q200_cdf_transform" -> (q200CdfTransform _),
-    "q201_containment" -> (q201Containment _),
-    "q202_balanced_sample" -> (q202Balanced _),
-    "q203_neg_sampling" -> (q203NegSampling _),
-    "q204_covariate_balance" -> (q204CovariateBalance _),
-    "q205_canonical" -> (q205Canonical _),
-    "q206_packing_audit" -> (q206PackingAudit _),
-    "q207_corpus_refresh" -> (q207CorpusRefresh _),
-    "q208_mode" -> (q208Mode _),
-    "q209_overlap_join" -> (q209OverlapJoin _),
-    "q210_jaro_linkage" -> (q210JaroLinkage _),
-    "q211_corpus_card" -> (q211CorpusCard _),
-    "q212_changepoint" -> (q212Changepoint _),
-    "q213_zipf" -> (q213Zipf _),
-    "q296_tail_index" -> (q296TailIndex _),
-    "q214_logrank" -> (q214LogRank _),
-    "q215_water_fill" -> (q215WaterFill _),
-    "q216_partition_advisor" -> (q216PartitionAdvisor _),
-    "q217_cosine_histogram" -> (q217CosineHistogram _),
-    "q218_curation_funnel" -> (q218CurationFunnel _),
-    "q219_markov_backtest" -> (q219MarkovBacktest _),
-    "q220_brier" -> (q220Brier _),
-    "q221_heaps" -> (q221Heaps _),
-    "q222_json_profile" -> (q222JsonProfile _),
-    "q223_pareto" -> (q223Pareto _),
-    "q224_skew_report" -> (q224SkewReport _),
-    "q225_transition_gaps" -> (q225TransitionGaps _),
-    "q226_stream_dedup_ttl" -> (q226StreamDedupTtl _),
-    "q227_local_revenue" -> (q227LocalRevenue _),
-    "q228_trailing_window" -> (q228TrailingWindow _),
-    "q229_lead_time" -> (q229LeadTime _)
-  )
-
   /** Shared oracle fragment: exact-quantile band cuts of column
     * `vcol` over CTE `src` — value at rank ceil(q·n) (the
     * exactQuantiles rank rule), one column per cut, emitted as CTEs
@@ -806,10 +762,10 @@ object SegmentQueries {
        |  FROM ${p}r CROSS JOIN ${p}n)""".stripMargin
   }
 
-  val oracles: Map[String, String] = Map(
+  val specs: Seq[QuerySpec] = Seq(
     // three rank-rule cut blocks (recency/frequency/monetary), then
     // row-local band arithmetic — integer metrics end to end
-    "q196_rfm" ->
+    QuerySpec("q196_rfm", q196Rfm,
       s"""WITH pc AS (
          |  SELECT o_custkey,
          |    max(CAST(o_orderdate AS DATE)) AS last_d,
@@ -844,9 +800,9 @@ object SegmentQueries {
         |    WHEN r <= 2 AND f >= 4 THEN 'at_risk'
         |    WHEN r <= 2 AND f <= 2 THEN 'hibernating'
         |    ELSE 'core' END AS segment
-        |FROM sc ORDER BY o_custkey""".stripMargin,
+        |FROM sc ORDER BY o_custkey""".stripMargin),
     // same normalization, blocking regex, and integer edit distance
-    "q197_fuzzy_er" ->
+    QuerySpec("q197_fuzzy_er", q197FuzzyEr,
       """WITH names AS (
         |  SELECT lower(trim(p_name)) AS name, count(*) AS n_rows
         |  FROM part WHERE p_name IS NOT NULL
@@ -859,10 +815,10 @@ object SegmentQueries {
         |  a.n_rows AS n_rows_a, bb.n_rows AS n_rows_b
         |FROM b a JOIN b bb ON a.block = bb.block AND a.name < bb.name
         |WHERE levenshtein(a.name, bb.name) <= 2
-        |ORDER BY name_a, name_b""".stripMargin,
+        |ORDER BY name_a, name_b""".stripMargin),
     // brute-force NOT EXISTS — the dominance DEFINITION, not the
     // engine's rewrite: the hash match proves the running-max identity
-    "q198_skyline" ->
+    QuerySpec("q198_skyline", q198Skyline,
       """WITH p AS (
         |  SELECT p_partkey, p_name, p_retailprice, p_size FROM part
         |  WHERE p_retailprice IS NOT NULL AND p_size IS NOT NULL)
@@ -872,8 +828,8 @@ object SegmentQueries {
         |  SELECT 1 FROM p q
         |  WHERE q.p_retailprice <= p.p_retailprice AND q.p_size >= p.p_size
         |    AND (q.p_retailprice < p.p_retailprice OR q.p_size > p.p_size))
-        |ORDER BY p_partkey""".stripMargin,
-    "q199_lift" ->
+        |ORDER BY p_partkey""".stripMargin),
+    QuerySpec("q199_lift", q199Lift,
       s"""WITH d AS (
          |  SELECT c_acctbal AS v,
          |    CASE WHEN c_mktsegment = 'BUILDING' THEN 1 ELSE 0 END AS y
@@ -897,10 +853,10 @@ object SegmentQueries {
          |  CASE WHEN t.tp > 0 THEN round(cum_pos / (t.tp * 1.0), 6) END AS capture,
          |  CASE WHEN t.tp > 0 THEN
          |    round((n_pos / (n * 1.0)) / (t.tp / (t.tn * 1.0)), 6) END AS lift
-         |FROM cum CROSS JOIN t ORDER BY bucket""".stripMargin,
+         |FROM cum CROSS JOIN t ORDER BY bucket""".stripMargin),
     // mid-rank empirical CDF restated as the histogram window — exact
     // halves over integer counts, one final division
-    "q200_cdf_transform" ->
+    QuerySpec("q200_cdf_transform", q200CdfTransform,
       """WITH d AS (
         |  SELECT event_id, event_type, value * 1.0 AS v FROM events
         |  WHERE value IS NOT NULL),
@@ -914,9 +870,9 @@ object SegmentQueries {
         |SELECT d.event_id, d.event_type, d.v AS value,
         |  round(h2.ar / h2.n, 6) AS cdf
         |FROM d JOIN h2 ON d.event_type = h2.event_type AND d.v = h2.v
-        |ORDER BY d.event_id""".stripMargin,
+        |ORDER BY d.event_id""".stripMargin),
     // same shingling as the q33 oracle; asymmetric min-denominator
-    "q201_containment" ->
+    QuerySpec("q201_containment", q201Containment,
       """WITH toks AS (
         |  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
         |  FROM documents),
@@ -936,10 +892,10 @@ object SegmentQueries {
         |JOIN sizes sa ON sa.doc_id = doc_a
         |JOIN sizes sb ON sb.doc_id = doc_b
         |WHERE shared * 1.0 / least(sa.n, sb.n) >= 0.2
-        |ORDER BY doc_a, doc_b""".stripMargin,
+        |ORDER BY doc_a, doc_b""".stripMargin),
     // hash-rank per class, k = min class size (the fixedSizeSample
     // rank rule with a data-derived k)
-    "q202_balanced_sample" ->
+    QuerySpec("q202_balanced_sample", q202Balanced,
       """WITH d AS (
         |  SELECT doc_id, lang FROM documents WHERE lang IS NOT NULL),
         |cnt AS (SELECT lang, count(*) AS n FROM d GROUP BY 1),
@@ -947,10 +903,10 @@ object SegmentQueries {
         |r AS (SELECT doc_id, lang, row_number() OVER (PARTITION BY lang
         |    ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rk FROM d)
         |SELECT doc_id, lang FROM r CROSS JOIN nm
-        |WHERE rk <= nm.k ORDER BY doc_id""".stripMargin,
+        |WHERE rk <= nm.k ORDER BY doc_id""".stripMargin),
     // md5-indexed draws into the ranked item vocabulary, positives
     // excluded — the full sampler restated
-    "q203_neg_sampling" ->
+    QuerySpec("q203_neg_sampling", q203NegSampling,
       """WITH pos AS (
         |  SELECT DISTINCT o.o_custkey, l.l_partkey
         |  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
@@ -971,10 +927,10 @@ object SegmentQueries {
         |WHERE NOT EXISTS (SELECT 1 FROM pos
         |  WHERE pos.o_custkey = c.o_custkey AND pos.l_partkey = i.l_partkey)
         |GROUP BY c.o_custkey, i.l_partkey
-        |ORDER BY c.o_custkey, draw""".stripMargin,
+        |ORDER BY c.o_custkey, draw""".stripMargin),
     // q153's arm assignment + rounded per-unit covariates; moments on
     // the melted 2xC cell frame
-    "q204_covariate_balance" ->
+    QuerySpec("q204_covariate_balance", q204CovariateBalance,
       """WITH u AS (
         |  SELECT user_id,
         |    CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 6))::BIGINT
@@ -1010,9 +966,9 @@ object SegmentQueries {
         |    round((m1 - m0) / sqrt((v0 + v1) / 2), 4) END AS smd,
         |  CASE WHEN sqrt((v0 + v1) / 2) > 0 THEN
         |    CAST(abs((m1 - m0) / sqrt((v0 + v1) / 2)) < 0.1 AS INT) END AS balanced
-        |FROM p ORDER BY covariate""".stripMargin,
+        |FROM p ORDER BY covariate""".stripMargin),
     // q61's recursive-CTE closure + the per-cluster argmax election
-    "q205_canonical" ->
+    QuerySpec("q205_canonical", q205Canonical,
       """WITH RECURSIVE toks AS (
         |  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
         |  FROM documents),
@@ -1051,10 +1007,10 @@ object SegmentQueries {
         |  b.n_members, b.best_quality
         |FROM best b JOIN mem m ON m.cluster_id = b.cluster_id
         |  AND m.n_chars = b.best_quality
-        |GROUP BY 1, 3, 4 ORDER BY 1""".stripMargin,
+        |GROUP BY 1, 3, 4 ORDER BY 1""".stripMargin),
     // every policy's sums from one length frame; pure integer
     // arithmetic, one rounded division
-    "q206_packing_audit" ->
+    QuerySpec("q206_packing_audit", q206PackingAudit,
       """WITH d AS (
         |  SELECT len(string_split_regex(lower(trim(text)), '\s+')) AS l
         |  FROM documents WHERE text IS NOT NULL),
@@ -1076,13 +1032,13 @@ object SegmentQueries {
         |  CAST(overflow_tokens AS BIGINT) AS overflow_tokens,
         |  n_seqs * 128 - used_tokens AS padded_tokens,
         |  round(used_tokens / (n_seqs * 128.0), 6) AS efficiency
-        |FROM pol ORDER BY policy""".stripMargin,
+        |FROM pol ORDER BY policy""".stripMargin),
     // the full-rebuild restriction: the ENTIRE new snapshot's exact
     // pair join (q130's CTE chain) restricted to delta-touching
     // pairs, q61's recursive closure, the q205 argmax election on
     // text length, then one anti-join — the incremental engine plan
     // must reproduce the surviving corpus row for row
-    "q207_corpus_refresh" ->
+    QuerySpec("q207_corpus_refresh", q207CorpusRefresh,
       """WITH RECURSIVE low5 AS (
         |  SELECT doc_id, text, lang FROM documents ORDER BY doc_id LIMIT 5),
         |added AS (SELECT doc_id + 10000000 AS doc_id, text, lang FROM low5),
@@ -1140,10 +1096,10 @@ object SegmentQueries {
         |SELECT n2.doc_id, n2.lang, length(n2.text) AS text_len
         |FROM neu n2
         |WHERE n2.doc_id NOT IN (SELECT doc_id FROM losers)
-        |ORDER BY 1""".stripMargin,
+        |ORDER BY 1""".stripMargin),
     // thresholds via the exactQuantiles rank rule (cutsSql shape),
     // vocab from token first-occurrence ids, same OLS moments
-    "q221_heaps" ->
+    QuerySpec("q221_heaps", q221Heaps,
       """WITH n AS (SELECT count(*) AS n FROM documents),
         |r AS (SELECT doc_id AS v,
         |    row_number() OVER (ORDER BY doc_id) AS rk FROM documents),
@@ -1188,10 +1144,10 @@ object SegmentQueries {
         |  round((m.n * m.sxy - m.sx * m.sy) * (m.n * m.sxy - m.sx * m.sy)
         |    / ((m.n * m.sxx - m.sx * m.sx) * (m.n * m.syy - m.sy * m.sy)), 6)
         |    + 0.0 AS r2
-        |FROM pts CROSS JOIN m ORDER BY q""".stripMargin,
+        |FROM pts CROSS JOIN m ORDER BY q""".stripMargin),
     // the identical RANGE frame in micros; sums in exact cents so
     // windowed-aggregation order cannot show through
-    "q228_trailing_window" ->
+    QuerySpec("q228_trailing_window", q228TrailingWindow,
       """WITH e AS (
         |  SELECT user_id, event_id, epoch_us(ts) AS us,
         |    CAST(round(value * 100) AS BIGINT) AS cents
@@ -1202,10 +1158,10 @@ object SegmentQueries {
         |FROM e
         |WINDOW w AS (PARTITION BY user_id ORDER BY us
         |  RANGE BETWEEN 3599999999 PRECEDING AND CURRENT ROW)
-        |ORDER BY user_id, event_id""".stripMargin,
+        |ORDER BY user_id, event_id""".stripMargin),
     // same join, integer day gaps, grouped ceil(q·n) rank rule for
     // the exact quantiles
-    "q229_lead_time" ->
+    QuerySpec("q229_lead_time", q229LeadTime,
       """WITH g AS (
         |  SELECT o.o_orderpriority,
         |    CAST(date_diff('day', o.o_orderdate, l.l_shipdate) AS BIGINT)
@@ -1232,12 +1188,12 @@ object SegmentQueries {
         |SELECT st.o_orderpriority, st.n, st.mean_days,
         |  qv.p50_days, qv.p90_days
         |FROM st JOIN qv USING (o_orderpriority)
-        |ORDER BY 1""".stripMargin,
+        |ORDER BY 1""".stripMargin),
     // the same 6-table join; revenue summed in exact cents
     // decorrelated Q17: the per-part average is exact (integer-valued
     // quantities sum exactly in doubles), and the x5 integer form of
     // the threshold keeps the filter ulp-proof
-    "q235_small_qty" ->
+    QuerySpec("q235_small_qty", q235SmallQty,
       """WITH a AS (
         |  SELECT l_partkey AS pk, avg(l_quantity) AS avg_qty
         |  FROM lineitem GROUP BY 1),
@@ -1249,11 +1205,11 @@ object SegmentQueries {
         |SELECT p.p_brand, CAST(count(*) AS BIGINT) AS n_small_lines,
         |  round(CAST(sum(cents) AS DOUBLE) / 700.0, 2) AS avg_yearly
         |FROM f JOIN part p ON f.l_partkey = p.p_partkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
     // sketch set algebra replayed: per-type registers, pair unions by
     // register max, singles/unions through the same estimator
     // (incl. linear counting), inclusion-exclusion for intersections
-    "q236_audience_sketch" ->
+    QuerySpec("q236_audience_sketch", q236AudienceSketch,
       """WITH ev AS (
         |  SELECT event_type, user_id,
         |    ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))::BIGINT AS h
@@ -1310,12 +1266,12 @@ object SegmentQueries {
         |FROM pr p
         |JOIN uni u ON u.et_a = p.et_a AND u.et_b = p.et_b
         |JOIN exact e ON e.et_a = p.et_a AND e.et_b = p.et_b
-        |ORDER BY 1, 2""".stripMargin,
+        |ORDER BY 1, 2""".stripMargin),
     // register max-merge is associative, so the oracle computes each
     // period's registers DIRECTLY — algebraically identical to the
     // engine's day-table rollup; estimator incl. the linear-counting
     // branch as in q231
-    "q234_hll_rollup" ->
+    QuerySpec("q234_hll_rollup", q234HllRollup,
       """WITH ev AS (
         |  SELECT substr(CAST(CAST(ts AS DATE) AS VARCHAR), 1, 9) AS mth, user_id,
         |    ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))::BIGINT AS h
@@ -1344,7 +1300,7 @@ object SegmentQueries {
         |  FROM s JOIN e ON e.period = s.period)
         |SELECT period, hll_estimate, n_registers_set, n_exact,
         |  round((hll_estimate - n_exact) / n_exact, 4) AS rel_err
-        |FROM est ORDER BY period""".stripMargin,
+        |FROM est ORDER BY period""".stripMargin),
     // the raw-HLL core restated register for register: h from md5
     // hex, j = h mod 256, rank from length(bin(w)) — both engines'
     // bin() prints without leading zeros, so bitlength is exact
@@ -1353,7 +1309,7 @@ object SegmentQueries {
     // collapsed double literal K = α·m²·2^53 divided once per group
     // (multi-term SQL float chains are non-portable: Spark parses
     // decimal literals as DECIMAL — see Hll.scala)
-    "q231_hll_md5" ->
+    QuerySpec("q231_hll_md5", q231HllMd5,
       """WITH li AS (
         |  SELECT substr(CAST(l_shipdate AS VARCHAR), 1, 7) AS ship_month, l_partkey,
         |    ('0x' || substr(md5(CAST(l_partkey AS VARCHAR)), 1, 15))::BIGINT AS h
@@ -1379,11 +1335,11 @@ object SegmentQueries {
         |  FROM s JOIN e ON e.ship_month = s.ship_month)
         |SELECT ship_month, hll_estimate, n_registers_set, n_exact,
         |  round((hll_estimate - n_exact) / n_exact, 4) AS rel_err
-        |FROM est ORDER BY ship_month""".stripMargin,
+        |FROM est ORDER BY ship_month""".stripMargin),
     // the Q8 shape with both nation roles; cents and the share
     // division mirror the engine's exact-integer-then-one-division
     // discipline
-    "q232_market_share" ->
+    QuerySpec("q232_market_share", q232MarketShare,
       """WITH f AS (
         |  SELECT year(o.o_orderdate) AS o_year,
         |    CAST(round(l.l_extendedprice * (1.0 - l.l_discount) * 100) AS BIGINT) AS cents,
@@ -1403,11 +1359,11 @@ object SegmentQueries {
         |  CAST(sum(cents) AS BIGINT) AS total_cents,
         |  round(CAST(sum(CASE WHEN supp_nation = 'NATION_3' THEN cents ELSE 0 END) AS DOUBLE)
         |    / CAST(sum(cents) AS DOUBLE), 6) AS mkt_share
-        |FROM f GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM f GROUP BY 1 ORDER BY 1""".stripMargin),
     // novelty = 1 − train-seen fraction of each test doc's distinct
     // 5-grams; the planted train/test pair shares a 12-token span →
     // the −2 row reads exactly 8/12 seen
-    "q233_novelty" ->
+    QuerySpec("q233_novelty", q233Novelty,
       """WITH pl(doc_id, text) AS (VALUES
         |  (-1, 'nova1 nova2 nova3 nova4 nova5 nova6 nova7 nova8 nova9 nova10 nova11 nova12 trtail1 trtail2 trtail3'),
         |  (-2, 'nova1 nova2 nova3 nova4 nova5 nova6 nova7 nova8 nova9 nova10 nova11 nova12 tstail1 tstail2 tstail3 tstail4')),
@@ -1433,8 +1389,8 @@ object SegmentQueries {
         |  FROM te LEFT JOIN tv ON te.shingle = tv.shingle GROUP BY 1)
         |SELECT test_doc, n_shingles, n_seen,
         |  round(1.0 - CAST(n_seen AS DOUBLE) / n_shingles, 4) AS novelty
-        |FROM agg ORDER BY test_doc""".stripMargin,
-    "q227_local_revenue" ->
+        |FROM agg ORDER BY test_doc""".stripMargin),
+    QuerySpec("q227_local_revenue", q227LocalRevenue,
       """SELECT n.n_name,
         |  CAST(sum(round(l.l_extendedprice * (1.0 - l.l_discount) * 100))
         |    AS BIGINT) AS revenue_cents,
@@ -1450,12 +1406,12 @@ object SegmentQueries {
         |  AND o.o_orderdate >= DATE '1996-01-01'
         |  AND o.o_orderdate < DATE '1998-01-01'
         |GROUP BY 1
-        |ORDER BY revenue_cents DESC, n_name""".stripMargin,
+        |ORDER BY revenue_cents DESC, n_name""".stripMargin),
     // the forced TTL timeline's exact surviving set: batch-1 firsts
     // land, the within-TTL re-delivery (doc 3) drops, the post-expiry
     // re-delivery (doc 4) lands again, plus the pusher and the novel
     // doc — fingerprints recomputed by DuckDB's md5
-    "q226_stream_dedup_ttl" ->
+    QuerySpec("q226_stream_dedup_ttl", q226StreamDedupTtl,
       """SELECT doc_id, md5(text) AS fingerprint FROM (VALUES
         |  (1, 'alpha beta gamma'),
         |  (2, 'delta epsilon zeta'),
@@ -1463,10 +1419,10 @@ object SegmentQueries {
         |  (5, 'omega psi chi'),
         |  (100, 'watermark pusher text'),
         |  (101, 'second pusher text')) AS t(doc_id, text)
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin),
     // count frames joined on the key, product work, top-20 by (out_n
     // DESC, key); share = unrounded exact-long ratio
-    "q224_skew_report" ->
+    QuerySpec("q224_skew_report", q224SkewReport,
       """WITH c AS (
         |  SELECT user_id, CAST(count(*) AS BIGINT) AS n
         |  FROM events WHERE user_id IS NOT NULL GROUP BY 1),
@@ -1486,10 +1442,10 @@ object SegmentQueries {
         |  tot.tot AS total_output_rows,
         |  tot.mx * 1.0 / greatest(tot.tot, 1) AS top1_share,
         |  tot.nk AS n_join_keys
-        |FROM top CROSS JOIN tot ORDER BY rank""".stripMargin,
+        |FROM top CROSS JOIN tot ORDER BY rank""".stripMargin),
     // same lead() pairs; the exact median restates the ceil(0.5·n)
     // rank rule per transition; gaps are integer micros
-    "q225_transition_gaps" ->
+    QuerySpec("q225_transition_gaps", q225TransitionGaps,
       """WITH p AS (
         |  SELECT event_type AS state,
         |    lead(event_type) OVER w AS next_state,
@@ -1515,10 +1471,10 @@ object SegmentQueries {
         |SELECT st.state, st.next_state, st.n, st.mean_gap_sec,
         |  med.p50_gap_sec
         |FROM st JOIN med USING (state, next_state)
-        |ORDER BY 1, 2""".stripMargin,
+        |ORDER BY 1, 2""".stripMargin),
     // json_keys + dynamic json_extract_string restate the map parse;
     // malformed rows excluded by json_valid (the parse-to-null twin)
-    "q222_json_profile" ->
+    QuerySpec("q222_json_profile", q222JsonProfile,
       """WITH pl(event_id, props) AS (VALUES
         |  (-1, '{"k": 5, "tag": "alpha", "flag": true}'),
         |  (-2, '{"tag": "beta", "ratio": 0.5}'),
@@ -1535,10 +1491,10 @@ object SegmentQueries {
         |  CAST(sum(CASE WHEN regexp_matches(value,
         |    '^-?[0-9]+(\.[0-9]+)?$') THEN 1 ELSE 0 END) AS BIGINT)
         |    * 1.0 / count(*) AS numeric_share
-        |FROM v GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM v GROUP BY 1 ORDER BY 1""".stripMargin),
     // the plain desc-order cumulative window IS the oracle; the
     // engine's bucketed prefix must reproduce it (q113 proof shape)
-    "q223_pareto" ->
+    QuerySpec("q223_pareto", q223Pareto,
       """WITH rev AS (
         |  SELECT l_partkey,
         |    CAST(sum(round(l_extendedprice * 100)) AS BIGINT) AS rev_cents
@@ -1561,10 +1517,10 @@ object SegmentQueries {
         |SELECT cut.l_partkey, cut.rev_cents, cut.cum_tokens,
         |  k.nkept AS n_parts_kept, mm.nparts AS n_parts_total,
         |  k.kc * 1.0 / mm.tot AS covered_share
-        |FROM cut CROSS JOIN k CROSS JOIN mm ORDER BY 1""".stripMargin,
+        |FROM cut CROSS JOIN k CROSS JOIN mm ORDER BY 1""".stripMargin),
     // identical bin cells and Murphy arithmetic; aggregated doubles
     // rounded at 6 on both sides
-    "q220_brier" ->
+    QuerySpec("q220_brier", q220Brier,
       """WITH c AS (
         |  SELECT c_acctbal, c_mktsegment FROM customer
         |  WHERE c_mktsegment IS NOT NULL AND c_acctbal IS NOT NULL),
@@ -1599,11 +1555,11 @@ object SegmentQueries {
         |  round(sc.res, 6) AS resolution,
         |  round(sc.unc, 6) AS uncertainty
         |FROM cells CROSS JOIN br CROSS JOIN sc
-        |ORDER BY bin""".stripMargin,
+        |ORDER BY bin""".stripMargin),
     // same lead() pairs, md5 user split, train argmax with lexical
     // tie, held-out scoring; accuracies are unrounded exact-long
     // ratios
-    "q219_markov_backtest" ->
+    QuerySpec("q219_markov_backtest", q219MarkovBacktest,
       """WITH pairs AS (
         |  SELECT event_type AS state,
         |    lead(event_type) OVER (PARTITION BY user_id
@@ -1636,11 +1592,11 @@ object SegmentQueries {
         |SELECT s.state, s.predicted_next, s.train_total, s.n_test,
         |  s.n_correct, s.n_correct * 1.0 / s.n_test AS accuracy,
         |  ov.overall_accuracy
-        |FROM scored s CROSS JOIN ov ORDER BY 1""".stripMargin,
+        |FROM scored s CROSS JOIN ov ORDER BY 1""".stripMargin),
     // every stage restated in its already-proven oracle idiom: md5
     // split buckets, q115 quality score, min-id md5 dedup, q116-style
     // 13-gram shingles, q113's budget cut as a plain cumsum
-    "q218_curation_funnel" ->
+    QuerySpec("q218_curation_funnel", q218CurationFunnel,
       """WITH base AS (
         |  SELECT doc_id,
         |    string_split_regex(lower(trim(text)), '\s+') AS toks,
@@ -1691,11 +1647,11 @@ object SegmentQueries {
         |    CAST(coalesce(sum(n), 0) AS BIGINT) FROM s5
         |  UNION ALL SELECT '6_token_budget', count(*),
         |    CAST(coalesce(sum(n), 0) AS BIGINT) FROM s6)
-        |SELECT stage, n_docs, n_tokens FROM funnel ORDER BY stage""".stripMargin,
+        |SELECT stage, n_docs, n_tokens FROM funnel ORDER BY stage""".stripMargin),
     // the identical rank-offset pair sample; cosine via DuckDB's
     // list_cosine_similarity rounded at 6 before binning (the q34
     // parity convention)
-    "q217_cosine_histogram" ->
+    QuerySpec("q217_cosine_histogram", q217CosineHistogram,
       """WITH rk AS (
         |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
         |    row_number() OVER (ORDER BY vec_id) AS r
@@ -1718,11 +1674,11 @@ object SegmentQueries {
         |mc AS (SELECT round(avg(c), 4) AS mean_cosine FROM pairs)
         |SELECT bin, round(-1.0 + bin / 10.0, 1) AS bin_lo, n_pairs,
         |  round(n_pairs / t, 6) AS share, mean_cosine
-        |FROM binned CROSS JOIN tot CROSS JOIN mc ORDER BY bin""".stripMargin,
+        |FROM binned CROSS JOIN tot CROSS JOIN mc ORDER BY bin""".stripMargin),
     // per-candidate value-count profiles, exact integers + two
     // rounded divisions; the md5 bucket is the shared cross-engine
     // hash idiom
-    "q216_partition_advisor" ->
+    QuerySpec("q216_partition_advisor", q216PartitionAdvisor,
       """WITH li AS (
         |  SELECT CAST(CAST(l_shipdate AS DATE) AS VARCHAR) AS c1,
         |    strftime(l_shipdate, '%Y-%m') AS c2,
@@ -1746,10 +1702,10 @@ object SegmentQueries {
         |    / CAST(sum(n) AS BIGINT), 4) AS skew,
         |  CAST(sum(CASE WHEN n < 1000 THEN 1 ELSE 0 END) AS BIGINT)
         |    AS n_small
-        |FROM vc GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM vc GROUP BY 1 ORDER BY 1""".stripMargin),
     // identical integer water-filling: same ratio sort, same segment
     // test, same integer-division allocations
-    "q215_water_fill" ->
+    QuerySpec("q215_water_fill", q215WaterFill,
       """WITH avail AS (
         |  SELECT source,
         |    CAST(sum(len(string_split_regex(lower(trim(text)), '\s+')))
@@ -1790,11 +1746,11 @@ object SegmentQueries {
         |    AS BIGINT) AS allocated,
         |  rk.i <= istar.istar AS saturated,
         |  istar.bp AS effective_budget
-        |FROM rk CROSS JOIN istar ORDER BY source""".stripMargin,
+        |FROM rk CROSS JOIN istar ORDER BY source""".stripMargin),
     // the same life-table grid: per-(arm, duration) exits, densified
     // to event-times x arms, cumulative at-risk, O/E sums and the
     // 2-group variance restricted to arm 0 rows with n_t > 1
-    "q214_logrank" ->
+    QuerySpec("q214_logrank", q214LogRank,
       """WITH e AS (
         |  SELECT user_id, event_type, CAST(ts AS DATE) AS day FROM events),
         |span AS (
@@ -1849,11 +1805,11 @@ object SegmentQueries {
         |    round((o1.obs1 - o1.e1) * (o1.obs1 - o1.e1) / v.var, 4) END
         |    AS chi2
         |FROM per p CROSS JOIN v CROSS JOIN o1 CROSS JOIN k
-        |ORDER BY 1""".stripMargin,
+        |ORDER BY 1""".stripMargin),
     // identical OLS moments over the identical top-1000 (cnt desc,
     // token) rank frame; ln parity across engines per the q97
     // precedent
-    "q213_zipf" ->
+    QuerySpec("q213_zipf", q213Zipf,
       """WITH toks AS (
         |  SELECT unnest(string_split_regex(lower(trim(text)), '\s+')) AS tok
         |  FROM documents),
@@ -1877,11 +1833,11 @@ object SegmentQueries {
         |    AS intercept,
         |  round((n * sxy - sx * sy) * (n * sxy - sx * sy)
         |    / ((n * sxx - sx * sx) * (n * syy - sy * sy)), 6) AS r2
-        |FROM m CROSS JOIN tot""".stripMargin,
+        |FROM m CROSS JOIN tot""".stripMargin),
     // the naive per-type degree sort restated; the ordered list_reduce
     // folds the SAME ln terms in the SAME rank order as the engine's
     // in-row array fold (0 + x = x, so the missing zero seed is exact)
-    "q296_tail_index" ->
+    QuerySpec("q296_tail_index", q296TailIndex,
       """WITH deg AS (
         |  SELECT event_type, user_id, CAST(count(*) AS DOUBLE) AS deg
         |  FROM events GROUP BY 1, 2),
@@ -1910,11 +1866,11 @@ object SegmentQueries {
         |       THEN round(1.0 + (k_used - 1) / sum_ln, 4) END AS alpha_hill,
         |  round(CAST(top_events AS DOUBLE) / total_events, 4) AS top_share
         |FROM tot JOIN km USING (event_type) JOIN sl USING (event_type)
-        |ORDER BY event_type""".stripMargin,
+        |ORDER BY event_type""".stripMargin),
     // identical integer-cents prefix-sum arithmetic: every quantity
     // before a division is an exact BIGINT, so the float argmax can
     // never flip between engines; ties to the earliest split
-    "q212_changepoint" ->
+    QuerySpec("q212_changepoint", q212Changepoint,
       """WITH daily AS (
         |  SELECT event_type, CAST(ts AS DATE) AS day,
         |    round(sum(value), 2) AS dv
@@ -1961,11 +1917,11 @@ object SegmentQueries {
         |  w.br / 10000 AS sse_reduction
         |FROM win w JOIN red r
         |  ON r.event_type = w.event_type AND r.i = w.bi
-        |ORDER BY 1""".stripMargin,
+        |ORDER BY 1""".stripMargin),
     // every card section restated: counts/mean/min/max directly, the
     // exact quantiles via the rank rule ceil(q·n), dup accounting
     // over md5 text groups
-    "q211_corpus_card" ->
+    QuerySpec("q211_corpus_card", q211CorpusCard,
       """WITH base AS (
         |  SELECT lang, source, CAST(length(text) AS DOUBLE) AS len,
         |    md5(text) AS fp
@@ -2007,10 +1963,10 @@ object SegmentQueries {
         |  FROM (SELECT count(*) AS c FROM base GROUP BY fp
         |        HAVING count(*) > 1))
         |SELECT section, key, round(value, 4) AS value FROM card
-        |ORDER BY section, key""".stripMargin,
+        |ORDER BY section, key""".stripMargin),
     // same blocking, DuckDB's own jaro_winkler_similarity as the
     // score; both engines cut on the 4-dp rounded value
-    "q210_jaro_linkage" ->
+    QuerySpec("q210_jaro_linkage", q210JaroLinkage,
       """WITH names AS (
         |  SELECT lower(trim(p_name)) AS name, count(*) AS n_rows
         |  FROM part WHERE p_name IS NOT NULL
@@ -2026,11 +1982,11 @@ object SegmentQueries {
         |FROM blocked a JOIN blocked b
         |  ON a.block = b.block AND a.name < b.name
         |WHERE round(jaro_winkler_similarity(a.name, b.name), 4) >= 0.9
-        |ORDER BY name_a, name_b""".stripMargin,
+        |ORDER BY name_a, name_b""".stripMargin),
     // the PLAIN overlap join over independently-derived sessions: the
     // engine's bucket grid + canonical-bucket dedup must reproduce it
     // row for row
-    "q209_overlap_join" ->
+    QuerySpec("q209_overlap_join", q209OverlapJoin,
       """WITH sess AS (
         |  SELECT user_id, CAST(ts AS DATE) AS day, event_type,
         |    epoch_us(min(ts)) AS s, epoch_us(max(ts)) AS e,
@@ -2048,10 +2004,10 @@ object SegmentQueries {
         |    - greatest(v.v_start, p.p_start)) / 1000000.0, 3) AS overlap_sec
         |FROM v JOIN p ON p.user_id = v.user_id AND p.day = v.day
         |  AND v.v_end >= p.p_start AND p.p_end >= v.v_start
-        |ORDER BY 1, 2""".stripMargin,
+        |ORDER BY 1, 2""".stripMargin),
     // the same argmax restated: cell counts, per-group max, min value
     // on the tie edge
-    "q208_mode" ->
+    QuerySpec("q208_mode", q208Mode,
       """WITH cells AS (
         |  SELECT o_orderstatus, o_orderpriority AS v, count(*) AS c
         |  FROM orders WHERE o_orderpriority IS NOT NULL GROUP BY 1, 2),
@@ -2063,6 +2019,6 @@ object SegmentQueries {
         |  b.mode_count, b.n_distinct
         |FROM best b JOIN cells c
         |  ON c.o_orderstatus = b.o_orderstatus AND c.c = b.mode_count
-        |GROUP BY 1, 3, 4 ORDER BY 1""".stripMargin
+        |GROUP BY 1, 3, 4 ORDER BY 1""".stripMargin)
   )
 }

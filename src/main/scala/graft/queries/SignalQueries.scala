@@ -99,21 +99,11 @@ object SignalQueries {
       docs.where(length(col("source")) > 4), topK = 25)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q184_naive_bayes" -> (q184NaiveBayes _),
-    "q185_ranking_metrics" -> (q185RankingMetrics _),
-    "q186_geo_nearest" -> (q186GeoNearest _),
-    "q187_rolling_ols" -> (q187RollingOls _),
-    "q188_khop" -> (q188KHop _),
-    "q189_audience_overlap" -> (q189AudienceOverlap _),
-    "q190_keyness" -> (q190Keyness _)
-  )
-
-  val oracles: Map[String, String] = Map(
+  val specs: Seq[QuerySpec] = Seq(
     // scores rank on round(score, 4): ln inputs are exact integer
     // ratios, so cross-engine drift is ~1e-12 abs — far inside the
     // rounding, and class-score gaps are O(1)
-    "q184_naive_bayes" ->
+    QuerySpec("q184_naive_bayes", q184NaiveBayes,
       """WITH tok AS (
         |  SELECT doc_id, lang,
         |    unnest(string_split_regex(lower(trim(text)), '\s+')) AS term
@@ -153,8 +143,8 @@ object SignalQueries {
         |  FROM p1)
         |SELECT actual, predicted, count(*) AS n_docs, acc.accuracy
         |FROM p1 CROSS JOIN acc
-        |GROUP BY 1, 2, acc.accuracy ORDER BY 1, 2""".stripMargin,
-    "q185_ranking_metrics" ->
+        |GROUP BY 1, 2, acc.accuracy ORDER BY 1, 2""".stripMargin),
+    QuerySpec("q185_ranking_metrics", q185RankingMetrics,
       """WITH d AS (
         |  SELECT lang, doc_id, n_chars * 1.0 AS s,
         |    CAST(substr(source, 4)::INT % 4 AS BIGINT) AS rel
@@ -177,10 +167,10 @@ object SignalQueries {
         |  CASE WHEN idcg > 0 THEN round(dcg / idcg, 6) END AS ndcg,
         |  round(nrel / 10.0, 6) AS p_at_k,
         |  round(coalesce(bestinv, 0.0), 6) AS mrr
-        |FROM act JOIN idl USING (lang) ORDER BY act.lang""".stripMargin,
+        |FROM act JOIN idl USING (lang) ORDER BY act.lang""".stripMargin),
     // brute-force cross join: the answer the grid join must equal.
     // d2 is the same literal IEEE expression both sides — exact argmin
-    "q186_geo_nearest" ->
+    QuerySpec("q186_geo_nearest", q186GeoNearest,
       """WITH c AS (
         |  SELECT c_custkey, (c_custkey * 7919 % 18000) / 100.0 - 90.0 AS lat,
         |    (c_custkey * 104729 % 36000) / 100.0 - 180.0 AS lon
@@ -205,11 +195,11 @@ object SignalQueries {
         |    pow(sin((r_lat - l_lat) * pi() / 180.0 / 2), 2)
         |    + cos(l_lat * pi() / 180.0) * cos(r_lat * pi() / 180.0)
         |      * pow(sin((r_lon - l_lon) * pi() / 180.0 / 2), 2))), 2) AS dist_km
-        |FROM r WHERE rn = 1 ORDER BY c_custkey""".stripMargin,
+        |FROM r WHERE rn = 1 ORDER BY c_custkey""".stripMargin),
     // every frame sum is exact integer arithmetic in double (cents ×
     // epoch days, all < 2^53), so slope/intercept/r2 are bit-identical
     // regardless of each engine's frame-sum order
-    "q187_rolling_ols" ->
+    QuerySpec("q187_rolling_ols", q187RollingOls,
       """WITH daily AS (
         |  SELECT event_type, CAST(ts AS DATE) AS day,
         |    CAST(round(sum(value) * 100, 0) AS BIGINT) AS cents
@@ -238,10 +228,10 @@ object SignalQueries {
         |  round((sy - slope0 * sx) / n, 6) AS intercept,
         |  round(CASE WHEN n >= 2 AND dx <> 0 AND dy <> 0
         |    THEN cov * cov / (dx * dy) END, 6) AS r2
-        |FROM k ORDER BY event_type, day""".stripMargin,
+        |FROM k ORDER BY event_type, day""".stripMargin),
     // unrolled BFS level-union: walks of length i reach every node at
     // distance i, min() over levels = true distance for d ≤ 4
-    "q188_khop" ->
+    QuerySpec("q188_khop", q188KHop,
       """WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
         |e0 AS (
         |  SELECT a.pk AS pa, b.pk AS pb
@@ -262,8 +252,8 @@ object SignalQueries {
         |lv AS (SELECT * FROM d0 UNION ALL SELECT * FROM d1
         |  UNION ALL SELECT * FROM d2 UNION ALL SELECT * FROM d3
         |  UNION ALL SELECT * FROM d4)
-        |SELECT node, min(hops) AS hops FROM lv GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q189_audience_overlap" ->
+        |SELECT node, min(hops) AS hops FROM lv GROUP BY 1 ORDER BY 1""".stripMargin),
+    QuerySpec("q189_audience_overlap", q189AudienceOverlap,
       """WITH es AS (
         |  SELECT DISTINCT user_id AS ent, event_type AS seg FROM events
         |  WHERE user_id IS NOT NULL AND event_type IS NOT NULL),
@@ -277,10 +267,10 @@ object SignalQueries {
         |  round(n_ab * 1.0 / (a.n + b.n - n_ab), 6) AS jaccard,
         |  round(n_ab * 1.0 * tot.n_total / (a.n * 1.0 * b.n), 6) AS lift
         |FROM p JOIN sc a ON a.seg = p.seg_a JOIN sc b ON b.seg = p.seg_b
-        |CROSS JOIN tot ORDER BY 1, 2""".stripMargin,
+        |CROSS JOIN tot ORDER BY 1, 2""".stripMargin),
     // χ² with the determinant squared as an explicit product (the
     // operator's pow-free discipline); rank on round(chi2, 4)
-    "q190_keyness" ->
+    QuerySpec("q190_keyness", q190Keyness,
       """WITH a AS (
         |  SELECT unnest(string_split_regex(lower(trim(text)), '\s+')) AS token
         |  FROM documents WHERE length(source) <= 4),
@@ -313,6 +303,6 @@ object SignalQueries {
         |  FROM s)
         |SELECT rank, token, n_a, n_b, chi2, log_odds,
         |  CASE WHEN log_odds > 0 THEN 'A' ELSE 'B' END AS key_for
-        |FROM r WHERE rank <= 25 ORDER BY rank""".stripMargin
+        |FROM r WHERE rank <= 25 ORDER BY rank""".stripMargin)
   )
 }

@@ -73,16 +73,6 @@ object StatQueries {
         .withColumn("is_f", (col("o_orderstatus") === "F").cast("long")),
       "bucket", "is_f")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q191_mann_whitney" -> (q191MannWhitney _),
-    "q192_kruskal_wallis" -> (q192KruskalWallis _),
-    "q193_spearman" -> (q193Spearman _),
-    "q194_k_anonymity" -> (q194KAnonymity _),
-    "q195_cadence" -> (q195Cadence _),
-    "q238_ks_test" -> (q238KsTest _),
-    "q239_isotonic" -> (q239Isotonic _)
-  )
-
   /** Shared oracle fragment: histogram average ranks + scalars over a
     * (g, v) CTE named `d`. */
   private val rankCtes: String =
@@ -101,12 +91,12 @@ object StatQueries {
       |  SELECT g, sum(gcnt) * 1.0 AS n1, sum(gcnt * avgrank) AS r1
       |  FROM cells JOIN h3 USING (v) GROUP BY 1)""".stripMargin
 
-  val oracles: Map[String, String] = Map(
+  val specs: Seq[QuerySpec] = Seq(
     // the engine's two-phase bucketed cumulative is restated as the
     // naive single-window CDF (same math, oracle-side scale is fine);
     // D's numerator stays integer on both sides, λ uses only
     // IEEE-correctly-rounded ops (·, /, sqrt) in the same association
-    "q238_ks_test" ->
+    QuerySpec("q238_ks_test", q238KsTest,
       """WITH d AS (
         |  SELECT l_returnflag AS g, l_extendedprice AS v FROM lineitem
         |  WHERE l_extendedprice IS NOT NULL AND l_returnflag IN ('R', 'N')),
@@ -127,10 +117,10 @@ object StatQueries {
         |  round((sqrt((na * nb) / CAST(na + nb AS DOUBLE)) + 0.12 +
         |         0.11 / sqrt((na * nb) / CAST(na + nb AS DOUBLE))) *
         |        (CAST(dnum AS DOUBLE) / (na * nb)), 4) AS lambda
-        |FROM top""".stripMargin,
+        |FROM top""".stripMargin),
     // minimax identity restated directly: prefix sums over the bucket
     // frame, i≤j pair means, per-i suffix min, per-j max
-    "q239_isotonic" ->
+    QuerySpec("q239_isotonic", q239Isotonic,
       """WITH b AS (
         |  SELECT CAST(round(o_totalprice * 100) AS BIGINT) // 500000 AS bucket,
         |         count(*) AS n,
@@ -155,8 +145,8 @@ object StatQueries {
         |  round(CAST(b.n_pos AS DOUBLE) / b.n, 6) AS raw_rate,
         |  round(fit.f, 6) AS iso_rate
         |FROM b JOIN fit USING (bucket)
-        |ORDER BY bucket""".stripMargin,
-    "q191_mann_whitney" ->
+        |ORDER BY bucket""".stripMargin),
+    QuerySpec("q191_mann_whitney", q191MannWhitney,
       s"""WITH d AS (
          |  SELECT event_type AS g, value * 1.0 AS v FROM events
          |  WHERE event_type IS NOT NULL AND value IS NOT NULL),
@@ -169,8 +159,8 @@ object StatQueries {
          |    / sqrt(n1 * (sc.n - n1) / 12 * ((sc.n + 1)
          |      - sc.tiesum / (sc.n * (sc.n - 1)))), 6) AS z
          |FROM per CROSS JOIN sc
-         |WHERE n1 > 0 AND sc.n - n1 > 0 ORDER BY 1""".stripMargin,
-    "q192_kruskal_wallis" ->
+         |WHERE n1 > 0 AND sc.n - n1 > 0 ORDER BY 1""".stripMargin),
+    QuerySpec("q192_kruskal_wallis", q192KruskalWallis,
       s"""WITH d AS (
          |  SELECT o_orderpriority AS g, o_totalprice * 1.0 AS v FROM orders
          |  WHERE o_orderpriority IS NOT NULL AND o_totalprice IS NOT NULL),
@@ -189,11 +179,11 @@ object StatQueries {
          |  round(r1 / n1, 6) AS mean_rank,
          |  round(tot.h, 6) AS h, tot.dof,
          |  round(tot.h / tot.c, 6) AS h_tie_corrected
-         |FROM per CROSS JOIN tot ORDER BY 1""".stripMargin,
+         |FROM per CROSS JOIN tot ORDER BY 1""".stripMargin),
     // per-column histogram ranks joined back on the value, Pearson
     // corr over ranks (exact-tie Spearman); corr at round 6 is the
     // q55 cross-engine precedent
-    "q193_spearman" ->
+    QuerySpec("q193_spearman", q193Spearman,
       """WITH base AS (
         |  SELECT l_quantity * 1.0 AS c1, l_extendedprice * 1.0 AS c2,
         |    l_discount * 1.0 AS c3, l_tax * 1.0 AS c4
@@ -236,8 +226,8 @@ object StatQueries {
         |  round(corr(rk2, rk3), 6) AS l_extendedprice_l_discount,
         |  round(corr(rk2, rk4), 6) AS l_extendedprice_l_tax,
         |  round(corr(rk3, rk4), 6) AS l_discount_l_tax
-        |FROM j""".stripMargin,
-    "q194_k_anonymity" ->
+        |FROM j""".stripMargin),
+    QuerySpec("q194_k_anonymity", q194KAnonymity,
       """WITH cl AS (
         |  SELECT c_nationkey, c_mktsegment, floor(c_acctbal / 1000) AS bal_band,
         |    count(*) AS csize
@@ -254,10 +244,10 @@ object StatQueries {
         |      / (sum(csize) * 1.0), 6) AS pct_rows_below_k
         |  FROM cl)
         |SELECT band, n_classes, n_rows, v.k_min, v.pct_rows_below_k
-        |FROM banded CROSS JOIN v ORDER BY band""".stripMargin,
+        |FROM banded CROSS JOIN v ORDER BY band""".stripMargin),
     // whole-second floored gaps: integer-exact variance numerator, so
     // cv and the flag comparison cannot drift across engines
-    "q195_cadence" ->
+    QuerySpec("q195_cadence", q195Cadence,
       """WITH e AS (
         |  SELECT user_id AS actor, date_trunc('microseconds', ts) AS ts
         |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
@@ -283,6 +273,6 @@ object StatQueries {
         |  round(CASE WHEN mean > 0 THEN sqrt(variance) / mean END, 6) AS cv,
         |  (CASE WHEN mean > 0 THEN sqrt(variance) / mean END) < 0.3
         |    AND n >= 20 AS is_regular
-        |FROM m ORDER BY actor""".stripMargin
+        |FROM m ORDER BY actor""".stripMargin)
   )
 }

@@ -275,17 +275,6 @@ object SupplyQueries {
       .orderBy("supp_nation", "cust_nation", "l_year")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q249_large_orders" -> (q249LargeOrders _),
-    "q250_trade_volume" -> (q250TradeVolume _),
-    "q248_reconcile_census" -> (q248ReconcileCensus _),
-    "q243_clamped_balance" -> (q243ClampedBalance _),
-    "q244_communities" -> (q244Communities _),
-    "q245_sole_late" -> (q245SoleLateSupplier _),
-    "q246_dormant_accounts" -> (q246DormantAccounts _),
-    "q247_quantile_rollup" -> (q247PriceQuantileRollup _)
-  )
-
   /** Unrolled synchronous LPA rounds for the q244 oracle. */
   private def lpaOracleSql(iters: Int): String = {
     val base =
@@ -314,8 +303,8 @@ object SupplyQueries {
        |SELECT id AS item, label AS community FROM l$iters ORDER BY item""".stripMargin
   }
 
-  val oracles: Map[String, String] = Map(
-    "q249_large_orders" ->
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q249_large_orders", q249LargeOrders,
       """WITH q AS (
         |  SELECT l_orderkey, CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT)
         |    AS total_qty
@@ -325,10 +314,10 @@ object SupplyQueries {
         |  round(o_totalprice, 2) AS o_totalprice, total_qty
         |FROM q JOIN orders ON l_orderkey = o_orderkey
         |JOIN customer ON o_custkey = c_custkey
-        |ORDER BY o_totalprice DESC, o_orderdate, o_orderkey LIMIT 100""".stripMargin,
+        |ORDER BY o_totalprice DESC, o_orderdate, o_orderkey LIMIT 100""".stripMargin),
     // exact-cents conditional revenue: price_cents · (100 − disc_pct)
     // is integer; ONE division at the end
-    "q250_trade_volume" ->
+    QuerySpec("q250_trade_volume", q250TradeVolume,
       """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
         |  CAST(year(l_shipdate) AS INT) AS l_year,
         |  CAST(count(*) AS BIGINT) AS n_lines,
@@ -342,10 +331,10 @@ object SupplyQueries {
         |JOIN nation n2 ON c_nationkey = n2.n_nationkey
         |WHERE (n1.n_name = 'NATION_3' AND n2.n_name = 'NATION_7')
         |   OR (n1.n_name = 'NATION_7' AND n2.n_name = 'NATION_3')
-        |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
+        |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin),
     // the three derived systems, the full-outer alignment, and the
     // pairwise-agreement census restated field by field
-    "q248_reconcile_census" ->
+    QuerySpec("q248_reconcile_census", q248ReconcileCensus,
       """WITH o AS (
         |  SELECT o_orderkey, o_orderstatus,
         |    CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
@@ -396,11 +385,11 @@ object SupplyQueries {
         |    AND agree_pairs < (present * (present - 1)) // 2 THEN 1 ELSE 0 END)
         |    AS BIGINT) AS n_conflict,
         |  CAST(sum(CASE WHEN present = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_single
-        |FROM scores GROUP BY field ORDER BY field""".stripMargin,
+        |FROM scores GROUP BY field ORDER BY field""".stripMargin),
     // the Lindley closed form restated: prefix/running-min windows;
     // final_balance = net − min(0, min prefix) — the identity the
     // Spark side reaches via max_by over the same total order
-    "q243_clamped_balance" ->
+    QuerySpec("q243_clamped_balance", q243ClampedBalance,
       """WITH m AS (
         |  SELECT l_partkey AS part,
         |    CASE WHEN l_returnflag = 'R' THEN CAST(l_quantity AS BIGINT)
@@ -432,11 +421,11 @@ object SupplyQueries {
         |  CAST(sum(CASE WHEN balance = 0 AND delta < 0 THEN 1 ELSE 0 END)
         |    AS BIGINT) AS n_stockouts,
         |  CAST(sum(shortfall) AS BIGINT) AS lost_qty
-        |FROM b GROUP BY part ORDER BY part""".stripMargin,
-    "q244_communities" -> lpaOracleSql(4),
+        |FROM b GROUP BY part ORDER BY part""".stripMargin),
+    QuerySpec("q244_communities", q244Communities, lpaOracleSql(4)),
     // the textbook correlated statement — hash match proves the
     // one-aggregate decorrelation
-    "q245_sole_late" ->
+    QuerySpec("q245_sole_late", q245SoleLateSupplier,
       """SELECT s_name, CAST(count(DISTINCT o_orderkey) AS BIGINT) AS numwait
         |FROM supplier, lineitem l1, orders
         |WHERE s_suppkey = l1.l_suppkey AND o_orderkey = l1.l_orderkey
@@ -448,8 +437,8 @@ object SupplyQueries {
         |    WHERE l3.l_orderkey = l1.l_orderkey
         |      AND l3.l_suppkey <> l1.l_suppkey
         |      AND l3.l_shipdate > o_orderdate + INTERVAL 90 DAY)
-        |GROUP BY s_name ORDER BY numwait DESC, s_name LIMIT 100""".stripMargin,
-    "q246_dormant_accounts" ->
+        |GROUP BY s_name ORDER BY numwait DESC, s_name LIMIT 100""".stripMargin),
+    QuerySpec("q246_dormant_accounts", q246DormantAccounts,
       """WITH c AS (
         |  SELECT c_custkey, c_mktsegment,
         |    CAST(round(c_acctbal * 100) AS BIGINT) AS cents
@@ -464,10 +453,10 @@ object SupplyQueries {
         |  AND NOT EXISTS (SELECT 1 FROM orders o
         |    WHERE o.o_custkey = c.c_custkey
         |      AND o.o_orderdate >= TIMESTAMP '2001-01-01')
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
     // the state math restated bin by bin: same BIGINT bin rule, rank
     // rule, and edge reconstruction
-    "q247_quantile_rollup" ->
+    QuerySpec("q247_quantile_rollup", q247PriceQuantileRollup,
       """WITH v AS (
         |  SELECT CAST(round(l_extendedprice * 100) AS BIGINT) AS cents,
         |    strftime(l_shipdate, '%Y-%m') AS month FROM lineitem),
@@ -496,6 +485,6 @@ object SupplyQueries {
         |  min(CASE WHEN c >= (99 * n + 99) // 100 THEN bin END) AS p99_bin,
         |  min(CASE WHEN c >= (99 * n + 99) // 100
         |    THEN lo + ((bin + 1) * (hi - lo + 1)) // 256 - 1 END) AS p99_hi_cents
-        |FROM cum, bounds GROUP BY quarter ORDER BY quarter""".stripMargin
+        |FROM cum, bounds GROUP BY quarter ORDER BY quarter""".stripMargin)
   )
 }

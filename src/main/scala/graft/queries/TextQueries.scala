@@ -496,32 +496,6 @@ object TextQueries {
       .orderBy("doc_id")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q303_image_dims" -> (q303ImageDims _),
-    "q307_image_resize" -> (q307ImageResize _),
-    "q30_dedup_exact" -> (q30DedupExact _),
-    "q31_dedup_minhash" -> (q31DedupMinhash _),
-    "q103_banding_sweep" -> (q103BandingSweep _),
-    "q104_repeated_spans" -> (q104RepeatedSpans _),
-    "q105_span_removal" -> (q105SpanRemoval _),
-    "q251_exact_substr" -> (q251ExactSubstr _),
-    "q108_lsh_index" -> (q108LshIndex _),
-    "q32_dedup_simhash" -> (q32DedupSimhash _),
-    "q33_ngram_jaccard" -> (q33NgramJaccard _),
-    "q57_ngram_prefix" -> (q57NgramPrefix _),
-    "q61_dup_clusters" -> (q61DupClusters _),
-    "q79_incremental_dedup" -> (q79IncrementalDedup _),
-    "q80_dedup_survivors" -> (q80DedupSurvivors _),
-    "q77_edit_distance" -> (q77EditDistance _),
-    "q78_winnow" -> (q78Winnow _),
-    "q36_langid" -> (q36LangId _),
-    "q37_text_quality" -> (q37TextQuality _),
-    "q38_token_count" -> (q38TokenCount _),
-    "q39_fingerprint" -> (q39Fingerprint _),
-    "q40_multimodal" -> (q40Multimodal _),
-    "q44_frame_sample" -> (q44FrameSample _)
-  )
-
   private val markerSql: Map[String, String] =
     TextFunctions.langMarkers.map { case (l, ms) =>
       l -> ms.map(m => s"'$m'").mkString(", ")
@@ -593,7 +567,7 @@ object TextQueries {
        |  FROM hs CROSS JOIN (SELECT unnest(range(0, 32)) AS i) k
        |  GROUP BY 1, 2)""".stripMargin
 
-  val oracles: Map[String, String] = Map(
+  val specs: Seq[QuerySpec] = Seq(
     // the persisted-index lifecycle replayed relationally: one sig
     // computation per doc (md5 double-hash family), band keys as
     // 4-long signature slices, per-phase candidates = probe docs ×
@@ -601,7 +575,7 @@ object TextQueries {
     // batch1 at probe 2 — the append), verification by exact string
     // Jaccard (≡ the engine's md5-h1 hashed-set Jaccard up to 64-bit
     // collisions)
-    "q108_lsh_index" ->
+    QuerySpec("q108_lsh_index", q108LshIndex,
       """WITH corpus(doc_id, text) AS (
         |  SELECT doc_id, text FROM documents
         |  UNION ALL SELECT -11, trim(repeat('zzka zzkb zzkc zzkd zzke zzkf ', 3))),
@@ -667,10 +641,10 @@ object TextQueries {
         |  FROM p)
         |SELECT p.phase, p.doc_a, p.doc_b, round(p.jac, 4) AS jaccard,
         |  g.planted_found, g.n_novel_pairs, g.append_found
-        |FROM p CROSS JOIN g ORDER BY 1, 2, 3""".stripMargin,
+        |FROM p CROSS JOIN g ORDER BY 1, 2, 3""".stripMargin),
     // fingerprint bits re-voted from the md5 word's 32-bit halves,
     // chunks re-banded with the same cap, Hamming from two popcounts
-    "q32_dedup_simhash" ->
+    QuerySpec("q32_dedup_simhash", q32DedupSimhash,
       """WITH pl(doc_id, text) AS (VALUES
         |  (-2, 'wwsa wwsb wwsc wwsd wwse wwsf wwsg wwsh'),
         |  (-1, 'wwsh wwsg wwsf wwse wwsd wwsc wwsb wwsa')),
@@ -724,11 +698,11 @@ object TextQueries {
         |  SELECT CAST(sum(CASE WHEN doc_a < 0 AND doc_b < 0 THEN 1
         |    ELSE 0 END) AS BIGINT) AS planted_recovered FROM p)
         |SELECT p.doc_a, p.doc_b, p.hamming, g.planted_recovered
-        |FROM p CROSS JOIN g ORDER BY 1, 2""".stripMargin,
+        |FROM p CROSS JOIN g ORDER BY 1, 2""".stripMargin),
     // the full md5-minhash pipeline restated: band keys are signature
     // slices, buckets capped at 100 members, candidate pairs verified
     // by exact Jaccard over the distinct shingle sets
-    "q31_dedup_minhash" ->
+    QuerySpec("q31_dedup_minhash", q31DedupMinhash,
       (md5SigCte(
         """  (-4, 'zzqa zzqb zzqc zzqa zzqb zzqc zzqa zzqb zzqc'),
           |  (-3, 'zzqa zzqb zzqc zzqa zzqb zzqc zzqa zzqb zzqc zzqa zzqb zzqc'),
@@ -764,11 +738,11 @@ object TextQueries {
           |    ELSE 0 END) AS BIGINT) AS planted_recovered FROM p)
           |SELECT p.doc_a, p.doc_b, round(p.jac, 4) AS jaccard,
           |  g.planted_recovered
-          |FROM p CROSS JOIN g ORDER BY 1, 2""".stripMargin),
+          |FROM p CROSS JOIN g ORDER BY 1, 2""".stripMargin)),
     // the sweep: same sig rows re-sliced per config; counts over the
     // VERIFIED candidate frame (no threshold filter on n_candidates),
     // design recall is closed-form arithmetic
-    "q103_banding_sweep" ->
+    QuerySpec("q103_banding_sweep", q103BandingSweep,
       (md5SigCte(
         """  (-2, 'yyra yyrb yyrc yyrd yyre yyrf yyrg yyrh yyri yyrj'),
           |  (-1, 'yyra yyrb yyrc yyrd yyre yyrf yyrg yyrh yyri yyrj')""".stripMargin) +
@@ -815,10 +789,10 @@ object TextQueries {
           |    AS design_recall_at_t,
           |  coalesce(per.planted_recovered, 0) AS planted_recovered
           |FROM conf c LEFT JOIN per ON per.b = c.b
-          |ORDER BY 1""".stripMargin),
+          |ORDER BY 1""".stripMargin)),
     // the identical polynomial fold over the identical md5-derived
     // token hashes; bit_xor folds the corpus checksum
-    "q39_fingerprint" ->
+    QuerySpec("q39_fingerprint", q39Fingerprint,
       """WITH t AS (
         |  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS toks
         |  FROM documents),
@@ -831,11 +805,11 @@ object TextQueries {
         |  FROM t),
         |c AS (SELECT bit_xor(fingerprint) AS corpus_checksum FROM f)
         |SELECT f.doc_id, f.fingerprint, c.corpus_checksum
-        |FROM f CROSS JOIN c ORDER BY 1""".stripMargin,
+        |FROM f CROSS JOIN c ORDER BY 1""".stripMargin),
     // winnowing restated: positional shingles, md5-hex hashes, sliding
     // w=4 window minima (values only — tie positions don't matter),
     // distinct, xor-folded; planted overlap via list_intersect
-    "q78_winnow" ->
+    QuerySpec("q78_winnow", q78Winnow,
       """WITH pl(doc_id, text) AS (VALUES
         |  (-1, 'first preamble words then the shared boilerplate passage that both planted documents quote verbatim across many tokens and a unique first tail'),
         |  (-2, 'second intro differs here the shared boilerplate passage that both planted documents quote verbatim across many tokens followed by another ending entirely')),
@@ -870,12 +844,12 @@ object TextQueries {
         |  list_reduce(list_prepend(CAST(0 AS BIGINT), f.fp),
         |    (a, b) -> xor(a, b)) AS fp_checksum,
         |  CAST(sh2.planted_shared AS INT) AS planted_shared
-        |FROM fps f CROSS JOIN sh2 ORDER BY 1""".stripMargin,
+        |FROM fps f CROSS JOIN sh2 ORDER BY 1""".stripMargin),
     // the exactSubstrAudit chain restated: positional 8-gram md5
     // fingerprints → corpus-frequency dup set (≥2 anywhere, incl.
     // within-doc) → per-doc interval union (running-max window) →
     // ≥20-token runs → total per-doc report
-    "q251_exact_substr" ->
+    QuerySpec("q251_exact_substr", q251ExactSubstr,
       ("""WITH allr AS (
         |  SELECT doc_id, text FROM documents
         |  UNION ALL
@@ -922,15 +896,15 @@ object TextQueries {
         |ORDER BY t.doc_id""".stripMargin
         .replace("SPAN24", (1 to 24).map(i => s"xspan$i").mkString(" "))
         .replace("REP25", (1 to 25).map(i => s"xsrep$i").mkString(" "))
-        .replace("SUB12", (1 to 12).map(i => s"xssub$i").mkString(" "))),
-    "q104_repeated_spans" ->
+        .replace("SUB12", (1 to 12).map(i => s"xssub$i").mkString(" ")))),
+    QuerySpec("q104_repeated_spans", q104RepeatedSpans,
       (SpanIslandsCte +
         """
         |SELECT doc_a, doc_b, start_a, start_b, span_shingles,
         |  span_shingles + 7 AS span_tokens
         |FROM g WHERE span_shingles + 7 >= 20
-        |ORDER BY doc_a, doc_b, start_a, start_b""".stripMargin),
-    "q105_span_removal" ->
+        |ORDER BY doc_a, doc_b, start_a, start_b""".stripMargin)),
+    QuerySpec("q105_span_removal", q105SpanRemoval,
       (SpanIslandsCte +
         """,
         |iv0 AS (SELECT DISTINCT doc_b AS doc_id, CAST(start_b AS BIGINT) AS s,
@@ -956,11 +930,11 @@ object TextQueries {
         |  FROM kk)
         |SELECT doc_id, len(toks) AS n_tokens, len(toks) - len(kept) AS n_removed,
         |  md5(coalesce(array_to_string(kept, ' '), '')) AS text_fp
-        |FROM rr ORDER BY doc_id""".stripMargin),
-    "q30_dedup_exact" ->
+        |FROM rr ORDER BY doc_id""".stripMargin)),
+    QuerySpec("q30_dedup_exact", q30DedupExact,
       """SELECT md5(text) AS fingerprint, min(doc_id) AS keep_id, count(*) AS n_copies
-        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q33_ngram_jaccard" ->
+        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin),
+    QuerySpec("q33_ngram_jaccard", q33NgramJaccard,
       """WITH toks AS (
         |  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t FROM documents),
         |sh AS (
@@ -979,8 +953,8 @@ object TextQueries {
         |JOIN sizes sa ON sa.doc_id = doc_a
         |JOIN sizes sb ON sb.doc_id = doc_b
         |WHERE shared * 1.0 / (sa.n + sb.n - shared) >= 0.3
-        |ORDER BY doc_a, doc_b""".stripMargin,
-    "q57_ngram_prefix" ->
+        |ORDER BY doc_a, doc_b""".stripMargin),
+    QuerySpec("q57_ngram_prefix", q57NgramPrefix,
       """WITH toks AS (
         |  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t FROM documents),
         |sh AS (
@@ -999,8 +973,8 @@ object TextQueries {
         |JOIN sizes sa ON sa.doc_id = doc_a
         |JOIN sizes sb ON sb.doc_id = doc_b
         |WHERE shared * 1.0 / (sa.n + sb.n - shared) >= 0.8
-        |ORDER BY doc_a, doc_b""".stripMargin,
-    "q61_dup_clusters" ->
+        |ORDER BY doc_a, doc_b""".stripMargin),
+    QuerySpec("q61_dup_clusters", q61DupClusters,
       """WITH RECURSIVE toks AS (
         |  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t FROM documents),
         |sh AS (
@@ -1027,8 +1001,8 @@ object TextQueries {
         |nodes AS (SELECT DISTINCT a AS id FROM und)
         |SELECT n.id AS doc_id, least(n.id, min(r.b)) AS cluster_id
         |FROM nodes n JOIN reach r ON r.a = n.id
-        |GROUP BY n.id ORDER BY 1""".stripMargin,
-    "q79_incremental_dedup" ->
+        |GROUP BY n.id ORDER BY 1""".stripMargin),
+    QuerySpec("q79_incremental_dedup", q79IncrementalDedup,
       """WITH toks AS (
         |  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t FROM documents),
         |sh AS (
@@ -1054,8 +1028,8 @@ object TextQueries {
         |         jaccard
         |  FROM p WHERE p.doc_a % 5 = 0 OR p.doc_b % 5 = 0)
         |SELECT da AS doc_a, db AS doc_b, jaccard FROM o
-        |ORDER BY 1, 2""".stripMargin,
-    "q80_dedup_survivors" ->
+        |ORDER BY 1, 2""".stripMargin),
+    QuerySpec("q80_dedup_survivors", q80DedupSurvivors,
       """WITH RECURSIVE toks AS (
         |  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t FROM documents),
         |sh AS (
@@ -1085,8 +1059,8 @@ object TextQueries {
         |  FROM nodes n JOIN reach r ON r.a = n.id GROUP BY n.id)
         |SELECT doc_id, lang, source, n_chars FROM documents
         |WHERE doc_id NOT IN (SELECT did FROM cl WHERE cluster_id <> did)
-        |ORDER BY doc_id""".stripMargin,
-    "q77_edit_distance" ->
+        |ORDER BY doc_id""".stripMargin),
+    QuerySpec("q77_edit_distance", q77EditDistance,
       """WITH toks AS (
         |  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t FROM documents),
         |sh AS (
@@ -1111,8 +1085,8 @@ object TextQueries {
         |FROM p
         |JOIN documents ta ON ta.doc_id = doc_a
         |JOIN documents tb ON tb.doc_id = doc_b
-        |ORDER BY doc_a, doc_b""".stripMargin,
-    "q36_langid" -> {
+        |ORDER BY doc_a, doc_b""".stripMargin),
+    QuerySpec("q36_langid", q36LangId, {
       val scoreCols = TextFunctions.langMarkers.map { case (l, _) =>
         s"len(list_filter(t, x -> x IN (${markerSql(l)}))) AS score_$l"
       }.mkString(",\n  ")
@@ -1130,8 +1104,8 @@ object TextQueries {
          |SELECT doc_id, labeled_lang, $predExpr AS predicted_lang,
          |  ${langs.map(l => s"score_$l").mkString(", ")}
          |FROM scored ORDER BY doc_id""".stripMargin
-    },
-    "q37_text_quality" ->
+    }),
+    QuerySpec("q37_text_quality", q37TextQuality,
       """WITH t AS (
         |  SELECT doc_id, text, string_split_regex(lower(trim(text)), '\s+') AS toks
         |  FROM documents)
@@ -1140,45 +1114,45 @@ object TextQueries {
         |  round(len(list_filter(toks, x -> x IN ('the','a'))) * 1.0 / len(toks), 4) AS stopword_ratio,
         |  round(least(len(toks) / 50.0, 1.0) *
         |    (1.0 - len(list_filter(toks, x -> x IN ('the','a'))) * 1.0 / len(toks)), 4) AS quality_score
-        |FROM t ORDER BY doc_id""".stripMargin,
-    "q38_token_count" ->
+        |FROM t ORDER BY doc_id""".stripMargin),
+    QuerySpec("q38_token_count", q38TokenCount,
       """SELECT doc_id,
         |  len(string_split_regex(lower(trim(text)), '\s+')) AS ws_tokens,
         |  len(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9\s]')) AS bpe_tokens
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q44_frame_sample" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    QuerySpec("q44_frame_sample", q44FrameSample,
       """WITH m AS (SELECT doc_id, octet_length(encode(text)) AS len FROM documents)
         |SELECT doc_id, CAST(unnest(range(0, 1 + len % 8)) AS BIGINT) AS frame_idx,
         |  len * 31 + CAST(unnest(range(0, 1 + len % 8)) AS BIGINT) AS frame_feature
-        |FROM m ORDER BY doc_id, frame_idx""".stripMargin,
-    "q40_multimodal" ->
+        |FROM m ORDER BY doc_id, frame_idx""".stripMargin),
+    QuerySpec("q40_multimodal", q40Multimodal,
       """SELECT doc_id,
         |  octet_length(encode(text)) AS byte_len,
         |  64 + octet_length(encode(text)) % 64 AS width,
         |  64 + (octet_length(encode(text)) // 64) % 64 AS height,
         |  1 + octet_length(encode(text)) % 8 AS n_frames,
         |  3 AS channels
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin),
     // the fixture's dimension arithmetic restated from doc_id: the
     // engine side must recover these same numbers by PARSING the real
     // PNG/JPEG container bytes it encoded; % 20 IN (0, 5) covers both
     // parities, so the CASE's jpeg branch is live (r14 ADVICE)
-    "q303_image_dims" ->
+    QuerySpec("q303_image_dims", q303ImageDims,
       """SELECT doc_id,
         |  CASE WHEN doc_id % 2 = 0 THEN 'png' ELSE 'jpeg' END AS format,
         |  CAST(16 + doc_id % 49 AS INT) AS width,
         |  CAST(16 + (doc_id * 7) % 33 AS INT) AS height
-        |FROM documents WHERE doc_id % 20 IN (0, 5) ORDER BY doc_id""".stripMargin,
+        |FROM documents WHERE doc_id % 20 IN (0, 5) ORDER BY doc_id""".stripMargin),
     // the halved dimensions restated from doc_id (integer floor
     // division on both sides), format preserved through the resize,
     // and color_ok pinned TRUE — the engine must earn it by decoding
     // the resized bytes and matching the source color
-    "q307_image_resize" ->
+    QuerySpec("q307_image_resize", q307ImageResize,
       """SELECT doc_id,
         |  CASE WHEN doc_id % 2 = 0 THEN 'png' ELSE 'jpeg' END AS format,
         |  CAST((16 + doc_id % 49) // 2 AS INT) AS width,
         |  CAST((16 + (doc_id * 7) % 33) // 2 AS INT) AS height,
         |  TRUE AS color_ok
-        |FROM documents WHERE doc_id % 20 IN (0, 5) ORDER BY doc_id""".stripMargin
+        |FROM documents WHERE doc_id % 20 IN (0, 5) ORDER BY doc_id""".stripMargin)
   )
 }

@@ -776,39 +776,15 @@ object TextQueries2 {
       .orderBy("lang")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q287_tokenizer_fertility" -> (q287TokenizerFertility _),
-    "q237_bpe_vocab" -> (q237BpeVocab _),
-    "q241_bpe_subwords" -> (q241BpeSubwords _),
-    "q107_quality_classifier" -> (q107QualityClassifier _),
-    "q62_sketch_audit" -> (q62SketchAudit _),
-    "q62b_sketch_exact" -> (q62bSketchExact _),
-    "q69_corpus_build" -> (q69CorpusBuild _),
-    "q67_normalize_redact" -> (q67NormalizeRedact _),
-    "q56_split" -> (q56Split _),
-    "q81_stratified_mix" -> (q81StratifiedMix _),
-    "q83_observe_quality" -> (q83ObserveQuality _),
-    "q84_bloom_decontaminate" -> (q84BloomDecontaminate _),
-    "q86_heavy_hitters" -> (q86HeavyHitters _),
-    "q99_count_min" -> (q99CountMin _),
-    "q58_weighted_sample" -> (q58WeightedSample _),
-    "q59_contamination" -> (q59Contamination _),
-    "q60_pack" -> (q60Pack _),
-    "q49_repetition" -> (q49Repetition _),
-    "q50_vocab_topk" -> (q50VocabTopK _),
-    "q51_tfidf" -> (q51TfIdf _),
-    "q52_pattern_counts" -> (q52PatternCounts _)
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q107_quality_classifier" -> q107OracleSql(15),
-    "q237_bpe_vocab" -> bpeOracleSql(16),
-    "q241_bpe_subwords" -> bpeSubwordsOracleSql(16),
-    "q287_tokenizer_fertility" -> fertilityOracleSql(16),
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q107_quality_classifier", q107QualityClassifier, q107OracleSql(15)),
+    QuerySpec("q237_bpe_vocab", q237BpeVocab, bpeOracleSql(16)),
+    QuerySpec("q241_bpe_subwords", q241BpeSubwords, bpeSubwordsOracleSql(16)),
+    QuerySpec("q287_tokenizer_fertility", q287TokenizerFertility, fertilityOracleSql(16)),
     // the KPS no-false-negative contract makes in_sketch/n_missed
     // deterministic for true heavy hitters — the oracle states the
     // contract-mandated values, so the hash check IS the contract check
-    "q86_heavy_hitters" ->
+    QuerySpec("q86_heavy_hitters", q86HeavyHitters,
       """WITH toks AS (
         |  SELECT unnest(string_split_regex(lower(trim(text)), '\s+')) AS token
         |  FROM documents),
@@ -817,10 +793,10 @@ object TextQueries2 {
         |SELECT h.token, h.exact_count, 1 AS in_sketch,
         |  CAST(0 AS BIGINT) AS n_missed
         |FROM h, tot WHERE h.exact_count > 0.02 * tot.n
-        |ORDER BY h.token""".stripMargin,
+        |ORDER BY h.token""".stripMargin),
     // the full md5-seeded count-min grid (d=5, w=2048) restated:
     // identical hashes ⇒ identical cells ⇒ identical estimates
-    "q99_count_min" ->
+    QuerySpec("q99_count_min", q99CountMin,
       """WITH toks AS (
         |  SELECT unnest(string_split_regex(lower(trim(text)), '\s+')) AS token
         |  FROM documents),
@@ -849,17 +825,17 @@ object TextQueries2 {
         |SELECT e.token, e.exact_count, e.cms_estimate,
         |  round((e.cms_estimate - e.exact_count) * 1.0 / e.exact_count, 4) AS rel_err,
         |  g.n_underestimates
-        |FROM est e CROSS JOIN g ORDER BY e.token""".stripMargin,
-    "q62b_sketch_exact" ->
+        |FROM est e CROSS JOIN g ORDER BY e.token""".stripMargin),
+    QuerySpec("q62b_sketch_exact", q62bSketchExact,
       """SELECT event_type,
         |  count(DISTINCT user_id) AS exact_users,
         |  round(quantile_cont(value, 0.5), 4) AS exact_p50
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
     // the md5-HLL register chain is q231's oracle idiom (b=8, W+1=53,
     // alpha_256*m^2*2^53 = 4.2399330249068963e20, small-range cut
     // 2.5m = 640); the histogram median is the Quantiles bucket rule
     // at rank (n+1) div 2 with the bucket midpoint as the estimate
-    "q62_sketch_audit" ->
+    QuerySpec("q62_sketch_audit", q62SketchAudit,
       """WITH ev AS (SELECT event_type, user_id, value FROM events),
         |st AS (
         |  SELECT event_type, count(DISTINCT user_id) AS exact_users,
@@ -908,8 +884,8 @@ object TextQueries2 {
         |  round(approx_p50_raw, 4) AS approx_p50,
         |  round(abs(approx_p50_raw - exact_p50_raw), 4) AS p50_abs_err
         |FROM st JOIN est USING (event_type) JOIN ap USING (event_type)
-        |ORDER BY event_type""".stripMargin,
-    "q69_corpus_build" ->
+        |ORDER BY event_type""".stripMargin),
+    QuerySpec("q69_corpus_build", q69CorpusBuild,
       """WITH base AS (
         |  SELECT doc_id, text,
         |    len(string_split_regex(lower(trim(text)), '\s+')) AS n_tokens
@@ -933,8 +909,8 @@ object TextQueries2 {
         |  CAST(floor((sum(n_tokens) OVER w - n_tokens) / 512) AS BIGINT) AS seq_id
         |FROM t
         |WINDOW w AS (PARTITION BY split, shard ORDER BY doc_id)
-        |ORDER BY doc_id""".stripMargin,
-    "q67_normalize_redact" ->
+        |ORDER BY doc_id""".stripMargin),
+    QuerySpec("q67_normalize_redact", q67NormalizeRedact,
       """WITH allr AS (
         |  SELECT doc_id, text FROM documents
         |  UNION ALL
@@ -957,8 +933,8 @@ object TextQueries2 {
         |  len(regexp_extract_all(norm, '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b')) AS n_ips,
         |  length(redacted) AS n_chars_redacted,
         |  md5(redacted) AS redacted_fp
-        |FROM r ORDER BY doc_id""".stripMargin,
-    "q83_observe_quality" ->
+        |FROM r ORDER BY doc_id""".stripMargin),
+    QuerySpec("q83_observe_quality", q83ObserveQuality,
       """WITH allr AS (
         |  SELECT doc_id, text, lang FROM documents
         |  UNION ALL
@@ -972,8 +948,8 @@ object TextQueries2 {
         |  CAST(sum(CASE WHEN lang IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS nulls_lang,
         |  CAST(sum(CASE WHEN coalesce(length(text), 0) >= 100 THEN 1 ELSE 0 END) AS BIGINT)
         |    AS n_long_docs
-        |FROM allr""".stripMargin,
-    "q81_stratified_mix" ->
+        |FROM allr""".stripMargin),
+    QuerySpec("q81_stratified_mix", q81StratifiedMix,
       """WITH b AS (
         |  SELECT *, ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 6))::BIGINT % 100 AS bucket,
         |    CAST(substr(source, 4) AS INT) % 2 AS src_parity
@@ -989,23 +965,23 @@ object TextQueries2 {
         |SELECT lang, src_parity, count(*) AS n_docs,
         |  CAST(sum(n_chars) AS BIGINT) AS total_chars,
         |  round(avg(n_chars), 2) AS avg_chars
-        |FROM mixed GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q56_split" ->
+        |FROM mixed GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    QuerySpec("q56_split", q56Split,
       """WITH b AS (
         |  SELECT *, ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 6))::BIGINT % 100 AS bucket
         |  FROM documents)
         |SELECT CASE WHEN bucket < 80 THEN 'train'
         |  WHEN bucket < 90 THEN 'val' ELSE 'test' END AS split,
         | lang, count(*) AS n, round(avg(n_chars), 2) AS avg_chars
-        |FROM b GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q58_weighted_sample" ->
+        |FROM b GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    QuerySpec("q58_weighted_sample", q58WeightedSample,
       """WITH k AS (
         |  SELECT * FROM documents
         |  WHERE ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 12))::BIGINT
         |          / 281474976710656.0
         |        < least(1.0, n_chars / 2000.0))
         |SELECT lang, count(*) AS n_kept, round(avg(n_chars), 2) AS avg_chars
-        |FROM k GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM k GROUP BY 1 ORDER BY 1""".stripMargin),
     // the md5 Kirsch–Mitzenmacher Bloom rebuilt relationally: bit set
     // = distinct positions pos_i = (h1 mod m + i·(h2 mod m)) mod m of
     // the test shingles (h1/h2 = md5 hex reads, i < 7), sizing
@@ -1013,7 +989,7 @@ object TextQueries2 {
     // a position; a train shingle hits iff ALL its positions are set,
     // a doc iff ANY shingle hits — the exact membership algebra the
     // engine's md5BloomPrefilter computes
-    "q84_bloom_decontaminate" ->
+    QuerySpec("q84_bloom_decontaminate", q84BloomDecontaminate,
       """WITH b AS (
         |  SELECT doc_id, text,
         |    ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 6))::BIGINT % 100 AS bucket
@@ -1057,8 +1033,8 @@ object TextQueries2 {
         |SELECT train_doc, n_exact_hits, bloom_hit,
         |  CAST(SUM(CASE WHEN n_exact_hits > 0 AND NOT bloom_hit THEN 1 ELSE 0 END) OVER () AS BIGINT) AS n_missed,
         |  CAST(SUM(CASE WHEN NOT bloom_hit THEN 1 ELSE 0 END) OVER () AS BIGINT) AS n_pruned
-        |FROM rows_out ORDER BY train_doc""".stripMargin,
-    "q59_contamination" ->
+        |FROM rows_out ORDER BY train_doc""".stripMargin),
+    QuerySpec("q59_contamination", q59Contamination,
       """WITH b AS (
         |  SELECT doc_id, text,
         |    ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 6))::BIGINT % 100 AS bucket
@@ -1083,8 +1059,8 @@ object TextQueries2 {
         |  coalesce(agg.max_shared, 0) AS max_shared
         |FROM b LEFT JOIN agg ON agg.test_doc = b.doc_id
         |WHERE b.bucket >= 90
-        |ORDER BY test_doc""".stripMargin,
-    "q60_pack" ->
+        |ORDER BY test_doc""".stripMargin),
+    QuerySpec("q60_pack", q60Pack,
       """WITH t AS (
         |  SELECT doc_id, doc_id % 8 AS shard,
         |    len(string_split_regex(lower(trim(text)), '\s+')) AS n_tokens
@@ -1094,8 +1070,8 @@ object TextQueries2 {
         |  CAST(floor((sum(n_tokens) OVER w - n_tokens) / 512) AS BIGINT) AS seq_id
         |FROM t
         |WINDOW w AS (PARTITION BY shard ORDER BY doc_id)
-        |ORDER BY doc_id""".stripMargin,
-    "q49_repetition" ->
+        |ORDER BY doc_id""".stripMargin),
+    QuerySpec("q49_repetition", q49Repetition,
       """WITH t AS (
         |  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS toks FROM documents),
         |f AS (SELECT doc_id, toks, len(toks) AS n_tokens FROM t WHERE len(toks) >= 3),
@@ -1106,14 +1082,14 @@ object TextQueries2 {
         |SELECT doc_id, n_tokens, n_tokens - 2 AS n_shingle_positions,
         | n_distinct AS n_distinct_shingles,
         | round(1.0 - n_distinct * 1.0 / (n_tokens - 2), 4) AS repetition_ratio
-        |FROM sh ORDER BY doc_id""".stripMargin,
-    "q50_vocab_topk" ->
+        |FROM sh ORDER BY doc_id""".stripMargin),
+    QuerySpec("q50_vocab_topk", q50VocabTopK,
       """WITH t AS (
         |  SELECT doc_id, unnest(list_distinct(string_split_regex(lower(trim(text)), '\s+'))) AS token
         |  FROM documents)
         |SELECT token, count(*) AS doc_freq FROM t
-        |GROUP BY 1 ORDER BY doc_freq DESC, token LIMIT 50""".stripMargin,
-    "q51_tfidf" ->
+        |GROUP BY 1 ORDER BY doc_freq DESC, token LIMIT 50""".stripMargin),
+    QuerySpec("q51_tfidf", q51TfIdf,
       """WITH toks AS (
         |  SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\s+')) AS token
         |  FROM documents),
@@ -1128,12 +1104,12 @@ object TextQueries2 {
         |SELECT doc_id, token, round(tfidf_raw, 6) AS tfidf,
         |  CAST(row_number() OVER (PARTITION BY doc_id ORDER BY tfidf_raw DESC, token) AS INT) AS rank
         |FROM scored QUALIFY rank <= 3
-        |ORDER BY doc_id, rank""".stripMargin,
-    "q52_pattern_counts" ->
+        |ORDER BY doc_id, rank""".stripMargin),
+    QuerySpec("q52_pattern_counts", q52PatternCounts,
       """SELECT source, count(*) AS n_docs,
         | CAST(sum(len(regexp_extract_all(text, '[a-z]+[0-9]+'))) AS BIGINT) AS total_alnum_runs,
         | CAST(sum(len(regexp_extract_all(text, '\b(the|a)\b'))) AS BIGINT) AS total_articles,
         | round(avg(length(text)), 2) AS avg_chars
-        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin
+        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin)
   )
 }

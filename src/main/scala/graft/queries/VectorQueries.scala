@@ -473,25 +473,6 @@ object VectorQueries {
       .orderBy("q_id", "rank")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q288_matryoshka" -> (q288Matryoshka _),
-    "q280_hard_negatives_lsh" -> (q280HardNegativesLsh _),
-    "q119_pq_adc" -> (q119PqAdc _),
-    "q100_kmeans_trace" -> (q100KmeansTrace _),
-    "q101_ivf_index" -> (q101IvfIndex _),
-    "q110_ivf_append" -> (q110IvfAppend _),
-    "q111_random_projection" -> (q111RandomProjection _),
-    "q112_srp_hamming_topk" -> (q112SrpHammingTopK _),
-    "q34_knn_bruteforce" -> (q34KnnBruteForce _),
-    "q35_knn_lsh" -> (q35KnnLsh _),
-    "q43_knn_ivf" -> (q43KnnIvf _),
-    "q66_quantized_knn" -> (q66QuantizedKnn _),
-    "q70_label_centroids" -> (q70LabelCentroids _),
-    "q94_mmr" -> (q94Mmr _),
-    "q289_tiered_retrieval" -> (q289TieredRetrieval _),
-    "q295_silhouette" -> (q295Silhouette _)
-  )
-
   /** Int8-quantized brute-force top-10: corpus vectors scalar-quantized
     * (4× memory shrink), ranked by cosine over the DEQUANTIZED vectors,
     * with the float-exact similarity and its quantization error beside
@@ -963,12 +944,12 @@ object VectorQueries {
          |ORDER BY query_id, rank""".stripMargin
   }
 
-  val oracles: Map[String, String] = Map(
-    "q119_pq_adc" -> pqAdcOracleSql,
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q119_pq_adc", q119PqAdc, pqAdcOracleSql),
     // the full tiered stack restated: prefix slice → per-vector int8
     // quantize/dequantize (the q66 idiom) → coarse rounded-cosine
     // shortlist-50 → full-width rerank → recall + impostor audits
-    "q289_tiered_retrieval" ->
+    QuerySpec("q289_tiered_retrieval", q289TieredRetrieval,
       s"""WITH emb0 AS (
          |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
          |corpus AS (
@@ -1037,8 +1018,8 @@ object VectorQueries {
          |    / en.n_exact, 2) AS recall_vs_exact,
          |  ga.impostor_shortlisted, gb.impostor_in_top10
          |FROM j JOIN en USING (query_id) CROSS JOIN ga CROSS JOIN gb
-         |ORDER BY query_id, rank""".stripMargin,
-    "q288_matryoshka" ->
+         |ORDER BY query_id, rank""".stripMargin),
+    QuerySpec("q288_matryoshka", q288Matryoshka,
       s"""WITH e0 AS (
          |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e64 FROM embeddings),
          |e AS (SELECT vec_id, e64, e64[1:16] AS e16 FROM e0),
@@ -1075,10 +1056,10 @@ object VectorQueries {
          |LEFT JOIN ex ON ex.query_id = ap.query_id AND ex.vec_id = ap.vec_id
          |JOIN nex ON nex.query_id = ap.query_id
          |JOIN f ON f.query_id = ap.query_id AND f.vec_id = ap.vec_id
-         |ORDER BY ap.query_id, ap.rank""".stripMargin,
+         |ORDER BY ap.query_id, ap.rank""".stripMargin),
     // codes via the q111/q112 md5-parity idiom on ROUNDED projections;
     // band packing is the same integer left fold both engines run
-    "q280_hard_negatives_lsh" ->
+    QuerySpec("q280_hard_negatives_lsh", q280HardNegativesLsh,
       """WITH base0 AS (
         |  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
         |base AS (
@@ -1138,17 +1119,17 @@ object VectorQueries {
         |FROM top t
         |JOIN nc ON nc.q_id = t.q_id
         |LEFT JOIN ex ON ex.q_id = t.q_id AND ex.vec_id = t.vec_id
-        |ORDER BY t.q_id, t.rank""".stripMargin,
-    "q100_kmeans_trace" -> kmeansTraceOracleSql,
-    "q70_label_centroids" ->
+        |ORDER BY t.q_id, t.rank""".stripMargin),
+    QuerySpec("q100_kmeans_trace", q100KmeansTrace, kmeansTraceOracleSql),
+    QuerySpec("q70_label_centroids", q70LabelCentroids,
       """SELECT label, r.i AS dim,
         |  round(avg(CAST(embedding[r.i] AS DOUBLE)), 6) AS centroid
         |FROM embeddings CROSS JOIN range(1, 65) r(i)
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
     // centroids float-cast (q100 discipline), similarities compared
     // only after round(·,6) (q90 discipline) — a/b/sil are identical
     // doubles on both engines; avg is the rounded-aggregate residual
-    "q295_silhouette" ->
+    QuerySpec("q295_silhouette", q295Silhouette,
       """WITH c0 AS (
         |  SELECT label AS clabel, pos,
         |    sum(CAST(embedding[pos] AS DOUBLE)) AS sv, count(*) AS n
@@ -1176,8 +1157,8 @@ object VectorQueries {
         |  round(avg(b), 4) AS mean_nearest,
         |  round(avg(s), 4) AS silhouette,
         |  CAST(sum(CASE WHEN b < a THEN 1 ELSE 0 END) AS BIGINT) AS n_closer_other
-        |FROM sil GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q66_quantized_knn" ->
+        |FROM sil GROUP BY 1 ORDER BY 1""".stripMargin),
+    QuerySpec("q66_quantized_knn", q66QuantizedKnn,
       s"""WITH qz AS (
          |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
          |    list_max(list_transform(CAST(embedding AS DOUBLE[]), x -> abs(x))) / 127.0 AS q_scale
@@ -1204,8 +1185,8 @@ object VectorQueries {
          |  round(abs(qsim_raw - sim_raw), 6) AS sim_err
          |FROM scored
          |QUALIFY rank <= 10
-         |ORDER BY query_id, rank""".stripMargin,
-    "q34_knn_bruteforce" ->
+         |ORDER BY query_id, rank""".stripMargin),
+    QuerySpec("q34_knn_bruteforce", q34KnnBruteForce,
       s"""WITH q AS (
          |  SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS q_emb
          |  FROM embeddings WHERE vec_id < $NQueries),
@@ -1218,18 +1199,18 @@ object VectorQueries {
          |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, vec_id) AS INT) AS rank
          |FROM scored
          |QUALIFY rank <= 10
-         |ORDER BY query_id, rank""".stripMargin,
+         |ORDER BY query_id, rank""".stripMargin),
     // the ±1 hyperplane is the engine's md5 idiom: parity of the first
     // 6 md5 hex chars of 'srp:i:j' — identical arithmetic to
     // SrpProject's matrix, folded in the same ascending-i order
-    "q111_random_projection" ->
+    QuerySpec("q111_random_projection", q111RandomProjection,
       """SELECT vec_id, CAST(t.j AS INT) AS dim,
         |  round(list_sum(list_transform(range(1, 65), i ->
         |    CAST(embedding[i] AS DOUBLE) *
         |    CASE WHEN ('0x' || substr(md5('srp:' || i || ':' || t.j), 1, 6))::BIGINT % 2 = 0
         |      THEN 1.0 ELSE -1.0 END)), 6) AS z
         |FROM embeddings CROSS JOIN range(1, 17) t(j)
-        |ORDER BY vec_id, dim""".stripMargin,
+        |ORDER BY vec_id, dim""".stripMargin),
     // seeds via the rank rule over the id spine, cells/probes from raw
     // cosines with (sim DESC, cid DESC) ties, then the q35
     // candidate-top-10 + recall machinery;
@@ -1238,9 +1219,9 @@ object VectorQueries {
     // asserts, bit-equality between the two paths, so one restatement
     // covers both). Seed rank rule is ceil(q·n) — the r12 q90 lesson:
     // ⌊q·n⌋+1 only agrees while q·n is non-integer.
-    "q43_knn_ivf" -> ivfRecallOracleSql,
-    "q101_ivf_index" -> ivfRecallOracleSql,
-    "q110_ivf_append" -> ivfAppendOracleSql,
+    QuerySpec("q43_knn_ivf", q43KnnIvf, ivfRecallOracleSql),
+    QuerySpec("q101_ivf_index", q101IvfIndex, ivfRecallOracleSql),
+    QuerySpec("q110_ivf_append", q110IvfAppend, ivfAppendOracleSql),
     // the greedy MMR chain replayed exactly via a recursive CTE: the
     // per-step argmax runs on bit-identical doubles (6-dp-rounded
     // relevance scores, sequential normalized dots, the literal
@@ -1248,7 +1229,7 @@ object VectorQueries {
     // (objective, min id) tie, and the emitted objective rounds at
     // 4 (see mmrRerank: immune to both the 7-dp decimal-half and the
     // vectorized-dot ulp hazards)
-    "q94_mmr" ->
+    QuerySpec("q94_mmr", q94Mmr,
       s"""WITH RECURSIVE base AS (
          |  SELECT q.vec_id AS query_id, e.vec_id AS id,
          |    round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
@@ -1312,12 +1293,12 @@ object VectorQueries {
          |SELECT fin.query_id, fin.vec_id, fin.mmr, fin.rank,
          |  fm.nf AS n_first_matches_top1
          |FROM fin CROSS JOIN fm
-         |ORDER BY query_id, rank""".stripMargin,
+         |ORDER BY query_id, rank""".stripMargin),
     // the full md5-SRP LSH restated: 8-bit buckets per table from
     // 6-dp projection signs, multiprobe = base bucket + all 1-bit
     // XOR flips, candidate top-10 by rounded sim, recall against the
     // brute-force restatement
-    "q35_knn_lsh" ->
+    QuerySpec("q35_knn_lsh", q35KnnLsh,
       s"""WITH codes AS (
          |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
          |    list_transform(range(0, 8), t ->
@@ -1379,8 +1360,8 @@ object VectorQueries {
          |  round(sum(j.in_exact) OVER (PARTITION BY j.query_id) * 1.0
          |    / en.n_exact, 2) AS recall_vs_exact
          |FROM j JOIN en USING (query_id)
-         |ORDER BY query_id, rank""".stripMargin,
-    "q112_srp_hamming_topk" ->
+         |ORDER BY query_id, rank""".stripMargin),
+    QuerySpec("q112_srp_hamming_topk", q112SrpHammingTopK,
       s"""WITH codes AS (
          |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
          |    list_transform(range(1, 17), j ->
@@ -1403,6 +1384,6 @@ object VectorQueries {
          |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY hamming, vec_id) AS INT) AS rank
          |FROM scored
          |QUALIFY rank <= 10
-         |ORDER BY query_id, rank""".stripMargin
+         |ORDER BY query_id, rank""".stripMargin)
   )
 }

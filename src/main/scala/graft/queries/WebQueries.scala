@@ -174,13 +174,6 @@ object WebQueries {
       .orderBy("host", "rank")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q281_url_canonical" -> (q281UrlCanonical _),
-    "q282_host_priors" -> (q282HostPriors _),
-    "q285_url_census_merge" -> (q285UrlCensusMerge _),
-    "q286_crawl_frontier" -> (q286CrawlFrontier _)
-  )
-
   /** The DuckDB canonicalizer: the same regex parts and list ops as
     * [[Urls.canonicalize]] (regexp_extract group-1 semantics and
     * empty-on-no-match agree across engines; params are ASCII so
@@ -236,8 +229,8 @@ object WebQueries {
       |      AS canonical_url
       |  FROM withp)""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    "q281_url_canonical" ->
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q281_url_canonical", q281UrlCanonical,
       s"""WITH u AS (
          |  SELECT doc_id, 0 AS n_chars, $duckSynthUrl AS url FROM documents
          |  UNION ALL
@@ -251,8 +244,8 @@ object WebQueries {
          |$duckCanonParts
          |SELECT canonical_url, count(*) AS n_fetches,
          |  min(doc_id) AS survivor_id
-         |FROM c GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q282_host_priors" ->
+         |FROM c GROUP BY 1 ORDER BY 1""".stripMargin),
+    QuerySpec("q282_host_priors", q282HostPriors,
       s"""WITH u AS (
          |  SELECT doc_id, n_chars, $duckSynthUrl AS url FROM documents),
          |$duckCanonParts
@@ -263,17 +256,17 @@ object WebQueries {
          |  round(100.0 * sum(CASE WHEN has_tracking THEN 1 ELSE 0 END)
          |    / count(*), 4) AS tracking_pct,
          |  round(avg(n_chars), 4) AS avg_chars
-         |FROM c GROUP BY 1 ORDER BY 1""".stripMargin,
+         |FROM c GROUP BY 1 ORDER BY 1""".stripMargin),
     // the oracle is the FULL-corpus rebuild — the engine computes the
     // incremental merge, so the hash match proves incremental = batch
-    "q285_url_census_merge" ->
+    QuerySpec("q285_url_census_merge", q285UrlCensusMerge,
       s"""WITH u AS (
          |  SELECT doc_id, 0 AS n_chars, $duckSynthUrl AS url FROM documents),
          |$duckCanonParts
          |SELECT canonical_url, count(*) AS n_fetches,
          |  min(doc_id) AS survivor_id
-         |FROM c GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q286_crawl_frontier" ->
+         |FROM c GROUP BY 1 ORDER BY 1""".stripMargin),
+    QuerySpec("q286_crawl_frontier", q286CrawlFrontier,
       s"""WITH u AS (
          |  SELECT doc_id, 0 AS n_chars, $duckSynthUrl AS url FROM documents
          |  UNION ALL
@@ -311,6 +304,6 @@ object WebQueries {
          |    ORDER BY path_depth, canonical_url) AS INT) AS rank,
          |  canonical_url, path_depth, host_score
          |FROM scored QUALIFY rank <= 3
-         |ORDER BY host, rank""".stripMargin
+         |ORDER BY host, rank""".stripMargin)
   )
 }

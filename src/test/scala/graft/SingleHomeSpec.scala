@@ -4,9 +4,9 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Guards against regrowth of the session builders and function
-  * installs this code base once had many copies of: each may appear
-  * only in its one home. */
+/** Guards against regrowth of the session builders, function and rule
+  * installs and query maps this code base once had many copies of:
+  * each may appear only in its one home. */
 class SingleHomeSpec extends AnyFunSuite {
 
   private def sources(dir: String): Seq[Path] = {
@@ -29,6 +29,19 @@ class SingleHomeSpec extends AnyFunSuite {
     val table = Seq("src/main/scala/graft/plans/GraftExtensions.scala")
     assert(holders("src/main/scala", "injectFunction") == table)
     assert(holders("src/main/scala", "createOrReplaceTempFunction").isEmpty)
+  }
+
+  test("optimizer rules are injected only by GraftExtensions") {
+    assert(holders("src/main/scala", "extraOptimizations").isEmpty)
+    assert(holders("src/main/scala", "injectOptimizerRule") ==
+      Seq("src/main/scala/graft/plans/GraftExtensions.scala"))
+  }
+
+  test("query modules declare specs, not separate queries and oracles maps") {
+    val twoMaps = """\bval\s+(queries|oracles)\s*(:\s*Map\b|=\s*Map\s*\()""".r
+    val modules = sources("src/main/scala/graft/queries")
+    assert(modules.size >= 18)
+    assert(modules.filter(p => twoMaps.findFirstIn(Files.readString(p)).nonEmpty).isEmpty)
   }
 
   test("no spec builds its own session: all go through SparkFixture") {
