@@ -103,16 +103,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") // env default: local[32]
-    // scale-experiment knob (driver never sets it): decouple shuffle
-    // partition COUNT from thread count, so a derived-sf run can hold
-    // per-partition work constant (a cluster sizes partitions with the
-    // data; local mode pins both to 32 by default)
-    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
     // local-iteration filter (the Verify.scala convention); the driver
     // never sets it, so official runs always time the full registry
     val registry = SparkEntry.select(sys.env.get("SPARK_GRAFT_ONLY")).map(q => q.name -> q.run)
-    val spark = GraftSession.builder(s"local[$cpus]", shuffleParts).getOrCreate()
+    val spark = GraftSession.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     warmUp(spark, sfDir)
     // Per-query time = MIN over TWO FULL SUITE PASSES (r8 verdict

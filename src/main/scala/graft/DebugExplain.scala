@@ -52,7 +52,7 @@ object DebugExplain {
     val names = if (args.length > 1) args.tail.toSeq
       else Seq("q02_filter_project", "q03_join_agg", "q04_join_broadcast", "q34_knn_bruteforce")
     // same engine conf as Verify/Bench so dumped plans match
-    val spark = GraftSession.builder("local[8]", "8").getOrCreate()
+    val spark = GraftSession.local().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"========== $n ==========")

@@ -40,4 +40,16 @@ object GraftSession {
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.extensions", classOf[GraftExtensions].getName)
+
+  /** [[builder]] on the local engine conf every main but the CLI shares:
+    * `local[N]`, N = `SPARK_GRAFT_CPUS` (default 32), with
+    * `SPARK_GRAFT_SHUFFLE` shuffle partitions (default N). */
+  def local(): SparkSession.Builder = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // scale-experiment knob (official runs leave it unset): decouple shuffle
+    // partition COUNT from thread count, so a derived-sf run can hold
+    // per-partition work constant (a cluster sizes partitions with the
+    // data; local mode pins both to 32 by default)
+    builder(s"local[$cpus]", sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
+  }
 }

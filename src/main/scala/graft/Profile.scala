@@ -7,7 +7,7 @@ import graft.queries.QuerySpec
   * queries under a stage listener so each Spark stage inside a query
   * shows up with its task run/CPU time, GC, shuffle bytes and name —
   * the attribution step the bench totals can't give. Builds through
-  * [[GraftSession]] and warms up with [[Bench.warmUp]], the same
+  * [[GraftSession.local]] and warms up with [[Bench.warmUp]], the same
   * engine conf and warm-up as Bench, so numbers are comparable.
   *
   * Usage: java ... graft.Profile [sfDir] [q1,q2,...] */
@@ -15,7 +15,7 @@ object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val selected = SparkEntry.select(Some(args.lift(1).getOrElse("q175_weighted_quantiles")))
-    val spark = GraftSession.builder("local[32]", "32").getOrCreate()
+    val spark = GraftSession.local().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     // per-stage (name, tasks, executor run ms) — task-time attribution

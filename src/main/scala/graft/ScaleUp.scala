@@ -40,8 +40,7 @@ object ScaleUp {
     val Array(inDir, outDir, factorStr) = args
     val factor = factorStr.toInt
     require(factor >= 1, "factor must be >= 1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
+    val spark = GraftSession.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def in(name: String): DataFrame = spark.read.parquet(s"$inDir/$name.parquet")

@@ -12,7 +12,7 @@ object ScanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val minScans = args.lift(1).map(_.toInt).getOrElse(3)
-    val spark = GraftSession.builder("local[8]", "8").getOrCreate()
+    val spark = GraftSession.local().getOrCreate()
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.sparkContext.setLogLevel("ERROR")
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

@@ -6,11 +6,10 @@ import graft.queries.QuerySpec
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") // env default: local[32]
     // local-iteration filter (comma-separated query names); the driver
     // never sets it, so its runs always dump the full declared suite
     val selected = SparkEntry.select(sys.env.get("SPARK_GRAFT_ONLY"))
-    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
+    val spark = GraftSession.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     selected.foreach { case QuerySpec(name, run, _) =>

@@ -1,6 +1,11 @@
 package graft.config
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.yaml.snakeyaml.{DumperOptions, LoaderOptions, Yaml}
+import org.yaml.snakeyaml.constructor.SafeConstructor
+import org.yaml.snakeyaml.representer.Representer
+import org.yaml.snakeyaml.resolver.Resolver
 
 /** Parsed pipeline configuration (reference
   * config/config.example.yaml:1-49, loaded at src/pipeline.py:16-17):
@@ -72,19 +77,30 @@ object PipelineConfig {
 
   /** Parse the reference's config shape from YAML text. Unknown keys are
     * ignored; missing blocks fall back to [[default]] values, so a
-    * partial override file (e.g. only `data_quality:`) is valid. */
+    * partial override file (e.g. only `data_quality:`) is valid.
+    * SnakeYAML loads it with no implicit types, so every scalar stays the
+    * string it was written as (`0123`, `yes`, `~` verbatim; `key:` is
+    * `""`; quotes stripped; ` #` starts a comment, `abc#def` does not).
+    * An empty document, a non-mapping root or a non-mapping city entry
+    * throws `IllegalArgumentException`. */
   def fromYaml(text: String): PipelineConfig = {
-    val root = MiniYaml.parse(text)
-    def str(path: String*) : Option[String] = MiniYaml.string(root, path)
+    val root = load(text)
+    def str(path: String*): Option[String] = at(root, path)
     def dbl(path: String*): Option[Double] = str(path: _*).map(_.toDouble)
-    val cities = MiniYaml.list(root, Seq("cities")).map { m =>
-      CityConfig(
-        name = m.getOrElse("name", ""),
-        state = m.getOrElse("state", ""),
-        noaaStationId = m.getOrElse("noaa_station_id", ""),
-        eiaRegionCode = m.getOrElse("eia_region_code", ""),
-        lat = m.get("lat").map(_.toDouble).getOrElse(0.0),
-        lon = m.get("lon").map(_.toDouble).getOrElse(0.0))
+    val cities = root.get("cities") match {
+      case items: java.util.List[_] => items.asScala.toSeq.map {
+        case m: java.util.Map[_, _] =>
+          def field(k: String): Option[String] = at(m, Seq(k))
+          CityConfig(
+            name = field("name").getOrElse(""),
+            state = field("state").getOrElse(""),
+            noaaStationId = field("noaa_station_id").getOrElse(""),
+            eiaRegionCode = field("eia_region_code").getOrElse(""),
+            lat = field("lat").map(_.toDouble).getOrElse(0.0),
+            lon = field("lon").map(_.toDouble).getOrElse(0.0))
+        case other => throw new IllegalArgumentException(s"a city entry must be a mapping, got '$other'")
+      }
+      case _ => Seq.empty
     }
     PipelineConfig(
       noaa = ApiConfig(
@@ -104,120 +120,24 @@ object PipelineConfig {
         tempMinF = dbl("data_quality", "temp_outlier_fahrenheit", "min")
           .getOrElse(default.quality.tempMinF)))
   }
-}
 
-/** Minimal YAML-subset parser covering the reference config's shape:
-  * nested maps by indentation, lists of flat maps (`- key: value`),
-  * scalar values with optional single/double quotes, `#` comments.
-  * Deliberately NOT a general YAML implementation (no anchors, no
-  * multi-line scalars, no flow style) — the sandbox has no YAML
-  * dependency and the config grammar is this small. */
-private[config] object MiniYaml {
-
-  sealed trait Node
-  final case class MapNode(entries: Map[String, Node]) extends Node
-  final case class ListNode(items: Seq[Map[String, String]]) extends Node
-  final case class ScalarNode(value: String) extends Node
-
-  def string(root: MapNode, path: Seq[String]): Option[String] =
-    path.foldLeft(Option(root: Node)) {
-      case (Some(MapNode(m)), k) => m.get(k)
+  /** The string scalar at `path` below `node`, if every step is a mapping. */
+  private def at(node: Any, path: Seq[String]): Option[String] =
+    path.foldLeft(Option(node)) {
+      case (Some(m: java.util.Map[_, _]), k) => Option(m.get(k))
       case _ => None
-    }.collect { case ScalarNode(v) => v }
+    }.collect { case s: String => s }
 
-  def list(root: MapNode, path: Seq[String]): Seq[Map[String, String]] =
-    path.foldLeft(Option(root: Node)) {
-      case (Some(MapNode(m)), k) => m.get(k)
-      case _ => None
-    } match {
-      case Some(ListNode(items)) => items
-      case _ => Seq.empty
+  /** The YAML document's root mapping, every scalar a string. */
+  private def load(text: String): java.util.Map[_, _] = {
+    val noImplicitTypes = new Resolver { override def addImplicitResolvers(): Unit = () }
+    val yaml = new Yaml(new SafeConstructor(new LoaderOptions), new Representer(new DumperOptions),
+      new DumperOptions, new LoaderOptions, noImplicitTypes)
+    yaml.load[AnyRef](text) match {
+      case m: java.util.Map[_, _] => m
+      case null => throw new IllegalArgumentException("empty config")
+      case other => throw new IllegalArgumentException(
+        s"config root must be a mapping, got ${other.getClass.getSimpleName}")
     }
-
-  private def unquote(s: String): String = {
-    val t = s.trim
-    if (t.length >= 2 && ((t.head == '"' && t.last == '"') || (t.head == '\'' && t.last == '\'')))
-      t.substring(1, t.length - 1)
-    else t
-  }
-
-  /** Strip a trailing comment that is OUTSIDE quotes. Per YAML, '#'
-    * opens a comment only at line start or after whitespace — an
-    * unquoted value like `abc#def` (a credential, an anchor URL) must
-    * NOT be truncated. */
-  private def stripComment(s: String): String = {
-    var inS = false; var inD = false
-    var i = 0
-    while (i < s.length) {
-      s.charAt(i) match {
-        case '\'' if !inD => inS = !inS
-        case '"' if !inS => inD = !inD
-        case '#' if !inS && !inD && (i == 0 || s.charAt(i - 1).isWhitespace) =>
-          return s.substring(0, i)
-        case _ =>
-      }
-      i += 1
-    }
-    s
-  }
-
-  private final case class Line(indent: Int, isItem: Boolean, key: String, value: String)
-
-  def parse(text: String): MapNode = {
-    val lines = text.linesIterator.map(stripComment).filter(_.trim.nonEmpty).map { raw =>
-      val indent = raw.takeWhile(_ == ' ').length
-      val body = raw.trim
-      val (isItem, rest) = if (body.startsWith("- ")) (true, body.drop(2)) else (false, body)
-      val ci = rest.indexOf(':')
-      require(ci > 0, s"unparseable config line: '$raw'")
-      Line(indent, isItem, rest.take(ci).trim, unquote(rest.drop(ci + 1)))
-    }.toVector
-    parseMap(lines, 0)._1
-  }
-
-  /** Parse a map starting at lines(from); returns (map, next index). */
-  private def parseMap(lines: Vector[Line], from: Int): (MapNode, Int) = {
-    require(from < lines.length, "empty config block")
-    val indent = lines(from).indent
-    var i = from
-    val out = scala.collection.mutable.LinkedHashMap[String, Node]()
-    while (i < lines.length && lines(i).indent >= indent && !lines(i).isItem) {
-      val l = lines(i)
-      if (l.indent > indent) { i += 1 } // over-indented stray — skip
-      else if (l.value.nonEmpty) { out(l.key) = ScalarNode(l.value); i += 1 }
-      else {
-        // block value: a list of flat maps, or a nested map
-        val childFrom = i + 1
-        if (childFrom < lines.length && lines(childFrom).indent > indent) {
-          if (lines(childFrom).isItem) {
-            val (items, next) = parseList(lines, childFrom)
-            out(l.key) = ListNode(items); i = next
-          } else {
-            val (m, next) = parseMap(lines, childFrom)
-            out(l.key) = m; i = next
-          }
-        } else { out(l.key) = ScalarNode(""); i = childFrom }
-      }
-    }
-    (MapNode(out.toMap), i)
-  }
-
-  /** Parse a list of flat maps: each `- k: v` opens an item whose
-    * continuation lines are the deeper-indented `k: v` pairs. */
-  private def parseList(lines: Vector[Line], from: Int): (Seq[Map[String, String]], Int) = {
-    val indent = lines(from).indent
-    var i = from
-    val items = scala.collection.mutable.ArrayBuffer[Map[String, String]]()
-    while (i < lines.length && lines(i).indent == indent && lines(i).isItem) {
-      val item = scala.collection.mutable.LinkedHashMap[String, String]()
-      item(lines(i).key) = lines(i).value
-      i += 1
-      while (i < lines.length && lines(i).indent > indent && !lines(i).isItem) {
-        item(lines(i).key) = lines(i).value
-        i += 1
-      }
-      items += item.toMap
-    }
-    (items.toSeq, i)
   }
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import graft.config.PipelineConfig
 import graft.domain.QualityReport
 
 /** Data-quality operators (SURVEY §2.9 X6/X7; reference
@@ -10,23 +11,11 @@ import graft.domain.QualityReport
   * The whole report is ONE single-pass aggregate — per-column null
   * counts, threshold outliers, negatives and freshness computed in the
   * same job (A8+A9+A10), not one job per metric. The clock is injected
-  * (`asOfDate`) so freshness is deterministic (SURVEY §7.4 trap 8). */
+  * (`asOfDate`) so freshness is deterministic (SURVEY §7.4 trap 8).
+  * Outlier thresholds come from the config (reference
+  * config['data_quality'], src/data_processor.py:93-98); their only
+  * default is `PipelineConfig.default`. */
 object QualityOps {
-
-  val DefaultTempMaxF = 130.0
-  val DefaultTempMinF = -50.0
-
-  /** Config-driven variants (reference run_quality_checks reads the
-    * thresholds from config['data_quality'], src/data_processor.py:93-98
-    * — they are parameters, not constants). */
-  def report(fact: DataFrame, asOfDate: String, cfg: graft.config.PipelineConfig): QualityReport =
-    report(fact, asOfDate, cfg.quality.tempMaxF, cfg.quality.tempMinF)
-
-  def qualityTimeSeries(fact: DataFrame, cfg: graft.config.PipelineConfig): DataFrame =
-    qualityTimeSeries(fact, cfg.quality.tempMaxF, cfg.quality.tempMinF)
-
-  def problemRows(fact: DataFrame, cfg: graft.config.PipelineConfig): DataFrame =
-    problemRows(fact, cfg.quality.tempMaxF, cfg.quality.tempMinF)
 
   /** ZERO-pass quality counters via the Observation API: row count and
     * per-column null counts are accumulated as the frame's NEXT action
@@ -43,9 +32,19 @@ object QualityOps {
     (fact.observe(obs, aggs.head, aggs.tail: _*), obs)
   }
 
+  /** Above `tempMaxF` or below `tempMinF`, over the `present` columns. */
+  private def outlier(cfg: PipelineConfig, present: String => Boolean = _ => true): Option[Column] = Seq(
+    if (present("temp_max_f")) Some(col("temp_max_f") > cfg.quality.tempMaxF) else None,
+    if (present("temp_min_f")) Some(col("temp_min_f") < cfg.quality.tempMinF) else None
+  ).flatten.reduceOption(_ || _)
+
+  /** A fact row missing any measured value. */
+  private val anyNull: Column = Seq("temp_max_f", "temp_min_f", "temp_avg_f", "energy_demand_gwh")
+    .map(col(_).isNull).reduce(_ || _)
+
   /** Single-pass quality report over the canonical fact table. */
   def report(fact: DataFrame, asOfDate: String,
-      tempMax: Double = DefaultTempMaxF, tempMin: Double = DefaultTempMinF): QualityReport = {
+      cfg: PipelineConfig = PipelineConfig.default): QualityReport = {
     val present = fact.columns.toSet
     val cols = Seq("date", "city", "temp_max_f", "temp_min_f", "temp_avg_f", "energy_demand_gwh")
       .filter(present.contains)
@@ -53,11 +52,8 @@ object QualityOps {
     // energy-only, or undated frame still gets a report instead of an
     // UNRESOLVED_COLUMN failure; one-sided temp frames count outliers
     // from whichever bound is available
-    val outlierPreds = Seq(
-      if (present("temp_max_f")) Some(col("temp_max_f") > tempMax) else None,
-      if (present("temp_min_f")) Some(col("temp_min_f") < tempMin) else None).flatten
-    val tempOutlier: Option[Column] = outlierPreds.reduceOption(_ || _)
-      .map(p => sum(p.cast("long")).as("temp_outliers"))
+    val tempOutlier: Option[Column] =
+      outlier(cfg, present).map(p => sum(p.cast("long")).as("temp_outliers"))
     val negEnergy: Option[Column] =
       if (present("energy_demand_gwh"))
         Some(sum((col("energy_demand_gwh") < 0).cast("long")).as("negative_energy"))
@@ -88,14 +84,10 @@ object QualityOps {
 
   /** X7/A4 — per-day quality time series: sums of indicator columns
     * (reference dashboards/app.py:453-468). */
-  def qualityTimeSeries(fact: DataFrame,
-      tempMax: Double = DefaultTempMaxF, tempMin: Double = DefaultTempMinF): DataFrame = {
-    val anyNull = Seq("temp_max_f", "temp_min_f", "temp_avg_f", "energy_demand_gwh")
-      .map(col(_).isNull).reduce(_ || _)
+  def qualityTimeSeries(fact: DataFrame, cfg: PipelineConfig = PipelineConfig.default): DataFrame =
     fact
       .withColumn("missing", anyNull.cast("int"))
-      .withColumn("temp_outlier",
-        ((col("temp_max_f") > tempMax) || (col("temp_min_f") < tempMin)).cast("int"))
+      .withColumn("temp_outlier", outlier(cfg).get.cast("int"))
       .withColumn("neg_energy", (col("energy_demand_gwh") < 0).cast("int"))
       .groupBy("date")
       .agg(
@@ -103,16 +95,9 @@ object QualityOps {
         sum("temp_outlier").as("temp_outliers"),
         sum("neg_energy").as("negative_energy"))
       .orderBy("date")
-  }
 
   /** P8 — the combined problem-rows filter (any-null ∨ outlier ∨
     * negative energy; reference dashboards/app.py:553-557). */
-  def problemRows(fact: DataFrame,
-      tempMax: Double = DefaultTempMaxF, tempMin: Double = DefaultTempMinF): DataFrame = {
-    val anyNull = Seq("temp_max_f", "temp_min_f", "temp_avg_f", "energy_demand_gwh")
-      .map(col(_).isNull).reduce(_ || _)
-    fact.filter(anyNull ||
-      (col("temp_max_f") > tempMax) || (col("temp_min_f") < tempMin) ||
-      (col("energy_demand_gwh") < 0))
-  }
+  def problemRows(fact: DataFrame, cfg: PipelineConfig = PipelineConfig.default): DataFrame =
+    fact.filter(anyNull || outlier(cfg).get || (col("energy_demand_gwh") < 0))
 }

@@ -68,7 +68,11 @@ object WeatherOps {
   /** City-keyed weather chain: the union of every city's flattened
     * readings → daily wide table on the date × city spine. */
   def process(flat: DataFrame, spine: DataFrame): DataFrame =
-    imputePerCity(PipelineOps.densify(pivotToWide(flat), spine))
-      .withColumn("temp_avg_f", rowwiseAvg(col("temp_max_f"), col("temp_min_f")))
-      .select("date", "temp_max_f", "temp_min_f", "temp_avg_f", "city")
+    weatherColumns(imputePerCity(PipelineOps.densify(pivotToWide(flat), spine)))
+
+  /** The weather table's columns from the imputed weather chain or the
+    * fact built on it; temp_avg_f is the NaN-skipping [[rowwiseAvg]]. */
+  def weatherColumns(df: DataFrame): DataFrame =
+    df.select(col("date"), col("temp_max_f"), col("temp_min_f"),
+      rowwiseAvg(col("temp_max_f"), col("temp_min_f")).as("temp_avg_f"), col("city"))
 }

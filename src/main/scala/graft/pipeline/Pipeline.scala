@@ -70,35 +70,28 @@ object Pipeline {
     * Degraded mode (reference src/pipeline.py:74-78): when the energy
     * side carries no values at all — every fetch failed or returned
     * empty — the run still lands a weather-only output instead of an
-    * empty inner join, and the report flags `weather_only`. The
-    * emptiness probe reads at most one non-null value (a `limit 1`
-    * job over the already-built energy plan). */
+    * empty inner join, and the report flags `weather_only`. The fact's
+    * report shows it (every energy value is NULL); both sides are dense
+    * on the same spine, so the output is the fact's weather columns. */
   def run(spark: SparkSession, rawByCity: Seq[(String, DataFrame, DataFrame)],
       mode: Mode, today: LocalDate, outDir: String,
       cfg: graft.config.PipelineConfig = graft.config.PipelineConfig.default): QualityReport = {
     val (start, end) = dateWindow(mode, today)
-    val energy = buildEnergy(rawByCity, start, end)
-    // densify pads absent days with NULL energy, so "no energy data"
-    // means no non-null value anywhere — same condition as the
-    // reference's all-fetches-returned-None
-    val energyEmpty = energy
-      .filter(org.apache.spark.sql.functions.col("energy_demand_gwh").isNotNull).isEmpty
-    val fact =
-      if (energyEmpty) buildWeather(rawByCity, start, end).persist()
-      else PipelineOps.deriveTempAvg(
-        PipelineOps.joinWeatherEnergy(buildWeather(rawByCity, start, end), energy)).persist()
-    // persist: the fact feeds three actions (report, parquet, CSV) —
-    // without it the whole raw→fact DAG recomputes each time
+    // persist: the report and the sinks all read the one fact
+    val fact = build(spark, rawByCity, start, end).persist()
     try {
       val report = QualityOps.report(fact, asOfDate = today.toString, cfg)
-        .copy(weather_only = energyEmpty)
-      if (energyEmpty) {
-        PipelineOps.writeCsv(fact, s"$outDir/weather_csv")
+      // the spine makes row_count > 0
+      if (report.null_counts("energy_demand_gwh") == report.row_count) {
+        val weather = WeatherOps.weatherColumns(fact)
+        val weatherReport = QualityOps.report(weather, asOfDate = today.toString, cfg)
+        PipelineOps.writeCsv(weather, s"$outDir/weather_csv")
+        weatherReport.copy(weather_only = true)
       } else {
         PipelineOps.writePartitioned(fact, s"$outDir/weather_energy_parquet")
         PipelineOps.writeCsv(fact, s"$outDir/weather_energy_csv")
+        report
       }
-      report
     } finally fact.unpersist()
   }
 }

@@ -100,12 +100,6 @@ object Sinks {
     configure(df.write.mode(SaveMode.Overwrite).format("parquet")).saveAsTable(table)
   }
 
-  /** S4 — raw-zone landing sink: persist raw payloads as-is (JSON
-    * lines) before any processing, for lineage/replayability (reference
-    * writes `weather_{city}_{range}.json`, src/data_fetcher.py:48-53). */
-  def writeRawJson(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).json(path)
-
   /** Format-parameterized sink: parquet and ORC are interchangeable
     * columnar formats in this engine (both get predicate pushdown,
     * column pruning, and partition pruning through Spark's file source;

@@ -2,11 +2,13 @@ package graft
 
 import java.time.LocalDate
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import graft.domain.{QualityReport, Schemas}
+import graft.operators.QualityOps
 import graft.pipeline.Pipeline
 import graft.sources.SyntheticData
 
@@ -87,6 +89,45 @@ class CityKeyedPipelineSpec extends AnyFunSuite with SparkFixture {
       latest_data_date = "2024-03-04",
       days_since_latest_data = 1,
       weather_only = false))
+  }
+
+  test("run: with every energy feed empty it lands the weather table and its report") {
+    val weatherOnly = fixture.map { case (city, noaa, _) => (city, noaa, eia()) }
+    val today = LocalDate.parse("2024-03-05")
+    val out = java.nio.file.Files.createTempDirectory("graft_weather_only").toString
+    val rep = Pipeline.run(spark, weatherOnly, Pipeline.Realtime, today, out)
+    val (start, end) = Pipeline.dateWindow(Pipeline.Realtime, today)
+    val weather = Pipeline.buildWeather(weatherOnly, start, end)
+    val csv = spark.read.option("header", "true").schema(weather.schema).csv(s"$out/weather_csv")
+    assert(spark.read.option("header", "true").csv(s"$out/weather_csv").columns.toSeq ==
+      Seq("date", "temp_max_f", "temp_min_f", "temp_avg_f", "city"))
+    assert(csv.orderBy("city", "date").collect().toSeq ==
+      weather.orderBy("city", "date").collect().toSeq)
+    assert(rep == QualityOps.report(weather, today.toString).copy(weather_only = true))
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$out/weather_energy_parquet")))
+  }
+
+  test("run: one fact per run, with no separate emptiness probe") {
+    val actions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        actions.add(funcName)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+        actions.add(funcName)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val out = java.nio.file.Files.createTempDirectory("graft_one_fact").toString
+      Pipeline.run(spark, fixture, Pipeline.Realtime, LocalDate.parse("2024-03-05"), out)
+      // the listener bus is asynchronous and ordered: once a later
+      // action's event arrives, every event of the run has arrived
+      spark.range(1).tail(1)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!actions.contains("tail") && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(actions.contains("tail"), "listener bus did not drain")
+      assert(actions.contains("collect")) // the quality report
+      assert(!actions.contains("isEmpty"), actions)
+    } finally spark.listenerManager.unregister(listener)
   }
 
   test("duplicate city names fail at build time, naming the duplicate") {

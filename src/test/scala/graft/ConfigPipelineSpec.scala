@@ -65,6 +65,28 @@ class ConfigPipelineSpec extends AnyFunSuite with SparkFixture {
     assert(partial.quality.tempMaxF == 110.0)
     assert(partial.cities == PipelineConfig.default.cities)
     assert(PipelineConfig.masked("key-abcdef") == "ke******ef")
+    // every scalar stays the string it was written as
+    val verbatim = PipelineConfig.fromYaml(
+      """noaa:
+        |  token: 0123
+        |  base_url: 'https://example.invalid/single'
+        |eia:
+        |  api_key: yes
+        |paths:
+        |  raw_data: ~
+        |  processed_data:
+        |""".stripMargin)
+    assert(verbatim.noaa.credential == "0123")
+    assert(verbatim.noaa.baseUrl == "https://example.invalid/single")
+    assert(verbatim.eia.credential == "yes")
+    assert(verbatim.eia.baseUrl == PipelineConfig.default.eia.baseUrl)
+    assert(verbatim.paths.rawData == "~")
+    assert(verbatim.paths.processedData == "")
+    assert(PipelineConfig.fromYaml("noaa:\n  token:\n").noaa.credential == "")
+    // no document, or a root that is not a mapping, is not a config
+    intercept[IllegalArgumentException](PipelineConfig.fromYaml(""))
+    intercept[IllegalArgumentException](PipelineConfig.fromYaml("- noaa: x\n- eia: y\n"))
+    intercept[IllegalArgumentException](PipelineConfig.fromYaml("cities:\n  - Chicago\n"))
   }
 
   test("unquoted '#' with no preceding whitespace is value text, not a comment (YAML rule)") {

@@ -5,8 +5,9 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Guards against regrowth of the session builders, function and rule
-  * installs and query maps this code base once had many copies of:
-  * each may appear only in its one home. */
+  * installs, query maps, config parsers, quality thresholds and engine
+  * conf readers this code base once had many copies of: each may
+  * appear only in its one home. */
 class SingleHomeSpec extends AnyFunSuite {
 
   private def sources(dir: String): Seq[Path] = {
@@ -42,6 +43,17 @@ class SingleHomeSpec extends AnyFunSuite {
     val modules = sources("src/main/scala/graft/queries")
     assert(modules.size >= 18)
     assert(modules.filter(p => twoMaps.findFirstIn(Files.readString(p)).nonEmpty).isEmpty)
+  }
+
+  test("one YAML parser and one home for the quality thresholds") {
+    Seq("MiniYaml", "DefaultTempMaxF", "DefaultTempMinF").foreach { name =>
+      assert(holders("src/main/scala", name).isEmpty, name)
+    }
+  }
+
+  test("the local engine conf is read only by GraftSession (and the CLI's master)") {
+    assert(holders("src/main/scala", "SPARK_GRAFT_CPUS") ==
+      Seq("src/main/scala/graft/GraftSession.scala", "src/main/scala/graft/cli/Main.scala"))
   }
 
   test("no spec builds its own session: all go through SparkFixture") {

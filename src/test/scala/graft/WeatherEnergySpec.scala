@@ -225,6 +225,16 @@ class WeatherEnergySpec extends AnyFunSuite with SparkFixture {
     assert(widths.minBy(_._2)._1 == 3.0)
   }
 
+  test("narrow-range warning: under 20°F of temp_avg_f spread warns, 20°F or an all-null column does not") {
+    val s = spark; import s.implicits._
+    def warns(avgs: Option[Double]*): Boolean =
+      Analytics.narrowRangeWarning(avgs.toDF("temp_avg_f"))
+    assert(warns(Some(50.0), Some(69.9), None))
+    assert(!warns(Some(50.0), Some(70.0)))
+    assert(!warns(Some(40.0), Some(75.0), Some(60.0)))
+    assert(!warns(None, None))
+  }
+
   test("degenerate OLS input (<2 rows) returns None") {
     val s = spark; import s.implicits._
     assert(Analytics.olsSummary(Seq((1.0, 1.0)).toDF("x", "y"), "x", "y").isEmpty)
