@@ -79,7 +79,7 @@ object Embeddings {
       offsets: Seq[Int] = Seq(1, 17, 97)): DataFrame = {
     // rank spine: two-phase bucket+offset rank (Spine.rankBy) — the
     // r15 verdict's one remaining row-scale unpartitioned window,
-    // replaced by per-bucket row_numbers whose offsets come from a
+    // replaced by per-bucket prefix counts whose offsets come from a
     // ≤4096-row bucket histogram; value-identical because vec ids are
     // unique and non-null (enforced by the filter), so no single task
     // ever materializes the whole embeddings table

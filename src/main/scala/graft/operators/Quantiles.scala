@@ -19,9 +19,9 @@ import graft.plans.Pin
   * bucket discipline as the token-budget cut (q113):
   *
   *   1. one aggregate computes per-group (min, max, n);
-  *   2. each row maps to a fixed-width value-range bucket — a MONOTONE
-  *      function of the value, so bucket order agrees with value
-  *      order; a second aggregate builds the per-(group, bucket)
+  *   2. each row maps to a fixed-width value-range bucket
+  *      ([[Spine.bucketOf]], monotone in the value — see [[Spine]]);
+  *      a second aggregate builds the per-(group, bucket)
   *      histogram (≤ |groups|·nBuckets rows — driver-scale);
   *   3. cumulative counts over that tiny frame locate, for each target
   *      rank k = ceil(q·n), the ONE bucket containing the k-th
@@ -89,12 +89,8 @@ object Quantiles {
       if (groupCols.isEmpty) base.crossJoin(broadcast(extra))
       else base.join(broadcast(extra), groupCols)
 
-    // monotone value-range bucket; degenerate (lo == hi) groups and the
-    // v == hi edge both clamp into the top bucket
     val bucketed = withStats(data, stats).withColumn("__bucket",
-      when(col("__hi") === col("__lo"), lit(0)).otherwise(
-        least(floor((v - col("__lo")) / (col("__hi") - col("__lo")) * nBuckets)
-          .cast("int"), lit(nBuckets - 1))))
+      Spine.bucketOf(v, col("__lo"), col("__hi"), nBuckets))
 
     // phase-2/3 frames are ≤ |groups|·nBuckets rows: the windows below
     // are the legitimate driver-scale kind (q113 discipline). Per-bucket
@@ -245,17 +241,13 @@ object Quantiles {
     * q·W — the statistic behind "the median dollar" vs "the median
     * order" (each row votes with `weightCol`, not once).
     *
-    * Scale shape (the StatTests value-histogram discipline): the
-    * original formulation ran a per-group ordered window over ROWS,
-    * so a low-cardinality group column (q175: 3 return flags over
-    * lineitem) funneled the whole table through 3 sort partitions —
-    * measured 68 s at derived sf10. Instead: (1) ONE map-side-
-    * combinable aggregate to the per-(group, value) weight histogram;
-    * (2) two-phase cumulative weight over that histogram — per-group
-    * value-range buckets carry cross-bucket offsets through a window
-    * of ≤`WqBuckets` aggregated rows per group, and the within-bucket
-    * cumulative window is PARTITIONED BY (group, bucket). Nothing
-    * row-scale passes through a near-single-partition sort.
+    * Scale shape: the original formulation ran a per-group ordered
+    * window over ROWS, so a low-cardinality group column (q175: 3
+    * return flags over lineitem) funneled the whole table through 3
+    * sort partitions — measured 68 s at derived sf10. Instead: ONE
+    * map-side-combinable aggregate to the per-(group, value) weight
+    * histogram, then its inclusive cumulative weight per group from
+    * [[Spine.prefixSums]] (see [[Spine]] for the two-phase bound).
     *
     * The selected VALUE is provably identical to the row-window
     * formulation: a row-level prefix inside value v's tie block
@@ -263,21 +255,10 @@ object Quantiles {
     * prefix), so the smallest qualifying value is tie-order
     * independent.
     *
-    * @param tieCols DEPRECATED (r10, ignored): it only ever
-    *   disambiguated the internal row-level cumsum of the old
-    *   formulation, never the output; kept so existing call sites
-    *   compile. Will be removed.
-    *
-    * Type preservation (r10): the histogram groups by the NATIVE
-    * value column, and the double cast exists only as a shadow key
-    * for the range-bucket arithmetic — so `value` keeps the input
-    * column's type and bigint/decimal values beyond 2^53 stay exact
-    * (ordering by the native type is the same total order the double
-    * shadow approximates, and ties were already collapsed by the
-    * group-by, so the bucket boundary can only split DISTINCT values
-    * whose double images collide — in which case they land in the
-    * same bucket and the within-bucket native-order window decides
-    * exactly).
+    * Type preservation: the histogram groups by the NATIVE value
+    * column, and Spine orders within a bucket by it (the double cast
+    * only places buckets) — so `value` keeps the input column's type
+    * and bigint/decimal values beyond 2^53 stay exact.
     *
     * Determinism across engines: when weights are integer-valued (the
     * common case — counts, quantities), per-value, per-bucket, and
@@ -286,60 +267,26 @@ object Quantiles {
     * supported but the boundary is then subject to float accumulation
     * — document or round weights first. */
   def weightedQuantiles(df: DataFrame, valueCol: String, weightCol: String,
-      qs: Seq[Double], groupCols: Seq[String], tieCols: Seq[String] = Nil): DataFrame = {
+      qs: Seq[Double], groupCols: Seq[String]): DataFrame = {
     require(qs.nonEmpty && qs.forall(q => q > 0 && q <= 1), "each q must be in (0, 1]")
     val spark = df.sparkSession
     val g = groupCols.map(col)
     val v = col(valueCol)
     val wt = col(weightCol).cast("double")
-    val data = df.filter(v.isNotNull && wt.isNotNull && wt > 0)
-    // (1) per-(group, value) weight histogram — collapses tie rows;
-    // checkpoint so the row-scale aggregate beneath runs once
-    val hist0 = data
+    // per-(group, value) weight histogram — collapses tie rows; the
+    // prefix INCLUDES the current value's whole tie block
+    val hist = df.filter(v.isNotNull && wt.isNotNull && wt > 0)
       .groupBy((g :+ v.as("__v")): _*)
       .agg(sum(wt).as("__w"))
-      .withColumn("__vd", col("__v").cast("double"))
-      .transform(Pin.lazily)
-    val stats = hist0.groupBy(g: _*)
-      .agg(min("__vd").as("__lo"), max("__vd").as("__hi"), sum("__w").as("__totw"))
-    def joinG(l: DataFrame, r: DataFrame): DataFrame =
-      if (groupCols.isEmpty) l.crossJoin(broadcast(r))
-      else l.join(broadcast(r), groupCols)
-    // (2a) monotone value-range bucket within the group's [lo, hi]
-    val bucketed = joinG(hist0, stats)
-      .withColumn("__qb",
-        when(col("__hi") === col("__lo"), lit(0)).otherwise(
-          least(floor((col("__vd") - col("__lo")) / (col("__hi") - col("__lo")) * WqBuckets)
-            .cast("int"), lit(WqBuckets - 1))))
-      .drop("__lo", "__hi", "__vd")
-    // (2b) cross-bucket offsets: ≤ WqBuckets aggregated rows per group
-    // through a PER-GROUP window
-    val offsets = bucketed.groupBy((g :+ col("__qb")): _*)
-      .agg(sum("__w").as("__bw"))
-      .withColumn("__boffset", coalesce(sum("__bw").over(
-        Window.partitionBy(g: _*).orderBy("__qb")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0.0)))
-      .select((g :+ col("__qb") :+ col("__boffset")): _*)
-    val joinCols = groupCols :+ "__qb"
-    // (2c) within-bucket cumulative, partitioned by (group, bucket);
-    // cumw INCLUDES the current value's whole tie block
-    val cum = bucketed.join(broadcast(offsets), joinCols)
-      .withColumn("__cumw", col("__boffset") + sum("__w").over(
-        Window.partitionBy((g :+ col("__qb")): _*).orderBy("__v")
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    val cum = Spine.prefixSums(hist, groupCols, col("__v"), Seq("__w"), inclusive = true)
     import spark.implicits._
     val qDf = qs.toDF("q")
     cum.crossJoin(broadcast(qDf))
-      .filter(col("__cumw") >= col("q") * col("__totw"))
+      .filter(col("__w_prefix") >= col("q") * col("__w_total"))
       .groupBy((g :+ col("q")): _*)
-      .agg(min(col("__v")).as("value"), first(col("__totw")).as("total_weight"))
+      .agg(min(col("__v")).as("value"), first(col("__w_total")).as("total_weight"))
       .orderBy((g :+ col("q")): _*)
   }
-
-  /** Width of the value-range bucketing in [[weightedQuantiles]]'
-    * two-phase cumulative: the per-group offset window runs over at
-    * most this many aggregated rows. */
-  private val WqBuckets = 4096
 
   /** MERGEABLE fixed-width histogram sketch over an integer (cents)
     * column — the quantile analog of [[graft.operators.Hll]]'s

@@ -3,13 +3,14 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.plans.Pin
 
-/** Two-phase ordered-spine composition — the shared mechanics behind
-  * every "cumulative/rank over an ordered frame" site that must NOT
-  * funnel row-scale data through one unpartitioned window (the
-  * StatTests.valueHist / q127 bucket discipline, factored out so the
-  * r16 rewrites of the last two row-scale windows share one audited
-  * implementation).
+/** Two-phase ordered prefix sums — the one home of the bucket
+  * discipline behind every "cumulative/rank over an ordered frame"
+  * site that must NOT funnel row-scale data through one unpartitioned
+  * (or per-group) ordering window: [[rankBy]], the `StatTests` rank
+  * histograms, `Quantiles.weightedQuantiles`, and the value-range
+  * buckets of `Quantiles.exactQuantiles` and `Skyline`.
   *
   * The key fact both phases rely on: [[bucketOf]] is MONOTONE
   * NON-DECREASING in the order key (floor of an affine map; IEEE-754
@@ -17,64 +18,98 @@ import org.apache.spark.sql.functions._
   * bucket order agrees with value order — every value in bucket b is
   * strictly smaller than every value in bucket b+1, and equal values
   * share a bucket. A prefix aggregate therefore composes EXACTLY:
-  * cross-bucket carry (one unpartitioned window over ≤ [[Buckets]]
-  * aggregated rows — constant-bounded) + within-bucket window
-  * PARTITIONED BY bucket. The widest sort a row-scale frame pays is
-  * one bucket's slice of the value RANGE (~n/Buckets under uniform
-  * ranges; range skew concentrates values in fewer buckets and is the
-  * residual, documented bound).
+  * cross-bucket carry (one window over ≤ [[Buckets]] aggregated rows
+  * per group — constant-bounded) + within-bucket window PARTITIONED BY
+  * (group, bucket). The widest sort a row-scale frame pays is one
+  * bucket's slice of the value RANGE (~n/Buckets under uniform ranges;
+  * range skew concentrates values in fewer buckets and is the
+  * residual, documented bound). A NaN key makes the range NaN and puts
+  * every row of its group in bucket 0: still exact, but unpartitioned.
   *
   * Order keys are bucketed through `cast("double")`: the cast is
   * monotone (non-strict) for every numeric type, and within-bucket
   * windows order by the ORIGINAL column, so double rounding (e.g.
   * longs past 2⁵³ colliding into one bucket) never costs exactness —
-  * only bucket balance. Callers with non-numeric keys must map them
-  * to a numeric proxy first (none exist today: vec ids, prices,
-  * durations are all numeric).
+  * only bucket balance. A non-numeric string key fails the cast
+  * (`CAST_INVALID_INPUT` under ANSI mode) rather than being dropped;
+  * callers with non-numeric keys must map them to a numeric proxy
+  * first. Rows with a null key or a null group are dropped: callers
+  * filter them out first.
   */
 object Spine {
 
-  /** Width of the value-range bucketing: the only unpartitioned
-    * window runs over ≤ this many aggregated rows. */
+  /** Width of the value-range bucketing: the carry window runs over
+    * ≤ this many aggregated rows per group. */
   val Buckets = 4096
 
-  /** Monotone value-range bucket of `v` in [lo, hi] — clamps the
-    * degenerate lo == hi frame and the v == hi edge into band 0 /
-    * the top band (the StatTests/exactQuantiles convention). */
-  def bucketOf(v: Column, lo: Column, hi: Column): Column =
+  /** Monotone value-range bucket of `v` in [lo, hi] among `n` — clamps
+    * the degenerate lo == hi frame into band 0 and the v == hi edge
+    * into the top band. */
+  def bucketOf(v: Column, lo: Column, hi: Column, n: Int = Buckets): Column =
     when(hi === lo, lit(0)).otherwise(
-      least(floor((v - lo) / (hi - lo) * Buckets).cast("int"),
-        lit(Buckets - 1)))
+      least(floor((v - lo) / (hi - lo) * n).cast("int"), lit(n - 1)))
 
   /** `df` with an order-consistent `__qb` bucket over `orderKey`
-    * (numeric): boundaries from the frame's own min/max (one tiny
-    * aggregate, broadcast). Rows with a null key get a null bucket —
-    * callers must filter nulls out first (all current callers do). */
-  def bucketed(df: DataFrame, orderKey: Column): DataFrame = {
-    val stats = df.agg(min(orderKey.cast("double")).as("__lo"),
-      max(orderKey.cast("double")).as("__hi"))
-    df.crossJoin(broadcast(stats))
-      .withColumn("__qb", bucketOf(orderKey.cast("double"), col("__lo"), col("__hi")))
+    * (numeric): boundaries from each `groupCols` group's own min/max
+    * (one tiny aggregate, broadcast). */
+  def bucketed(df: DataFrame, orderKey: Column, groupCols: Seq[String] = Nil): DataFrame = {
+    val kd = orderKey.cast("double")
+    val stats = df.groupBy(groupCols.map(col): _*)
+      .agg(min(kd).as("__lo"), max(kd).as("__hi"))
+    (if (groupCols.isEmpty) df.crossJoin(broadcast(stats))
+      else df.join(broadcast(stats), groupCols))
+      .withColumn("__qb", bucketOf(kd, col("__lo"), col("__hi")))
       .drop("__lo", "__hi")
   }
 
-  /** Global contiguous 1-based rank (as `rankName`, LongType) over
-    * `df` ordered by `orderKey` — value-identical to
-    * `row_number().over(Window.orderBy(orderKey))` when the key is
-    * unique and non-null (ties would be nondeterministic in BOTH
-    * forms; null keys would be dropped here vs ranked first there —
-    * callers assert/ensure non-null). Two-phase: per-bucket counts →
-    * prefix offsets through the one constant-bounded unpartitioned
-    * window, then a within-bucket row_number partitioned by bucket. */
-  def rankBy(df: DataFrame, orderKey: Column, rankName: String): DataFrame = {
-    val b = bucketed(df, orderKey)
-    val offs = b.groupBy("__qb").agg(count(lit(1)).as("__bn"))
-      .withColumn("__boff", coalesce(sum("__bn").over(
-        Window.orderBy("__qb").rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("__qb", "__boff")
-    b.join(broadcast(offs), Seq("__qb"))
-      .withColumn(rankName, col("__boff") +
-        row_number().over(Window.partitionBy("__qb").orderBy(orderKey)))
-      .drop("__qb", "__boff")
+  /** `df` plus, for each column `c` of `sumCols`, `c_prefix`: the sum
+    * of `c` over the rows of the same `groupCols` group ordered before
+    * the row by `orderKey` (`inclusive`: up to and including it), and
+    * `c_total`: the sum over the whole group. Each sum keeps its type
+    * (a long sum stays long, a double sum double, and doubles add in
+    * the order carry + within-bucket). Keys must be unique per group
+    * for the result to be deterministic, as for the single window
+    * `sum(c).over(Window.partitionBy(groupCols).orderBy(orderKey)
+    * .rowsBetween(...))` it equals.
+    *
+    * `df` is pinned once: the range stats, the bucket sums and the
+    * within-bucket window all read it. The bucket-sums frame is
+    * broadcast when there are no groups (≤ [[Buckets]] rows); with
+    * groups it joins on (groups, bucket), the key the within-bucket
+    * window is partitioned by, so that exchange serves both. */
+  def prefixSums(df: DataFrame, groupCols: Seq[String], orderKey: Column,
+      sumCols: Seq[String], inclusive: Boolean): DataFrame = {
+    require(sumCols.nonEmpty, "prefixSums needs a column to sum")
+    val g = groupCols.map(col)
+    val b = bucketed(Pin.lazily(df), orderKey, groupCols)
+    val before = Window.partitionBy(g: _*).orderBy("__qb")
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val bucketAggs = sumCols.map(c => sum(c).as(s"__b_$c"))
+    val bucketSums = b.groupBy((g :+ col("__qb")): _*)
+      .agg(bucketAggs.head, bucketAggs.tail: _*)
+    val offsets = bucketSums.select((g :+ col("__qb")) ++ sumCols.flatMap(c => Seq(
+      coalesce(sum(s"__b_$c").over(before), lit(0)).as(s"__off_$c"),
+      sum(s"__b_$c").over(Window.partitionBy(g: _*)).as(s"${c}_total"))): _*)
+    val keys = groupCols :+ "__qb"
+    val joined =
+      if (groupCols.isEmpty) b.join(broadcast(offsets), keys) else b.join(offsets, keys)
+    val within = Window.partitionBy(keys.map(col): _*).orderBy(orderKey)
+      .rowsBetween(Window.unboundedPreceding, if (inclusive) Window.currentRow else -1)
+    sumCols.foldLeft(joined) { (d, c) =>
+      d.withColumn(s"${c}_prefix",
+        col(s"__off_$c") + coalesce(sum(c).over(within), lit(0)))
+    }.drop("__qb" +: sumCols.map(c => s"__off_$c"): _*)
   }
+
+  /** Global contiguous 1-based rank (as `rankName`, LongType) over
+    * `df` ordered by `orderKey`: the inclusive prefix count.
+    * Value-identical to `row_number().over(Window.orderBy(orderKey))`
+    * when the key is unique and non-null (ties would be
+    * nondeterministic in BOTH forms; null keys are dropped here vs
+    * ranked first there — callers ensure non-null). */
+  def rankBy(df: DataFrame, orderKey: Column, rankName: String): DataFrame =
+    prefixSums(df.withColumn("__one", lit(1L)), Nil, orderKey, Seq("__one"),
+        inclusive = true)
+      .withColumnRenamed("__one_prefix", rankName)
+      .drop("__one", "__one_total")
 }

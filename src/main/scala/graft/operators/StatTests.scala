@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.plans.Pin
 
@@ -18,23 +17,12 @@ import graft.plans.Pin
   *   avgrank(v) = (Σ_{v'<v} cnt(v')) + (cnt(v)+1)/2
   *
   * — one map-side-combinable groupBy to the distinct-value histogram,
-  * then a TWO-PHASE cumulative count over it (the q127 bucket
-  * discipline): each distinct value maps to one of `HistBuckets`
-  * monotone value-range buckets; per-bucket totals (≤ HistBuckets
-  * rows — constant-bounded) carry the cross-bucket offsets through
-  * the only unpartitioned window, and the within-bucket cumulative
-  * window is PARTITIONED BY bucket. A continuous column whose
-  * distinct count ≈ row count therefore never funnels through a
-  * single ordering spine — the widest window partition sorts one
-  * bucket's slice of the value RANGE (~distinct/HistBuckets values
-  * under uniform ranges; range skew concentrates values in fewer
-  * buckets and is the residual, documented bound). The result is
-  * EXACT — bucket order agrees with value order, so the composed
-  * cumulative count is identical to the single-window one. Then
-  * cell-frame arithmetic or an equi-join back on the value. Row-level
-  * data is touched by exactly one aggregate (and one join where
-  * per-row ranks are genuinely needed); nothing row-scale ever passes
-  * through a single-partition window.
+  * then the cumulative count over it through [[Spine.prefixSums]]
+  * (exact, and never a row-scale single-partition sort — see [[Spine]]
+  * for the two-phase bucket discipline and its bound). Then cell-frame
+  * arithmetic or an equi-join back on the value. Row-level data is
+  * touched by exactly one aggregate (and one join where per-row ranks
+  * are genuinely needed).
   *
   * Exactness: counts are integers, average ranks are halves — exact
   * in double; rank sums Σ cnt·avgrank stay below 2⁵³ for N into the
@@ -43,55 +31,21 @@ import graft.plans.Pin
   * are exact for tie blocks to ~2M rows. */
 object StatTests {
 
-  /** Width of the value-range bucketing in the two-phase cumulative
-    * count: the only unpartitioned window in this file runs over
-    * ≤ this many aggregated rows. */
-  private val HistBuckets = 4096
-
   /** Max histogram rows worth broadcasting in the rank-decoration
     * joins: 64k (v, avgrank) rows ≈ 1.5 MB framed — far under any
     * broadcast limit, and a histogram that small means the column has
     * a bounded domain, so the bound holds at every scale factor. */
   private val BroadcastHistMaxRows = 65536L
 
-  /** Monotone value-range bucket of `v` in [lo, hi] — clamps the
-    * degenerate lo == hi frame and the v == hi edge into band 0 /
-    * the top band (the exactQuantiles convention). */
-  private def bucketOf(v: Column, lo: Column, hi: Column): Column =
-    when(hi === lo, lit(0)).otherwise(
-      least(floor((v - lo) / (hi - lo) * HistBuckets).cast("int"),
-        lit(HistBuckets - 1)))
-
   /** (v, cnt, avgrank) per distinct value of `valueCol` (null rows
     * dropped), plus the scalars every rank test needs: n (total rows)
-    * and tiesum = Σ(cnt³−cnt). Cumulative counts use the two-phase
-    * bucket composition described in the object scaladoc — exact, and
-    * never a row-scale single-partition sort. */
+    * and tiesum = Σ(cnt³−cnt). */
   private def valueHist(df: DataFrame, valueCol: String): (DataFrame, DataFrame) = {
-    // the distinct-value frame feeds the range stats, the per-bucket
-    // offsets, and the within-bucket window — checkpoint so the
-    // row-scale aggregate beneath it runs once
     val hist0 = df.select(col(valueCol).cast("double").as("v"))
       .where(col("v").isNotNull)
       .groupBy("v").agg(count(lit(1)).as("cnt"))
-      .transform(Pin.lazily)
-    val stats = hist0.agg(min("v").as("__lo"), max("v").as("__hi"))
-    val bucketed = hist0.crossJoin(broadcast(stats))
-      .withColumn("__qb", bucketOf(col("v"), col("__lo"), col("__hi")))
-      .drop("__lo", "__hi")
-    // cross-bucket offsets: ≤ HistBuckets aggregated rows through the
-    // one unpartitioned (constant-bounded) window
-    val offsets = bucketed.groupBy("__qb").agg(sum("cnt").as("__bcnt"))
-      .withColumn("__boffset", coalesce(sum("__bcnt").over(
-        Window.orderBy("__qb").rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("__qb", "__boffset")
-    val hist = bucketed.join(broadcast(offsets), Seq("__qb"))
-      .withColumn("__cumBefore", col("__boffset") +
-        coalesce(sum("cnt").over(
-          Window.partitionBy("__qb").orderBy("v")
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("avgrank", col("__cumBefore") + (col("cnt") + 1) / 2.0)
-      .drop("__qb")
+    val hist = Spine.prefixSums(hist0, Nil, col("v"), Seq("cnt"), inclusive = false)
+      .withColumn("avgrank", col("cnt_prefix") + (col("cnt") + 1) / 2.0)
       .transform(Pin.lazily)
     val scalars = hist.agg(
       sum("cnt").cast("double").as("__n"),
@@ -199,12 +153,11 @@ object StatTests {
     //    calls each re-aggregated the row frame and materialized two
     //    checkpoints — 4 columns cost 4 row-scale shuffles, 8
     //    checkpoints and 4 window passes. Exploding to (ci, v) rows and
-    //    composing the SAME two-phase bucket windows partitioned by
-    //    (ci[, __qb]) computes every column's histogram in one shuffle
-    //    whose total bytes equal the four separate ones, one window
-    //    pass, two checkpoints. Per-(column, value) cnt/avgrank are
-    //    unchanged: each column's cumulative windows see exactly its
-    //    own rows (ci in every partition key).
+    //    taking the prefix counts with ci as the group computes every
+    //    column's histogram in one shuffle whose total bytes equal the
+    //    four separate ones, one window pass, two checkpoints.
+    //    Per-(column, value) cnt/avgrank are unchanged: each column's
+    //    cumulative windows see exactly its own rows.
     //
     // 2. Size-aware decoration joins: each fold join re-shuffles the
     //    FULL row frame on a different key, and the checkpointed
@@ -222,23 +175,8 @@ object StatTests {
     val longFmt = data.select(posexplode(
       array(cols.map(c => col(c)): _*)).as(Seq("ci", "v")))
     val hist0 = longFmt.groupBy("ci", "v").agg(count(lit(1)).as("cnt"))
-      .transform(Pin.lazily)
-    val stats = hist0.groupBy("ci").agg(min("v").as("__lo"), max("v").as("__hi"))
-    val bucketed = hist0.join(broadcast(stats), Seq("ci"))
-      .withColumn("__qb", bucketOf(col("v"), col("__lo"), col("__hi")))
-      .drop("__lo", "__hi")
-    val offsets = bucketed.groupBy("ci", "__qb").agg(sum("cnt").as("__bcnt"))
-      .withColumn("__boffset", coalesce(sum("__bcnt").over(
-        Window.partitionBy("ci").orderBy("__qb")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("ci", "__qb", "__boffset")
-    val hist = bucketed.join(broadcast(offsets), Seq("ci", "__qb"))
-      .withColumn("__cumBefore", col("__boffset") +
-        coalesce(sum("cnt").over(
-          Window.partitionBy("ci", "__qb").orderBy("v")
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("avgrank", col("__cumBefore") + (col("cnt") + 1) / 2.0)
-      .select("ci", "v", "avgrank")
+    val hist = Spine.prefixSums(hist0, Seq("ci"), col("v"), Seq("cnt"), inclusive = false)
+      .select(col("ci"), col("v"), (col("cnt_prefix") + (col("cnt") + 1) / 2.0).as("avgrank"))
       .transform(Pin.lazily)
     val histSizes = hist.groupBy("ci").count().collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
@@ -265,51 +203,25 @@ object StatTests {
     * heavy-tailed features uniform without fitting anything.
     *
     * Scale shape: the same value-histogram primitive as the rank
-    * tests, per group — one (group, value) cell aggregate, then the
-    * two-phase bucket composition WITHIN each group: per-(group,
-    * bucket) totals carry offsets and per-group totals through
-    * windows over the |groups|·HistBuckets aggregate frame, and the
-    * within-bucket cumulative window is partitioned by (group,
-    * bucket) — a group whose distinct count ≈ its row count never
-    * sorts through one per-group spine. One equi-join back on
-    * (group, value) decorates rows. No row-scale rank window
-    * anywhere. Determinism: avgrank is exact halves, /n is the
-    * single final division, rounded at 6. */
+    * tests, per group — one (group, value) cell aggregate, its
+    * per-group prefix counts and totals from [[Spine.prefixSums]] (a
+    * group whose distinct count ≈ its row count never sorts through
+    * one per-group spine), and one equi-join back on (group, value) to
+    * decorate rows. No row-scale rank window anywhere. Determinism:
+    * avgrank is exact halves, /n is the single final division,
+    * rounded at 6. */
   def cdfTransform(df: DataFrame, valueCol: String, groupCols: Seq[String],
       keepCols: Seq[String]): DataFrame = {
     val g = groupCols.map(col)
     val v = col(valueCol).cast("double")
     val data = df.filter(v.isNotNull)
       .select((keepCols.map(col) ++ g) :+ v.as("__v"): _*)
-    // the cell frame feeds the per-group range stats, the bucket
-    // offsets, and the within-bucket window — checkpoint so the
-    // row-scale aggregate runs once
     val cells = data.groupBy((g :+ col("__v")): _*)
       .agg(count(lit(1)).as("__cnt"))
-      .transform(Pin.lazily)
-    val stats = cells.groupBy(g: _*)
-      .agg(min("__v").as("__lo"), max("__v").as("__hi"))
-    val withStats =
-      if (groupCols.isEmpty) cells.crossJoin(broadcast(stats))
-      else cells.join(broadcast(stats), groupCols)
-    val bucketed = withStats
-      .withColumn("__qb", bucketOf(col("__v"), col("__lo"), col("__hi")))
-      .drop("__lo", "__hi")
-    // offsets frame: |groups|·HistBuckets aggregated rows; its windows
-    // are per-group over ≤ HistBuckets rows
-    val wOff = Window.partitionBy(g: _*).orderBy("__qb")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = bucketed.groupBy((g :+ col("__qb")): _*)
-      .agg(sum("__cnt").as("__bcnt"))
-      .withColumn("__boffset", coalesce(sum("__bcnt").over(wOff), lit(0L)))
-      .withColumn("__n", sum("__bcnt").over(Window.partitionBy(g: _*)))
-      .select((g ++ Seq(col("__qb"), col("__boffset"), col("__n"))): _*)
-    val wIn = Window.partitionBy((g :+ col("__qb")): _*).orderBy("__v")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val hist = bucketed.join(offsets, groupCols :+ "__qb")
-      .withColumn("__avgrank", col("__boffset") +
-        coalesce(sum("__cnt").over(wIn), lit(0L)) + (col("__cnt") + 1) / 2.0)
-      .select((g ++ Seq(col("__v"), col("__avgrank"), col("__n"))): _*)
+    val hist = Spine.prefixSums(cells, groupCols, col("__v"), Seq("__cnt"), inclusive = false)
+      .select((g ++ Seq(col("__v"),
+        (col("__cnt_prefix") + (col("__cnt") + 1) / 2.0).as("__avgrank"),
+        col("__cnt_total").as("__n"))): _*)
     data.join(hist, groupCols :+ "__v")
       .select((keepCols.map(col) ++ g) ++ Seq(col("__v").as(valueCol),
         round(col("__avgrank") / col("__n"), 6).as("cdf")): _*)
@@ -321,13 +233,13 @@ object StatTests {
     * D = max over pooled distinct values of |F̂_A(v) − F̂_B(v)|.
     *
     * Scale + exactness shape: one (value → per-sample count) cell
-    * aggregate, the two-phase bucketed INCLUSIVE cumulative for both
-    * samples at once, then D's numerator as max |cumA·n_B − cumB·n_A|
-    * — all-INTEGER comparison (no float CDF ties; int64-safe to
-    * ~3·10⁹ rows per sample, the skewReport bound), divided by
-    * n_A·n_B exactly once at the end. The reported location is the
-    * SMALLEST value attaining the max (total tie-break → hashable).
-    * `lambda` is the asymptotic Kolmogorov scaling
+    * aggregate, the INCLUSIVE cumulative for both samples at once
+    * ([[Spine.prefixSums]]), then D's numerator as
+    * max |cumA·n_B − cumB·n_A| — all-INTEGER comparison (no float CDF
+    * ties; int64-safe to ~3·10⁹ rows per sample, the skewReport
+    * bound), divided by n_A·n_B exactly once at the end. The reported
+    * location is the SMALLEST value attaining the max (total tie-break
+    * → hashable). `lambda` is the asymptotic Kolmogorov scaling
     * (√n_e + 0.12 + 0.11/√n_e)·D (Stephens 1970) — emitted instead
     * of the p-value because it needs only sqrt/· (IEEE
     * correctly-rounded, bit-identical cross-engine); exp series are
@@ -336,40 +248,18 @@ object StatTests {
       levelA: String, levelB: String): DataFrame = {
     val data = df.select(col(groupCol).as("g"), col(valueCol).cast("double").as("v"))
       .where(col("v").isNotNull && col("g").isin(levelA, levelB))
-    // the cell frame feeds range stats, bucket offsets, and the
-    // within-bucket windows — checkpoint so the row-scale aggregate
-    // runs once
     val cells = data.groupBy("v").agg(
         sum(when(col("g") === levelA, 1L).otherwise(0L)).as("ca"),
         sum(when(col("g") === levelB, 1L).otherwise(0L)).as("cb"))
-      .transform(Pin.lazily)
-    val stats = cells.agg(min("v").as("__lo"), max("v").as("__hi"),
-      sum("ca").as("__na"), sum("cb").as("__nb"))
-    val bucketed = cells.crossJoin(broadcast(stats))
-      .withColumn("__qb", bucketOf(col("v"), col("__lo"), col("__hi")))
-    val wOff = Window.orderBy("__qb").rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = bucketed.groupBy("__qb")
-      .agg(sum("ca").as("__ba"), sum("cb").as("__bb"))
-      .withColumn("__offa", coalesce(sum("__ba").over(wOff), lit(0L)))
-      .withColumn("__offb", coalesce(sum("__bb").over(wOff), lit(0L)))
-      .select("__qb", "__offa", "__offb")
-    val wIn = Window.partitionBy("__qb").orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val ne = (col("__na") * col("__nb")) / (col("__na") + col("__nb")).cast("double")
-    bucketed.join(broadcast(offsets), Seq("__qb"))
-      .withColumn("__cuma", col("__offa") + sum("ca").over(wIn))
-      .withColumn("__cumb", col("__offb") + sum("cb").over(wIn))
-      .withColumn("__dnum",
-        abs(col("__cuma") * col("__nb") - col("__cumb") * col("__na")))
+    val na = col("ca_total"); val nb = col("cb_total")
+    val ne = (na * nb) / (na + nb).cast("double")
+    val d = col("__dnum").cast("double") / (na * nb)
+    Spine.prefixSums(cells, Nil, col("v"), Seq("ca", "cb"), inclusive = true)
+      .withColumn("__dnum", abs(col("ca_prefix") * nb - col("cb_prefix") * na))
       .orderBy(col("__dnum").desc, col("v"))
       .limit(1)
-      .select(
-        col("__na").as("n_a"), col("__nb").as("n_b"),
-        col("v").as("at_value"),
-        round(col("__dnum").cast("double") / (col("__na") * col("__nb")), 6)
-          .as("ks_d"),
-        round((sqrt(ne) + lit(0.12) + lit(0.11) / sqrt(ne)) *
-          (col("__dnum").cast("double") / (col("__na") * col("__nb"))), 4)
-          .as("lambda"))
+      .select(na.as("n_a"), nb.as("n_b"), col("v").as("at_value"),
+        round(d, 6).as("ks_d"),
+        round((sqrt(ne) + lit(0.12) + lit(0.11) / sqrt(ne)) * d, 4).as("lambda"))
   }
 }

@@ -33,7 +33,9 @@ import org.apache.spark.sql.Dataset
   * of the spill is a local write+read, never a recompute or a shuffle.
   */
 object Pin {
-  private def disabled: Boolean =
+  /** True under `SPARK_GRAFT_NO_CHECKPOINT=1`, the plan-audit mode:
+    * the one reader of that variable. */
+  private[graft] def disabled: Boolean =
     sys.env.get("SPARK_GRAFT_NO_CHECKPOINT").contains("1")
 
   /** Eager pin — `localCheckpoint(true)`, the `localCheckpoint()` default. */

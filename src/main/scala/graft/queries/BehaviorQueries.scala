@@ -68,8 +68,7 @@ object BehaviorQueries {
   def q175WeightedQuantiles(s: SparkSession, d: String): DataFrame =
     Quantiles.weightedQuantiles(Tables.lineitem(s, d),
       valueCol = "l_extendedprice", weightCol = "l_quantity",
-      qs = Seq(0.5, 0.9), groupCols = Seq("l_returnflag"),
-      tieCols = Seq("l_orderkey", "l_linenumber"))
+      qs = Seq(0.5, 0.9), groupCols = Seq("l_returnflag"))
 
   /** Weekly cohort retention matrix: share of each first-active-week
     * cohort active again at each week offset — the activity twin of

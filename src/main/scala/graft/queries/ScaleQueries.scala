@@ -919,12 +919,12 @@ object ScaleQueries {
         // the require validated
         .transform(graft.plans.Pin.eager)
     } finally {
-      // plan-audit mode (plans.sh sets SPARK_GRAFT_NO_CHECKPOINT=1;
+      // plan-audit mode (Pin.disabled, which plans.sh turns on;
       // Verify/Bench never do): Pin is identity there, so the dumped
       // plan would re-plan AFTER this restore and show re-introduced
       // sorts the require already proved absent — keep the conf set
       // for the audit session so PLANS.md carries the real plan
-      if (!sys.env.get("SPARK_GRAFT_NO_CHECKPOINT").contains("1")) {
+      if (!graft.plans.Pin.disabled) {
         prevOrdering match {
           case Some(v) => s.conf.set(orderingKey, v)
           case None    => try s.conf.unset(orderingKey) catch { case _: Exception => () }
@@ -1009,10 +1009,10 @@ object ScaleQueries {
         .transform(graft.plans.Pin.eager)
     } finally {
       // same plan-audit-mode carve-out as q305: keep the conf set under
-      // SPARK_GRAFT_NO_CHECKPOINT so the dumped plan is the one the
+      // Pin.disabled so the dumped plan is the one the
       // requires validated; plans.sh dumps these two queries in their
       // own trailing JVM so nothing else plans under it (r14 ADVICE)
-      if (!sys.env.get("SPARK_GRAFT_NO_CHECKPOINT").contains("1")) {
+      if (!graft.plans.Pin.disabled) {
         prevOrdering match {
           case Some(v) => s.conf.set(orderingKey, v)
           case None    => try s.conf.unset(orderingKey) catch { case _: Exception => () }

@@ -3,20 +3,13 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Scale-facing write/join helpers.
+/** Scale-facing write helpers.
   *
   * Bucketing: the core weather⋈energy join (and any recurring
   * large-large equi-join) shuffles both sides on every run. Writing both
   * tables bucketed on the join key makes the join exchange-free — the
   * shuffle is paid once at write time. [[bucketedJoinDemo]] in the test
-  * suite asserts the physical plan contains no Exchange.
-  *
-  * Salting: when one key dominates (hot city, boilerplate document), a
-  * shuffle partition overflows. [[saltedJoin]] splits each hot key into
-  * `salts` sub-keys — the small side is replicated per salt, the big
-  * side scatters. AQE's skew-join handles moderate skew automatically;
-  * salting is for the pathological keys AQE cannot split (single-key
-  * partitions). */
+  * suite asserts the physical plan contains no Exchange. */
 object Sinks {
 
   /** Write a table bucketed+sorted by the join key. Parquet + Hive-style
@@ -126,31 +119,5 @@ object Sinks {
       schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
     val r = spark.read.option("header", "true").format(format)
     schema.fold(r)(r.schema).load(path)
-  }
-
-  /** Equi-join with key salting: each `big` row gets a salt in
-    * [0, salts) derived from a high-cardinality row attribute (NOT the
-    * join key — salting by the key would map a hot key to one salt and
-    * split nothing); `small` is exploded across all salts. One shuffle
-    * on (key, salt) with `salts`× better balance on hot keys.
-    * `saltSource` defaults to a per-row id, NOT a content hash: the
-    * canonical hot key is boilerplate (byte-identical rows), and a
-    * content-derived salt would map all of them to ONE salt, giving
-    * zero relief exactly in the motivating case. */
-  def saltedJoin(big: DataFrame, small: DataFrame, key: String, salts: Int,
-      joinType: String = "inner",
-      saltSource: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    // outer-preserving the REPLICATED side would emit `salts` copies of
-    // each unmatched small-side row — only join types that preserve at
-    // most the big side keep result-identity with the plain join
-    require(Set("inner", "left", "left_outer", "leftouter", "left_semi", "leftsemi")
-      .contains(joinType.toLowerCase),
-      s"saltedJoin supports inner/left/left_semi joins, got: $joinType")
-    val src = saltSource.getOrElse(hash(monotonically_increasing_id()))
-    val salted = big.withColumn("_salt", pmod(src, lit(salts)))
-    // rows of `small` replicate across every salt
-    val exploded = small.withColumn("_salt",
-      explode(sequence(lit(0), lit(salts - 1))))
-    salted.join(exploded, Seq(key, "_salt"), joinType).drop("_salt")
   }
 }

@@ -316,7 +316,7 @@ class ScaleSpec extends AnyFunSuite with SparkFixture {
     val small = Seq(("hot", 1.0), ("k1900", 2.0), ("absent", 3.0)).toDF("key", "dim")
     val plain = big.join(small, Seq("key")).agg(count(lit(1)), sum("payload"), sum("dim"))
       .collect().head
-    val salted = Sinks.saltedJoin(big, small, "key", salts = 8)
+    val salted = graft.operators.SkewJoin.saltedEquiJoin(big, small, Seq("key"), salts = 8)
       .agg(count(lit(1)), sum("payload"), sum("dim")).collect().head
     assert(plain.getLong(0) == salted.getLong(0))
     assert(plain.getLong(1) == salted.getLong(1))

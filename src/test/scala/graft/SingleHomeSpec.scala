@@ -5,9 +5,9 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Guards against regrowth of the session builders, function and rule
-  * installs, query maps, config parsers, quality thresholds and engine
-  * conf readers this code base once had many copies of: each may
-  * appear only in its one home. */
+  * installs, query maps, config parsers, quality thresholds, engine
+  * conf readers and prefix-sum kernels this code base once had many
+  * copies of: each may appear only in its one home. */
 class SingleHomeSpec extends AnyFunSuite {
 
   private def sources(dir: String): Seq[Path] = {
@@ -54,6 +54,19 @@ class SingleHomeSpec extends AnyFunSuite {
   test("the local engine conf is read only by GraftSession (and the CLI's master)") {
     assert(holders("src/main/scala", "SPARK_GRAFT_CPUS") ==
       Seq("src/main/scala/graft/GraftSession.scala", "src/main/scala/graft/cli/Main.scala"))
+  }
+
+  test("the two-phase prefix composition lives only in Spine") {
+    Seq("HistBuckets", "WqBuckets").foreach { name =>
+      assert(holders("src/main/scala", name).isEmpty, name)
+    }
+    assert(holders("src/main/scala", "def bucketOf") ==
+      Seq("src/main/scala/graft/operators/Spine.scala"))
+  }
+
+  test("the plan-audit switch is read only by Pin") {
+    assert(holders("src/main/scala", "SPARK_GRAFT_NO_CHECKPOINT") ==
+      Seq("src/main/scala/graft/plans/Pin.scala"))
   }
 
   test("no spec builds its own session: all go through SparkFixture") {

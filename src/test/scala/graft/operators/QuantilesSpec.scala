@@ -92,8 +92,7 @@ class QuantilesSpec extends AnyFunSuite with SparkFixture {
     // even though the median ROW is 2
     val df = Seq(("g", 1.0, 1.0, 1L), ("g", 2.0, 1.0, 2L), ("g", 10.0, 8.0, 3L))
       .toDF("grp", "v", "w", "id")
-    val out = Quantiles.weightedQuantiles(df, "v", "w", Seq(0.2, 0.5),
-      Seq("grp"), tieCols = Seq("id"))
+    val out = Quantiles.weightedQuantiles(df, "v", "w", Seq(0.2, 0.5), Seq("grp"))
       .collect().map(r => r.getDouble(1) -> (r.getDouble(2), r.getDouble(3))).toMap
     assert(out(0.5) == ((10.0, 10.0)))  // cumw 2 < 5 <= 10 -> value 10
     assert(out(0.2) == ((2.0, 10.0)))   // cumw 1 < 2 <= 2  -> value 2
@@ -103,8 +102,8 @@ class QuantilesSpec extends AnyFunSuite with SparkFixture {
     val sess = spark; import sess.implicits._
     val df = (1 to 100).map(i => ("g", i.toDouble, 1.0, i.toLong))
       .toDF("grp", "v", "w", "id")
-    val out = Quantiles.weightedQuantiles(df, "v", "w", Seq(0.5, 0.9), Seq("grp"),
-      tieCols = Seq("id")).collect().map(r => r.getDouble(1) -> r.getDouble(2)).toMap
+    val out = Quantiles.weightedQuantiles(df, "v", "w", Seq(0.5, 0.9), Seq("grp"))
+      .collect().map(r => r.getDouble(1) -> r.getDouble(2)).toMap
     assert(out == Map(0.5 -> 50.0, 0.9 -> 90.0))
   }
 }

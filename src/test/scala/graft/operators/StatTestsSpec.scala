@@ -107,12 +107,12 @@ class StatTestsSpec extends AnyFunSuite with SparkFixture {
     val out = StatTests.cdfTransform(df, "v", Seq.empty, Seq("seg"))
     // every logical Window must either be partitioned (the per-bucket
     // cumulative) or run over the bounded per-bucket offsets frame
-    // (child carries __bcnt) — never an unpartitioned sort of the
-    // row-scale distinct-value histogram
+    // (child carries Spine's per-bucket sums, __b_*) — never an
+    // unpartitioned sort of the row-scale distinct-value histogram
     val wins = out.queryExecution.optimizedPlan.collect { case w: LWindow => w }
     assert(wins.nonEmpty)
     val unpart = wins.filter(_.partitionSpec.isEmpty)
-    assert(unpart.forall(_.child.output.exists(_.name == "__bcnt")),
+    assert(unpart.forall(_.child.output.exists(_.name.startsWith("__b_"))),
       "unpartitioned window over a non-offsets frame:\n" + unpart.mkString("\n"))
     // exactness on the all-distinct column: cdf(i) = i/n
     val got = out.filter(org.apache.spark.sql.functions.col("v").isin(1.0, 50000.0, 100000.0))
