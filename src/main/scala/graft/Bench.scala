@@ -52,18 +52,18 @@ object Bench {
         "id AS user_id", "concat('t', id % 2) AS event_type",
         "cast(id AS double) AS value", "'' AS props")
         .write.mode("overwrite").parquet(warmDir)
-      graft.streaming.StreamingOps.runToMemory(spark,
-        graft.streaming.StreamingOps.dailyAggStream(spark, warmDir), "bench_warm_stream").count()
+      graft.streaming.StreamingOps.drain(spark,
+        graft.streaming.StreamingOps.dailyAggStream(spark, warmDir), "bench_warm_stream").df.count()
       // Warm the stream-stream join machinery too (symmetric hash join
-      // codegen + state store provider classes). Safe now: runToMemory
-      // unloads all providers after each drain, so the r2 reason not to
+      // codegen + state store provider classes). Safe now: the drain
+      // unloads all providers after each run, so the r2 reason not to
       // warm — lingering maintenance threads taxing later queries — is
       // gone.
       val wp = graft.streaming.StreamingOps.eventStream(spark, warmDir)
       val wv = graft.streaming.StreamingOps.eventStream(spark, warmDir)
-      graft.streaming.StreamingOps.runToMemory(spark,
+      graft.streaming.StreamingOps.drain(spark,
         graft.streaming.StreamingOps.purchaseViewJoin(wp, wv),
-        "bench_warm_join", outputMode = "append").count()
+        "bench_warm_join", outputMode = "append").df.count()
       graft.streaming.StreamingOps.stageDir(s"$sfDir/events.parquet")
       graft.streaming.StreamingOps.stageDir(s"$sfDir/documents.parquet")
     } catch { case e: Throwable => System.err.println(s"[bench] stream warmup skipped: ${e.getMessage}") }

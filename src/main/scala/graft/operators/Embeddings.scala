@@ -73,7 +73,11 @@ object Embeddings {
     *
     * Output: one row per cosine bin (width 0.1 over [−1, 1], rounded
     * cosine at 6 before binning so both engines bin the same value),
-    * with n_pairs / share and the sample mean cosine in-row. */
+    * with n_pairs / share and the sample mean cosine in-row.
+    *
+    * Rows with a null `idCol` or a null `vecCol` are dropped before
+    * ranking: they join no sampled pair and count in no bin, share or
+    * mean. */
   def cosineHistogram(spark: SparkSession, emb: DataFrame,
       idCol: String = "vec_id", vecCol: String = "embedding",
       offsets: Seq[Int] = Seq(1, 17, 97)): DataFrame = {

@@ -23,8 +23,12 @@ import graft.plans.Pin
   * (group, bucket). The widest sort a row-scale frame pays is one
   * bucket's slice of the value RANGE (~n/Buckets under uniform ranges;
   * range skew concentrates values in fewer buckets and is the
-  * residual, documented bound). A NaN key makes the range NaN and puts
-  * every row of its group in bucket 0: still exact, but unpartitioned.
+  * residual, documented bound). NaN keys stay out of the range: each
+  * group's min/max are over its non-NaN keys, and NaN keys share one
+  * bucket of their own, [[Buckets]], just above the range's top bucket
+  * `Buckets - 1` (which the group's max key lands in). Bucket order
+  * still equals key order because Spark sorts NaN above every other
+  * double.
   *
   * Order keys are bucketed through `cast("double")`: the cast is
   * monotone (non-strict) for every numeric type, and within-bucket
@@ -39,7 +43,7 @@ import graft.plans.Pin
 object Spine {
 
   /** Width of the value-range bucketing: the carry window runs over
-    * ≤ this many aggregated rows per group. */
+    * ≤ this many aggregated rows per group, plus one for NaN keys. */
   val Buckets = 4096
 
   /** Monotone value-range bucket of `v` in [lo, hi] among `n` — clamps
@@ -51,14 +55,17 @@ object Spine {
 
   /** `df` with an order-consistent `__qb` bucket over `orderKey`
     * (numeric): boundaries from each `groupCols` group's own min/max
-    * (one tiny aggregate, broadcast). */
+    * over its non-NaN keys (one tiny aggregate, broadcast); NaN keys
+    * take bucket [[Buckets]], above every key of the range. */
   def bucketed(df: DataFrame, orderKey: Column, groupCols: Seq[String] = Nil): DataFrame = {
     val kd = orderKey.cast("double")
+    val finite = when(!isnan(kd), kd)
     val stats = df.groupBy(groupCols.map(col): _*)
-      .agg(min(kd).as("__lo"), max(kd).as("__hi"))
+      .agg(min(finite).as("__lo"), max(finite).as("__hi"))
     (if (groupCols.isEmpty) df.crossJoin(broadcast(stats))
       else df.join(broadcast(stats), groupCols))
-      .withColumn("__qb", bucketOf(kd, col("__lo"), col("__hi")))
+      .withColumn("__qb",
+        when(isnan(kd), lit(Buckets)).otherwise(bucketOf(kd, col("__lo"), col("__hi"))))
       .drop("__lo", "__hi")
   }
 

@@ -33,8 +33,8 @@ object AnalyticsQueries {
     * drained with a memory sink; results equal the batch daily
     * aggregate, so the DuckDB oracle checks the whole streaming path. */
   def q22Streaming(s: SparkSession, d: String): DataFrame =
-    StreamingOps.runToMemory(
-      s, StreamingOps.dailyAggStream(s, s"$d/events.parquet"), "graft_stream_daily")
+    StreamingOps.drain(
+      s, StreamingOps.dailyAggStream(s, s"$d/events.parquet"), "graft_stream_daily").df
       .orderBy("day", "event_type")
 
   /** Streaming daily top-3 events by value per type
@@ -43,8 +43,8 @@ object AnalyticsQueries {
     * hash-checked against the batch window formulation, so the oracle
     * proves the whole streaming top-k path ≡ batch. */
   def q181StreamTopk(s: SparkSession, d: String): DataFrame =
-    StreamingOps.runToMemory(
-      s, StreamingOps.dailyTopkStream(s, s"$d/events.parquet"), "graft_stream_topk")
+    StreamingOps.drain(
+      s, StreamingOps.dailyTopkStream(s, s"$d/events.parquet"), "graft_stream_topk").df
       .select(col("day"), col("event_type"), posexplode(col("top")))
       .select(col("day"), col("event_type"), (col("pos") + 1).cast("int").as("rank"),
         col("col.score").as("value"), col("col.id").as("event_id"))
@@ -57,10 +57,10 @@ object AnalyticsQueries {
     * relational answer. Single staged file → one micro-batch → the
     * survivor is the global min doc_id, exactly the batch semantics. */
   def q71StreamingDedup(s: SparkSession, d: String): DataFrame =
-    StreamingOps.runToMemory(
+    StreamingOps.drain(
       s,
       StreamingOps.dedupStream(s, StreamingOps.documentStream(s, s"$d/documents.parquet")),
-      "graft_stream_dedup", outputMode = "append")
+      "graft_stream_dedup", outputMode = "append").df
       .orderBy("fingerprint")
 
   /** Stream-stream interval join drained to memory and hash-checked
@@ -72,10 +72,10 @@ object AnalyticsQueries {
     val src = s"$d/events.parquet"
     val p = StreamingOps.eventStream(s, src).filter(col("event_type") === "purchase")
     val v = StreamingOps.eventStream(s, src).filter(col("event_type") === "view")
-    StreamingOps.runToMemory(
+    StreamingOps.drain(
       s, StreamingOps.purchaseViewJoin(p, v, toleranceSec = 900),
       "graft_stream_join", outputMode = "append",
-      drainPartitions = StreamingOps.adaptiveDrainWidth(s, src))
+      drainPartitions = StreamingOps.adaptiveDrainWidth(s, src)).df
       .select(col("user_id"), col("purchase_id"), col("view_id"),
         date_format(col("p_ts"), "yyyy-MM-dd HH:mm:ss").as("p_ts_s"),
         date_format(col("v_ts"), "yyyy-MM-dd HH:mm:ss").as("v_ts_s"))
@@ -99,7 +99,7 @@ object AnalyticsQueries {
     val agg = ev.join(dim, col("user_id") === col("c_custkey"))
       .groupBy(col("c_mktsegment").as("segment"), col("event_type"))
       .agg(count(lit(1)).as("n_events"), round(sum("value"), 2).as("total_value"))
-    StreamingOps.runToMemory(s, agg, "graft_stream_enrich", outputMode = "complete")
+    StreamingOps.drain(s, agg, "graft_stream_enrich", outputMode = "complete").df
       .orderBy("segment", "event_type")
   }
 
@@ -153,17 +153,10 @@ object AnalyticsQueries {
     * admission must be invisible in the RESULT — the oracle is q85's
     * batch-session oracle verbatim, so trigger-invariance is
     * hash-checked every round; an in-query require on the drain's
-    * data-batch count proves the admission was genuinely multi-batch.
-    * SPARK_GRAFT_BOUNDED_CHUNKS (scale-experiment knob, driver never
-    * sets it) overrides the chunk count so a derived-sf run can hold
-    * PER-BATCH volume constant (e.g. 6 at sf10 → 18 at sf30) — the
-    * cluster shape, where admission is sized in bytes per trigger and
-    * batch count grows with the data; results are chunk-invariant. */
+    * data-batch count proves the admission was genuinely multi-batch. */
   def q301BoundedSessions(s: SparkSession, d: String): DataFrame =
     streamingSessions(s, d, stateStore = None,
-      viewName = "graft_stream_sessions_bounded",
-      boundedChunks = Some(sys.env.get("SPARK_GRAFT_BOUNDED_CHUNKS")
-        .map(_.toInt).getOrElse(6)))
+      viewName = "graft_stream_sessions_bounded", bounded = true)
 
   /** q301's bounded-admission drain pinned to the ROCKSDB provider —
     * the two 100×-streaming answers COMPOSED (r14 verdict item 2):
@@ -177,34 +170,34 @@ object AnalyticsQueries {
     * oracle verbatim), and the r15 bench rows price it at sf10/sf30. */
   def q308BoundedRocksdbSessions(s: SparkSession, d: String): DataFrame =
     streamingSessions(s, d, stateStore = Some("rocksdb"),
-      viewName = "graft_stream_sessions_bounded_rocksdb",
-      boundedChunks = Some(sys.env.get("SPARK_GRAFT_BOUNDED_CHUNKS")
-        .map(_.toInt).getOrElse(6)))
+      viewName = "graft_stream_sessions_bounded_rocksdb", bounded = true)
 
+  /** `bounded`: replay the events as 6 time-ordered chunk files, one
+    * per micro-batch (results are chunk-invariant); otherwise admit
+    * them in one burst. */
   private def streamingSessions(s: SparkSession, d: String,
       stateStore: Option[String], viewName: String,
-      boundedChunks: Option[Int] = None): DataFrame = {
-    val (dir, src) = boundedChunks match {
-      case Some(n) =>
-        val (dir, _) = StreamingOps.stageTimeOrderedWithSentinel(s, s"$d/events.parquet", n)
+      bounded: Boolean = false): DataFrame = {
+    val (dir, src) =
+      if (bounded) {
+        val dir = StreamingOps.stageTimeOrderedWithSentinel(s, s"$d/events.parquet", chunks = 6)
         (dir, StreamingOps.rawEventStreamBounded(s, dir, maxFilesPerTrigger = 1))
-      case None =>
-        val (dir, _) = StreamingOps.stageWithSentinel(s, s"$d/events.parquet")
+      } else {
+        val dir = StreamingOps.stageWithSentinel(s, s"$d/events.parquet")
         (dir, StreamingOps.rawEventStream(s, dir))
-    }
+      }
     val stream = src
       .withWatermark("ts", "1 minute")
       .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("w"))
       .agg(count(lit(1)).as("n_events"), round(sum("value"), 2).as("total_value"))
-    val drain = StreamingOps.runToMemoryCounted(s, stream, viewName,
+    val drain = StreamingOps.drain(s, stream, viewName,
       outputMode = "append",
-      drainPartitions = StreamingOps.adaptiveDrainWidth(s, dir), awaitRows = 1L,
+      drainPartitions = StreamingOps.adaptiveDrainWidth(s, dir),
       stateStore = stateStore)
-    boundedChunks.foreach { _ =>
+    if (bounded)
       require(drain.dataBatches >= 2,
         s"bounded admission must build state across micro-batches, drain ran " +
           s"${drain.dataBatches} data batch(es)")
-    }
     drain.df
       .filter(col("user_id") >= 0)
       .select(
@@ -218,16 +211,16 @@ object AnalyticsQueries {
     * in Structured Streaming: matched pairs emit as they join, but an
     * UNMATCHED left row emits (null-extended) only when the watermark
     * proves no future match can arrive and the join state evicts it.
-    * The sentinel row advances the watermark past every real event;
-    * the drain waits until a batch has run whose planning watermark
-    * passed the real data (matched rows land in batch 1, evicted
-    * unmatched rows in the trailing no-data batch). Hash-checked
-    * against DuckDB's batch LEFT JOIN, so both emission paths — and
-    * the eviction timing logic — must agree with the relational
-    * answer. The nullable view id is coalesced to -1 on both sides
-    * (a null bigint degrades to float in the comparator's pandas). */
+    * The sentinel row advances the watermark past every real event:
+    * matched rows land in the data batch, evicted unmatched rows in the
+    * trailing no-data batch the drain runs before it terminates.
+    * Hash-checked against DuckDB's batch LEFT JOIN, so both emission
+    * paths — and the eviction timing logic — must agree with the
+    * relational answer. The nullable view id is coalesced to -1 on both
+    * sides (a null bigint degrades to float in the comparator's pandas). */
   def q87StreamingLeftJoin(s: SparkSession, d: String): DataFrame =
-    streamingLeftJoin(s, d, stateStore = None, viewName = "graft_stream_left_join")
+    streamingOuterJoin(s, d, "left_outer", stateStore = None,
+      viewName = "graft_stream_left_join")
 
   /** q87's stream-stream LEFT join pinned to the RocksDB provider —
     * the q300 pattern applied to the JOIN state layout (r13 verdict
@@ -241,16 +234,28 @@ object AnalyticsQueries {
     * sf10: join state 1212 MB on-heap → 285 MB off-heap
     * (`BENCH_sf10_rocksdb_shapes_r14.json`). */
   def q304RocksdbJoin(s: SparkSession, d: String): DataFrame =
-    streamingLeftJoin(s, d, stateStore = Some("rocksdb"),
+    streamingOuterJoin(s, d, "left_outer", stateStore = Some("rocksdb"),
       viewName = "graft_stream_left_join_rocksdb")
 
-  private def streamingLeftJoin(s: SparkSession, d: String,
+  /** FULL-outer stream-stream join — completes the streaming join-mode
+    * matrix (inner q72, left q87): BOTH sides' unmatched rows emit
+    * null-extended on their own state eviction, so the check exercises
+    * eviction on the purchase AND view state stores. */
+  def q88StreamingFullJoin(s: SparkSession, d: String): DataFrame =
+    streamingOuterJoin(s, d, "full_outer", stateStore = None,
+      viewName = "graft_stream_full_join")
+
+  /** Purchases `joinType`-joined to the same user's views within ±15 min,
+    * both sides watermarked, drained to completion. The projection
+    * coalesces across the two sides, which is the identity for a left
+    * join (its purchase side is never null). */
+  private[graft] def streamingOuterJoin(s: SparkSession, d: String, joinType: String,
       stateStore: Option[String], viewName: String): DataFrame = {
     // purchase/view-typed sentinels (user_id = -1): the optimizer pushes
     // the event_type filter below the watermark operator, so an
     // off-type sentinel would never advance the watermark — see
     // stageWithSentinel scaladoc
-    val (dir, maxTs) = StreamingOps.stageWithSentinel(s, s"$d/events.parquet",
+    val dir = StreamingOps.stageWithSentinel(s, s"$d/events.parquet",
       sentinelTypes = Seq("purchase", "view"))
     def src() = StreamingOps.rawEventStream(s, dir)
       .withWatermark("ts", "1 hour")
@@ -262,48 +267,11 @@ object AnalyticsQueries {
       col("p_user") === col("v_user") &&
         col("v_ts") >= col("p_ts") - expr("INTERVAL 900 SECONDS") &&
         col("v_ts") <= col("p_ts") + expr("INTERVAL 900 SECONDS"),
-      "left_outer")
-    // wait until the planning watermark passed the real data + join
-    // tolerance — by then every unmatched purchase has been evicted
-    val wmTarget = maxTs.map(us => us + 2L * 3600L * 1000000L)
-    StreamingOps.runToMemory(s, joined, viewName,
+      joinType)
+    StreamingOps.drain(s, joined, viewName,
       outputMode = "append",
       drainPartitions = StreamingOps.adaptiveDrainWidth(s, dir),
-      awaitWatermarkMicros = wmTarget,
-      stateStore = stateStore)
-      .filter(col("p_user") >= 0) // drop the sentinel pair
-      .select(
-        col("p_user").as("user_id"), col("purchase_id"),
-        coalesce(col("view_id"), lit(-1L)).as("view_id"),
-        date_format(col("p_ts"), "yyyy-MM-dd HH:mm:ss").as("p_ts_s"),
-        date_format(col("v_ts"), "yyyy-MM-dd HH:mm:ss").as("v_ts_s"))
-      .orderBy("user_id", "purchase_id", "view_id")
-  }
-
-  /** FULL-outer stream-stream join — completes the streaming join-mode
-    * matrix (inner q72, left q87): BOTH sides' unmatched rows emit
-    * null-extended on their own state eviction, so the check exercises
-    * eviction on the purchase AND view state stores. Same typed-
-    * sentinel + watermark-wait drain as q87. */
-  def q88StreamingFullJoin(s: SparkSession, d: String): DataFrame = {
-    val (dir, maxTs) = StreamingOps.stageWithSentinel(s, s"$d/events.parquet",
-      sentinelTypes = Seq("purchase", "view"))
-    def src() = StreamingOps.rawEventStream(s, dir)
-      .withWatermark("ts", "1 hour")
-    val p = src().filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"), col("ts").as("p_ts"))
-    val v = src().filter(col("event_type") === "view")
-      .select(col("user_id").as("v_user"), col("event_id").as("view_id"), col("ts").as("v_ts"))
-    val joined = p.join(v,
-      col("p_user") === col("v_user") &&
-        col("v_ts") >= col("p_ts") - expr("INTERVAL 900 SECONDS") &&
-        col("v_ts") <= col("p_ts") + expr("INTERVAL 900 SECONDS"),
-      "full_outer")
-    val wmTarget = maxTs.map(us => us + 2L * 3600L * 1000000L)
-    StreamingOps.runToMemory(s, joined, "graft_stream_full_join",
-      outputMode = "append",
-      drainPartitions = StreamingOps.adaptiveDrainWidth(s, dir),
-      awaitWatermarkMicros = wmTarget)
+      stateStore = stateStore).df
       .filter(coalesce(col("p_user"), col("v_user")) >= 0) // drop the sentinel pair
       .select(
         coalesce(col("p_user"), col("v_user")).as("user_id"),

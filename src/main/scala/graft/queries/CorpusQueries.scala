@@ -500,7 +500,7 @@ object CorpusQueries {
     * against DuckDB's batch restatement. */
   def q123StreamQualityMonitor(s: SparkSession, d: String): DataFrame = {
     import graft.streaming.StreamingOps
-    val (dir, _) = StreamingOps.stageDocsWithSentinel(s, s"$d/documents.parquet")
+    val dir = StreamingOps.stageDocsWithSentinel(s, s"$d/documents.parquet")
     val stream = s.readStream
       .schema(StreamingOps.docsStagedSchema)
       .parquet(dir)
@@ -514,9 +514,9 @@ object CorpusQueries {
         sum(when(col("n_words") < 50, 1L).otherwise(0L)).as("n_short"),
         sum("n_words").as("sum_words"),
         round(sum("n_tokchars") / sum("n_words"), 4).as("avg_word_len"))
-    StreamingOps.runToMemory(s, stream, "graft_stream_quality",
+    StreamingOps.drain(s, stream, "graft_stream_quality",
       outputMode = "append",
-      drainPartitions = StreamingOps.adaptiveDrainWidth(s, dir), awaitRows = 1L)
+      drainPartitions = StreamingOps.adaptiveDrainWidth(s, dir)).df
       .filter(col("lang") =!= "zz")
       .select(date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
         col("lang"), col("n_docs"), col("n_short"), col("sum_words"),

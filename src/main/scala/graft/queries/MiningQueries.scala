@@ -431,8 +431,8 @@ object MiningQueries {
       .filter(col("user_id").isNotNull)
       .withColumn("day", to_date(col("ts")))
     val regs = Hll.registers(ev, "user_id", Seq("day"))
-    val drained = StreamingOps.runToMemory(s, regs, "graft_stream_hll",
-      outputMode = "complete")
+    val drained = StreamingOps.drain(s, regs, "graft_stream_hll",
+      outputMode = "complete").df
     val exact = Tables.events(s, d).filter(col("user_id").isNotNull)
       .withColumn("day", to_date(col("ts")))
       .groupBy("day").agg(countDistinct("user_id").as("n_exact"))

@@ -551,7 +551,7 @@ object ScaleQueries {
         viol(col("event_type").isin("click", "view", "purchase", "signup", "error"))
           .as("v_bad_type"),
         sum(when(col("user_id").isNull, 1L).otherwise(0L)).as("v_null_user"))
-    StreamingOps.runToMemory(s, stream, "graft_stream_contracts")
+    StreamingOps.drain(s, stream, "graft_stream_contracts").df
       .select(to_date(col("w.start")).as("day"), col("n_rows"),
         col("v_value_negative"), col("v_value_cap"), col("v_bad_type"),
         col("v_null_user"),

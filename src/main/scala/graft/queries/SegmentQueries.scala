@@ -480,13 +480,9 @@ object SegmentQueries {
       .schema("doc_id LONG, text STRING, ts TIMESTAMP")
       .option("maxFilesPerTrigger", 1)
       .parquet(s"$dir/batch*")
-    // no drain-wait: dropDuplicatesWithinWatermark is an append
-    // PASSTHROUGH (survivors emit in their own data batch, nothing
-    // waits on the terminal eviction batch), so processAllAvailable
-    // alone already proves the sink complete
-    graft.streaming.StreamingOps.runToMemory(s,
+    graft.streaming.StreamingOps.drain(s,
         graft.streaming.StreamingOps.dedupStreamTtl(stream, "1 day"),
-        "graft_stream_dedup_ttl", outputMode = "append")
+        "graft_stream_dedup_ttl", outputMode = "append").df
       .select(col("doc_id"), col("fingerprint"))
       .orderBy("doc_id")
   }

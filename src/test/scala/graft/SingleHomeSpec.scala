@@ -6,8 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Guards against regrowth of the session builders, function and rule
   * installs, query maps, config parsers, quality thresholds, engine
-  * conf readers and prefix-sum kernels this code base once had many
-  * copies of: each may appear only in its one home. */
+  * conf readers, prefix-sum kernels and streaming-drain knobs this code
+  * base once had many copies of: each may appear only in its one home. */
 class SingleHomeSpec extends AnyFunSuite {
 
   private def sources(dir: String): Seq[Path] = {
@@ -67,6 +67,14 @@ class SingleHomeSpec extends AnyFunSuite {
   test("the plan-audit switch is read only by Pin") {
     assert(holders("src/main/scala", "SPARK_GRAFT_NO_CHECKPOINT") ==
       Seq("src/main/scala/graft/plans/Pin.scala"))
+  }
+
+  test("env is read only by the mains; no system properties or query listeners") {
+    val mains = Set("GraftSession.scala", "plans/Pin.scala", "Bench.scala", "Verify.scala",
+      "cli/Main.scala").map("src/main/scala/graft/" + _)
+    assert(holders("src/main/scala", "sys.env").filterNot(mains).isEmpty)
+    assert(holders("src/main/scala", "sys.props.get").isEmpty)
+    assert(holders("src/main/scala", "StreamingQueryListener").isEmpty)
   }
 
   test("no spec builds its own session: all go through SparkFixture") {

@@ -1,52 +1,19 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-13: the RocksDB state-store option. The default
   * HDFSBackedStateStoreProvider keeps every state row in executor heap,
   * so at 100× state the provider — not the plan — is the first thing to
-  * fall over. SPARK_GRAFT_STATE_STORE=rocksdb (system-property
-  * spelling: spark.graft.stateStore) switches the drain to Spark's
-  * built-in RocksDBStateStoreProvider (off-heap LSM, spill-to-disk,
-  * bounded by disk not heap). The provider must be invisible in the
-  * RESULT: this spec drains two stateful shapes (q85 session windows;
-  * q226 TTL dedup) on both providers and asserts row-identical output,
-  * and pins the knob→class mapping. */
+  * fall over. A drain's `stateStore = Some("rocksdb")` switches it to
+  * Spark's built-in RocksDBStateStoreProvider (off-heap LSM,
+  * spill-to-disk, bounded by disk not heap). The provider must be
+  * invisible in the RESULT: this spec drains the session-window, TTL
+  * dedup, stream-stream join and flatMapGroupsWithState shapes on both
+  * providers and asserts row-identical output. */
 class StateStoreProviderSpec extends AnyFunSuite with SparkFixture {
-
-  private def withStateStoreProp[A](v: Option[String])(body: => A): A = {
-    val prev = sys.props.get("spark.graft.stateStore")
-    v match {
-      case Some(x) => sys.props("spark.graft.stateStore") = x
-      case None    => sys.props.remove("spark.graft.stateStore")
-    }
-    try body
-    finally prev match {
-      case Some(x) => sys.props("spark.graft.stateStore") = x
-      case None    => sys.props.remove("spark.graft.stateStore")
-    }
-  }
-
-  test("knob maps to the provider classes (and passes fqcn through)") {
-    withStateStoreProp(None) {
-      assert(graft.streaming.StreamingOps.stateStoreProviderClass().isEmpty,
-        "unset knob must leave the session's provider conf untouched")
-    }
-    withStateStoreProp(Some("rocksdb")) {
-      assert(graft.streaming.StreamingOps.stateStoreProviderClass().contains(
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
-    }
-    withStateStoreProp(Some("hdfs")) {
-      assert(graft.streaming.StreamingOps.stateStoreProviderClass().contains(
-        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"))
-    }
-    withStateStoreProp(Some("com.example.MyProvider")) {
-      assert(graft.streaming.StreamingOps.stateStoreProviderClass()
-        .contains("com.example.MyProvider"))
-    }
-  }
 
   private def sessionRows(provider: Option[String]): Seq[(Long, String, Long)] = {
     val s = spark; import s.implicits._
@@ -60,23 +27,21 @@ class StateStoreProviderSpec extends AnyFunSuite with SparkFixture {
       (-1L, ts(60 * 48), -1L, "sentinel", 0.0, ""))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(dir)
-    withStateStoreProp(provider) {
-      val stream = graft.streaming.StreamingOps.rawEventStream(s, dir)
-        .withWatermark("ts", "1 minute")
-        .groupBy(col("user_id"),
-          session_window(col("ts"), "30 minutes").as("w"))
-        .agg(count(lit(1)).as("n_events"))
-      graft.streaming.StreamingOps
-        .runToMemory(s, stream, s"ssp_spec_${provider.getOrElse("default")}",
-          outputMode = "append", awaitRows = 1L)
-        .filter(col("user_id") >= 0)
-        .select(col("user_id"),
-          date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("start"),
-          col("n_events"))
-        .collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-        .sortBy(t => (t._1, t._2)).toSeq
-    }
+    val stream = graft.streaming.StreamingOps.rawEventStream(s, dir)
+      .withWatermark("ts", "1 minute")
+      .groupBy(col("user_id"),
+        session_window(col("ts"), "30 minutes").as("w"))
+      .agg(count(lit(1)).as("n_events"))
+    graft.streaming.StreamingOps
+      .drain(s, stream, s"ssp_spec_${provider.getOrElse("default")}",
+        outputMode = "append", stateStore = provider).df
+      .filter(col("user_id") >= 0)
+      .select(col("user_id"),
+        date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("start"),
+        col("n_events"))
+      .collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
+      .sortBy(t => (t._1, t._2)).toSeq
   }
 
   /** The q226 staged timeline (mtime-ordered files, maxFilesPerTrigger
@@ -106,20 +71,18 @@ class StateStoreProviderSpec extends AnyFunSuite with SparkFixture {
           attribute.FileTime.fromMillis(1700000000000L + i * 60000L))
       }
     }
-    withStateStoreProp(provider) {
-      val stream = s.readStream
-        .schema("doc_id LONG, text STRING, ts TIMESTAMP")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(s"$dir/batch*")
-      graft.streaming.StreamingOps
-        .runToMemory(s, graft.streaming.StreamingOps.dedupStreamTtl(stream, "1 day"),
-          s"ssp_ttl_${provider.getOrElse("default")}",
-          outputMode = "append")
-        .select(col("doc_id"), col("fingerprint"))
-        .collect()
-        .map(r => (r.getLong(0), r.getString(1)))
-        .sortBy(_._1).toSeq
-    }
+    val stream = s.readStream
+      .schema("doc_id LONG, text STRING, ts TIMESTAMP")
+      .option("maxFilesPerTrigger", 1)
+      .parquet(s"$dir/batch*")
+    graft.streaming.StreamingOps
+      .drain(s, graft.streaming.StreamingOps.dedupStreamTtl(stream, "1 day"),
+        s"ssp_ttl_${provider.getOrElse("default")}",
+        outputMode = "append", stateStore = provider).df
+      .select(col("doc_id"), col("fingerprint"))
+      .collect()
+      .map(r => (r.getLong(0), r.getString(1)))
+      .sortBy(_._1).toSeq
   }
 
   /** r13 verdict item 2: provider invariance must cover the OTHER two
@@ -129,19 +92,18 @@ class StateStoreProviderSpec extends AnyFunSuite with SparkFixture {
     * outgrows heap first at 100× because BOTH sides buffer until the
     * watermark clears the interval) and flatMapGroupsWithState (custom
     * user-state encoder, one Boolean per fingerprint). Driven through
-    * the REGISTRY queries themselves (q87 left join incl. the
-    * eviction-emitted unmatched rows; q71 FMGWS dedup) at sf0.001, so
-    * the exact production plans are what both providers drain. */
-  private def registryRows(provider: Option[String],
-      q: (SparkSession, String) => org.apache.spark.sql.DataFrame): Seq[String] =
-    withStateStoreProp(provider) {
-      q(spark, "/root/testdata/sf0.001").collect().map(_.toString).toSeq.sorted
-    }
+    * the registry's own plans (q87/q304 left join incl. the
+    * eviction-emitted unmatched rows; q88's full-outer builder; q71's
+    * FMGWS dedup stream) at sf0.001, so the exact production plans are
+    * what both providers drain. */
+  private val sf = "/root/testdata/sf0.001"
+
+  private def sortedRows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
 
   test("RocksDB provider drains the q87 stream-stream left-join shape row-identically") {
-    val q = graft.queries.AnalyticsQueries.q87StreamingLeftJoin _
-    val hdfs = registryRows(None, q)
-    val rocks = registryRows(Some("rocksdb"), q)
+    val hdfs = sortedRows(graft.queries.AnalyticsQueries.q87StreamingLeftJoin(spark, sf))
+    val rocks = sortedRows(graft.queries.AnalyticsQueries.q304RocksdbJoin(spark, sf))
     assert(hdfs.nonEmpty, "left join must emit rows (matched + evicted-unmatched)")
     // the eviction path is genuinely exercised: some purchases have no
     // view within the interval and emit null-extended (view_id = -1)
@@ -151,17 +113,21 @@ class StateStoreProviderSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("RocksDB provider drains the q88 full-outer join shape row-identically") {
-    val q = graft.queries.AnalyticsQueries.q88StreamingFullJoin _
-    val hdfs = registryRows(None, q)
-    val rocks = registryRows(Some("rocksdb"), q)
+    def fullJoin(stateStore: Option[String]) = sortedRows(graft.queries.AnalyticsQueries
+      .streamingOuterJoin(spark, sf, "full_outer", stateStore, "ssp_full_join"))
+    val hdfs = fullJoin(None)
+    val rocks = fullJoin(Some("rocksdb"))
     assert(hdfs.nonEmpty)
     assert(rocks === hdfs, "state-store provider must be invisible in the full-outer result")
   }
 
   test("RocksDB provider drains the q71 flatMapGroupsWithState dedup row-identically") {
-    val q = graft.queries.AnalyticsQueries.q71StreamingDedup _
-    val hdfs = registryRows(None, q)
-    val rocks = registryRows(Some("rocksdb"), q)
+    import graft.streaming.StreamingOps
+    def dedup(stateStore: Option[String]) = sortedRows(StreamingOps.drain(spark,
+      StreamingOps.dedupStream(spark, StreamingOps.documentStream(spark, s"$sf/documents.parquet")),
+      "ssp_fmgws_dedup", outputMode = "append", stateStore = stateStore).df)
+    val hdfs = dedup(None)
+    val rocks = dedup(Some("rocksdb"))
     assert(hdfs.nonEmpty, "FMGWS dedup must emit one survivor per fingerprint")
     assert(rocks === hdfs,
       "state-store provider must be invisible through the custom state encoder")

@@ -1,88 +1,99 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Round-13: the drain sink is selected BY OUTPUT MODE. Append-mode
-  * results are row-scale, so they drain to an executor-side parquet
-  * file sink by default — the memory sink serializes every result row
-  * to the driver, and at derived sf10 the q85 session drain exceeded
-  * spark.driver.maxResultSize (the r12 verdict's scale finding).
-  * Complete-mode results are aggregate-scale and stay on the memory
-  * sink. SPARK_GRAFT_DRAIN_SINK=memory opts an append drain back into
-  * the memory sink for debugging. The sink choice must be invisible in
-  * the RESULT: this spec drains the q85 session-window shape both ways
-  * and asserts row-identical output, and pins the mode→sink mapping. */
+/** The one streaming drain (`StreamingOps.drain`, `Trigger.AvailableNow`
+  * + `awaitTermination`) must return exactly the batch answer with no
+  * wait hint: the trailing no-data batch that closes append-mode
+  * windows and evicts unmatched outer-join rows runs before the query
+  * terminates. The sink is selected BY OUTPUT MODE: append-mode results
+  * are row-scale, so they drain to an executor-side parquet file sink
+  * (the memory sink serializes every result row to the driver, and at
+  * derived sf10 the q85 session drain exceeded
+  * spark.driver.maxResultSize); complete- and update-mode results are
+  * aggregate-scale and stay on the memory sink. */
 class StreamingDrainSpec extends AnyFunSuite with SparkFixture {
 
-  private def withDrainSinkProp[A](v: Option[String])(body: => A): A = {
-    val prev = sys.props.get("spark.graft.drainSink")
-    v match {
-      case Some(x) => sys.props("spark.graft.drainSink") = x
-      case None    => sys.props.remove("spark.graft.drainSink")
-    }
-    try body
-    finally prev match {
-      case Some(x) => sys.props("spark.graft.drainSink") = x
-      case None    => sys.props.remove("spark.graft.drainSink")
-    }
+  private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+
+  private def sessionRows(df: DataFrame): Seq[String] = rows(df
+    .filter(col("user_id") >= 0)
+    .select(col("user_id"),
+      date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("start"),
+      col("n_events")))
+
+  test("mode selects the sink: append → file sink, others → memory") {
+    assert(graft.streaming.StreamingOps.drainsToFileSink("append"),
+      "append-mode results are row-scale — they MUST drain to the executor-side file sink")
+    assert(!graft.streaming.StreamingOps.drainsToFileSink("complete"),
+      "complete-mode results are aggregate-scale and file sinks are append-only — memory sink")
+    assert(!graft.streaming.StreamingOps.drainsToFileSink("update"))
   }
 
-  private def sessionRows(drainSink: Option[String]): Seq[(Long, String, Long)] = {
+  test("file drain sink equals the batch session_window rows (q85 shape)") {
     val s = spark; import s.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_drain_spec").toString
     // two users, two sessions each (gap > 30 min splits), plus the
     // far-future watermark-pusher row the q85 staging would add
     val base = java.sql.Timestamp.valueOf("2024-01-01 10:00:00").getTime
     def ts(minutes: Long) = new java.sql.Timestamp(base + minutes * 60000L)
-    val rows = Seq(
+    Seq(
       (1L, ts(0), 7L, "click", 1.0, ""), (2L, ts(5), 7L, "click", 1.0, ""),
       (3L, ts(90), 7L, "click", 1.0, ""),
       (4L, ts(2), 8L, "view", 1.0, ""), (5L, ts(95), 8L, "view", 1.0, ""),
       (-1L, ts(60 * 48), -1L, "sentinel", 0.0, ""))
-    rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(dir)
-    withDrainSinkProp(drainSink) {
-      val stream = graft.streaming.StreamingOps.rawEventStream(s, dir)
-        .withWatermark("ts", "1 minute")
-        .groupBy(col("user_id"),
-          session_window(col("ts"), "30 minutes").as("w"))
-        .agg(count(lit(1)).as("n_events"))
-      graft.streaming.StreamingOps
-        .runToMemory(s, stream, s"drain_spec_${drainSink.getOrElse("default")}",
-          outputMode = "append", awaitRows = 1L)
-        .filter(col("user_id") >= 0)
-        .select(col("user_id"),
-          date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("start"),
-          col("n_events"))
-        .collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-        .sortBy(t => (t._1, t._2)).toSeq
-    }
-  }
-
-  test("mode selects the sink: append → file sink by default, memory only on opt-in; complete → memory") {
-    withDrainSinkProp(None) {
-      assert(graft.streaming.StreamingOps.drainsToFileSink("append"),
-        "append-mode results are row-scale — the default MUST be the executor-side file sink")
-      assert(!graft.streaming.StreamingOps.drainsToFileSink("complete"),
-        "complete-mode results are aggregate-scale and file sinks are append-only — memory sink")
-      assert(!graft.streaming.StreamingOps.drainsToFileSink("update"))
-    }
-    withDrainSinkProp(Some("memory")) {
-      assert(!graft.streaming.StreamingOps.drainsToFileSink("append"),
-        "SPARK_GRAFT_DRAIN_SINK=memory opts an append drain back into the memory sink")
-    }
-  }
-
-  test("default (file) drain sink emits exactly the memory sink's rows (q85 session shape)") {
-    val mem = sessionRows(Some("memory"))
-    val default = sessionRows(None)
-    assert(mem.nonEmpty, "memory drain must emit the closed sessions")
+    def sessions(events: DataFrame): DataFrame = events
+      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("w"))
+      .agg(count(lit(1)).as("n_events"))
+    val stream = sessions(graft.streaming.StreamingOps.rawEventStream(s, dir)
+      .withWatermark("ts", "1 minute"))
+    val drained = sessionRows(graft.streaming.StreamingOps
+      .drain(s, stream, "drain_spec_sessions", outputMode = "append").df)
+    val batch = sessionRows(sessions(s.read.parquet(dir)))
     // 2 sessions for user 7 (gap 85 min splits), 2 for user 8
-    assert(mem.map(_._1).distinct === Seq(7L, 8L))
-    assert(mem.size === 4)
-    assert(default === mem, "sink choice must be invisible in the result")
+    assert(batch.size === 4)
+    assert(drained === batch, "the drain must emit every session the batch aggregate finds")
+  }
+
+  test("left-outer join drain emits every unmatched purchase, equal to batch") {
+    // the q87 builder itself over a staged events table: matched pairs
+    // emit in the data batch, unmatched purchases only when the
+    // sentinel-advanced watermark evicts them in the trailing no-data
+    // batch — which the drain must run without being told to wait
+    val s = spark; import s.implicits._
+    val d = java.nio.file.Files.createTempDirectory("graft_drain_join").toString
+    val base = java.sql.Timestamp.valueOf("2024-01-01 10:00:00").getTime
+    def ts(minutes: Long) = new java.sql.Timestamp(base + minutes * 60000L)
+    Seq(
+      (1L, ts(0), 7L, "purchase"), (2L, ts(5), 7L, "view"), // matched
+      (3L, ts(100), 7L, "purchase"), // no view at all: unmatched
+      (4L, ts(10), 8L, "purchase"), (5L, ts(60), 8L, "view"), // view too late: unmatched
+      (6L, ts(20), 9L, "view")) // a view alone emits nothing in a left join
+      .map { case (id, t, u, ty) => (id, t, u, ty, 1.0, "") }
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .write.mode("overwrite").parquet(s"$d/events.parquet")
+    val drained = rows(graft.queries.AnalyticsQueries
+      .streamingOuterJoin(s, d, "left_outer", stateStore = None, viewName = "drain_spec_left"))
+    val ev = s.read.parquet(s"$d/events.parquet")
+    val p = ev.filter(col("event_type") === "purchase")
+      .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"), col("ts").as("p_ts"))
+    val v = ev.filter(col("event_type") === "view")
+      .select(col("user_id").as("v_user"), col("event_id").as("view_id"), col("ts").as("v_ts"))
+    val batch = rows(p.join(v,
+      col("p_user") === col("v_user") &&
+        col("v_ts") >= col("p_ts") - expr("INTERVAL 900 SECONDS") &&
+        col("v_ts") <= col("p_ts") + expr("INTERVAL 900 SECONDS"), "left_outer")
+      .select(col("p_user").as("user_id"), col("purchase_id"),
+        coalesce(col("view_id"), lit(-1L)).as("view_id"),
+        date_format(col("p_ts"), "yyyy-MM-dd HH:mm:ss").as("p_ts_s"),
+        date_format(col("v_ts"), "yyyy-MM-dd HH:mm:ss").as("v_ts_s")))
+    assert(batch.size === 3)
+    assert(batch.count(_.contains(",-1,")) === 2, "fixture holds two unmatched purchases")
+    assert(drained === batch, "every evicted unmatched purchase must be in the drained result")
   }
 
   test("bounded trigger admission (maxFilesPerTrigger=1) emits exactly the single-burst rows") {
@@ -110,10 +121,10 @@ class StreamingDrainSpec extends AnyFunSuite with SparkFixture {
     def drain(bounded: Boolean): (Seq[(Long, String, Long)], Int) = {
       val (dir, src) =
         if (bounded) {
-          val (d, _) = StreamingOps.stageTimeOrderedWithSentinel(s, raw, chunks = 4)
+          val d = StreamingOps.stageTimeOrderedWithSentinel(s, raw, chunks = 4)
           (d, StreamingOps.rawEventStreamBounded(s, d, maxFilesPerTrigger = 1))
         } else {
-          val (d, _) = StreamingOps.stageWithSentinel(s, raw)
+          val d = StreamingOps.stageWithSentinel(s, raw)
           (d, StreamingOps.rawEventStream(s, d))
         }
       val stream = src
@@ -121,8 +132,7 @@ class StreamingDrainSpec extends AnyFunSuite with SparkFixture {
         .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("w"))
         .agg(count(lit(1)).as("n_events"))
       val drained = StreamingOps
-        .runToMemoryCounted(s, stream, s"drain_bounded_$bounded",
-          outputMode = "append", awaitRows = 1L)
+        .drain(s, stream, s"drain_bounded_$bounded", outputMode = "append")
       val out = drained.df
         .filter(col("user_id") >= 0)
         .select(col("user_id"),

@@ -74,7 +74,7 @@ class SpineSpec extends AnyFunSuite with SparkFixture {
 
   test("rankBy == row_number with NaN last, and on a constant frame") {
     val s = spark; import s.implicits._
-    // one NaN makes the range NaN: every row shares bucket 0, still exact
+    // a NaN key ranks last: it takes its own bucket above the key range
     val keys = (1 to 300).map(i => ((i * 7919) % 1009 - 500) / 8.0).distinct :+ Double.NaN
     val df = scala.util.Random.shuffle(keys).toDF("k")
     def ranked(d: DataFrame): Seq[String] = d.collect()
@@ -86,6 +86,18 @@ class SpineSpec extends AnyFunSuite with SparkFixture {
     val const = Seq.fill(50)(2.5).toDF("k")
     assert(Spine.rankBy(const, col("k"), "r").select("r").as[Long].collect().sorted.toSeq ==
       (1L to 50L))
+  }
+
+  test("bucketed: NaN keys take their own top bucket, off their group's range") {
+    val s = spark; import s.implicits._
+    val df = Seq(("a", 1.0), ("a", 5.0), ("a", Double.NaN), ("b", Double.NaN)).toDF("g", "k")
+    def buckets(g: String): Seq[(Int, Double)] =
+      Spine.bucketed(df.filter(col("g") === g), col("k"), Seq("g"))
+        .select("__qb", "k").as[(Int, Double)].collect().toSeq.sortBy(_._1)
+    val a = buckets("a")
+    assert(a.map(_._1).distinct.size == 3, s"1.0, 5.0 and NaN need three buckets: $a")
+    assert(a.map(_._2).take(2) == Seq(1.0, 5.0) && a.last._2.isNaN, s"bucket order is key order: $a")
+    assert(buckets("b").map(_._1) == Seq(Spine.Buckets), "an all-NaN group takes the NaN bucket")
   }
 
   test("rankBy == unpartitioned row_number on a skewed unique-key frame") {
