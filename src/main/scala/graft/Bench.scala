@@ -47,7 +47,7 @@ object Bench {
     // shape as q22, and pre-stage the events symlink dir — q22's timed
     // run then pays only for its own data, not one-time machinery init
     try {
-      val warmDir = java.nio.file.Files.createTempDirectory("graft_bench_warm").toString
+      val warmDir = Scratch.dir("bench_warm").toString
       spark.range(4).selectExpr("id AS event_id", "id * 1000000000 AS ts",
         "id AS user_id", "concat('t', id % 2) AS event_type",
         "cast(id AS double) AS value", "'' AS props")
@@ -98,8 +98,13 @@ object Bench {
     * isolated — suite state, not plan). Safe between queries: every
     * query is self-contained, so nothing re-reads a prior query's RDDs. */
   def releaseCached(spark: SparkSession): Unit =
-    try spark.sparkContext.getPersistentRDDs.valuesIterator.foreach(_.unpersist(false))
-    catch { case _: Throwable => () }
+    try {
+      // `Dataset.cache()` entries first: unpersisting their blocks
+      // below would leave them registered, and a later identical plan
+      // would still match one and recompute through it uncached
+      spark.catalog.clearCache()
+      spark.sparkContext.getPersistentRDDs.valuesIterator.foreach(_.unpersist(false))
+    } catch { case _: Throwable => () }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -171,13 +176,15 @@ object Bench {
     //   1. stop StateStore maintenance + unload providers while SparkEnv
     //      is still alive (so nothing later hits a stopped RpcEnv),
     //   2. stop the session,
-    //   3. print the metric line and flush,
-    //   4. halt(0) — skips JVM shutdown hooks, so no hook can print
+    //   3. delete the scratch root (halt skips its exit hook),
+    //   4. print the metric line and flush,
+    //   5. halt(0) — skips JVM shutdown hooks, so no hook can print
     //      after the metric line.
     try org.apache.spark.sql.graft.StateStoreHooks.stopAll()
     catch { case e: Throwable => System.err.println(s"[bench] state-store stop: ${e.getMessage}") }
     try spark.stop()
     catch { case e: Throwable => System.err.println(s"[bench] spark stop: ${e.getMessage}") }
+    Scratch.clear()
     // r16 (verdict item 2, additions only): ALSO stream the per-query
     // map to stdout as short self-contained JSON lines immediately
     // before the metric line — the driver keeps only the last ~4 KB of

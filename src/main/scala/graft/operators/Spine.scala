@@ -79,8 +79,9 @@ object Spine {
     * `sum(c).over(Window.partitionBy(groupCols).orderBy(orderKey)
     * .rowsBetween(...))` it equals.
     *
-    * `df` is pinned once: the range stats, the bucket sums and the
-    * within-bucket window all read it. The bucket-sums frame is
+    * `df` is pinned once, eagerly: the range stats, the bucket sums and
+    * the within-bucket window all read it, and the stats are broadcast
+    * (see [[Pin]] on pins under a broadcast). The bucket-sums frame is
     * broadcast when there are no groups (≤ [[Buckets]] rows); with
     * groups it joins on (groups, bucket), the key the within-bucket
     * window is partitioned by, so that exchange serves both. */
@@ -88,7 +89,7 @@ object Spine {
       sumCols: Seq[String], inclusive: Boolean): DataFrame = {
     require(sumCols.nonEmpty, "prefixSums needs a column to sum")
     val g = groupCols.map(col)
-    val b = bucketed(Pin.lazily(df), orderKey, groupCols)
+    val b = bucketed(Pin.eager(df), orderKey, groupCols)
     val before = Window.partitionBy(g: _*).orderBy("__qb")
       .rowsBetween(Window.unboundedPreceding, -1)
     val bucketAggs = sumCols.map(c => sum(c).as(s"__b_$c"))

@@ -42,7 +42,11 @@ object Pin {
   def eager[T](ds: Dataset[T]): Dataset[T] =
     if (disabled) ds else ds.localCheckpoint(true)
 
-  /** Lazy pin — `localCheckpoint(false)`: materializes on first action. */
+  /** Lazy pin — `localCheckpoint(false)`: materializes on first action.
+    * A pinned frame that a `broadcast(...)` side reads must be [[eager]]:
+    * a lazy one is checkpointed by whichever job first finishes it, and
+    * a broadcast job doing that while an AQE stage reads the same RDD
+    * deadlocks the scheduler on the RDD's lock and `RDDCheckpointData`'s. */
   def lazily[T](ds: Dataset[T]): Dataset[T] =
     if (disabled) ds else ds.localCheckpoint(false)
 

@@ -112,7 +112,7 @@ object AnalyticsQueries {
     * hash-checks. Single staged file → one micro-batch → the landed
     * table IS the batch aggregate. */
   def q82UpsertSink(s: SparkSession, d: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft_q82_upsert").toString
+    val out = graft.Scratch.dir("q82_upsert").toString
     val landed = StreamingOps.runUpsertToDir(
       s, StreamingOps.dailyAggStream(s, s"$d/events.parquet"), out)
     landed
@@ -178,15 +178,10 @@ object AnalyticsQueries {
   private def streamingSessions(s: SparkSession, d: String,
       stateStore: Option[String], viewName: String,
       bounded: Boolean = false): DataFrame = {
-    val (dir, src) =
-      if (bounded) {
-        val dir = StreamingOps.stageTimeOrderedWithSentinel(s, s"$d/events.parquet", chunks = 6)
-        (dir, StreamingOps.rawEventStreamBounded(s, dir, maxFilesPerTrigger = 1))
-      } else {
-        val dir = StreamingOps.stageWithSentinel(s, s"$d/events.parquet")
-        (dir, StreamingOps.rawEventStream(s, dir))
-      }
-    val stream = src
+    val dir =
+      if (bounded) StreamingOps.stageTimeOrderedWithSentinel(s, s"$d/events.parquet", chunks = 6)
+      else StreamingOps.stageWithSentinel(s, s"$d/events.parquet")
+    val stream = StreamingOps.rawEventStream(s, dir, maxFilesPerTrigger = Option.when(bounded)(1))
       .withWatermark("ts", "1 minute")
       .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("w"))
       .agg(count(lit(1)).as("n_events"), round(sum("value"), 2).as("total_value"))
@@ -313,7 +308,7 @@ object AnalyticsQueries {
       (-101L, rep(cycleB, 3)), // intra-batch dup, loses to min id -102
       (-102L, rep(cycleB, 4))) // novel survivor → lands, gets indexed
       .toDF("doc_id", "text"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q109").toString
+    val tmp = graft.Scratch.dir("q109").toString
     batch.repartition(1).write.mode("overwrite").parquet(s"$tmp/in")
     val stream = s.readStream
       .schema("doc_id LONG, text STRING").parquet(s"$tmp/in")

@@ -447,7 +447,7 @@ object SegmentQueries {
     * the bounded-state semantics q71's NoTimeout dedup cannot offer. */
   def q226StreamDedupTtl(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    import java.nio.file._
+    import graft.streaming.StreamingOps
     def ts(off: Long) = new java.sql.Timestamp((1704067200L + off) * 1000L)
     val day = 86400L
     val f1 = Seq((1L, "alpha beta gamma", ts(0L)),
@@ -460,28 +460,21 @@ object SegmentQueries {
     val f3 = Seq((101L, "second pusher text", ts(10 * day + 60L)))
     val f4 = Seq((4L, "alpha beta gamma", ts(9 * day + 3600L)), // post-expiry → lands
       (5L, "omega psi chi", ts(9 * day + 7200L)))
-    val dir = Files.createTempDirectory("graft_q226").toString
-    Seq(f1, f2, f3, f4).zipWithIndex.foreach { case (rows, i) =>
-      val p = s"$dir/batch$i"
+    // one file per batch, admitted in batch order
+    val batches = Seq(f1, f2, f3, f4).flatMap { rows =>
+      val p = graft.Scratch.dir("q226_batch")
       rows.toDF("doc_id", "text", "ts").coalesce(1)
-        .write.mode("overwrite").parquet(p)
-      // deterministic batch order: the file source lists by mtime
-      val ls = Files.list(Paths.get(p))
-      try {
-        val it = ls.iterator()
-        while (it.hasNext) {
-          val f = it.next()
-          Files.setLastModifiedTime(f,
-            attribute.FileTime.fromMillis(1700000000000L + i * 60000L))
-        }
-      } finally ls.close()
+        .write.mode("overwrite").parquet(p.toString)
+      StreamingOps.partFiles(p)
     }
+    val dir = graft.Scratch.dir("q226")
+    StreamingOps.landInOrder(dir,
+      batches.zipWithIndex.map { case (f, i) => f -> s"batch$i.parquet" })
     val stream = s.readStream
       .schema("doc_id LONG, text STRING, ts TIMESTAMP")
       .option("maxFilesPerTrigger", 1)
-      .parquet(s"$dir/batch*")
-    graft.streaming.StreamingOps.drain(s,
-        graft.streaming.StreamingOps.dedupStreamTtl(stream, "1 day"),
+      .parquet(dir.toString)
+    StreamingOps.drain(s, StreamingOps.dedupStreamTtl(stream, "1 day"),
         "graft_stream_dedup_ttl", outputMode = "append").df
       .select(col("doc_id"), col("fingerprint"))
       .orderBy("doc_id")

@@ -1,8 +1,13 @@
 package graft.streaming
 
+import java.nio.file.{Files, Path, Paths}
+import java.nio.file.attribute.FileTime
+import scala.jdk.CollectionConverters._
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.Scratch
 
 /** Structured Streaming extension (SURVEY §2.10): the reference has no
   * streaming engine — its `realtime` mode is a daily batch — so this
@@ -26,7 +31,15 @@ import org.apache.spark.sql.types._
   * and only then terminates. So a drain is done exactly when its query
   * is, with no wait hint, listener or poll; a failed batch surfaces as
   * the `StreamingQueryException` `awaitTermination` throws. The sink is
-  * chosen by output mode alone ([[drainsToFileSink]]). */
+  * chosen by output mode alone ([[drainsToFileSink]]).
+  *
+  * Staging: a source the file stream cannot read as it is (a lone file,
+  * or a table that needs a sentinel row or time-ordered chunks) is
+  * staged into a fresh directory under the JVM's one scratch root
+  * ([[graft.Scratch]]). Staged sources are memoized per JVM by (stager,
+  * args), so a re-run reuses them, and the root is deleted when the JVM
+  * exits. Drain sinks and checkpoints come from the same root and are
+  * deleted as soon as their drain ends. */
 object StreamingOps {
 
   /** The events table's on-disk `ts` physical type has CHANGED across
@@ -83,62 +96,46 @@ object StreamingOps {
 
   /** Streaming events source over an ALREADY-staged directory: sniffed
     * pinned schema + ts normalization. The single entry point all
-    * events streams share, so the on-disk ts dispatch lives here once. */
-  def rawEventStream(spark: SparkSession, dir: String): DataFrame = {
-    val tsType = eventsTsType(spark, dir)
-    normalizeTs(spark.readStream.schema(eventsRawSchema(tsType)).parquet(dir))
-  }
-
-  /** [[rawEventStream]] with BOUNDED per-trigger admission
-    * (`maxFilesPerTrigger`) — the cluster-shaped ingest the synchronous
-    * drain otherwise skips: a production file stream admits a bounded
-    * batch per trigger, so state builds and EVICTS incrementally across
-    * micro-batches instead of materializing the whole input's sessions
-    * in one burst (the r13 q85 sf30 adjudication's named design limit).
-    * Pair with [[stageTimeOrderedWithSentinel]]: admission order is the
-    * source's modification-time order, so chunk files must be staged in
+    * events streams share, so the on-disk ts dispatch lives here once.
+    *
+    * `maxFilesPerTrigger` bounds per-trigger admission — the
+    * cluster-shaped ingest the synchronous drain otherwise skips: state
+    * builds and EVICTS incrementally across micro-batches instead of
+    * materializing the whole input's sessions in one burst (the r13 q85
+    * sf30 adjudication's named design limit). Pair it with
+    * [[stageTimeOrderedWithSentinel]]: admission order is the source's
+    * modification-time order, so chunk files must be staged in
     * event-time order or mid-stream rows arrive behind the watermark
     * and are DROPPED (a correctness change, not a perf knob). */
-  def rawEventStreamBounded(spark: SparkSession, dir: String,
-      maxFilesPerTrigger: Int): DataFrame = {
-    val tsType = eventsTsType(spark, dir)
-    normalizeTs(spark.readStream.schema(eventsRawSchema(tsType))
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString).parquet(dir))
+  def rawEventStream(spark: SparkSession, dir: String,
+      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
+    val reader = spark.readStream.schema(eventsRawSchema(eventsTsType(spark, dir)))
+    normalizeTs(maxFilesPerTrigger.fold(reader)(n =>
+      reader.option("maxFilesPerTrigger", n.toString)).parquet(dir))
   }
 
   /** Stage a single parquet file behind a directory: Spark's file stream
     * source only accepts directories (it lists them for new files), so a
-    * lone file is exposed via a symlink in a deterministic temp dir —
-    * in production the source would already be a landing directory. */
-  def stageDir(path: String): String = {
-    import java.nio.file._
-    val p = Paths.get(path)
-    if (Files.isDirectory(p)) path
-    else {
-      val dir = Paths.get(sys.props("java.io.tmpdir"),
-        s"graft_stream_${Integer.toHexString(path.hashCode)}")
-      Files.createDirectories(dir)
-      val link = dir.resolve(p.getFileName)
-      if (!Files.exists(link)) {
-        try Files.createSymbolicLink(link, p)
-        catch { case _: Exception => Files.copy(p, link) }
-      }
-      dir.toString
+    * lone file is exposed through a link in a staged directory — in
+    * production the source would already be a landing directory. */
+  def stageDir(path: String): String =
+    if (Files.isDirectory(Paths.get(path))) path
+    else memo("dir", path) {
+      val dir = Scratch.dir("stream_dir")
+      linkFiles(Paths.get(path), dir)
+      dir
     }
-  }
 
   /** Streaming daily aggregate over an events directory: 1-day tumbling
     * windows keyed by event_type, 1-day watermark for late data. */
-  def dailyAggStream(spark: SparkSession, path0: String): DataFrame = {
-    val path = stageDir(path0)
-    rawEventStream(spark, path)
+  def dailyAggStream(spark: SparkSession, path: String): DataFrame =
+    eventStream(spark, path)
       .withWatermark("ts", "1 day")
       .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n_events"), round(sum("value"), 2).as("total_value"))
       .select(
         to_date(col("w.start")).as("day"),
         col("event_type"), col("n_events"), col("total_value"))
-  }
 
   /** Streaming daily top-k by value per event type, using the native
     * `topk_agg` bounded-heap aggregate ([[graft.plans]] TopKAgg) as the
@@ -148,14 +145,12 @@ object StreamingOps {
     * per (window, type) is k pairs — never the window's rows. The
     * streaming answer to "top sellers today" that a row_number window
     * cannot express at all (no windows over streaming aggregates). */
-  def dailyTopkStream(spark: SparkSession, path0: String, k: Int = 3): DataFrame = {
-    val path = stageDir(path0)
-    rawEventStream(spark, path)
+  def dailyTopkStream(spark: SparkSession, path: String, k: Int = 3): DataFrame =
+    eventStream(spark, path)
       .withWatermark("ts", "1 day")
       .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
       .agg(expr(s"topk_agg(value, event_id, $k)").as("top"))
       .select(to_date(col("w.start")).as("day"), col("event_type"), col("top"))
-  }
 
   /** Stateful streaming exact-dedup: per content-hash group state
     * remembers whether the hash has been seen; only the first document
@@ -281,7 +276,6 @@ object StreamingOps {
     * session's own shuffle partitions, so the caller's sizing applies
     * unchanged. */
   def adaptiveDrainWidth(spark: SparkSession, paths: String*): Int = {
-    import java.nio.file.{Files, Paths}
     val bytes = paths.map { p =>
       try {
         val path = Paths.get(p)
@@ -326,10 +320,10 @@ object StreamingOps {
     *    store's SST set every micro-batch, exactly the per-batch cost
     *    the bounded-admission queries multiply by their batch count
     *    (measured at sf0.1: the three RocksDB drains 12.8 -> 11.1 s);
-    *  - the checkpoint on tmpfs when /dev/shm is writable: a drain
-    *    never restarts, so its offset/commit WAL and state files are
-    *    ephemeral (measured ~15% off the five-query stream family vs
-    *    disk /tmp);
+    *  - the checkpoint is a [[Scratch.memDir]], on tmpfs when
+    *    /dev/shm is writable: a drain never restarts, so its
+    *    offset/commit WAL and state files are ephemeral (measured ~15%
+    *    off the five-query stream family vs disk /tmp);
     *  - afterwards the confs are restored, the checkpoint deleted, and
     *    every loaded StateStoreProvider unloaded with its maintenance
     *    pool stopped, so background maintenance neither taxes later
@@ -337,7 +331,6 @@ object StreamingOps {
     *    reload lazily if another streaming query runs. */
   private def inDrainScope[T](spark: SparkSession, width: Int,
       stateStore: Option[String])(body: String => T): T = {
-    import java.nio.file.{Files, Paths}
     val shufflePartitions = "spark.sql.shuffle.partitions"
     val provider = providerClass(stateStore)
     val confs = Seq(
@@ -347,11 +340,7 @@ object StreamingOps {
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
         provider.filter(_.contains("RocksDB")).map(_ => "true"))
     val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    val shm = Paths.get("/dev/shm")
-    val ckpt =
-      if (Files.isDirectory(shm) && Files.isWritable(shm))
-        Files.createTempDirectory(shm, "graft_drain_ckpt")
-      else Files.createTempDirectory("graft_drain_ckpt")
+    val ckpt = Scratch.memDir("drain_ckpt")
     try {
       confs.foreach { case (k, v) => v.foreach(spark.conf.set(k, _)) }
       body(ckpt.toString)
@@ -362,18 +351,9 @@ object StreamingOps {
       }
       try org.apache.spark.sql.graft.StateStoreHooks.stopAll()
       catch { case _: Exception => () }
-      deleteTree(ckpt)
+      FileUtils.deleteQuietly(ckpt.toFile)
     }
   }
-
-  private def deleteTree(p: java.nio.file.Path): Unit =
-    try {
-      import java.nio.file.Files
-      val walk = Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => Files.deleteIfExists(f))
-      finally walk.close()
-    } catch { case _: Exception => () }
 
   /** A drain's result table and the query's progress reports, one per
     * micro-batch. `dataBatches` counts the batches that admitted rows —
@@ -396,11 +376,8 @@ object StreamingOps {
   def drain(spark: SparkSession, stream: DataFrame, name: String,
       outputMode: String = "complete", drainPartitions: Int = 4,
       stateStore: Option[String] = None): DrainResult = {
-    import java.nio.file.Files
     import org.apache.spark.sql.streaming.Trigger
-    val out =
-      if (drainsToFileSink(outputMode)) Some(Files.createTempDirectory("graft_drain_out"))
-      else None
+    val out = Option.when(drainsToFileSink(outputMode))(Scratch.dir("drain_out"))
     try inDrainScope(spark, drainPartitions, stateStore) { ckpt =>
       val w = stream.writeStream
         .outputMode(outputMode)
@@ -416,7 +393,85 @@ object StreamingOps {
       val df = out.fold(spark.table(name))(p =>
         spark.read.schema(stream.schema).parquet(p.toString).localCheckpoint(true))
       DrainResult(df, q.recentProgress.toSeq)
-    } finally out.foreach(deleteTree)
+    } finally out.foreach(p => FileUtils.deleteQuietly(p.toFile))
+  }
+
+  /** The one staging memo, keyed by (stager, args): staging pays data
+    * scans and write jobs, a staged directory is immutable once built,
+    * and the bench harness re-runs every query — without the memo the
+    * same source stages 2× per query × 3 queries. */
+  private val staged = new java.util.concurrent.ConcurrentHashMap[(String, Any), String]()
+  private def memo(stager: String, args: Any)(stage: => Path): String =
+    staged.computeIfAbsent((stager, args), _ => stage.toString)
+
+  /** Link `source`'s data into `dir`: a file as itself, a directory as
+    * each of its visible part files. The file stream source does not
+    * descend into a symlinked subdirectory (it lists leaves), so a
+    * multi-file source is flattened — found at the derived sf1, where
+    * the single-file symlink silently staged an empty stream. Copies
+    * where the file system refuses links. */
+  private def linkFiles(source: Path, dir: Path): Unit = {
+    val files =
+      if (Files.isDirectory(source)) listed(source)(f => { val n = f.getFileName.toString
+        !n.startsWith("_") && !n.startsWith(".") && Files.isRegularFile(f) })
+      else Seq(source)
+    files.foreach { f =>
+      val link = dir.resolve(f.getFileName)
+      try Files.createSymbolicLink(link, f.toAbsolutePath)
+      catch { case _: Exception => Files.copy(f, link) }
+    }
+  }
+
+  /** `dir`'s entries that pass `keep`, in name order. */
+  private def listed(dir: Path)(keep: Path => Boolean): Seq[Path] = {
+    val ls = Files.list(dir)
+    try ls.iterator().asScala.filter(keep).toSeq.sortBy(_.getFileName.toString)
+    finally ls.close()
+  }
+
+  /** The `part-*.parquet` files a write left in `dir`, in name order
+    * (for a range-partitioned write, range order). */
+  def partFiles(dir: Path): Seq[Path] = listed(dir)(f => { val n = f.getFileName.toString
+    n.startsWith("part-") && n.endsWith(".parquet") })
+
+  /** Move already-written files into `dir` under their new names and
+    * stamp them with strictly increasing modification times in sequence
+    * order, all in the past (1 s apart: coarse enough to survive file
+    * systems with second-granularity mtime). The file stream source
+    * admits oldest-mtime first, so the sequence IS the admission order
+    * of a bounded (`maxFilesPerTrigger`) drain. */
+  def landInOrder(dir: Path, files: Seq[(Path, String)]): Unit = {
+    val base = System.currentTimeMillis() - (files.size + 4) * 1000L
+    files.zipWithIndex.foreach { case ((f, name), i) =>
+      val tgt = Files.move(f, dir.resolve(name))
+      Files.setLastModifiedTime(tgt, FileTime.fromMillis(base + i * 1000L))
+    }
+  }
+
+  /** Write the far-future sentinel events row(s) into `dir`: one row per
+    * `types` entry (event_id -1, -2, …, user_id -1), stamped a day past
+    * the last event of `events` (already [[normalizeTs]]-ed), with `ts`
+    * in the physical shape `tsType` of the files it sits next to — one
+    * pinned stream schema reads both. An empty source gets no sentinel:
+    * it has no sessions to close. */
+  private def writeEventsSentinel(spark: SparkSession, events: DataFrame,
+      tsType: DataType, types: Seq[String], dir: Path): Unit = {
+    val maxRow = events.agg(max(unix_micros(col("ts")))).head()
+    Option.unless(maxRow.isNullAt(0))(maxRow.getLong(0)).foreach { us =>
+      import spark.implicits._
+      val sentinelUs = us + 86400L * 1000000L
+      val sentinelTsCol = tsType match {
+        case LongType         => lit(sentinelUs * 1000L) // raw nanos
+        case TimestampNTZType => timestamp_micros(lit(sentinelUs)).cast(TimestampNTZType)
+        case _                => timestamp_micros(lit(sentinelUs))
+      }
+      types.zipWithIndex
+        .map { case (t, i) => (-(i + 1).toLong, -1L, t, 0.0, "") }
+        .toDF("event_id", "user_id", "event_type", "value", "props")
+        .withColumn("ts", sentinelTsCol)
+        .select("event_id", "ts", "user_id", "event_type", "value", "props")
+        .write.mode("append").parquet(dir.toString)
+    }
   }
 
   /** Stage a single events parquet file behind a fresh directory PLUS a
@@ -437,155 +492,57 @@ object StreamingOps {
     * never evicted). Sentinels carry user_id = -1 for the caller to
     * filter from the OUTPUT instead.
     *
-    * @return the staged dir.
-    *
-    * Memoized per (path, sentinelTypes): staging pays a max(ts) data
-    * scan plus a sentinel write JOB, the staged dir is immutable once
-    * built, and the bench harness re-runs every query — without the
-    * memo the same source stages 2× per query × 3 queries. */
-  private val sentinelCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Seq[String]), String]()
+    * @return the staged dir, memoized per (path, sentinelTypes). */
   def stageWithSentinel(spark: SparkSession, path: String,
       sentinelTypes: Seq[String] = Seq("sentinel")): String =
-    sentinelCache.computeIfAbsent((path, sentinelTypes), { case (p, st) =>
-      stageWithSentinelUncached(spark, p, st)
-    })
-
-  private def stageWithSentinelUncached(spark: SparkSession, path: String,
-      sentinelTypes: Seq[String]): String = {
-    import java.nio.file._
-    val dir = Files.createTempDirectory("graft_stream_sentinel").toString
-    val p = Paths.get(path)
-    // a production events source is a DIRECTORY of part files, not one
-    // file — the file stream source does not descend into a symlinked
-    // subdirectory (it lists leaves), so flatten: link each part file
-    // into the staged dir. Found at the derived sf1 (multi-file
-    // events), where the single-file symlink silently staged an empty
-    // stream and every sentinel query timed out to 0 rows.
-    def linkInto(target: Path): Unit = {
-      val link = Paths.get(dir).resolve(target.getFileName)
-      try Files.createSymbolicLink(link, target)
-      catch { case _: Exception => Files.copy(target, link) }
+    memo("sentinel", (path, sentinelTypes)) {
+      val dir = Scratch.dir("stream_sentinel")
+      linkFiles(Paths.get(path), dir)
+      val tsType = eventsTsType(spark, path)
+      writeEventsSentinel(spark, normalizeTs(spark.read.parquet(path)), tsType,
+        sentinelTypes, dir)
+      dir
     }
-    if (Files.isDirectory(p)) {
-      val ls = Files.list(p)
-      try {
-        val it = ls.iterator()
-        while (it.hasNext) {
-          val f = it.next()
-          val n = f.getFileName.toString
-          if (!n.startsWith("_") && !n.startsWith(".") && Files.isRegularFile(f))
-            linkInto(f)
-        }
-      } finally ls.close()
-    } else linkInto(p)
-    val tsType = eventsTsType(spark, path)
-    val maxRow = normalizeTs(spark.read.parquet(path))
-      .agg(max(unix_micros(col("ts")))).head()
-    // empty source: no sessions, no sentinel needed
-    Option.unless(maxRow.isNullAt(0))(maxRow.getLong(0)).foreach { us =>
-      import spark.implicits._
-      val sentinelUs = us + 86400L * 1000000L
-      // the sentinel file must carry the SAME physical ts shape as the
-      // real file it sits next to — one pinned stream schema reads both
-      val sentinelTsCol = tsType match {
-        case LongType         => lit(sentinelUs * 1000L) // raw nanos
-        case TimestampNTZType => timestamp_micros(lit(sentinelUs)).cast(TimestampNTZType)
-        case _                => timestamp_micros(lit(sentinelUs))
-      }
-      sentinelTypes.zipWithIndex
-        .map { case (t, i) => (-(i + 1).toLong, -1L, t, 0.0, "") }
-        .toDF("event_id", "user_id", "event_type", "value", "props")
-        .withColumn("ts", sentinelTsCol)
-        .select("event_id", "ts", "user_id", "event_type", "value", "props")
-        .write.mode("append").parquet(dir)
-    }
-    dir
-  }
 
   /** Stage events as `chunks` TIME-RANGE-partitioned files (plus the
     * far-future sentinel, staged LAST) so a bounded-admission drain
-    * ([[rawEventStreamBounded]], maxFilesPerTrigger = 1) replays the
+    * ([[rawEventStream]] with maxFilesPerTrigger = 1) replays the
     * table as `chunks` successive micro-batches in event-time order —
     * the local proof harness for "a cluster's per-trigger admission
     * bounds batch size" (r13 verdict item 1).
     *
     * Mechanics: the table is range-repartitioned on ts into `chunks`
-    * contiguous event-time slices, each written as ONE file; the files
-    * are then stamped with strictly increasing modification times in
-    * range order, because the file stream source admits oldest-mtime
-    * first. Ordering is what makes bounded admission RESULT-INVARIANT:
-    * chunk i+1's earliest event is >= chunk i's latest, and the
-    * watermark lags max event time by the configured delay, so no
-    * mid-stream row ever arrives behind the watermark (nothing is
-    * dropped as late) — sessions spanning a boundary stay in state and
-    * merge in the next batch, closed sessions evict batch by batch.
-    * The staged files are normalized to microsecond timestamps (this
-    * is a fresh rewrite, not symlinks, so the NANOS legacy shape never
-    * reaches the stream). Memoized like [[stageWithSentinel]] (the
-    * rewrite is a full sort-write of the events table). */
-  private val timeOrderedCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), String]()
+    * contiguous event-time slices, each written as ONE file in one
+    * write job; [[landInOrder]] then admits them in range order, the
+    * sentinel newest, so the watermark only passes the real data once
+    * everything is in state. Ordering is what makes bounded admission
+    * RESULT-INVARIANT: chunk i+1's earliest event is >= chunk i's
+    * latest, and the watermark lags max event time by the configured
+    * delay, so no mid-stream row ever arrives behind the watermark
+    * (nothing is dropped as late) — sessions spanning a boundary stay
+    * in state and merge in the next batch, closed sessions evict batch
+    * by batch. The staged files are normalized to microsecond
+    * timestamps (this is a fresh rewrite, not symlinks, so the NANOS
+    * legacy shape never reaches the stream). Memoized per (path,
+    * chunks). */
   def stageTimeOrderedWithSentinel(spark: SparkSession, path: String,
       chunks: Int): String =
-    timeOrderedCache.computeIfAbsent((path, chunks), { case (p, c) =>
-      stageTimeOrderedUncached(spark, p, c)
-    })
-
-  private def stageTimeOrderedUncached(spark: SparkSession, path: String,
-      chunks: Int): String = {
-    import java.nio.file._
-    import java.nio.file.attribute.FileTime
-    require(chunks >= 1, s"chunks must be >= 1, got $chunks")
-    val dir = Files.createTempDirectory("graft_stream_chunks")
-    val build = Files.createTempDirectory("graft_stream_chunks_build")
-    eventsTsType(spark, path) // sets the NANOS legacy conf if needed
-    val df = normalizeTs(spark.read.parquet(path))
-    df.repartitionByRange(chunks, col("ts"), col("event_id"))
-      .sortWithinPartitions("ts")
-      .write.mode("overwrite").parquet(build.toString)
-    import scala.jdk.CollectionConverters._
-    // part-file NAME order = range-partition order = event-time order
-    val parts = {
-      val ls = Files.list(build)
-      try ls.iterator().asScala
-        .filter(f => { val n = f.getFileName.toString
-          n.startsWith("part-") && n.endsWith(".parquet") })
-        .toSeq.sortBy(_.getFileName.toString)
-      finally ls.close()
+    memo("time-ordered", (path, chunks)) {
+      require(chunks >= 1, s"chunks must be >= 1, got $chunks")
+      eventsTsType(spark, path) // sets the NANOS legacy conf if needed
+      val df = normalizeTs(spark.read.parquet(path))
+      val build = Scratch.dir("stream_chunks_build")
+      df.repartitionByRange(chunks, col("ts"), col("event_id"))
+        .sortWithinPartitions("ts")
+        .write.mode("overwrite").parquet(build.toString)
+      val sentinel = Scratch.dir("stream_chunks_sentinel")
+      writeEventsSentinel(spark, df, TimestampType, Seq("sentinel"), sentinel)
+      val dir = Scratch.dir("stream_chunks")
+      landInOrder(dir,
+        partFiles(build).zipWithIndex.map { case (f, i) => f -> f"c$i%05d.parquet" } ++
+          partFiles(sentinel).map(_ -> "sentinel.parquet"))
+      dir
     }
-    // strictly increasing mtimes, all in the past (1s apart: coarse
-    // enough to survive filesystems with second-granularity mtime)
-    val base = System.currentTimeMillis() - (parts.size + 4) * 1000L
-    parts.zipWithIndex.foreach { case (f, i) =>
-      val tgt = dir.resolve(f"c$i%05d.parquet")
-      Files.move(f, tgt)
-      Files.setLastModifiedTime(tgt, FileTime.fromMillis(base + i * 1000L))
-    }
-    val maxRow = df.agg(max(unix_micros(col("ts")))).head()
-    Option.unless(maxRow.isNullAt(0))(maxRow.getLong(0)).foreach { us =>
-      import spark.implicits._
-      val sentinelDir = Files.createTempDirectory("graft_stream_chunks_sent")
-      Seq((-1L, -1L, "sentinel", 0.0, ""))
-        .toDF("event_id", "user_id", "event_type", "value", "props")
-        .withColumn("ts", timestamp_micros(lit(us + 86400L * 1000000L)))
-        .select("event_id", "ts", "user_id", "event_type", "value", "props")
-        .coalesce(1).write.mode("overwrite").parquet(sentinelDir.toString)
-      val sf = {
-        val ls = Files.list(sentinelDir)
-        try ls.iterator().asScala
-          .find(f => { val n = f.getFileName.toString
-            n.startsWith("part-") && n.endsWith(".parquet") }).get
-        finally ls.close()
-      }
-      val tgt = dir.resolve("sentinel.parquet")
-      Files.move(sf, tgt)
-      // newest mtime: the sentinel must be ADMITTED last, so the
-      // watermark only passes the real data once everything is in state
-      Files.setLastModifiedTime(tgt, FileTime.fromMillis(base + (parts.size + 1) * 1000L))
-    }
-    dir.toString
-  }
 
   /** Staged-documents schema for [[stageDocsWithSentinel]]. */
   val docsStagedSchema: StructType = StructType(Seq(
@@ -600,30 +557,21 @@ object StreamingOps {
     * sentinel doc (doc_id = −1, lang "zz") whose only job is to
     * advance the watermark past every real window so append-mode
     * windows all emit in the trailing no-data batch. Returns the
-    * staged dir. Memoized like
-    * [[stageWithSentinel]] (the staged rewrite is a full write job of
-    * the documents table). */
-  private val docsSentinelCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), String]()
+    * staged dir, memoized per (path, epochBase). */
   def stageDocsWithSentinel(spark: SparkSession, path: String,
       epochBase: Long = 1704067200L /* 2024-01-01 00:00:00 UTC */): String =
-    docsSentinelCache.computeIfAbsent((path, epochBase), { case (p, eb) =>
-      stageDocsWithSentinelUncached(spark, p, eb)
-    })
-
-  private def stageDocsWithSentinelUncached(spark: SparkSession, path: String,
-      epochBase: Long): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_docs").toString
-    val docs = spark.read.parquet(path)
-      .select(col("doc_id"), col("lang"), col("text"),
-        timestamp_seconds(lit(epochBase) + col("doc_id") * 60L).as("ts"))
-    import spark.implicits._
-    val sentinel = Seq((-1L, "zz", "x"))
-      .toDF("doc_id", "lang", "text")
-      .withColumn("ts", timestamp_seconds(lit(epochBase) + lit(86400L * 365L)))
-    docs.unionByName(sentinel).coalesce(1).write.mode("overwrite").parquet(dir)
-    dir
-  }
+    memo("docs", (path, epochBase)) {
+      val dir = Scratch.dir("stream_docs")
+      val docs = spark.read.parquet(path)
+        .select(col("doc_id"), col("lang"), col("text"),
+          timestamp_seconds(lit(epochBase) + col("doc_id") * 60L).as("ts"))
+      import spark.implicits._
+      val sentinel = Seq((-1L, "zz", "x"))
+        .toDF("doc_id", "lang", "text")
+        .withColumn("ts", timestamp_seconds(lit(epochBase) + lit(86400L * 365L)))
+      docs.unionByName(sentinel).coalesce(1).write.mode("overwrite").parquet(dir.toString)
+      dir
+    }
 
   /** Drain a stream through [[partitionUpsertSink]] to completion and
     * read the landed table back — the test/verify harness for the sink,
@@ -646,9 +594,6 @@ object StreamingOps {
   def eventStream(spark: SparkSession, path: String): DataFrame =
     rawEventStream(spark, stageDir(path))
 
-  /** Streaming documents source: the documents table staged behind a
-    * file-stream directory with a pinned schema (file streams require
-    * a user schema). */
   /** Continuous ingest-dedup loop against a persisted
     * [[graft.operators.Dedup.writeLshIndex]] index — the production
     * corpus-building shape (CCNet/Dolma run exactly this daily): each
@@ -700,6 +645,9 @@ object StreamingOps {
     w.start()
   }
 
+  /** Streaming documents source: the documents table staged behind a
+    * file-stream directory with a pinned schema (file streams require
+    * a user schema). */
   def documentStream(spark: SparkSession, path: String): DataFrame = {
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(

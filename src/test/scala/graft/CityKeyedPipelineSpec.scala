@@ -78,7 +78,7 @@ class CityKeyedPipelineSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("run: the quality report matches the per-city chains' report") {
-    val out = java.nio.file.Files.createTempDirectory("graft_city_keyed").toString
+    val out = Scratch.dir("city_keyed").toString
     val rep = Pipeline.run(spark, fixture, Pipeline.Realtime, LocalDate.parse("2024-03-05"), out)
     assert(rep == QualityReport(
       row_count = 2,
@@ -94,7 +94,7 @@ class CityKeyedPipelineSpec extends AnyFunSuite with SparkFixture {
   test("run: with every energy feed empty it lands the weather table and its report") {
     val weatherOnly = fixture.map { case (city, noaa, _) => (city, noaa, eia()) }
     val today = LocalDate.parse("2024-03-05")
-    val out = java.nio.file.Files.createTempDirectory("graft_weather_only").toString
+    val out = Scratch.dir("weather_only").toString
     val rep = Pipeline.run(spark, weatherOnly, Pipeline.Realtime, today, out)
     val (start, end) = Pipeline.dateWindow(Pipeline.Realtime, today)
     val weather = Pipeline.buildWeather(weatherOnly, start, end)
@@ -117,7 +117,7 @@ class CityKeyedPipelineSpec extends AnyFunSuite with SparkFixture {
     }
     spark.listenerManager.register(listener)
     try {
-      val out = java.nio.file.Files.createTempDirectory("graft_one_fact").toString
+      val out = Scratch.dir("one_fact").toString
       Pipeline.run(spark, fixture, Pipeline.Realtime, LocalDate.parse("2024-03-05"), out)
       // the listener bus is asynchronous and ordered: once a later
       // action's event arrives, every event of the run has arrived

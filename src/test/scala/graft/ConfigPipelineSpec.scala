@@ -115,7 +115,7 @@ class ConfigPipelineSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("S4 landRaw + replay: landed payload reproduces the same fact rows") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_raw").toString
+    val dir = Scratch.dir("raw").toString
     val payload =
       """{"results":[{"date":"2025-07-29T00:00:00","datatype":"TMAX","value":36.1,"station":"ST","attributes":""},{"date":"2025-07-29T00:00:00","datatype":"TMIN","value":25.6,"station":"ST","attributes":""}]}"""
     val path = Connectors.rawLandingPath(dir, "weather", "TestCity", "2025-07-29", "2025-07-29")
@@ -136,7 +136,7 @@ class ConfigPipelineSpec extends AnyFunSuite with SparkFixture {
     val noaa = SyntheticData.noaaRawJson(spark, "2024-01-01", 30)
     val emptyEia = spark.read.schema(graft.domain.Schemas.eiaRaw)
       .json(Seq("""{"response":{"total":"0","data":[]}}""").toDS)
-    val out = java.nio.file.Files.createTempDirectory("graft_fallback").toString
+    val out = Scratch.dir("fallback").toString
     val today = LocalDate.parse("2024-01-31")
     val rep = Pipeline.run(spark, Seq(("CityA", noaa, emptyEia)), Pipeline.Realtime, today, out)
     assert(rep.weather_only)
@@ -157,10 +157,10 @@ class ConfigPipelineSpec extends AnyFunSuite with SparkFixture {
     val df = (1 to 40).map(i => (i, s"v$i")).toDF("id", "v").repartition(4)
     def parts(p: String): Int =
       new java.io.File(p).listFiles().count(f => f.getName.startsWith("part-") && f.getName.endsWith(".csv"))
-    val small = java.nio.file.Files.createTempDirectory("graft_csv_s").toString + "/out"
+    val small = Scratch.dir("csv_s").toString + "/out"
     PipelineOps.writeCsv(df, small) // under default bound → single file
     assert(parts(small) == 1)
-    val big = java.nio.file.Files.createTempDirectory("graft_csv_b").toString + "/out"
+    val big = Scratch.dir("csv_b").toString + "/out"
     PipelineOps.writeCsv(df, big, maxRowsSingleFile = 10) // over bound → multi-part
     assert(parts(big) > 1)
     assert(spark.read.option("header", "true").csv(big).count() == 40)
@@ -175,7 +175,7 @@ class ConfigPipelineSpec extends AnyFunSuite with SparkFixture {
     val (observed, obs) = QualityOps.observeQuality(df,
       Seq("temp_avg_f", "energy_demand_gwh"))
     observed.write.mode("overwrite")
-      .parquet(java.nio.file.Files.createTempDirectory("graft_obs").toString)
+      .parquet(Scratch.dir("obs").toString)
     val m = obs.get
     assert(m("n_rows") == 5L)
     assert(m("nulls_temp_avg_f") == 2L)

@@ -27,7 +27,7 @@ class FactSinkSpec extends AnyFunSuite with SparkFixture {
 
   /** Backfill 2024-03-01 .. 2024-03-05 into a new sink; its directory. */
   private def backfill(): String = {
-    val sink = Files.createTempDirectory("graft_sink").resolve("weather_energy_parquet").toString
+    val sink = Scratch.dir("sink").resolve("weather_energy_parquet").toString
     PipelineOps.writePartitioned(Pipeline.build(spark, raw(), "2024-03-01", "2024-03-05"), sink)
     sink
   }
@@ -107,7 +107,7 @@ class FactSinkSpec extends AnyFunSuite with SparkFixture {
 
   test("a sink in the (city, date) layout is refused before anything is written") {
     val fact = Pipeline.build(spark, raw(), "2024-03-01", "2024-03-05")
-    val sink = Files.createTempDirectory("graft_legacy").resolve("weather_energy_parquet").toString
+    val sink = Scratch.dir("legacy").resolve("weather_energy_parquet").toString
     fact.write.partitionBy("city", "date").parquet(sink)
     val tree = Files.walk(Paths.get(sink)).iterator().asScala.map(_.toString).toSet
     val e = intercept[IllegalStateException](PipelineOps.writePartitioned(fact, sink))

@@ -48,7 +48,7 @@ class LshIndexSpec extends AnyFunSuite with SparkFixture {
       (501L, rep(cycleB, 3)),  // novel intra pair: min id 501 survives,
       (502L, rep(cycleB, 4)))  // 502 dropped by intra-batch dedup
       .toDF("doc_id", "text")
-    val tmp = java.nio.file.Files.createTempDirectory("lsh_stream_spec").toString
+    val tmp = Scratch.dir("lsh_stream_spec").toString
     batch.repartition(1).write.parquet(s"$tmp/in")
     val stream = s.readStream.schema("doc_id LONG, text STRING").parquet(s"$tmp/in")
     val q = graft.streaming.StreamingOps.lshDedupIngestSink(

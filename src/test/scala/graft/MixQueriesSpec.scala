@@ -96,7 +96,7 @@ class MixQueriesSpec extends AnyFunSuite with SparkFixture {
     val testIds = ev.filter(!col("is_cal")).select("event_id")
       .orderBy("event_id").limit(30).collect().map(_.getLong(0))
     val keep = (calIds ++ testIds).toSet
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q275_tiny").toString
+    val tmp = Scratch.dir("q275_tiny").toString
     graft.sources.Tables.events(spark, sf)
       .filter(col("event_id").isInCollection(keep))
       .write.mode("overwrite").parquet(s"$tmp/events.parquet")

@@ -229,7 +229,7 @@ class ScaleSpec extends AnyFunSuite with SparkFixture {
 
   test("city-partitioned fact table prunes partitions on a city filter") {
     val fact = graft.sources.SyntheticData.weatherEnergy(spark, "2024-01-01", nDays = 20)
-    val out = java.nio.file.Files.createTempDirectory("graft_part").toString
+    val out = Scratch.dir("part").toString
     graft.operators.PipelineOps.writePartitioned(fact, out)
     val read = spark.read.parquet(out).filter(col("city") === "Chicago")
     val plan = read.queryExecution.executedPlan.toString
@@ -379,7 +379,7 @@ class ScaleSpec extends AnyFunSuite with SparkFixture {
     import graft.sources.Sinks
     val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
     val emb = graft.sources.Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val dir = java.nio.file.Files.createTempDirectory("graft_orc").toString
+    val dir = Scratch.dir("orc").toString
     // nested array<float> round-trips bit-exact
     Sinks.writeFormatted(emb, s"$dir/emb", "orc")
     val embBack = Sinks.readFormatted(spark, s"$dir/emb", "orc")
@@ -406,7 +406,7 @@ class ScaleSpec extends AnyFunSuite with SparkFixture {
     import graft.sources.Sinks
     val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
       .select("doc_id", "lang", "n_chars") // no free text: csv-safe columns
-    val dir = java.nio.file.Files.createTempDirectory("graft_fmt").toString
+    val dir = Scratch.dir("fmt").toString
     for (fmt <- Seq("json", "csv")) {
       Sinks.writeFormatted(docs, s"$dir/$fmt", fmt)
       val back = Sinks.readFormatted(spark, s"$dir/$fmt", fmt, Some(docs.schema))

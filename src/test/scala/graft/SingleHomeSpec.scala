@@ -6,8 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Guards against regrowth of the session builders, function and rule
   * installs, query maps, config parsers, quality thresholds, engine
-  * conf readers, prefix-sum kernels and streaming-drain knobs this code
-  * base once had many copies of: each may appear only in its one home. */
+  * conf readers, prefix-sum kernels, streaming-drain knobs, temp
+  * directories and staging memos this code base once had many copies
+  * of: each may appear only in its one home. */
 class SingleHomeSpec extends AnyFunSuite {
 
   private def sources(dir: String): Seq[Path] = {
@@ -75,6 +76,17 @@ class SingleHomeSpec extends AnyFunSuite {
     assert(holders("src/main/scala", "sys.env").filterNot(mains).isEmpty)
     assert(holders("src/main/scala", "sys.props.get").isEmpty)
     assert(holders("src/main/scala", "StreamingQueryListener").isEmpty)
+  }
+
+  test("temp directories come only from Scratch, and the stagers share one memo") {
+    def found(token: String) = (holders("src/main/scala", token) ++
+      holders("src/test/scala", token)).filterNot(_ == "src/test/scala/graft/SingleHomeSpec.scala")
+    Seq("createTempDirectory", "createTempFile", "java.io.tmpdir").foreach { token =>
+      assert(found(token).forall(_ == "src/main/scala/graft/Scratch.scala"), token)
+    }
+    Seq("sentinelCache", "timeOrderedCache", "docsSentinelCache").foreach { name =>
+      assert(found(name).isEmpty, name)
+    }
   }
 
   test("no spec builds its own session: all go through SparkFixture") {

@@ -91,8 +91,8 @@ class SourceV2Spec extends AnyFunSuite with SparkFixture {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val s = spark; import s.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_upsert").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_upsert_ckpt").toString
+    val dir = Scratch.dir("upsert").toString
+    val ckpt = Scratch.dir("upsert_ckpt").toString
     val input = MemoryStream[(String, String, Double)]
     val agg = input.toDF().toDF("day", "event_type", "value")
       .groupBy("day", "event_type").agg(sum("value").as("total"))

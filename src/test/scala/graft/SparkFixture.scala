@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Path
 import org.apache.spark.sql.SparkSession
 import graft.plans.GraftExtensions
 
@@ -17,12 +17,9 @@ trait SparkFixture {
 object SparkFixture {
 
   /** The JVM's one warehouse: every spec's managed tables land here,
-    * not in `<cwd>/spark-warehouse`. Deleted when the JVM exits. */
-  lazy val warehouse: Path = {
-    val dir = Files.createTempDirectory("graft_wh")
-    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile))
-    dir
-  }
+    * not in `<cwd>/spark-warehouse`. Deleted with the scratch root when
+    * the JVM exits. */
+  lazy val warehouse: Path = Scratch.dir("wh")
 
   lazy val session: SparkSession = {
     val s = GraftSession.builder("local[4]", "4")

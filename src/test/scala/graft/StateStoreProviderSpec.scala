@@ -17,7 +17,7 @@ class StateStoreProviderSpec extends AnyFunSuite with SparkFixture {
 
   private def sessionRows(provider: Option[String]): Seq[(Long, String, Long)] = {
     val s = spark; import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_ssp_spec").toString
+    val dir = Scratch.dir("ssp_spec").toString
     val base = java.sql.Timestamp.valueOf("2024-01-01 10:00:00").getTime
     def ts(minutes: Long) = new java.sql.Timestamp(base + minutes * 60000L)
     Seq(
@@ -50,7 +50,6 @@ class StateStoreProviderSpec extends AnyFunSuite with SparkFixture {
     * TTL paths exercise real state eviction on the provider under test. */
   private def ttlDedupRows(provider: Option[String]): Seq[(Long, String)] = {
     val s = spark; import s.implicits._
-    import java.nio.file._
     def ts(off: Long) = new java.sql.Timestamp((1704067200L + off) * 1000L)
     val day = 86400L
     val batches = Seq(
@@ -59,22 +58,19 @@ class StateStoreProviderSpec extends AnyFunSuite with SparkFixture {
         (3L, "alpha beta gamma", ts(3600L))), // within TTL → dropped
       Seq((101L, "second pusher text", ts(10 * day + 60L))), // eviction spacer
       Seq((4L, "alpha beta gamma", ts(9 * day + 3600L)))) // post-expiry → lands
-    val dir = Files.createTempDirectory("graft_ssp_ttl").toString
-    batches.zipWithIndex.foreach { case (rows, i) =>
-      val p = s"$dir/batch$i"
+    val files = batches.flatMap { rows =>
+      val p = Scratch.dir("ssp_ttl_batch")
       rows.toDF("doc_id", "text", "ts").coalesce(1)
-        .write.mode("overwrite").parquet(p)
-      val it = Files.list(Paths.get(p)).iterator()
-      while (it.hasNext) {
-        val f = it.next()
-        Files.setLastModifiedTime(f,
-          attribute.FileTime.fromMillis(1700000000000L + i * 60000L))
-      }
+        .write.mode("overwrite").parquet(p.toString)
+      graft.streaming.StreamingOps.partFiles(p)
     }
+    val dir = Scratch.dir("ssp_ttl")
+    graft.streaming.StreamingOps.landInOrder(dir,
+      files.zipWithIndex.map { case (f, i) => f -> s"batch$i.parquet" })
     val stream = s.readStream
       .schema("doc_id LONG, text STRING, ts TIMESTAMP")
       .option("maxFilesPerTrigger", 1)
-      .parquet(s"$dir/batch*")
+      .parquet(dir.toString)
     graft.streaming.StreamingOps
       .drain(s, graft.streaming.StreamingOps.dedupStreamTtl(stream, "1 day"),
         s"ssp_ttl_${provider.getOrElse("default")}",

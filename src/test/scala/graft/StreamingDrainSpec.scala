@@ -34,7 +34,7 @@ class StreamingDrainSpec extends AnyFunSuite with SparkFixture {
 
   test("file drain sink equals the batch session_window rows (q85 shape)") {
     val s = spark; import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_drain_spec").toString
+    val dir = Scratch.dir("drain_spec").toString
     // two users, two sessions each (gap > 30 min splits), plus the
     // far-future watermark-pusher row the q85 staging would add
     val base = java.sql.Timestamp.valueOf("2024-01-01 10:00:00").getTime
@@ -65,7 +65,7 @@ class StreamingDrainSpec extends AnyFunSuite with SparkFixture {
     // sentinel-advanced watermark evicts them in the trailing no-data
     // batch — which the drain must run without being told to wait
     val s = spark; import s.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft_drain_join").toString
+    val d = Scratch.dir("drain_join").toString
     val base = java.sql.Timestamp.valueOf("2024-01-01 10:00:00").getTime
     def ts(minutes: Long) = new java.sql.Timestamp(base + minutes * 60000L)
     Seq(
@@ -104,7 +104,7 @@ class StreamingDrainSpec extends AnyFunSuite with SparkFixture {
     // across batches) and per-batch eviction of closed sessions.
     val s = spark; import s.implicits._
     import graft.streaming.StreamingOps
-    val raw = java.nio.file.Files.createTempDirectory("graft_bounded_raw").toString
+    val raw = Scratch.dir("bounded_raw").toString
     val base = java.sql.Timestamp.valueOf("2024-01-01 10:00:00").getTime
     def ts(minutes: Long) = new java.sql.Timestamp(base + minutes * 60000L)
     // user 7: one session spanning minutes 0..40 at <=30-min gaps (events
@@ -122,7 +122,7 @@ class StreamingDrainSpec extends AnyFunSuite with SparkFixture {
       val (dir, src) =
         if (bounded) {
           val d = StreamingOps.stageTimeOrderedWithSentinel(s, raw, chunks = 4)
-          (d, StreamingOps.rawEventStreamBounded(s, d, maxFilesPerTrigger = 1))
+          (d, StreamingOps.rawEventStream(s, d, maxFilesPerTrigger = Some(1)))
         } else {
           val d = StreamingOps.stageWithSentinel(s, raw)
           (d, StreamingOps.rawEventStream(s, d))

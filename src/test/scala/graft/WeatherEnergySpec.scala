@@ -123,7 +123,7 @@ class WeatherEnergySpec extends AnyFunSuite with SparkFixture {
     val noaa = SyntheticData.noaaRawJson(spark, "2024-01-01", 30)
     val eia = SyntheticData.eiaRawJson(spark, "2024-01-01", 30)
     val raw = Seq(("CityA", noaa, eia), ("CityB", noaa, eia))
-    val out = java.nio.file.Files.createTempDirectory("graft_e2e").toString
+    val out = Scratch.dir("e2e").toString
     val today = LocalDate.parse("2024-01-31")
     val (start, end) = Pipeline.dateWindow(Pipeline.Historical, today)
     assert(end == "2024-01-30" && start == "2023-08-04")
