@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.StructType
 import graft.domain.OlsSummary
 import graft.functions.Stats
 
@@ -13,16 +15,16 @@ object Analytics {
 
   /** Q-geo part 1 (A5/W3): latest row per city with previous-day energy
     * and guarded pct-change — the reference's self-join (J3,
-    * dashboards/app.py:602-613) rewritten as the idiomatic lag window:
-    * one shuffle on city instead of two joins. */
+    * dashboards/app.py:602-613) rewritten as one ascending window per
+    * city: `lag` gives the previous day's energy and an empty `lead`
+    * marks the city's last row, so one shuffle on city and one sort. */
   def latestWithPrevDay(fact: DataFrame): DataFrame = {
     val byCity = Window.partitionBy("city").orderBy(col("date"))
-    val latest = Window.partitionBy("city").orderBy(col("date").desc)
     fact
       .withColumn("prev_energy", lag("energy_demand_gwh", 1).over(byCity))
-      .withColumn("rn", row_number().over(latest))
-      .filter(col("rn") === 1)
-      .drop("rn")
+      .withColumn("is_last", lead(lit(true), 1).over(byCity).isNull)
+      .filter(col("is_last"))
+      .drop("is_last")
       .withColumn("prev_energy", coalesce(col("prev_energy"), lit(0.0))) // reference fillna(0)
       .withColumn("pct_change",
         when(col("prev_energy") > 0,
@@ -31,50 +33,30 @@ object Analytics {
   }
 
   /** Q-timeseries (A3/W1): all-cities daily series (mean temp, summed
-    * energy), optionally first-differenced for the stationarity toggle
-    * (reference dashboards/app.py:701-716).
+    * energy) in date order, optionally first-differenced for the
+    * stationarity toggle (reference dashboards/app.py:701-716).
     *
-    * The diff lag runs over a YEAR-partitioned window, not a global
-    * `Window.orderBy` (which moves the whole series to one partition —
-    * harmless at rows = #days, but the wrong template to copy into a
-    * per-key series at scale). Year boundaries stay exact: each year's
-    * last row is unioned into the NEXT YEAR PRESENT IN THE DATA as a
-    * carry row that feeds the lag and is dropped from the output (the
-    * next-existing-year assignment — a tiny per-year self-join — is
-    * what keeps the diff exact across calendar-year gaps), so the
-    * partitioned diff equals the global one row-for-row. */
+    * The series has one row per day whatever the number of cities
+    * (3,650 for a decade), so it is bounded and is handled in one
+    * partition. The diff collects it into one date-sorted array and
+    * subtracts each element's predecessor in the array: the previous
+    * day PRESENT in the data, across year boundaries and calendar gaps
+    * alike. There is no ordering window, and the rows come out in
+    * array order, which is date order. */
   def timeSeries(fact: DataFrame, diff: Boolean = false): DataFrame = {
+    val values = Seq("temp_avg_f", "energy_demand_gwh")
     val daily = fact.groupBy("date")
       .agg(avg("temp_avg_f").as("temp_avg_f"), sum("energy_demand_gwh").as("energy_demand_gwh"))
-    if (!diff) daily.orderBy("date")
+      .coalesce(1) // one partition: rows = #days
+    if (!diff) daily.sortWithinPartitions("date")
     else {
-      val keyed = daily.withColumn("yr", year(col("date")))
-        .withColumn("carry", lit(false))
-      // max over (date-first) structs = the latest row of each year
-      val perYearLast = keyed.groupBy("yr")
-        .agg(max(struct(col("date"), col("temp_avg_f"), col("energy_demand_gwh"))).as("s"))
-      // carry each year's last row into the next year PRESENT in the
-      // data (min existing year above it) — `yr + 1` would strand the
-      // carry in an empty partition across a calendar-year gap and
-      // silently drop the post-gap diff row. Rows here = #years.
-      val years = perYearLast.select(col("yr").as("later_yr"))
-      val carry = perYearLast
-        .join(years, col("later_yr") > col("yr"))
-        .groupBy(col("yr"), col("s"))
-        .agg(min("later_yr").as("target_yr"))
-        .select(col("target_yr").as("yr"), col("s.date").as("date"),
-          col("s.temp_avg_f").as("temp_avg_f"),
-          col("s.energy_demand_gwh").as("energy_demand_gwh"),
-          lit(true).as("carry"))
-      val w = Window.partitionBy("yr").orderBy("date")
-      keyed.unionByName(carry)
-        .withColumn("temp_avg_f", col("temp_avg_f") - lag("temp_avg_f", 1).over(w))
-        .withColumn("energy_demand_gwh",
-          col("energy_demand_gwh") - lag("energy_demand_gwh", 1).over(w))
-        .filter(!col("carry"))
-        .drop("yr", "carry")
-        .na.drop(Seq("temp_avg_f", "energy_demand_gwh"))
-        .orderBy("date")
+      val days = col("days")
+      daily.agg(array_sort(collect_list(struct(("date" +: values).map(col): _*))).as("days"))
+        .select(inline(transform(days, (day, i) => {
+          val prev = get(days, i - 1) // NULL before the first day
+          struct(day("date").as("date") +: values.map(v => (day(v) - prev(v)).as(v)): _*)
+        })))
+        .na.drop(values)
     }
   }
 
@@ -97,70 +79,87 @@ object Analytics {
   }
 
   /** Q-heatmap (A7): mean energy by temperature bin × day-of-week, with
-    * fixed row/column ordering (reference src/analysis.py:59-66). */
+    * fixed row/column ordering (reference src/analysis.py:59-66). One
+    * aggregate makes one row holding, for every bin, its row count and
+    * its mean energy on each weekday; the bins present are then
+    * unfolded from an array that lists them hottest first, so the
+    * reference's descending bin order needs no sort. An empty cell is
+    * 0.0. */
   def heatmap(fact: DataFrame): DataFrame = {
     val dayOrder = Seq("Monday", "Tuesday", "Wednesday", "Thursday", "Friday", "Saturday", "Sunday")
-    val labelRank = defaultBinLabels.zipWithIndex
-      .foldLeft(lit(-1)) { case (acc, (l, i)) => when(col("temp_range") === l, i).otherwise(acc) }
+    val bin = temperatureBin(col("temp_avg_f"))
+    val weekday = dayofweek(col("date")) // 1 = Sunday … 7 = Saturday
+    val bins = defaultBinLabels.indices
+    val aggs = bins.flatMap { b =>
+      val inBin = bin === defaultBinLabels(b)
+      count(when(inBin, 1)).as(s"n$b") +: dayOrder.indices.map { d =>
+        avg(when(inBin && weekday === (d + 1) % 7 + 1, col("energy_demand_gwh"))).as(s"e${b}_$d")
+      }
+    }
+    val rows = bins.reverse.map { b =>
+      struct(lit(defaultBinLabels(b)).as("temp_range") +: col(s"n$b").as("n") +:
+        dayOrder.indices.map(d => col(s"e${b}_$d").as(dayOrder(d))): _*)
+    }
     fact
       .na.drop(Seq("temp_avg_f", "energy_demand_gwh"))
-      .withColumn("temp_range", temperatureBin(col("temp_avg_f")))
-      .withColumn("day_of_week", date_format(col("date"), "EEEE"))
-      .groupBy("temp_range")
-      .pivot("day_of_week", dayOrder)
-      .agg(avg("energy_demand_gwh"))
+      .agg(aggs.head, aggs.tail: _*)
+      .select(inline(array(rows: _*)))
+      .filter(col("n") > 0)
+      .drop("n")
       .na.fill(0.0, dayOrder)
-      .withColumn("bin_rank", labelRank)
-      .orderBy(col("bin_rank").desc) // reference: descending bin order
-      .drop("bin_rank")
   }
 
   /** X1/X2 + sufficient statistics for X3, in ONE pass: slope,
     * intercept, r, r², x̄, Sxx and the residual standard error
     * s = sqrt(SSE/(n-2)) — everything the CI bands need. */
-  def olsSummary(df: DataFrame, xCol: String, yCol: String): Option[OlsSummary] = {
-    val clean = df.na.drop(Seq(xCol, yCol))
-    val r = clean.agg(
-      count(lit(1)).as("n"),
-      corr(xCol, yCol).as("r"),
-      expr(s"regr_slope($yCol, $xCol)").as("slope"),
-      expr(s"regr_intercept($yCol, $xCol)").as("intercept"),
-      avg(xCol).as("xbar"),
-      expr(s"regr_sxx($yCol, $xCol)").as("sxx"),
-      expr(s"regr_syy($yCol, $xCol)").as("syy"),
-      expr(s"regr_sxy($yCol, $xCol)").as("sxy")).collect().head
+  def olsSummary(df: DataFrame, xCol: String, yCol: String): Option[OlsSummary] =
+    olsPass(df, xCol, yCol).map(_._1)
+
+  /** The OLS aggregates over the rows where both columns are present
+    * (not NULL, not NaN), plus `extra` aggregates over the rows where
+    * `xCol` is, in one job. None below two complete rows (X4
+    * degenerate-input guard, reference src/analysis.py:13-14). */
+  private def olsPass(df: DataFrame, xCol: String, yCol: String,
+      extra: Column*): Option[(OlsSummary, Row)] = {
+    val yOk = col(yCol).isNotNull && !isnan(col(yCol))
+    val (x, y) = (when(yOk, col(xCol)), when(yOk, col(yCol)))
+    val aggs = Seq(count(y).as("n"), corr(x, y).as("r"), regr_slope(y, x).as("slope"),
+      regr_intercept(y, x).as("intercept"), avg(x).as("xbar"), regr_sxx(y, x).as("sxx"),
+      regr_syy(y, x).as("syy"), regr_sxy(y, x).as("sxy")) ++ extra
+    val r = df.na.drop(Seq(xCol)).agg(aggs.head, aggs.tail: _*).collect().head
     val n = r.getAs[Long]("n")
-    if (n < 2) None // X4 degenerate-input guard (reference src/analysis.py:13-14)
+    if (n < 2) None
     else {
       val slope = r.getAs[Double]("slope")
-      val sxx = r.getAs[Double]("sxx")
-      val syy = r.getAs[Double]("syy")
-      val sxy = r.getAs[Double]("sxy")
-      val sse = math.max(syy - slope * sxy, 0.0)
+      val sse = math.max(r.getAs[Double]("syy") - slope * r.getAs[Double]("sxy"), 0.0)
       val residStdErr = if (n > 2) math.sqrt(sse / (n - 2)) else 0.0
       val pearson = Option(r.getAs[java.lang.Double]("r")).map(_.toDouble).getOrElse(0.0)
-      Some(OlsSummary(n, slope, r.getAs[Double]("intercept"), pearson,
-        pearson * pearson, r.getAs[Double]("xbar"), sxx, residStdErr))
+      Some((OlsSummary(n, slope, r.getAs[Double]("intercept"), pearson,
+        pearson * pearson, r.getAs[Double]("xbar"), r.getAs[Double]("sxx"), residStdErr), r))
     }
   }
 
   /** X3 — OLS 95% mean-CI bands over a prediction grid: ŷ ± t(α/2, n−2)
-    * · s · sqrt(1/n + (x−x̄)²/Sxx). The t quantile is one driver-side
-    * scalar (graft.functions.Stats); the band arithmetic is column
-    * expressions over the grid — no per-row driver work. */
+    * · s · sqrt(1/n + (x−x̄)²/Sxx), one row per distinct x in ascending
+    * order. The grid is collected in the summary's own job, so the
+    * bands are a local frame: column expressions over the grid the
+    * caller receives anyway, and no further job. The t quantile is one
+    * driver-side scalar (graft.functions.Stats). */
   def olsCiBands(df: DataFrame, xCol: String, yCol: String,
       alpha: Double = 0.05): Option[DataFrame] =
-    olsSummary(df, xCol, yCol).filter(_.n > 2).map { s =>
-      val t = Stats.tQuantile(1 - alpha / 2, (s.n - 2).toDouble)
-      val grid = df.na.drop(Seq(xCol)).select(col(xCol).as("x")).distinct()
-      val se = lit(s.residStdErr) *
-        sqrt(lit(1.0 / s.n) + pow(col("x") - s.xMean, 2) / lit(s.sxx))
-      grid
-        .withColumn("y_hat", lit(s.intercept) + lit(s.slope) * col("x"))
-        .withColumn("ci_lower", col("y_hat") - lit(t) * se)
-        .withColumn("ci_upper", col("y_hat") + lit(t) * se)
-        .orderBy("x")
-    }
+    olsPass(df, xCol, yCol, array_sort(collect_set(col(xCol))).as("grid"))
+      .filter(_._1.n > 2).map { case (s, r) =>
+        val t = Stats.tQuantile(1 - alpha / 2, (s.n - 2).toDouble)
+        val schema = StructType(Seq(df.schema(xCol).copy(name = "x", nullable = false)))
+        val grid = df.sparkSession.createDataFrame(
+          r.getSeq[Any](r.fieldIndex("grid")).map(Row(_)).asJava, schema)
+        val se = lit(s.residStdErr) *
+          sqrt(lit(1.0 / s.n) + pow(col("x") - s.xMean, 2) / lit(s.sxx))
+        grid
+          .withColumn("y_hat", lit(s.intercept) + lit(s.slope) * col("x"))
+          .withColumn("ci_lower", col("y_hat") - lit(t) * se)
+          .withColumn("ci_upper", col("y_hat") + lit(t) * se)
+      }
 
   /** X5 — narrow-temperature-range warning (reference
     * dashboards/app.py:784-789). */

@@ -64,12 +64,13 @@ object PipelineOps {
     * src/pipeline.py:96-98). The reference writes ONE csv file; a
     * `coalesce(1)` funnels every row through a single task, which is a
     * scale-killer on a big frame — so the single-file convenience is
-    * gated on a row bound (probed with a limit-count, which stops
-    * scanning once the bound is exceeded) and larger frames write
-    * multi-part. */
+    * gated on a row bound and larger frames write multi-part. A caller
+    * that already holds the row count passes it as `rows`; without it
+    * the bound is probed with a limit-count, which stops scanning once
+    * the bound is exceeded. */
   def writeCsv(df: DataFrame, path: String,
-      maxRowsSingleFile: Int = 1000000): Unit = {
-    val small = df.limit(maxRowsSingleFile + 1).count() <= maxRowsSingleFile
+      maxRowsSingleFile: Int = 1000000, rows: Option[Long] = None): Unit = {
+    val small = rows.getOrElse(df.limit(maxRowsSingleFile + 1).count()) <= maxRowsSingleFile
     val out = if (small) df.coalesce(1) else df
     out.write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
   }
@@ -82,6 +83,12 @@ object PipelineOps {
     * touches are read back, the ones whose (date, city) `df` carries are
     * dropped, and the rest are written together with `df`; a dynamic
     * partition overwrite then replaces only the touched cities' files.
+    * A caller whose `df` holds EVERY (date, city) of some cities over
+    * [start, end], as `Pipeline.run`'s fact does, passes that `window`:
+    * the rows kept are then those cities' rows outside [start, end], a
+    * filter on the sink whose scan reads only their directories, with
+    * no join against `df`. Without it, the touched cities and the
+    * replaced keys are taken from `df` by joins.
     * So a re-run of a day replaces that day in place, every other day
     * of a touched city is kept, and the files of cities `df` does not
     * touch are left as they are. This keeps the `realtime` daily run
@@ -104,7 +111,8 @@ object PipelineOps {
     * it. `writeCsv` intentionally keeps the reference's whole-file CSV
     * for dashboard parity; the parquet path is the history-preserving
     * sink. */
-  def writePartitioned(df: DataFrame, path: String): Unit = {
+  def writePartitioned(df: DataFrame, path: String,
+      window: Option[(Seq[String], String, String)] = None): Unit = {
     val spark = df.sparkSession
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -116,13 +124,18 @@ object PipelineOps {
     val rows =
       if (!present("city=*")) df
       else {
-        val keys = df.select("date", "city")
         // read with df's schema: no footer-inference job, and the
         // rewritten files take df's columns
-        spark.read.schema(df.schema).parquet(path)
-          .join(keys.select("city"), Seq("city"), "left_semi")
-          .join(keys, Seq("date", "city"), "left_anti")
-          .unionByName(df)
+        val sink = spark.read.schema(df.schema).parquet(path)
+        val kept = window match {
+          case Some((cities, start, end)) =>
+            sink.filter(col("city").isin(cities: _*) && !col("date").between(start, end))
+          case None =>
+            val keys = df.select("date", "city")
+            sink.join(keys.select("city"), Seq("city"), "left_semi")
+              .join(keys, Seq("date", "city"), "left_anti")
+        }
+        kept.unionByName(df)
       }
     rows.repartition(col("city")).write
       .mode(SaveMode.Overwrite)

@@ -1,5 +1,7 @@
 package graft.operators
 
+import java.time.LocalDate
+import java.time.temporal.ChronoUnit
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.config.PipelineConfig
@@ -42,7 +44,10 @@ object QualityOps {
   private val anyNull: Column = Seq("temp_max_f", "temp_min_f", "temp_avg_f", "energy_demand_gwh")
     .map(col(_).isNull).reduce(_ || _)
 
-  /** Single-pass quality report over the canonical fact table. */
+  /** Single-pass quality report over the canonical fact table.
+    * Freshness is taken on the driver from the collected latest date:
+    * an `asOfDate` literal in the aggregate would be compiled into its
+    * generated code, so every new day would compile a new class. */
   def report(fact: DataFrame, asOfDate: String,
       cfg: PipelineConfig = PipelineConfig.default): QualityReport = {
     val present = fact.columns.toSet
@@ -59,9 +64,7 @@ object QualityOps {
         Some(sum((col("energy_demand_gwh") < 0).cast("long")).as("negative_energy"))
       else None
     val freshness: Seq[Column] =
-      if (present("date")) Seq(
-        date_format(max("date"), "yyyy-MM-dd").as("latest_date"),
-        datediff(to_date(lit(asOfDate)), max("date")).as("days_since"))
+      if (present("date")) Seq(date_format(max("date"), "yyyy-MM-dd").as("latest_date"))
       else Seq.empty
     val aggs =
       Seq(count(lit(1)).as("row_count")) ++
@@ -71,19 +74,21 @@ object QualityOps {
     def long(name: String): Long =
       if (!r.schema.fieldNames.contains(name) || r.isNullAt(r.fieldIndex(name))) 0L
       else r.getAs[Number](name).longValue()
+    val latest =
+      if (!r.schema.fieldNames.contains("latest_date")) None
+      else Option(r.getAs[String]("latest_date"))
     QualityReport(
       row_count = long("row_count"),
       null_counts = cols.map(c => c -> long(s"null_$c")).toMap,
       temp_outliers_count = long("temp_outliers"),
       negative_energy_count = long("negative_energy"),
-      latest_data_date =
-        if (!r.schema.fieldNames.contains("latest_date")) ""
-        else Option(r.getAs[String]("latest_date")).getOrElse(""),
-      days_since_latest_data = long("days_since").toInt)
+      latest_data_date = latest.getOrElse(""),
+      days_since_latest_data = latest.fold(0)(d =>
+        ChronoUnit.DAYS.between(LocalDate.parse(d), LocalDate.parse(asOfDate)).toInt))
   }
 
   /** X7/A4 — per-day quality time series: sums of indicator columns
-    * (reference dashboards/app.py:453-468). */
+    * (reference dashboards/app.py:453-468), in date order. */
   def qualityTimeSeries(fact: DataFrame, cfg: PipelineConfig = PipelineConfig.default): DataFrame =
     fact
       .withColumn("missing", anyNull.cast("int"))
@@ -94,7 +99,8 @@ object QualityOps {
         sum("missing").as("missing_total"),
         sum("temp_outlier").as("temp_outliers"),
         sum("neg_energy").as("negative_energy"))
-      .orderBy("date")
+      .coalesce(1) // one partition: rows = #days
+      .sortWithinPartitions("date")
 
   /** P8 — the combined problem-rows filter (any-null ∨ outlier ∨
     * negative energy; reference dashboards/app.py:553-557). */

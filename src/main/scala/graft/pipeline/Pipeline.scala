@@ -85,11 +85,13 @@ object Pipeline {
       if (report.null_counts("energy_demand_gwh") == report.row_count) {
         val weather = WeatherOps.weatherColumns(fact)
         val weatherReport = QualityOps.report(weather, asOfDate = today.toString, cfg)
-        PipelineOps.writeCsv(weather, s"$outDir/weather_csv")
+        PipelineOps.writeCsv(weather, s"$outDir/weather_csv", rows = Some(weatherReport.row_count))
         weatherReport.copy(weather_only = true)
       } else {
-        PipelineOps.writePartitioned(fact, s"$outDir/weather_energy_parquet")
-        PipelineOps.writeCsv(fact, s"$outDir/weather_energy_csv")
+        // the fact is the spine: every (date, city) of the window
+        PipelineOps.writePartitioned(fact, s"$outDir/weather_energy_parquet",
+          Some((rawByCity.map(_._1), start, end)))
+        PipelineOps.writeCsv(fact, s"$outDir/weather_energy_csv", rows = Some(report.row_count))
         report
       }
     } finally fact.unpersist()
