@@ -37,27 +37,34 @@ object Analytics {
     * stationarity toggle (reference dashboards/app.py:701-716).
     *
     * The series has one row per day whatever the number of cities
-    * (3,650 for a decade), so it is bounded and is handled in one
-    * partition. The diff collects it into one date-sorted array and
-    * subtracts each element's predecessor in the array: the previous
-    * day PRESENT in the data, across year boundaries and calendar gaps
-    * alike. There is no ordering window, and the rows come out in
-    * array order, which is date order. */
-  def timeSeries(fact: DataFrame, diff: Boolean = false): DataFrame = {
-    val values = Seq("temp_avg_f", "energy_demand_gwh")
-    val daily = fact.groupBy("date")
-      .agg(avg("temp_avg_f").as("temp_avg_f"), sum("energy_demand_gwh").as("energy_demand_gwh"))
-      .coalesce(1) // one partition: rows = #days
-    if (!diff) daily.sortWithinPartitions("date")
-    else {
-      val days = col("days")
-      daily.agg(array_sort(collect_list(struct(("date" +: values).map(col): _*))).as("days"))
-        .select(inline(transform(days, (day, i) => {
-          val prev = get(days, i - 1) // NULL before the first day
-          struct(day("date").as("date") +: values.map(v => (day(v) - prev(v)).as(v)): _*)
-        })))
-        .na.drop(values)
+    * (3,650 for a decade), so it is collected when this is called and
+    * comes back as a local frame in date order ([[byDate]]). The diff
+    * subtracts from each day the previous day PRESENT in the data,
+    * across year boundaries and calendar gaps alike, and drops the
+    * first day and every day whose difference is NULL or NaN. There is
+    * no ordering window. */
+  def timeSeries(fact: DataFrame, diff: Boolean = false): DataFrame =
+    byDate(fact.groupBy("date")
+      .agg(avg("temp_avg_f").as("temp_avg_f"), sum("energy_demand_gwh").as("energy_demand_gwh"))) { days =>
+      if (!diff) days
+      else days.sliding(2).flatMap {
+        case Seq(prev, day) =>
+          val d = (1 to 2).map(i =>
+            if (day.isNullAt(i) || prev.isNullAt(i)) Double.NaN else day.getDouble(i) - prev.getDouble(i))
+          if (d.exists(_.isNaN)) None else Some(Row(day.get(0), d(0), d(1)))
+        case _ => None // one day: nothing to difference
+      }.toSeq
     }
+
+  /** A per-day aggregate (`date` first), collected and put in date
+    * order on the driver (a NULL date first, as an ascending sort puts
+    * it), then `rows` of it as a local frame of the same schema: no sort
+    * in the plan, and no job when the caller collects it. For bounded
+    * results only: one row per day. */
+  private[operators] def byDate(daily: DataFrame)(rows: Seq[Row] => Seq[Row]): DataFrame = {
+    val days = daily.collect().toSeq
+      .sortBy(r => if (r.isNullAt(0)) Long.MinValue else r.getDate(0).toLocalDate.toEpochDay)
+    daily.sparkSession.createDataFrame(rows(days).asJava, daily.schema)
   }
 
   /** F8 — temperature binning, left-closed [lo, hi) with the `<50°F`
@@ -143,7 +150,11 @@ object Analytics {
     * · s · sqrt(1/n + (x−x̄)²/Sxx), one row per distinct x in ascending
     * order. The grid is collected in the summary's own job, so the
     * bands are a local frame: column expressions over the grid the
-    * caller receives anyway, and no further job. The t quantile is one
+    * caller receives anyway, and no further job. The grid is one
+    * aggregation buffer holding every distinct x, so x must take a
+    * bounded number of values: the dashboard's x is one city's daily
+    * mean temperature (at most one value per day in the sink), q15's
+    * is l_quantity (at most 50 values). The t quantile is one
     * driver-side scalar (graft.functions.Stats). */
   def olsCiBands(df: DataFrame, xCol: String, yCol: String,
       alpha: Double = 0.05): Option[DataFrame] =

@@ -6,8 +6,9 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Core pipeline composition (EP1 heart): union per-city frames,
-  * densify onto the date × city spine, inner join weather⋈energy on
-  * (date, city), derive temp_avg_f, sink. */
+  * aggregate weather and energy readings onto the date × city spine
+  * (or densify each side and inner join weather⋈energy on (date,
+  * city)), derive temp_avg_f, sink. */
 object PipelineOps {
 
   /** U1 — schema-aligned union of per-city frames (reference pd.concat,
@@ -47,6 +48,45 @@ object PipelineOps {
   def densify(daily: DataFrame, spine: DataFrame): DataFrame =
     spine.join(daily, Seq("date", "city"), "left")
 
+  /** The fact's daily values on the date × city `spine` in ONE
+    * aggregate, fusing the weather pivot (A1), the hourly→daily
+    * resample (A2), both densifies (J5) and their join (J1). The spine,
+    * the flattened NOAA readings (`WeatherOps.flatten`) and the
+    * flattened EIA hours (`EnergyOps.flatten`) are unioned and grouped
+    * by (date, city); only groups holding a spine row are kept, so
+    * readings outside the window drop out and an absent day is padded
+    * with NULLs. A day's TMAX and TMIN are the °F of its mean readings;
+    * its energy is the sum of its hours, 0.0 when every hour is NaN or
+    * NULL and NULL when it has none. The union is partitioned by city
+    * once, so neither the aggregate nor a per-city window after it
+    * needs another exchange. It takes one partition per city, up to
+    * the session's shuffle partitions: adaptive execution does not
+    * coalesce the partitions of a plan that is cached, as the fact is,
+    * and every empty partition would be a task in each job reading it.
+    * Columns: date, city, temp_max_f, temp_min_f, energy_demand_gwh. */
+  def dailyFact(weather: DataFrame, hourly: DataFrame, spine: DataFrame, cities: Int): DataFrame = {
+    val partitions = math.min(cities, spine.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
+    val none = lit(null).cast("double")
+    def reading(t: String) = when(col("datatype") === t, col("value_c"))
+    Seq(
+      spine.select(col("date"), col("city"), lit(1).as("in_window"),
+        none.as("tmax_c"), none.as("tmin_c"), none.as("gwh"), lit(0).as("hour")),
+      weather.select(col("date"), col("city"), lit(0).as("in_window"),
+        reading("TMAX").as("tmax_c"), reading("TMIN").as("tmin_c"), none.as("gwh"), lit(0).as("hour")),
+      hourly.select(to_date(col("ts")).as("date"), col("city"), lit(0).as("in_window"),
+        none.as("tmax_c"), none.as("tmin_c"), col("value").as("gwh"), lit(1).as("hour"))
+    ).reduce(_ union _)
+      .repartition(partitions, col("city"))
+      .groupBy("date", "city")
+      .agg(max("in_window").as("in_window"), avg("tmax_c").as("tmax_c"), avg("tmin_c").as("tmin_c"),
+        sum("gwh").as("gwh"), max("hour").as("hour"))
+      .filter(col("in_window") === 1)
+      .select(col("date"), col("city"),
+        WeatherOps.celsiusToFahrenheit(col("tmax_c")).as("temp_max_f"),
+        WeatherOps.celsiusToFahrenheit(col("tmin_c")).as("temp_min_f"),
+        when(col("hour") === 1, coalesce(col("gwh"), lit(0.0))).as("energy_demand_gwh"))
+  }
+
   /** J1 — THE core query: inner equi-join on the composite key
     * (reference src/pipeline.py:86). At scale both sides shuffle on
     * (date, city); with both sides written bucketed by city the
@@ -76,19 +116,21 @@ object PipelineOps {
   }
 
   /** Preferred engine sink: parquet holding ONE file per city
-    * (`<path>/city=<name>/part-*.parquet`), written as an upsert keyed
-    * on (date, city).
+    * (`<path>/city=<name>/part-*.parquet`), written as an upsert of a
+    * window of (date, city) rows.
     *
-    * When `path` already holds a sink, its rows of the cities `df`
-    * touches are read back, the ones whose (date, city) `df` carries are
-    * dropped, and the rest are written together with `df`; a dynamic
-    * partition overwrite then replaces only the touched cities' files.
-    * A caller whose `df` holds EVERY (date, city) of some cities over
-    * [start, end], as `Pipeline.run`'s fact does, passes that `window`:
-    * the rows kept are then those cities' rows outside [start, end], a
-    * filter on the sink whose scan reads only their directories, with
-    * no join against `df`. Without it, the touched cities and the
-    * replaced keys are taken from `df` by joins.
+    * A new sink takes `df` as it is. Onto an existing sink, `df` is the
+    * new content of `window` = (cities, start, end): the sink's rows of
+    * those cities outside [start, end] are read back and written
+    * together with `df`, and a dynamic partition overwrite replaces
+    * only those cities' files. Every row of `df` must lie in the
+    * window; a window row `df` lacks is removed from the sink, the way
+    * a replaced day loses its old row. `Pipeline.run` passes its fact,
+    * which holds exactly one row per (date, city) of its window. The
+    * rows kept are a filter on the sink, whose scan reads only the
+    * window cities' directories; nothing is joined against `df`. An
+    * existing sink with no `window` is refused with an
+    * `IllegalArgumentException`: the rows to replace are not known.
     * So a re-run of a day replaces that day in place, every other day
     * of a touched city is kept, and the files of cities `df` does not
     * touch are left as they are. This keeps the `realtime` daily run
@@ -124,18 +166,13 @@ object PipelineOps {
     val rows =
       if (!present("city=*")) df
       else {
+        val (cities, start, end) = window.getOrElse(throw new IllegalArgumentException(
+          s"$path already holds a sink: an upsert onto it needs the (cities, start, end) window it replaces"))
         // read with df's schema: no footer-inference job, and the
         // rewritten files take df's columns
-        val sink = spark.read.schema(df.schema).parquet(path)
-        val kept = window match {
-          case Some((cities, start, end)) =>
-            sink.filter(col("city").isin(cities: _*) && !col("date").between(start, end))
-          case None =>
-            val keys = df.select("date", "city")
-            sink.join(keys.select("city"), Seq("city"), "left_semi")
-              .join(keys, Seq("date", "city"), "left_anti")
-        }
-        kept.unionByName(df)
+        spark.read.schema(df.schema).parquet(path)
+          .filter(col("city").isin(cities: _*) && !col("date").between(start, end))
+          .unionByName(df)
       }
     rows.repartition(col("city")).write
       .mode(SaveMode.Overwrite)

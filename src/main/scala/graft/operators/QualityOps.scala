@@ -88,9 +88,11 @@ object QualityOps {
   }
 
   /** X7/A4 — per-day quality time series: sums of indicator columns
-    * (reference dashboards/app.py:453-468), in date order. */
+    * (reference dashboards/app.py:453-468), in date order. One row per
+    * day, collected when this is called: a local frame
+    * (`Analytics.byDate`). */
   def qualityTimeSeries(fact: DataFrame, cfg: PipelineConfig = PipelineConfig.default): DataFrame =
-    fact
+    Analytics.byDate(fact
       .withColumn("missing", anyNull.cast("int"))
       .withColumn("temp_outlier", outlier(cfg).get.cast("int"))
       .withColumn("neg_energy", (col("energy_demand_gwh") < 0).cast("int"))
@@ -98,9 +100,7 @@ object QualityOps {
       .agg(
         sum("missing").as("missing_total"),
         sum("temp_outlier").as("temp_outliers"),
-        sum("neg_energy").as("negative_energy"))
-      .coalesce(1) // one partition: rows = #days
-      .sortWithinPartitions("date")
+        sum("neg_energy").as("negative_energy")))(identity)
 
   /** P8 — the combined problem-rows filter (any-null ∨ outlier ∨
     * negative energy; reference dashboards/app.py:553-557). */

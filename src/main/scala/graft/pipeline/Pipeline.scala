@@ -7,8 +7,8 @@ import graft.operators.{EnergyOps, PipelineOps, QualityOps, WeatherOps}
 
 /** EP1 orchestration (reference run_pipeline, src/pipeline.py:16-111):
   * derive the date window from the mode, flatten each city's weather
-  * and energy payloads, union, densify and impute, join, derive
-  * temp_avg_f, quality-check, sink.
+  * and energy payloads, aggregate them onto the date × city spine,
+  * impute, derive temp_avg_f, quality-check, sink.
   *
   * Deviations from the reference, both documented in SURVEY §7.4:
   *   - the duplicated tail of run_pipeline (src/pipeline.py:100-111) is
@@ -18,9 +18,9 @@ import graft.operators.{EnergyOps, PipelineOps, QualityOps, WeatherOps}
   *     output with them (trap 7); see `PipelineOps.writePartitioned`.
   *
   * The clock is injected so both modes are deterministic under test
-  * (trap 8). Only the flatten is per city; each side is then ONE
-  * city-keyed plan, so its exchanges do not grow with the number of
-  * cities. Nothing executes until the sink action.
+  * (trap 8). Only the flatten is per city; the fact is then ONE
+  * city-keyed plan with one exchange, whatever the number of cities.
+  * Nothing executes until the sink action.
   */
 object Pipeline {
 
@@ -55,11 +55,23 @@ object Pipeline {
   }
 
   /** Run over pre-landed raw payloads: one (noaaRaw, eiaRaw) pair per
-    * city. Returns the fact DataFrame (lazy) — callers choose the sink. */
+    * city. Returns the fact DataFrame (lazy) — callers choose the sink.
+    * Its rows are those of the join of [[buildWeather]] and
+    * [[buildEnergy]] with temp_avg_f derived, made by one aggregate
+    * (`PipelineOps.dailyFact`) and one per-city imputation window
+    * instead of two densified sides and a join. */
   def build(spark: SparkSession, rawByCity: Seq[(String, DataFrame, DataFrame)],
-      start: String, end: String): DataFrame =
-    PipelineOps.deriveTempAvg(PipelineOps.joinWeatherEnergy(
-      buildWeather(rawByCity, start, end), buildEnergy(rawByCity, start, end)))
+      start: String, end: String): DataFrame = {
+    val spine = PipelineOps.dateCitySpine(spark, rawByCity.map(_._1), start, end)
+    val daily = PipelineOps.dailyFact(
+      PipelineOps.unionCities(rawByCity.map { case (city, noaa, _) => WeatherOps.flatten(noaa, city) }),
+      PipelineOps.unionCities(rawByCity.map { case (city, _, eia) => EnergyOps.flatten(eia, city) }),
+      spine, rawByCity.size)
+    // over one day a city's mean is its one value: imputing changes
+    // nothing, and the daily refresh skips the window
+    PipelineOps.deriveTempAvg(if (start == end) daily else WeatherOps.imputePerCity(daily))
+      .select("date", "city", "temp_max_f", "temp_min_f", "temp_avg_f", "energy_demand_gwh")
+  }
 
   /** Full run: build → quality report → sinks (partitioned parquet +
     * CSV for dashboard parity). Quality thresholds come from `cfg`
